@@ -34,7 +34,7 @@ partitioned write, run by whichever process first finds the meta stale).
 ``merge_batch`` refuses to advance a stale meta (it cannot know what the
 missing commits touched), so the invariant can never be silently violated;
 readers whose view races a sibling's publish by microseconds may serve a
-slightly NEWER watermark than their log cache — the claim path tolerates
+slightly NEWER watermark than their log view — the claim path tolerates
 that (a claim with no readable event is released immediately, see
 ``EventStore.stream_events``).
 
@@ -107,7 +107,7 @@ class ShardedHwm:
         self.storage = storage
         self.spark = spark
         self.n_shards = n_shards
-        self._events_fn = events_fn  # () -> events DataFrame (cached log)
+        self._events_fn = events_fn  # () -> the store's lazy events handle
         self.max_resident = max_resident
         self._frames: dict[int, pd.DataFrame] = {}
         self._versions: dict[int, int] = {}
@@ -157,10 +157,10 @@ class ShardedHwm:
 
     def sync(self, commit_id: int) -> None:
         """Make the watermark view reflect published commit ``commit_id``
-        (the store's ``_seen_commit_id`` — the same snapshot its cached
-        log serves).  Fast path: already synced — zero IO.  Sibling-
-        maintained path: meta matches on disk — drop only the shards
-        whose state version moved (they reload lazily).  Stale path: one
+        (the store's ``_seen_commit_id`` — the same snapshot its
+        ``events()`` handle reads).  Fast path: already synced — zero
+        IO.  Sibling-maintained path: meta matches on disk — drop only
+        the shards whose state version moved (they reload lazily).  Stale path: one
         process rebuilds from the log under the hwm lock; everyone else
         blocks briefly on the flock, then reloads."""
         commit_id = int(commit_id)

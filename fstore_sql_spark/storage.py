@@ -257,20 +257,31 @@ class ParquetStore:
 
         ``refreshByPath`` first: Spark caches directory LISTINGS
         session-wide (FileStatusCache), and a SIBLING PROCESS's appended
-        files are invisible through a cached listing — the engine-level
-        `_PUBLISHED`-keyed invalidation rebuilds the DataFrame but the new
-        plan would list through the same stale cache, silently hiding the
-        sibling's batch (caught r5 by the pure-reader crash-recovery
-        test).  Same-process appends are safe either way (Spark's own
-        write commit invalidates the path).  read_log is called only on
-        cache rebuild, so the O(1) in-memory invalidation costs nothing
-        on the hot path."""
+        files are invisible through a cached listing — a new DataFrame
+        would list through the same stale cache, silently hiding the
+        sibling's batch (the pure-reader crash-recovery test covers
+        this).  Same-process appends are safe either way (Spark's own
+        write commit invalidates the path).  The store calls read_log
+        once per log generation (``EventStore.events``) and re-lists that
+        DataFrame in place on each commit (``relist_log``), so the O(1)
+        in-memory invalidation costs nothing on the hot path."""
         path = self._log_dir(table)
         try:
             self.spark.catalog.refreshByPath(path)
         except Exception:
             pass  # e.g. path not yet cached; never block a read on this
         return self.spark.read.schema(schema).parquet(path)
+
+    @staticmethod
+    def relist_log(df: DataFrame) -> None:
+        """Re-list, in place, the files under a DataFrame ``read_log``
+        returned.  A file-source DataFrame lists its directory once, when
+        it is built, and every plan derived from it shares that listing:
+        after this call those plans, including ones a caller still holds,
+        also read the files appended since — up to a plan's first action,
+        which fixes its file list.  The refresh also drops the session's
+        cached listings, so a sibling process's files show up."""
+        df._jdf.queryExecution().analyzed().relation().location().refresh()
 
     def txn_log_files(
         self, table: str, txn: int

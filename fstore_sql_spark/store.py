@@ -143,7 +143,6 @@ class EventStore:
         self,
         spark: SparkSession,
         path: str,
-        cache_log: bool = True,
         max_resident_shards: "int | str | None" = None,
         expected_partitions: int | None = None,
         expected_consumers: int | None = None,
@@ -178,9 +177,8 @@ class EventStore:
         self.spark = spark
         self.storage = ParquetStore(spark, path)
         self._commit_lock = threading.RLock()
-        self._cache_log = cache_log
-        self._events_cached: DataFrame | None = None
-        self._state_cached: dict[str, DataFrame] = {}
+        # table or "log_relation" -> (version, lazy DataFrame): see _handle
+        self._handles: dict[str, tuple[object, DataFrame]] = {}
         # (view, decider_id) -> {"lo": fetch-time last_offset, "rows":
         # [Row sorted by offset], "complete": window reached hwm}
         self._prefetch: dict[tuple[str, str], dict] = {}
@@ -208,18 +206,6 @@ class EventStore:
         # (right up to ~10M partitions on an 8 GiB driver — BASELINE.md
         # scale-ceiling table); an explicit budget makes residency
         # O(active shards) for the 10^8-partition regime.
-        if max_resident_shards is None:
-            env = os.environ.get("FSTORE_MAX_RESIDENT_SHARDS")
-            if env:
-                max_resident_shards = env if env == "all" else None
-                if max_resident_shards is None:
-                    try:
-                        max_resident_shards = int(env)
-                    except ValueError:
-                        raise ValueError(
-                            "FSTORE_MAX_RESIDENT_SHARDS must be an integer "
-                            f">= 1 or 'all', got {env!r}"
-                        ) from None
         if isinstance(max_resident_shards, str):
             if max_resident_shards != "all":
                 raise ValueError(
@@ -242,8 +228,7 @@ class EventStore:
         if max_resident_shards is not None and max_resident_shards < 1:
             # 0 would silently enable evict-everything-per-tick (ADVICE r5)
             raise ValueError(
-                "max_resident_shards (or FSTORE_MAX_RESIDENT_SHARDS) must be "
-                f">= 1, got {max_resident_shards}"
+                f"max_resident_shards must be >= 1, got {max_resident_shards}"
             )
         self.ledger = ShardedLocksLedger(
             self.storage,
@@ -266,7 +251,6 @@ class EventStore:
             os.path.join(self.storage.root, f"{_EVENTS}_COMMITTER.lock")
         )
         self._committer_depth = threading.local()
-        self._state_seen_ver: dict[str, int] = {}
         # Sharded + paged per-partition high-watermark (r6, VERDICT r5
         # #1): same crc32 shard routing and LRU budget as the ledger, so
         # a paged store's TOTAL driver residency — consumer state AND
@@ -289,56 +273,69 @@ class EventStore:
     def events(self) -> DataFrame:
         """The append-only event log (/root/reference/schema.sql:27-54).
 
-        The log DataFrame is persisted (MEMORY_AND_DISK_DESER) between
-        mutations: every read-path API call — ``stream_events``' watermark
-        join, ``get_events``, T7 backfill — re-derives from the log, and
-        without the cache each call re-lists and re-scans parquet.  Spark
-        manages eviction, so at cluster scale the hot tail stays in memory
-        and cold partitions spill or recompute; correctness never depends
-        on residency.  Own appends and compaction invalidate directly; a
-        SIBLING process's commits are caught by ``_refresh_external``,
-        which keys on the post-append ``_PUBLISHED`` marker — never on the
-        pre-append allocation manifest — so the cache is never rebuilt
-        from a log mid-append (ADVICE r2).  ``cache_log=False`` opts out
-        entirely."""
-        if not self._cache_log:
-            return self.storage.read_log(_EVENTS, EVENTS_SCHEMA)
-        # Sibling-commit check on EVERY cached read, not just the claim
-        # path: without it a reader process served an indefinitely stale
-        # log from get_events/get_last_event/stats — and could crash
-        # outright once the committer's compactions GC'd the generation
-        # its cached plan still referenced (review r4).  Cost: one tiny
-        # marker-file read; under the commit lock so a concurrent
-        # mutator can't race the cache swap.
+        A lazy, unpersisted DataFrame: every action scans parquet with its
+        own filters pushed into the scan (a replay's ``decider_id``, a
+        refill's ``offset`` floor), and no commit pays to re-materialise
+        the whole log.  The log relation, which holds the file listing, is
+        read once per generation and re-listed in place on each commit
+        (``_see_log``), so every plan built on it in this generation — a
+        typed view, a held replay — reads all later commits up to its
+        first action.  What this returns is a DataFrame over that
+        relation memoised per ``(published commit, generation)``: a Spark
+        DataFrame fixes its physical plan, listing included, at its first
+        action, so one object handed out across commits would freeze
+        ``events().collect()``.  Every read first runs
+        ``_refresh_external``: a SIBLING process's commit or compaction
+        moves the version.  The version keys on the post-append
+        ``_PUBLISHED`` marker, never on the pre-append allocation
+        manifest, so no listing is taken mid-append.  Under the commit
+        lock so a concurrent mutator can't race the version swap."""
         with self._commit_lock:
             self._refresh_external()
-            if self._events_cached is None:
-                self._events_cached = self.storage.read_log(
-                    _EVENTS, EVENTS_SCHEMA
-                ).persist()
-            return self._events_cached
+            gen = self._seen_log_gen
+            log = self._handle(
+                "log_relation",
+                gen,
+                lambda: self.storage.read_log(_EVENTS, EVENTS_SCHEMA),
+            )
+            return self._handle(
+                _EVENTS, (self._seen_commit_id, gen), lambda: log.select("*")
+            )
 
-    def _invalidate_log_cache(self) -> None:
-        if self._events_cached is not None:
-            self._events_cached.unpersist()
-            self._events_cached = None
-        # NOTE: the sharded hwm is NOT invalidated here — it is keyed on
-        # the published commit id (sync), so a compaction (same commits,
-        # new layout) keeps it, a commit advances it incrementally
-        # (merge_batch), and an external commit re-syncs on next access.
-        # Append-only log ⇒ cached windows stay VALID within a commit
-        # generation; a new commit may extend a window marked complete, so
-        # drop on every invalidation (cheap — it's a read-ahead cache).
+    def _handle(self, key: str, version, read) -> DataFrame:
+        """The memoised lazy handle under ``key`` at ``version``: ``read()``
+        builds a new one only when the version moved since the last call.
+        Nothing is persisted, so a replaced handle needs no cleanup."""
+        memo = self._handles.get(key)
+        if memo is None or memo[0] != version:
+            memo = self._handles[key] = (version, read())
+        return memo[1]
+
+    def _see_log(self, commit: int, gen: int) -> None:
+        """Move this store's log view to (``commit``, ``gen``).  Within
+        one generation the log relation is re-listed in place, so plans
+        already built on it read this commit too; a new generation
+        (compaction) makes the next ``events()`` read a new relation.
+        Read-ahead windows are dropped: a new commit may extend a window
+        marked complete.  Temp views are re-pointed at the new handle."""
+        memo = self._handles.get("log_relation")
+        if memo is not None and memo[0] == gen:
+            self.storage.relist_log(memo[1])
         self._prefetch.clear()
+        self._seen_commit_id = commit
+        self._seen_log_gen = gen
+        self._rebind_sql_views()
 
     def _hwm_view(self) -> ShardedHwm:
-        """The sharded watermark, synced to the same published commit the
-        cached log serves — what the claim path reads per shard, and the
+        """The sharded watermark, synced to the same published commit
+        ``events()`` reads — what the claim path reads per shard, and the
         full-table surfaces (``locks()``, T7) read via ``.full()``.
         Derived (never dual-written): one Spark rebuild on first need (or
         after an unmaintained external commit), then folded incrementally
         from each committed batch's own aggregate (``_commit``), so steady
-        ingest+deliver never re-aggregates the log."""
+        ingest+deliver never re-aggregates the log.  Not reset by
+        ``_see_log``: it is keyed on the published commit id, so a
+        compaction (same commits, new layout) keeps it."""
         self._hwm_shards.sync(self._seen_commit_id)
         return self._hwm_shards
 
@@ -350,12 +347,12 @@ class EventStore:
 
     def _refresh_external(self) -> None:
         """Cross-process read freshness: if ANOTHER committer PUBLISHED a
-        commit since our caches were built, drop them so claims see the
-        new events.  Keys on the post-append published marker, not the
-        pre-append allocation manifest: a sibling mid-append (manifest
-        advanced, log files still landing) must NOT trigger a rebuild —
-        that would cache a partial batch and mark it fresh, stalling or
-        (worse) skipping events (ADVICE r2, high).  One tiny file read
+        commit since our log view was taken, move the view so reads and
+        claims see the new events.  Keys on the post-append published
+        marker, not the pre-append allocation manifest: a sibling
+        mid-append (manifest advanced, log files still landing) must NOT
+        move the view — that would list a partial batch and mark it
+        fresh, stalling or (worse) skipping events.  One tiny file read
         per call."""
         commit = self.storage.read_published(_EVENTS)
         # Orphaned-commit roll-forward for PURE READERS (r5): if every
@@ -383,49 +380,38 @@ class EventStore:
         # the generation pointer catches a sibling's COMPACTION, which
         # rewrites the log layout without minting a commit id — a reader
         # keyed on the commit alone kept a plan over the old generation
-        # until its GC turned reads into FileNotFoundError (review r4)
+        # until its GC turned reads into FileNotFoundError
         gen = self.storage._log_gen(_EVENTS)
         if commit != self._seen_commit_id or gen != self._seen_log_gen:
-            self._invalidate_log_cache()
-            self._seen_commit_id = commit
-            self._seen_log_gen = gen
-            self._rebind_sql_views()
+            self._see_log(commit, gen)
 
     def deciders(self) -> DataFrame:
-        """Registry state, persisted between registrations: C3 validation
-        reads it on EVERY append, and the registry only changes on
-        register_decider_event — the textbook cache.  Same invalidation
-        discipline as the log cache (single committer; locks state is NOT
-        cached — delivery rewrites it constantly)."""
-        return self._cached_state(_DECIDERS, DECIDERS_SCHEMA)
+        """The event-type registry.  C3 validation reads it on every
+        append; like ``events()`` it is a lazy handle, memoised per
+        snapshot version (``_state``)."""
+        return self._state(_DECIDERS, DECIDERS_SCHEMA)
 
     def views(self) -> DataFrame:
-        return self._cached_state(_VIEWS, VIEWS_SCHEMA)
+        return self._state(_VIEWS, VIEWS_SCHEMA)
 
-    def _cached_state(self, table: str, schema) -> DataFrame:
-        if not self._cache_log:
-            return self.storage.read_state(table, schema)
-        # Sibling-process freshness (same discipline as _refresh_external
-        # for the log): a registration committed by ANOTHER process flips
-        # the table's _LATEST pointer; serving the cached frame past that
-        # would let C3 validation reject events the sibling registered.
-        # Cost: one tiny pointer-file read per call.
-        ver = self.storage.state_version(table)
-        if table in self._state_cached and self._state_seen_ver.get(table) != ver:
-            self._invalidate_state_cache(table)
-        if table not in self._state_cached:
-            self._state_cached[table] = self.storage.read_state(
-                table, schema
-            ).persist()
-            self._state_seen_ver[table] = ver
-        return self._state_cached[table]
-
-    def _invalidate_state_cache(self, table: str) -> None:
-        self._state_seen_ver.pop(table, None)
-        df = self._state_cached.pop(table, None)
-        if df is not None:
-            df.unpersist()
-        self._rebind_sql_views()
+    def _state(self, table: str, schema) -> DataFrame:
+        """A registry table's memoised lazy handle, keyed on its
+        ``_LATEST`` snapshot version: a registration committed by ANOTHER
+        process flips the pointer, so C3 sees the sibling's event types
+        on the next read.  Cost: one tiny pointer-file read per call.
+        (The locks table is the ledger's, not read through here.)  A new
+        snapshot, own or a sibling's, also re-points the temp views: the
+        writer's GC deletes old snapshots, so a view left on one would
+        fail."""
+        memo = self._handles.get(table)
+        df = self._handle(
+            table,
+            self.storage.state_version(table),
+            lambda: self.storage.read_state(table, schema),
+        )
+        if memo is not None and memo[1] is not df:
+            self._rebind_sql_views()
+        return df
 
     def locks(self) -> DataFrame:
         """Reference-shaped ``locks`` rows (/root/reference/schema.sql:180-200).
@@ -522,7 +508,9 @@ class EventStore:
                 "decider_id", "offset"
             )
             self.storage.compact_log(_EVENTS, compacted)
-            self._invalidate_log_cache()
+            # record the new generation now, so the next read builds one
+            # handle instead of first tripping _refresh_external
+            self._see_log(self._seen_commit_id, self.storage._log_gen(_EVENTS))
             return self.storage.log_file_count(_EVENTS)
 
     def maybe_compact(
@@ -544,10 +532,11 @@ class EventStore:
         the store (SURVEY.md §7.1 step 7).
 
         Temp views freeze the DataFrame they were created from; a view
-        bound once would keep serving the pre-append log (and break after
-        a compaction GC'd its generation).  The prefix is therefore
-        remembered and the views re-bound whenever a cache invalidation
-        gives any table a new DataFrame (review r4)."""
+        bound once would keep serving an old registry snapshot and old
+        locks (and break after a compaction GC'd its log generation, or a
+        registration GC'd its snapshot).  The prefix is therefore
+        remembered and the views re-bound whenever a commit, compaction
+        or registration gives any table a new version."""
         self._sql_view_prefixes.add(prefix)
         self._rebind_sql_views()
 
@@ -590,7 +579,7 @@ class EventStore:
                 [(decider, event, int(event_version), description)], DECIDERS_SCHEMA
             )
             self.storage.write_state(_DECIDERS, existing.unionByName(row))
-            self._invalidate_state_cache(_DECIDERS)
+            self.deciders()  # take up the new snapshot now (re-binds views)
             return row
 
     # ------------------------------------------------------------------ #
@@ -600,7 +589,7 @@ class EventStore:
 
     def payload_schemas(self) -> DataFrame:
         """The (event, event_version) → payload StructType registry."""
-        return self._cached_state(_PAYLOAD, PAYLOAD_SCHEMAS_SCHEMA)
+        return self._state(_PAYLOAD, PAYLOAD_SCHEMAS_SCHEMA)
 
     def register_payload_schema(
         self,
@@ -678,7 +667,6 @@ class EventStore:
                 PAYLOAD_SCHEMAS_SCHEMA,
             )
             self.storage.write_state(_PAYLOAD, existing.unionByName(row))
-            self._invalidate_state_cache(_PAYLOAD)
             return row
 
     def _payload_registry(self, event: str):
@@ -895,9 +883,8 @@ class EventStore:
                     # (/root/reference/schema.sql:240-263).  Runs BEFORE
                     # the log append so its anti-join against the log
                     # evaluates on the pre-batch snapshot (post-commit the
-                    # invalidated log cache would re-list and find every
-                    # candidate stream "existing"; persisting doesn't help
-                    # — unpersisting the log cache cascades to dependents).
+                    # re-listed log would find every candidate stream
+                    # "existing").
                     # Crash-safe: a seeded lock row is invisible through
                     # the derived locks() inner-join until the partition's
                     # events actually land, and last_offset=0 is exactly
@@ -1002,10 +989,7 @@ class EventStore:
                     _EVENTS, manifest.commit_id, torn
                 )
             self.storage.write_published(_EVENTS, manifest.commit_id)
-            self._invalidate_log_cache()
-            self._seen_commit_id = manifest.commit_id
-            self._seen_log_gen = self.storage._log_gen(_EVENTS)
-            self._rebind_sql_views()
+            self._see_log(manifest.commit_id, self.storage._log_gen(_EVENTS))
 
     # Target rows per shuffle task on the write path: micro-batches don't
     # need (and pay scheduling overhead for) the session-wide shuffle
@@ -1430,10 +1414,7 @@ class EventStore:
             # a log missing this batch (ADVICE r2, high).
             self.storage.write_published(_EVENTS, txn)
             prof["marker_publish_s"] = round(time.monotonic() - _t, 3)
-            self._invalidate_log_cache()
-            self._seen_commit_id = txn
-            self._seen_log_gen = self.storage._log_gen(_EVENTS)
-            self._rebind_sql_views()
+            self._see_log(txn, self.storage._log_gen(_EVENTS))
             if batch_hwm is not None:
                 _t = time.monotonic()
                 self._hwm_shards.merge_batch(
@@ -1585,7 +1566,7 @@ class EventStore:
             )
             merged = existing.filter(F.col("view") != view).unionByName(row)
             self.storage.write_state(_VIEWS, merged)
-            self._invalidate_state_cache(_VIEWS)
+            self.views()  # take up the new snapshot now (re-binds views)
             self._t7_backfill(view, start_at, now)
             return row
 
@@ -1705,13 +1686,13 @@ class EventStore:
         refill Spark job fetches the next ``PREFETCH_DEPTH_HOT`` unread
         events per MISSED partition and ``PREFETCH_DEPTH`` per
         speculatively-warmed one (broadcast the claimed pairs + depths
-        against one scan of the cached log, per-partition row_number ≤
-        depth); the next K−1 claims of those partitions are then served
-        from the driver buffer with no cluster work.  The delivered result is
-        driver-bound by contract anyway (the consumer collects ≤limit
-        single events), so buffering it driver-side is exactly a DB
-        cursor's read-ahead, not a scale compromise; the buffer is LRU
-        capped at ``PREFETCH_MAX_ROWS``.  Append-only log + per-commit
+        against one offset-pruned scan of the log, per-partition
+        row_number ≤ depth); the next K−1 claims of those partitions are
+        then served from the driver buffer with no cluster work.  The
+        delivered result is driver-bound by contract anyway (the consumer
+        collects ≤limit single events), so buffering it driver-side is
+        exactly a DB cursor's read-ahead, not a scale compromise; the
+        buffer is LRU capped at ``PREFETCH_MAX_ROWS``.  Append-only log + per-commit
         invalidation keep the cache trivially coherent.  The reference's
         plan (schema.sql:418-428) does a B-tree probe per partition; this
         does one batched probe per K rounds."""
@@ -1744,7 +1725,7 @@ class EventStore:
             # Drained-claim release (r6): a claim whose window is complete
             # and empty has NOTHING readable in our log view — possible
             # when the disk-backed watermark is microseconds NEWER than
-            # the log cache (hwm.py module doc).  Leaving it leased would
+            # our log view (hwm.py module doc).  Leaving it leased would
             # stall that partition for the full lease; release it now so
             # the next tick (with a caught-up log) redelivers.
             for decider_id, _lo in drained:
@@ -2061,12 +2042,14 @@ class EventStore:
         for the view should be stopped by the caller (T10's
         cron.unschedule ⇔ ``PushDelivery.stop`` / ``sync``)."""
         with self._commit_lock, self._committer_guard():
-            deleted = self.views().filter(F.col("view") == view).cache()
-            deleted.count()  # materialize before the state flip
-            self.storage.write_state(
-                _VIEWS, self.views().filter(F.col("view") != view)
+            views = self.views()
+            # collected before the state flip: the small result outlives
+            # the snapshot it was read from, with nothing left persisted
+            deleted = self.spark.createDataFrame(
+                views.filter(F.col("view") == view).collect(), VIEWS_SCHEMA
             )
-            self._invalidate_state_cache(_VIEWS)
+            self.storage.write_state(_VIEWS, views.filter(F.col("view") != view))
+            self.views()  # take up the new snapshot now (re-binds views)
             self.ledger.delete_view(view)
             return deleted
 
@@ -2103,8 +2086,8 @@ class EventStore:
         """Store health snapshot (the pg_stat_* analogue an operator
         would poll): log row/partition/file counts, the committed
         high-watermark offset and transaction id, registry sizes, and
-        state snapshot versions.  One cached-log aggregate + metadata
-        reads — safe to call frequently."""
+        state snapshot versions.  One log aggregate (a scan of the lazy
+        ``events()`` handle) plus metadata reads."""
         manifest = self.storage.read_manifest(_EVENTS)
         agg = self.events().agg(
             F.count(F.lit(1)).alias("n"),

@@ -440,6 +440,19 @@ def test_sql_views_stay_live_across_appends(store):
     )
 
 
+def test_sql_views_follow_sibling_registrations(store, spark):
+    """A sibling's registrations flip the registry snapshot, and its GC
+    deletes old ones: once this store reads the registry, its temp views
+    must follow, not keep a deleted snapshot."""
+    store.register_decider_event("d", "e0", "x")
+    store.register_sql_views(prefix="sib_")
+    sibling = type(store)(spark, store.storage.root)
+    for i in range(1, 6):
+        sibling.register_decider_event("d", f"e{i}", "x")
+    store.deciders()
+    assert spark.sql("select count(*) c from sib_deciders").first()["c"] == 6
+
+
 def test_dataframe_without_seq_gets_deterministic_hash_order(store, spark):
     """A caller DataFrame with no ``seq`` has no defined order; the engine
     must assign one that is DETERMINISTIC across retries/re-runs
@@ -578,3 +591,107 @@ def test_empty_log_fast_path_validation_parity(store):
                 }
             ]
         )
+
+
+class TestHandleMemo:
+    """events() and the registry accessors return a LAZY handle memoised
+    per table version: (published commit, log generation) for the log,
+    the ``_LATEST`` snapshot version for a registry table.  The log's
+    relation (its file listing) is read once per generation and re-listed
+    in place on each commit.  The contract: no change in between = the
+    same handle; a commit, compaction or registration, own or a
+    sibling's, = a fresh handle that sees it; plans built earlier in the
+    generation see every later commit; nothing is persisted in Spark's
+    cache."""
+
+    def test_unchanged_reads_share_one_handle(self, store):
+        store.register_decider_event("d", "e", "x")
+        store.append_event("e", uid(), "d", "p1")
+        for read in (store.events, store.deciders, store.views, store.payload_schemas):
+            assert read() is read()
+
+    def test_handles_not_cached(self, store):
+        from fstore_sql_spark.plans.inspect import formatted_plan
+
+        store.register_decider_event("d", "e", "x")
+        store.append_event("e", uid(), "d", "p1")
+        assert len(store.get_events("p1", "d").collect()) == 1
+        for df in (store.events(), store.deciders()):
+            plan = formatted_plan(df)
+            assert "InMemoryRelation" not in plan
+            assert "InMemoryTableScan" not in plan
+
+    @pytest.mark.parametrize(
+        "change", ["own_append", "sibling_append", "compact", "sibling_register"]
+    )
+    def test_version_change_replaces_handle(self, store, spark, monkeypatch, change):
+        store.register_decider_event("d", "e", "x")
+        first = uid()
+        store.append_event("e", first, "d", "p1")
+        sibling = type(store)(spark, store.storage.root)
+        events, deciders = store.events(), store.deciders()
+        assert events.count() == 1
+        read_log = store.storage.read_log
+        reads = []
+        monkeypatch.setattr(
+            store.storage, "read_log", lambda *a: reads.append(a) or read_log(*a)
+        )
+        if change == "own_append":
+            store.append_event("e", uid(), "d", "p1", previous_id=first)
+        elif change == "sibling_append":
+            sibling.append_event("e", uid(), "d", "p1", previous_id=first)
+        elif change == "compact":
+            store.compact()
+        else:
+            sibling.register_decider_event("d", "e2", "registered elsewhere")
+        if change == "sibling_register":
+            assert store.events() is events
+            assert store.deciders() is not deciders
+            # C3 reads the fresh registry: the sibling's event type passes
+            store.append_event("e2", uid(), "d", "p2")
+            assert store.events().count() == 2
+            return
+        fresh = store.events()
+        assert fresh is not events
+        assert store.events() is fresh  # one rebuild per version, not two
+        assert store.deciders() is deciders
+        # a commit re-lists the generation's relation in place; only a
+        # compaction (new generation) reads the log afresh
+        assert len(reads) == (1 if change == "compact" else 0)
+        n = 1 if change == "compact" else 2
+        assert fresh.count() == n
+        assert len(store.get_events("p1", "d").collect()) == n
+
+    def test_held_plan_reads_every_commit(self, store, spark):
+        # a plan built before several commits, own and a sibling's, reads
+        # all of them at its first action; events() itself never freezes
+        # at the listing of its first action
+        store.register_decider_event("d", "e", "x")
+        sibling = type(store)(spark, store.storage.root)
+        prev = uid()
+        store.append_event("e", prev, "d", "p1")
+        held = store.events().filter("decider_id = 'p1'")
+        assert len(store.events().collect()) == 1
+        for n, writer in enumerate((store, sibling, store), start=2):
+            nxt = uid()
+            writer.append_event("e", nxt, "d", "p1", previous_id=prev)
+            prev = nxt
+            assert len(store.events().collect()) == n
+        assert [r["offset"] for r in held.orderBy("offset").collect()] == [1, 2, 3, 4]
+
+    def test_full_cycle_leaves_no_persisted_rdd(self, store, spark):
+        rdds = spark.sparkContext._jsc.getPersistentRDDs
+        before = rdds().size()
+        store.register_decider_event("d", "e", "x")
+        e1 = uid()
+        store.append_event("e", e1, "d", "p1")
+        store.append_event("e", uid(), "d", "p1", previous_id=e1)
+        assert len(store.get_events("p1", "d").collect()) == 2
+        store.register_view("v", start_at="2020-01-01 00:00:00")
+        got = store.stream_events("v", limit=1).collect()
+        assert [r["offset"] for r in got] == [1]
+        store.ack_event("v", "p1", 1)
+        deleted = store.unregister_view("v").collect()
+        assert [r["view"] for r in deleted] == ["v"]
+        assert store.views().count() == 0
+        assert rdds().size() == before

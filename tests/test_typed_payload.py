@@ -98,6 +98,22 @@ class TestTypedPayload:
         with pytest.raises(Exception, match="no payload schema registered"):
             typed.select("payload").collect()
 
+    def test_late_version_after_several_commits_fails_loudly(self, store):
+        # the typed view must see every commit made after it was built,
+        # not just the next one: the late version lands in the second
+        _seed(store)
+        typed = store.events_typed("created")  # snapshots versions {1, 2}
+        store.append_event(
+            "created", "e3", "order", "A", '{"amount": 2}',
+            previous_id="e2", event_version=1,
+        )
+        store.register_decider_event("order", "created", "v9", 9)
+        store.append_event(
+            "created", "late", "order", "Z", '{"amount": 1}', event_version=9
+        )
+        with pytest.raises(Exception, match="no payload schema registered"):
+            typed.select("payload").collect()
+
 
 class TestSchemaEvolution:
     """r6 (VERDICT r5 #5): rename + numeric-widening evolution and the
