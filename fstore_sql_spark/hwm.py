@@ -1,4 +1,12 @@
-"""ShardedHwm — sharded, paged, disk-backed per-partition high-watermark.
+"""ShardedHwm — sharded, paged, disk-backed per-partition high-watermark
+and stream-tail index.
+
+Each row maps ``decider_id`` to the partition's max ``offset``, the
+``final`` flag of that last event (``offset_final``), and the last
+event's ``decider`` and ``event_id``.  The first two serve the claim
+path; the tail columns let ``EventStore.append_batch`` decide a small
+append on a stream tail without scanning the log (the ``decider_index``
+probe analogue, /root/reference/schema.sql:56).
 
 Why this exists (VERDICT r5 #1): the claim path needs, per partition, the
 log's max offset + final flag ("the derived half of the reference's T6
@@ -36,7 +44,9 @@ missing commits touched), so the invariant can never be silently violated;
 readers whose view races a sibling's publish by microseconds may serve a
 slightly NEWER watermark than their log view — the claim path tolerates
 that (a claim with no readable event is released immediately, see
-``EventStore.stream_events``).
+``EventStore.stream_events``).  The append path does not: it reads the
+tails only under the committer flock, when the meta equals the published
+commit (``sync_exact``).
 
 Scale: rebuild is one shuffle + a partitioned parquet write (no
 O(#partitions) driver collect — the old design's hidden spike); steady
@@ -57,7 +67,11 @@ from pyspark.sql import functions as F
 from fstore_sql_spark.ledger import ProcessLock, shard_of
 from fstore_sql_spark.storage import _fsync_dir
 
-_HWM_COLS = ["decider_id", "offset", "offset_final"]
+_HWM_COLS = ["decider_id", "offset", "offset_final", "decider", "event_id"]
+# Layout version of the state tables, recorded in ``hwm_META.json``.  A
+# meta with another (or no) format reads as stale, so a store written
+# with the old three-column layout rebuilds once.
+HWM_FORMAT = 2
 
 
 def _empty_hwm() -> pd.DataFrame:
@@ -66,6 +80,8 @@ def _empty_hwm() -> pd.DataFrame:
             "decider_id": pd.Series(dtype="object"),
             "offset": pd.Series(dtype="int64"),
             "offset_final": pd.Series(dtype="bool"),
+            "decider": pd.Series(dtype="object"),
+            "event_id": pd.Series(dtype="object"),
         }
     ).set_index("decider_id")
 
@@ -114,8 +130,8 @@ class ShardedHwm:
         self._spilled: dict[int, int] = {}  # shard -> evict-cache version
         self._use_clock = 0
         self._last_use: dict[int, int] = {}
-        # the published commit id our STATE VIEW reflects; None = never
-        # materialized (claim path not used yet — appends skip merge_batch)
+        # the published commit id our STATE VIEW reflects; None = not
+        # synced since this instance opened (or since ``invalidate``)
         self._synced_commit: "int | None" = None
         self._meta_path = os.path.join(storage.root, "hwm_META.json")
         self._plock = ProcessLock(os.path.join(storage.root, "hwm_STATE.lock"))
@@ -131,8 +147,11 @@ class ShardedHwm:
     def _read_meta(self) -> "int | None":
         try:
             with open(self._meta_path, encoding="utf-8") as f:
-                return int(json.load(f)["commit_id"])
-        except (OSError, ValueError, KeyError):
+                meta = json.load(f)
+            if meta.get("format") != HWM_FORMAT:
+                return None
+            return int(meta["commit_id"])
+        except (OSError, ValueError, KeyError, AttributeError):
             return None
 
     def _write_meta(self, commit_id: int) -> None:
@@ -144,16 +163,13 @@ class ShardedHwm:
         # torn meta or reorder it ahead of anything.
         tmp = f"{self._meta_path}.tmp.{os.getpid()}"
         with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({"commit_id": int(commit_id)}, f)
+            json.dump({"commit_id": int(commit_id), "format": HWM_FORMAT}, f)
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, self._meta_path)
         _fsync_dir(os.path.dirname(self._meta_path))
 
     # ---- lifecycle ----------------------------------------------------- #
-
-    def is_active(self) -> bool:
-        return self._synced_commit is not None
 
     def sync(self, commit_id: int) -> None:
         """Make the watermark view reflect published commit ``commit_id``
@@ -182,6 +198,16 @@ class ShardedHwm:
         self._versions.clear()
         self._synced_commit = commit_id
 
+    def sync_exact(self, commit_id: int) -> bool:
+        """``sync``, then True only when the persisted watermark reflects
+        exactly ``commit_id``: the condition for trusting it as the tail
+        index.  ``sync`` tolerates a meta newer than the caller's log
+        view; an append's validation must not, since a newer tail would
+        decide the batch against events its log view lacks.  Called
+        under the committer flock, where no commit can land in between."""
+        self.sync(commit_id)
+        return self._read_meta() == int(commit_id)
+
     def _drop_moved_shards(self) -> None:
         for k in list(self._frames):
             if self.storage.state_version(self._table(k)) != self._versions.get(k):
@@ -199,8 +225,17 @@ class ShardedHwm:
         aggregation over the log, written as a shard-partitioned parquet
         staging and ADOPTED dir-by-dir into the state layout — the
         watermark never funnels through the driver (the pre-r6
-        ``toPandas`` materialization spiked O(#partitions) driver RSS)."""
+        ``toPandas`` materialization spiked O(#partitions) driver RSS).
+        Commit 0 is the empty log (every commit holds at least one row),
+        so its watermark is written as empty snapshots with no Spark job."""
         self.rebuild_count += 1
+        if int(commit_id) == 0:
+            for k in range(self.n_shards):
+                self.storage.write_state_pandas(
+                    self._table(k), _empty_hwm().reset_index()
+                )
+            self._write_meta(0)
+            return
         ev = self._events_fn()
         shard = F.pmod(
             F.crc32(F.col("decider_id").cast("binary")), F.lit(self.n_shards)
@@ -210,6 +245,8 @@ class ShardedHwm:
             .agg(
                 F.max("offset").alias("offset"),
                 F.max_by("final", "offset").alias("offset_final"),
+                F.max_by("decider", "offset").alias("decider"),
+                F.max_by("event_id", "offset").alias("event_id"),
             )
             .withColumn("shard", shard)
         )
@@ -238,13 +275,15 @@ class ShardedHwm:
 
     def merge_batch(self, batch: pd.DataFrame, prev_commit: int, new_commit: int) -> None:
         """Fold one committed batch's per-partition aggregate (index
-        decider_id; columns offset, offset_final) into the watermark:
-        in-memory merge for resident shards + one arrow delta per touched
-        shard + the meta bump — so steady ingest+deliver never
+        decider_id; the other ``_HWM_COLS`` as columns) into the
+        watermark: in-memory merge for resident shards + one arrow delta
+        per touched shard + the meta bump — so steady ingest+deliver never
         re-aggregates the log.  Refuses (and marks itself stale) when the
         on-disk meta isn't exactly ``prev_commit``: advancing a meta whose
         missing commits this batch doesn't cover would break the
-        meta-invariant (module doc)."""
+        meta-invariant (module doc).  The one exception is a store's first
+        commit (``prev_commit == 0``): the watermark of the empty log is
+        written on the spot, so a store is indexed from its birth."""
         if batch.empty:
             # a sibling's rebuild can hold the lock for a full Spark job
             with self._plock.held(timeout_s=600):
@@ -259,6 +298,10 @@ class ShardedHwm:
         pdf = batch.reset_index()
         shards = pdf["decider_id"].map(lambda d: shard_of(d, self.n_shards))
         with self._plock.held(timeout_s=600):
+            if int(prev_commit) == 0 and self._read_meta() is None:
+                self._frames.clear()
+                self._versions.clear()
+                self._rebuild(0)
             if self._read_meta() != int(prev_commit):
                 self.invalidate()
                 return

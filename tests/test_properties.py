@@ -10,9 +10,6 @@ from hypothesis import strategies as st
 
 from fstore_sql_spark import EventStore
 
-# property sweeps run many Spark jobs per example — full tier only
-pytestmark = pytest.mark.slow
-
 
 def uid() -> str:
     return str(uuid.uuid4())
@@ -54,6 +51,8 @@ def pstore(spark, tmp_path_factory):
     return store
 
 
+# Tier-1 profile: five small batches, each on the index path of
+# append_batch, so a run costs a few seconds.
 @settings(
     max_examples=5,
     deadline=None,
@@ -82,6 +81,7 @@ def test_append_invariants_hold(pstore, shape):
             assert ev["previous_id"] == ids[i - 1]
 
 
+@pytest.mark.slow
 def test_compaction_preserves_log(store):
     store.register_decider_event("d", "e", "x")
     for _ in range(5):
@@ -97,6 +97,7 @@ def test_compaction_preserves_log(store):
     assert store.get_events("post-compact", "d").count() == 1
 
 
+@pytest.mark.slow
 @settings(
     max_examples=8,
     deadline=None,
