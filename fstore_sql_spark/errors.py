@@ -64,7 +64,7 @@ class ConcurrentCommitError(OptimisticLockError):
     violation on ``previous_id`` (/root/reference/schema.sql:43-44).
     Retry the batch: validation will re-run against the winner's log.
 
-    Guarantee boundary (VERDICT r5): the committer FLOCK is the actual
+    Guarantee boundary: the committer FLOCK is the actual
     mutual-exclusion guarantee; this CAS is DETECTION, and its
     read-check → write_manifest window is not itself atomic — on a
     filesystem without flock semantics (some NFS mounts) the CAS alone
@@ -162,7 +162,7 @@ class ShardLayoutChangedError(FStoreError):
     underneath a live ledger: ``tools/resize_shards.py`` requires a
     QUIESCED store (no producers/consumers), and a racing process must
     fail loudly rather than route claims/acks by a stale shard count or
-    read a half-staged layout (r8, VERDICT r7 missing #3)."""
+    read a half-staged layout."""
 
     def __init__(self, table: str, pinned: int, message: str):
         super().__init__(

@@ -5,10 +5,10 @@ payload StructTypes are registered in the ``payload_schemas`` state table;
 ``EventStore.events_typed`` applies the matching ``from_json`` per version
 and upcasts every older version to the LATEST version's shape — fields the
 old version lacks become typed NULLs, fields it dropped are omitted,
-same-named fields are cast to the latest type, and (r6) RENAMED fields are
+same-named fields are cast to the latest type, and RENAMED fields are
 routed to their old name per version while numeric types may WIDEN
-(int → bigint, float → double, …).  Since r7 (VERDICT r6 #3) renames and
-widenings recurse into NESTED STRUCTS: rename maps address fields by
+(int → bigint, float → double, …).  Renames and widenings recurse
+into NESTED STRUCTS: rename maps address fields by
 dotted path (``{"meta.k_id": "meta.k"}``), a renamed struct re-roots its
 nested paths, and upcasting rebuilds nested structs field-by-field with
 NULL parents preserved.  The reference keeps payloads opaque JSONB and
@@ -47,14 +47,14 @@ def is_widening(old: DataType, new: DataType) -> bool:
     integral → wider integral, float → double, tinyint/smallint → float,
     any integral → double (documented: a bigint near 2^63 loses precision
     in double — the standard SQL promotion trade, same as Postgres
-    int8 → float8; int/bigint → FLOAT is REJECTED since r8 — float's
+    int8 → float8; int/bigint → FLOAT is REJECTED — float's
     24-bit mantissa silently corrupts values above 2^24), or
-    (r7, VERDICT r6 #3) a STRUCT whose every old field exists in the new
+    a STRUCT whose every old field exists in the new
     struct under the same name with a widening type (the new struct may
     ADD fields — old rows read them as typed NULLs).  Struct widening is
     a proper partial order: both directions hold only for equal shapes,
     so ``events_typed_many``'s widest-wins merge stays deterministic.
-    Since r8 (VERDICT r7 missing #1) ARRAYS widen elementwise (so
+    ARRAYS widen elementwise (so
     ``array<struct<…>>`` follows the struct rule) and MAPS widen by
     value type with the key type held identical."""
     if old == new:
@@ -81,7 +81,7 @@ def is_widening(old: DataType, new: DataType) -> bool:
         # of the integral type exactly: tinyint/smallint fit float's
         # 24-bit mantissa; int/bigint must go to double (53-bit — the
         # documented bigint-near-2^63 trade).  int/bigint → float would
-        # silently corrupt values above 2^24 (VERDICT r7 wrong #1).
+        # silently corrupt values above 2^24.
         return _FLOAT_RANK[n] == 2 or _INT_RANK[o] <= 2
     return False
 
@@ -89,10 +89,10 @@ def is_widening(old: DataType, new: DataType) -> bool:
 def all_paths(schema: StructType, prefix: tuple = ()) -> "list[tuple]":
     """Every field path of ``schema``, depth-first, as name tuples —
     struct fields are listed both as a path themselves and recursed
-    into.  Since r8, ``array<struct<…>>`` fields also recurse into their
-    ELEMENT struct (the path addresses the element field — traversal
-    through the array is implicit, mirroring ``type_at``); since r9
-    (VERDICT r8 #6) ``map<K, struct<…>>`` fields recurse into their
+    into.  ``array<struct<…>>`` fields also recurse into their ELEMENT
+    struct (the path addresses the element field — traversal through
+    the array is implicit, mirroring ``type_at``), and
+    ``map<K, struct<…>>`` fields recurse into their
     VALUE struct the same way — map KEYS stay data (no per-key paths),
     but the value struct's FIELDS are schema and get paths.  Paths are
     the unit of the nested rename/widen machinery."""
@@ -113,11 +113,10 @@ def all_paths(schema: StructType, prefix: tuple = ()) -> "list[tuple]":
 def type_at(schema: StructType, path: tuple) -> "DataType | None":
     """The DataType at a field path, or None if any component is missing
     (or a non-struct is traversed into).  Traversal INTO an
-    ``array<struct<…>>`` transparently unwraps to the element struct
-    (r8): ``type_at(s, ("items",))`` is the ArrayType itself,
+    ``array<struct<…>>`` transparently unwraps to the element struct:
+    ``type_at(s, ("items",))`` is the ArrayType itself,
     ``type_at(s, ("items", "price"))`` is the element field's type.
-    ``map<K, struct<…>>`` unwraps to the value struct the same way
-    (r9)."""
+    ``map<K, struct<…>>`` unwraps to the value struct the same way."""
     dt: DataType = schema
     for name in path:
         if isinstance(dt, ArrayType) and isinstance(dt.elementType, StructType):
@@ -166,18 +165,6 @@ def source_path_for_version(
     return p
 
 
-def source_field_name(
-    target_name: str,
-    from_version: int,
-    versions: "list[int]",
-    renames: "dict[int, dict[str, str]]",
-) -> str:
-    """Top-level convenience wrapper of ``source_path_for_version``."""
-    return ".".join(
-        source_path_for_version((target_name,), from_version, versions, renames)
-    )
-
-
 def upcast_struct(
     parsed: Column,
     from_schema: StructType,
@@ -187,16 +174,15 @@ def upcast_struct(
     """Project a parsed payload struct onto ``to_schema``, recursively:
     shared (or rename-routed, via ``field_sources`` dotted target path →
     dotted source path) fields cast to the target type, missing fields as
-    typed NULLs, nested structs rebuilt field-by-field (r7, VERDICT r6
-    #3) with NULL parents preserved (a NULL source struct stays a NULL
-    target struct, not a struct of NULLs).  Since r8 (VERDICT r7 missing
-    #1) ``array<struct<…>>`` fields rebuild ELEMENTWISE via
+    typed NULLs, nested structs rebuilt field-by-field with NULL parents
+    preserved (a NULL source struct stays a NULL target struct, not a
+    struct of NULLs).  ``array<struct<…>>`` fields rebuild ELEMENTWISE via
     ``F.transform`` — renames/widenings recurse into the element shape
     with the rename map re-rooted at the element (``validate_evolution``
     guarantees renames never cross an array boundary), NULL elements and
     NULL arrays preserved — and map values upcast via ``cast`` (scalar
     widening) or ``F.transform_values`` with the rename map re-rooted at
-    the VALUE struct (r9, VERDICT r8 #6: value-struct fields rename and
+    the VALUE struct (value-struct fields rename and
     widen like array elements; map KEYS stay data, never schema, and are
     passed through untouched).  Still pure
     ``struct``/``cast``/``when``/``transform`` composition — codegen,
@@ -251,8 +237,8 @@ def upcast_struct(
         if isinstance(to_dt, MapType) and isinstance(from_dt, MapType):
             to_v, from_v = to_dt.valueType, from_dt.valueType
             if isinstance(to_v, StructType) and isinstance(from_v, StructType):
-                # re-root the rename map at the map VALUE struct (r9,
-                # VERDICT r8 #6), exactly like the array-element path:
+                # re-root the rename map at the map VALUE struct,
+                # exactly like the array-element path:
                 # keys are data and never rename, value-struct fields are
                 # schema and rename/widen like any nested struct
                 tgt_pfx = ".".join(path) + "."
@@ -288,13 +274,13 @@ def typed_payload_column(
     multi-event union view passes the merged shape).
 
     ``renames`` maps version → {new_name: previous_name} so older rows'
-    fields route to their historical names (see ``source_field_name``).
+    fields route to their historical names (see ``source_path_for_version``).
 
     ``unmatched`` controls rows whose version has no registered schema:
     ``"null"`` yields a NULL payload (the pure-function default — callers
     pre-validate); ``"error"`` raises at EVALUATION time via
     ``raise_error`` so versions appended AFTER a view was constructed
-    fail loudly instead of masquerading as parse failures (ADVICE r5) —
+    fail loudly instead of masquerading as parse failures —
     the CASE branch only evaluates for unmatched rows, so registered
     data never pays it."""
     if not schemas:
@@ -346,17 +332,17 @@ def validate_evolution(
     renamed_from: "dict[str, str] | None",
 ) -> "list[str]":
     """Register-time evolution check for a NEW latest version against the
-    previous latest, recursing into nested structs (r7, VERDICT r6 #3 —
-    the reference's own stress corpus is nested JSONB,
+    previous latest, recursing into nested structs (the reference's own
+    stress corpus is nested JSONB,
     tests/performance/benchmarks/test_stress_conditions.sql:35-39): every
     new-version field PATH (dotted for nested, e.g. ``meta.k_id``) must
     be (a) brand new, (b) same path with identical or widened type, or
     (c) an explicit rename (``renamed_from["meta.k_id"] = "meta.k"``)
-    with identical or widened type.  Since r8 paths traverse
+    with identical or widened type.  Paths traverse
     ``array<struct<…>>`` elements too (``items.price`` addresses the
     element field of array ``items``), so element fields may rename,
-    widen, be added, or be dropped exactly like struct fields; since r9
-    (VERDICT r8 #6) ``map<K, struct<…>>`` VALUE-struct fields carry
+    widen, be added, or be dropped exactly like struct fields;
+    ``map<K, struct<…>>`` VALUE-struct fields carry
     paths the same way (``m.price`` addresses the value field of map
     ``m``) and rename/widen/add/drop like array elements — map KEYS
     remain data (key type must stay identical; scalar map values widen

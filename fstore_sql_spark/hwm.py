@@ -8,7 +8,7 @@ path; the tail columns let ``EventStore.append_batch`` decide a small
 append on a stream tail without scanning the log (the ``decider_index``
 probe analogue, /root/reference/schema.sql:56).
 
-Why this exists (VERDICT r5 #1): the claim path needs, per partition, the
+Why this exists: the claim path needs, per partition, the
 log's max offset + final flag ("the derived half of the reference's T6
 dual-write", /root/reference/schema.sql:240-263).  Through r5 that was ONE
 driver-resident pandas frame (``EventStore._hwm_pandas``), 76 B/partition,
@@ -155,7 +155,7 @@ class ShardedHwm:
             return None
 
     def _write_meta(self, commit_id: int) -> None:
-        # Durable (ADVICE r6): the meta is the validity tag of the state
+        # Durable: the meta is the validity tag of the state
         # tables ("meta == C ⟹ shards reflect C") and is always written
         # AFTER the durable shard deltas — fsync the content and the
         # dirent so a power loss can only lose the meta ADVANCE (next
@@ -306,7 +306,7 @@ class ShardedHwm:
                 self.invalidate()
                 return
             if self._synced_commit != int(prev_commit):
-                # committer alternation (review r6): a SIBLING published
+                # committer alternation: a SIBLING published
                 # commits since our last sync — its deltas moved shard
                 # versions our resident frames predate.  Folding this
                 # batch into such a frame would mark stale content
@@ -431,7 +431,7 @@ class ShardedHwm:
     def _load_frame(self, k: int) -> "tuple[pd.DataFrame, int]":
         """Load shard k from the state layout; returns ``(frame, version)``
         where ``version`` is the disk version read BEFORE the data
-        (review r6: recording ``state_version()`` re-read AFTER the load
+        (recording ``state_version()`` re-read AFTER the load
         could overstate — a sibling delta landing in between would mark a
         stale frame current and ``_spill`` would tag the evict-cache with
         the overstated version.  Reading the version first errs in the

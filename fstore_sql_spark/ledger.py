@@ -1,6 +1,6 @@
 """LocksLedger — driver-side authority for consumer (locks) state.
 
-Why this exists (VERDICT r01 items 1+2): the reference's ``locks`` table
+Why this exists: the reference's ``locks`` table
 lives in a central Postgres server, so claim/lease/ack are row updates with
 ~ms latency and ``FOR UPDATE SKIP LOCKED`` gives cross-connection disjoint
 claims (/root/reference/schema.sql:402-446).  Round 1 expressed every lock
@@ -22,7 +22,7 @@ This module is the embedded-KV analogue of that central table:
   the API return).  Hot-path flushes are APPEND-DELTAS — only the rows
   the call touched, O(#acks) not O(#lock rows) — with a full snapshot
   every ``COMPACT_EVERY`` commits to bound the chain a cold reader
-  replays (VERDICT r2 flush-scaling item).  Writes go through pyarrow
+  replays.  Writes go through pyarrow
   (no Spark job on the hot path).
 - **Cross-process claim safety** — the SKIP LOCKED analogue
   (/root/reference/schema.sql:411): an ``fcntl.flock`` mutex on a
@@ -31,7 +31,7 @@ This module is the embedded-KV analogue of that central table:
   the snapshot.  Two EventStore processes on one path therefore serialize
   their claims against the same state and can never double-deliver.  A
   crashed holder's lock is released by the KERNEL when its fd closes —
-  no TTL-steal protocol, hence no steal race (ADVICE r2).
+  no TTL-steal protocol, hence no steal race.
 
 Scale ceiling, stated honestly: one frame on one driver, exactly like the
 reference's one table on one Postgres primary.  Per-tick flush cost no
@@ -99,7 +99,7 @@ class ProcessLock:
     already serialized by the store's commit lock, and two flock fds in
     one process conflict too, so stray in-process concurrency is safe).
 
-    Why flock (ADVICE r2, medium): the previous O_CREAT|O_EXCL + mtime
+    Why flock: the previous O_CREAT|O_EXCL + mtime
     TTL-steal scheme had a TOCTOU race — between the stale-age stat and
     the steal rename, the old holder could release and a NEW process
     acquire, so the stealer renamed away a live lock and two processes
@@ -119,7 +119,7 @@ class ProcessLock:
     def _check_not_held(self) -> None:
         # Non-reentrant by design: a nested acquire on the same thread
         # would silently overwrite the held fd (leaking it) and then
-        # self-deadlock on the second flock until TimeoutError (ADVICE r3).
+        # self-deadlock on the second flock until TimeoutError.
         # Fail fast instead — nesting guard() on one shard is a bug.
         if getattr(self._held, "fd", None) is not None:
             raise RuntimeError(
@@ -259,8 +259,8 @@ class LocksLedger:
         A mutator that RAISES mid-update (KeyboardInterrupt between two
         iloc writes, a coercion error) leaves the frame diverged from its
         disk version with nothing pending — replaying sibling deltas onto
-        that frame would bake the phantom rows into the next compaction
-        (review r4).  The except arm therefore invalidates the cached
+        that frame would bake the phantom rows into the next compaction.
+        The except arm therefore invalidates the cached
         frame; the next access reloads wholesale from disk, discarding
         the partial mutation (safe: the call never returned)."""
         with self._plock.held():
@@ -406,7 +406,7 @@ class LocksLedger:
         # delta, re-insert its non-tombstoned rows.
         #
         # Hot fast path (the sibling-replay cost a concurrent consumer
-        # pays per round, VERDICT r3 #1): a claim/ack delta only UPDATES
+        # pays per round): a claim/ack delta only UPDATES
         # keys that already exist — write the value columns in place by
         # POSITION instead of drop+concat+sort (which re-factorizes the
         # whole MultiIndex per delta, ~10ms against ~0.1ms here).
@@ -432,7 +432,7 @@ class LocksLedger:
     def flush(self) -> None:
         """Persist the pending mutation.  Hot path (claim/ack ticks): an
         APPEND-DELTA snapshot containing only the touched rows — O(#acks)
-        per tick, not O(#lock rows) (VERDICT r2 flush-scaling item).  A
+        per tick, not O(#lock rows).  A
         full snapshot is written instead when the delta chain reaches
         ``COMPACT_EVERY`` (bounds cold-reader replay), when the pending
         set rivals the frame itself (bulk backfills), or when nothing
@@ -541,14 +541,14 @@ class LocksLedger:
         return int(self._df.memory_usage(deep=True).sum())
 
     def evict(self) -> None:
-        """LRU shard paging (VERDICT r4 #2): release the resident frame;
+        """LRU shard paging: release the resident frame;
         the next use reloads from the (flushed) disk snapshot.  Callable
         only OUTSIDE the guard — mutators flush before releasing, so a
         dirty frame here means a caller bug and the evict is refused
         rather than dropping unflushed consumer progress.
 
         Before dropping, the PARSED frame is spilled to a version-tagged
-        Arrow IPC evict-cache (r6, VERDICT r5 #2): a re-visit then pays
+        Arrow IPC evict-cache: a re-visit then pays
         one mmap read + the delta tail SINCE the tag, instead of the full
         parquet snapshot + up-to-COMPACT_EVERY delta replay — the cost
         that made a paged drain 0.59x of unpaged (BASELINE.md).  Best
@@ -600,7 +600,7 @@ class LocksLedger:
         torn state; callers outside :meth:`guard` have no unflushed
         mutations (mutators flush before returning).  Read-only callers
         (``locks()`` views) use this so they never serve arbitrarily stale
-        consumer state (ADVICE r2)."""
+        consumer state."""
         self._reload_if_stale()
 
     def to_pandas(self) -> pd.DataFrame:
@@ -747,7 +747,7 @@ class LocksLedger:
         ok = (p < len(ids)) & (ids[np.minimum(p, len(ids) - 1)] == t)
         if not ok.any():
             # no row matched — a no-op ack must not trigger a snapshot
-            # flush (ADVICE r2)
+            # flush
             return
         gpos = start + p[ok]
         vals = np.fromiter(dedup.values(), dtype="int64", count=len(dedup))[ok]
@@ -758,8 +758,8 @@ class LocksLedger:
         # locked_until < now, and the fused ack_and_claim tick evaluates
         # both halves at the same ``now`` — an exact-now release would
         # exclude a just-acked hot partition from the same tick's claim,
-        # forcing an empty round whenever claimable partitions <= limit
-        # (review r4).  The reference relies on NOW() advancing between
+        # forcing an empty round whenever claimable partitions <= limit.
+        # The reference relies on NOW() advancing between
         # statements for the same effect (schema.sql:436-446).
         self._df.iloc[gpos, cols.get_loc("locked_until")] = now64 - np.timedelta64(1, "us")
         self._df.iloc[gpos, cols.get_loc("updated_at")] = now64
@@ -856,7 +856,7 @@ class ShardedLocksLedger:
     ledger's crash/durability story unchanged.
 
     Methods are SELF-GUARDING: each takes only the shard locks it touches
-    (callers no longer wrap mutations in ``guard()``).  Claiming (r4) is
+    (callers no longer wrap mutations in ``guard()``).  Claiming is
     STICKY + NON-BLOCKING — the two halves of what makes SKIP LOCKED
     scale in the reference:
 
@@ -866,7 +866,7 @@ class ShardedLocksLedger:
       disjoint shards without any coordination, so the steady state has
       no lock contention AND no sibling-delta replay (each consumer's
       shard only ever advances by its own commits) — the two serializers
-      the r3 rotation design still paid (VERDICT r3 'what's wrong' #1).
+      a rotating walk would still pay.
     - **SKIP LOCKED**: lock attempts during the walk are non-blocking; a
       shard held by a sibling is skipped exactly like a locked row under
       ``FOR UPDATE SKIP LOCKED`` (/root/reference/schema.sql:411).  A
@@ -903,14 +903,14 @@ class ShardedLocksLedger:
     different counts would silently mis-route acks (dropped as unknown
     pairs) and redeliver forever.  A ``<table>_SHARDS`` marker written at
     first creation pins the count; reopening adopts it, and an EXPLICIT
-    mismatching ``n_shards`` argument fails loudly (ADVICE r3, medium).
+    mismatching ``n_shards`` argument fails loudly.
     """
 
     DEFAULT_SHARDS = 8
     # claims between fairness-probe ticks (see _fairness_probe): lower
     # = tighter starvation bound, higher = more shard affinity
     FAIRNESS_EVERY = 8
-    # Sizing rule (r6, VERDICT r5 #3, from the BASELINE.md tick-latency
+    # Sizing rule (from the BASELINE.md tick-latency
     # curve: the per-tick eligibility scan is O(shard rows); ~2.5k
     # rows/shard ticks at ~5ms, ~125k at ~42ms): keep shards at or under
     # TARGET_ROWS_PER_SHARD rows for a low-double-digit-ms p95 tick.
@@ -986,7 +986,7 @@ class ShardedLocksLedger:
                 else self.DEFAULT_SHARDS,
             )
         self.n_shards = self._pin_shard_count(storage, table, n_shards, hint)
-        # LRU shard paging (VERDICT r4 #2): with ``max_resident`` set,
+        # LRU shard paging: with ``max_resident`` set,
         # at most that many shard frames stay loaded on the driver —
         # resident memory is O(active shards), not O(#partitions).  The
         # sticky-affinity claim path touches ~1 shard per consumer, so a
@@ -995,8 +995,7 @@ class ShardedLocksLedger:
         # (default) keeps every shard resident — correct for stores whose
         # partition count fits the driver comfortably.
         self.max_resident = max_resident
-        # Layout pins for the live-resize guard (r8, VERDICT r7 missing
-        # #3): _verify_layout re-reads these on every read surface and
+        # Layout pins for the live-resize guard: _verify_layout re-reads these on every read surface and
         # after every shard-lock acquisition.
         self._marker_path = os.path.join(storage.root, f"{table}_SHARDS")
         self._staging_path = _resize_paths(storage, table)[0]
@@ -1020,15 +1019,15 @@ class ShardedLocksLedger:
         # shard -> last observed claim stamp: the live-sibling detector
         # (see _fairness_probe)
         self._fairness_stamp: dict[int, tuple | None] = {}
-        # rolling tick-latency window for the operational resize warning
-        # (r6, VERDICT r5 #3): shard count binds tick latency, the count
+        # rolling tick-latency window for the operational resize warning:
+        # shard count binds tick latency, the count
         # is pinned into the layout, and nothing used to tell an operator
         # the store had outgrown it until they read BASELINE.md
         self._tick_lat: deque = deque(maxlen=self.TICK_WINDOW)
         # rows of the largest shard each tick actually scanned — the
-        # second gate of the resize warning (r7, VERDICT r6 wrong #1: a
-        # latency-only trigger false-fired on a noisy box whose shards
-        # were 26x UNDER the sizing rule)
+        # second gate of the resize warning (a latency-only trigger
+        # false-fired on a noisy box whose shards were 26x UNDER the
+        # sizing rule)
         self._tick_rows: deque = deque(maxlen=self.TICK_WINDOW)
         self._tick_count = 0  # monotonic — the deque length saturates
         self._tick_warned_at = 0.0
@@ -1043,7 +1042,7 @@ class ShardedLocksLedger:
 
         marker = os.path.join(storage.root, f"{table}_SHARDS")
         if not os.path.exists(marker):
-            # Pre-marker sharded stores (r3) must be DETECTED, not
+            # Pre-marker sharded stores must be DETECTED, not
             # guessed: adopting a default of 8 on a store laid out with
             # another count would silently mis-route — the exact failure
             # the marker exists to prevent.  Every shard's state dir is
@@ -1136,7 +1135,7 @@ class ShardedLocksLedger:
         return sum(1 for s in self.shards if s.resident)
 
     def _verify_layout(self) -> None:
-        """The live-resize guard (r8, VERDICT r7 missing #3): cheap
+        """The live-resize guard: cheap
         re-read of the on-disk layout pins, called at the top of every
         read surface and after every shard-lock acquisition in the
         mutators.  ``tools/resize_shards.py`` requires a quiesced store;
@@ -1177,7 +1176,7 @@ class ShardedLocksLedger:
     def refresh(self) -> None:
         """Bring EVERY shard current — the O(#partitions) read surface
         behind the reference-shaped ``locks()`` view.  Re-enforces the
-        residency budget afterwards (ADVICE r5): a READ-ONLY process
+        residency budget afterwards: a READ-ONLY process
         (e.g. a monitor polling ``locks()``) never runs a mutator tick,
         so without the trailing evict its full-table reads would keep
         the entire ledger resident indefinitely on a paged store."""
@@ -1200,10 +1199,10 @@ class ShardedLocksLedger:
     def shard_frame(self, k: int) -> pd.DataFrame:
         """One shard's state rows (freshened), with the paging budget
         re-enforced before returning — the public unit of shard-at-a-time
-        operational scans (r8, VERDICT r7 wrong #3: callers previously
+        operational scans (callers previously
         reached into ``_ensure_resident``/``_evict_over_budget``,
         scattering the eviction invariant outside the ledger).  Guarded
-        like every other read surface (ADVICE r8): a racing resize must
+        like every other read surface: a racing resize must
         raise ``ShardLayoutChangedError``, not serve a half-staged or
         stale-count layout."""
         self._verify_layout()
@@ -1222,7 +1221,7 @@ class ShardedLocksLedger:
         # Shard-at-a-time with a rolling evict: the RESULT is O(#rows) by
         # contract (the caller asked for the full table), but the resident
         # shard frames stay within budget+1 even during the read — and are
-        # back under budget when it returns (ADVICE r5).
+        # back under budget when it returns.
         self._verify_layout()
         frames = []
         for k in range(self.n_shards):
@@ -1273,7 +1272,7 @@ class ShardedLocksLedger:
     def upcoming_walk_order(self) -> list[int]:
         """Shard indices in the order the NEXT ``ack_and_claim`` walk
         will visit them (sticky first).  Exposed for the prefetch warm
-        set (r12, VERDICT r11 #3): warming in this order instead of
+        set: warming in this order instead of
         global hwm-offset order makes the warmed windows the ones the
         claim walk will actually reach — the walk consumes the sticky
         shard's candidates in full before touching shard sticky+1, so a
@@ -1499,16 +1498,16 @@ class ShardedLocksLedger:
         return got
 
     def _note_tick_latency(self, dt: float, shard_rows: int = 0) -> None:
-        """The shard-sizing early-warning (r6, VERDICT r5 #3): when the
+        """The shard-sizing early-warning: when the
         rolling p95 ``ack_and_claim`` latency crosses TICK_P95_WARN_S AND
         the shards those ticks scanned actually exceed the
         TARGET_ROWS_PER_SHARD sizing rule, log ONE actionable line naming
-        the fix.  Both gates are required (r7, VERDICT r6 wrong #1): p95
+        the fix.  Both gates are required: p95
         alone false-fired on a noisy measurement box whose shards were
         26x UNDER the rule — latency without oversized shards is the BOX,
         not the layout, and a resize would do nothing.  The recommended
         count is derived from the measured rows/shard and clamped to
-        MAX_SHARDS (ADVICE r6: the old ``n_shards*4`` recommendation
+        MAX_SHARDS (the old ``n_shards*4`` recommendation
         could exceed the supported maximum); at MAX_SHARDS the warning is
         suppressed entirely — there is no resize left to recommend.
         Re-warns at most hourly; sampling costs a deque append per tick
@@ -1516,7 +1515,7 @@ class ShardedLocksLedger:
         self._tick_lat.append(dt)
         self._tick_rows.append(int(shard_rows))
         self._tick_count += 1
-        # throttle on the MONOTONIC counter (review r6: the deque length
+        # throttle on the MONOTONIC counter (the deque length
         # saturates at TICK_WINDOW, and 128 % 16 == 0 made the old
         # len()-based guard fire every tick once the window filled)
         if self._tick_count < self.TICK_WINDOW or self._tick_count % 16:
@@ -1616,7 +1615,7 @@ class ShardedLocksLedger:
 
 
 # --------------------------------------------------------------------- #
-# Offline shard-count resize (r5).  The claim-tick scan is O(rows) per
+# Offline shard-count resize.  The claim-tick scan is O(rows) per
 # visited shard (BASELINE.md tick-latency curve), so deployments growing
 # toward 10^8 partitions raise the shard count — but the count is pinned
 # into the on-disk layout (crc32 % N routing).  resize_shards re-routes

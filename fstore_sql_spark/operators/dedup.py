@@ -314,7 +314,7 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
     """MinHash+LSH candidate pairs (shingle → minhash → band → bucket
     self-join) — SURVEY.md §7.7 / the build brief's scale path for near-dup
     detection."""
-    # spread (r14): the corpus is one scan task, so the shingle explode +
+    # spread: the corpus is one scan task, so the shingle explode +
     # 4 md5/shingle signature map otherwise runs single-threaded.
     sigs = minhash_signatures(spread(_corpus(spark, sf_dir)))
     return lsh_candidate_pairs(sigs)
@@ -723,11 +723,10 @@ def dedup_prefix_filter_pairs(spark, sf_dir):
 
 #: Auto-persist gate for ``prefix_filter_pairs``: persist the exploded
 #: shingle table only when the corpus has at least this many documents.
-#: The interleaved A/B (tools/bench_ppjoin_persist.py, BASELINE.md "PPJoin
-#: tok persist") won at sf10 (500k docs, 1.08x) and sf100 (5M docs,
-#: 1.15x) but TAXED the sf0.1 gate query 64% (5k docs, r11 driver
-#: artifact, VERDICT r11 #4) — the threshold sits a decade below the
-#: smallest measured win and a decade above the measured tax.
+#: The interleaved A/B (BASELINE.md "PPJoin tok persist: measured, kept")
+#: won at sf10 (500k docs, 1.08x) and sf100 (5M docs, 1.15x) but TAXED
+#: the sf0.1 gate query 64% (5k docs) — the threshold sits a decade
+#: below the smallest measured win and a decade above the measured tax.
 PERSIST_TOK_MIN_DOCS = 100_000
 
 #: Coarse per-document estimate of the DISK_ONLY tok cache's on-disk
@@ -752,10 +751,10 @@ def _persist_tok_fits_disk(corpus: DataFrame, n_docs: int) -> bool:
     # own resolution order, so a deployment that sets only the env var
     # would have this gate probing the wrong volume — approving a persist
     # that lands on a smaller disk, the exact ENOSPC class the gate
-    # exists to prevent (ADVICE r12).  Mirror Spark: env first, conf
+    # exists to prevent.  Mirror Spark: env first, conf
     # fallback, /tmp default.  Spark round-robins blocks across EVERY
     # listed dir, so the usable pool is the SUM of free space over the
-    # distinct filesystems behind the list (ADVICE r13: probing only the
+    # distinct filesystems behind the list (probing only the
     # first entry under- or over-estimated multi-volume deployments,
     # depending on which dir happened to be listed first); two dirs on
     # one volume share its free space, hence dedup by st_dev.
@@ -805,7 +804,7 @@ def prefix_filter_pairs(
     and spill bytes are recorded in BASELINE.md ("PPJoin stop-list")."""
     tok = with_shingles(corpus).distinct()
     if persist_tok is None:
-        # Size-gated auto default (r12, VERDICT r11 #4 + ADVICE r11):
+        # Size-gated auto default:
         # the unconditional r11 default taxed the 5k-doc sf0.1 gate
         # query 64% to benefit corpora 100x larger, and leaked one
         # DISK_ONLY cache per call in every no-arg sweep caller.  The
@@ -821,9 +820,9 @@ def prefix_filter_pairs(
     if persist_tok:
         # ``tok`` feeds THREE subplans (the doc-frequency aggregate +
         # both sides of the verify join), so without a persist each use
-        # re-explodes the corpus.  The interleaved A/B
-        # (tools/bench_ppjoin_persist.py, BASELINE.md "PPJoin tok
-        # persist") measured the persist arm winning where it matters:
+        # re-explodes the corpus.  The interleaved A/B (BASELINE.md
+        # "PPJoin tok persist: measured, kept") measured the persist arm
+        # winning where it matters:
         # sf10 median 39.6→36.7 s (1.08x), sf100 379→330 s (1.15x,
         # every adjacent draw pair favoring persist).
         # DISK_ONLY (not MEMORY) because at sf100 the exploded table is
@@ -878,7 +877,7 @@ def prefix_filter_pairs(
 
 
 # --------------------------------------------------------------------------- #
-# Incremental-batch dedup (r4).  The daily-crawl shape: a NEW batch arrives
+# Incremental-batch dedup.  The daily-crawl shape: a NEW batch arrives
 # and must be deduped against the EXISTING corpus index without touching
 # new×new or base×base pairs.  The planted copies stand in as the incoming
 # batch.  Scale design: the increment is small relative to the corpus by
@@ -996,7 +995,7 @@ def dedup_incremental_batch(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------- #
-# Train/test split leakage audit (r4).  Deduplication and splitting compose
+# Train/test split leakage audit.  Deduplication and splitting compose
 # badly: a hash-of-id split sends exact duplicates to BOTH sides, leaking
 # evaluation data into training.  This audit joins the duplicate-group view
 # with the split assignment and counts groups straddling the boundary —
@@ -1058,7 +1057,7 @@ def split_leakage_audit(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------- #
-# Leakage-safe split (r4).  The REPAIR for what split_leakage_audit
+# Leakage-safe split.  The REPAIR for what split_leakage_audit
 # measures: splitting on a hash of the duplicate-group key (the content
 # digest) instead of the document id sends every exact-duplicate cluster
 # to ONE side by construction — leakage cannot exist.  Same deterministic

@@ -89,7 +89,7 @@ def extract_features(media: DataFrame, decoder=fake_decode) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf["payload"]
-            # NULL payloads pass through as NULL rows (r10): bytes-typed
+            # NULL payloads pass through as NULL rows: bytes-typed
             # pipelines meet NULLs whenever media is joined/derived from
             # nullable columns, and a crash here kills the whole batch.
             yield pd.DataFrame(
@@ -560,7 +560,7 @@ def multimodal_wav_decode(spark, sf_dir):
                 b = text.encode()
                 # little-endian pair → UNSIGNED 0..65535, wrapped to signed
                 # int16 (what PCM16 stores; array('h') overflows above
-                # 32767 otherwise — ADVICE r2)
+                # 32767 otherwise)
                 samples = [
                     ((b[2 * i] + 256 * b[2 * i + 1]) ^ 0x8000) - 0x8000
                     for i in range(int(n))
@@ -602,7 +602,7 @@ def audio_windows(media: DataFrame, window_ms: int = 100) -> DataFrame:
         for pdf in batches:
             out: dict[str, list] = {k.name: [] for k in AUDIO_WINDOWS_SCHEMA.fields}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:  # NULL payload → no windows (r10)
+                if payload is None:  # NULL payload → no windows
                     continue
                 b = bytes(payload)
                 for i in range(math.ceil(len(b) / window_ms)):

@@ -85,7 +85,7 @@ def sample_deterministic_counts(spark, sf_dir):
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_sampled"),
-            # r11 membership digest (VERDICT r10 #5): pins WHICH ids were
+            # membership digest: pins WHICH ids were
             # sampled, not just how many per stratum
             F.sum(hash32(F.col("doc_id").cast("string"))).alias("id_digest"),
         )
@@ -118,7 +118,7 @@ def train_test_split_counts(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("total_chars"),
-            # r11 membership digest (VERDICT r10 #5)
+            # membership digest
             F.sum(hash32(F.col("doc_id").cast("string"))).alias("id_digest"),
         )
     )
@@ -150,7 +150,7 @@ def weighted_mix_counts(spark, sf_dir):
     )
     return mixed.groupBy("mix_source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        # r11 membership digest (VERDICT r10 #5)
+        # membership digest
         F.sum(hash32(F.col("doc_id").cast("string"))).alias("id_digest"),
     )
 
@@ -326,7 +326,7 @@ def packed_bin_stats(spark, sf_dir):
         .groupBy("bin")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            # r11 membership digest (VERDICT r10 #5): pins which docs
+            # membership digest: pins which docs
             # landed in each 512-token chunk, not just the counts
             F.sum(hash32(F.col("doc_id").cast("string"))).alias("id_digest"),
             F.sum("n_tokens").alias("bin_tokens"),

@@ -74,7 +74,7 @@ def norm(a) -> Column:
 
 
 def cosine(a, b) -> Column:
-    # try_divide + NULLIF (review r4): a zero vector makes the norm
+    # try_divide + NULLIF: a zero vector makes the norm
     # product exactly 0 and an ANSI division aborts the whole job; NULL
     # (cosine undefined) matches DuckDB list_cosine_similarity's
     # non-finite handling on degenerate inputs
@@ -292,7 +292,7 @@ def build_ivf_index(
     )
     assigned = model.transform(with_vec).drop("_features")
     centroids = [(i, c.tolist()) for i, c in enumerate(model.clusterCenters())]
-    # Release the fit-time cache (r15, VERDICT r14 #4/#7): the persist
+    # Release the fit-time cache: the persist
     # exists to amortize the k-means init+Lloyd jobs; after .fit() the
     # centroids are extracted and ``assigned`` recomputes its (narrow)
     # lineage from the scan on execution, so keeping the feature frame
@@ -370,8 +370,7 @@ def ann_ivf_kmeans_topk(spark, sf_dir):
     embeddings table, then answer one query (vec_id=0) probing 3 cells.
     Seeded, so results are stable run-to-run.
 
-    Was rows-only in r2; now an INEQUALITY-style oracle (VERDICT r2 #7):
-    the brute-force top-1 neighbor is computed in Spark AND re-derived by
+    An INEQUALITY-style oracle: the brute-force top-1 neighbor is computed in Spark AND re-derived by
     DuckDB (value-checked), and the IVF ranking is gated on recall@5 ≥
     0.6 against the exact brute-force top-5 — a bad quantizer or probe
     pruning bug flips ``recall_ok`` and fails the hash.  The k-means fit
@@ -447,7 +446,7 @@ def knn_label_accuracy(spark, sf_dir):
         F.nullif(F.col("qn") * F.col("nv"), F.lit(0.0)),
     )
     w = Window.partitionBy("qid").orderBy(F.col("s").desc(), "vec_id")
-    # corpus side spread before the broadcast join (r14): one scan task
+    # corpus side spread before the broadcast join: one scan task
     # otherwise evaluates all |q|·|corpus| pair scores serially.
     ranked = (
         _spread(e).withColumn("nv", norm(F.col("v")))
@@ -750,7 +749,7 @@ def lsh_hyperplane_buckets(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------- #
-# Embedding-space benchmark decontamination (r4).  The semantic counterpart
+# Embedding-space benchmark decontamination.  The semantic counterpart
 # of the 5-gram `benchmark_contamination` in operators/text.py: training
 # vectors too close (cosine) to ANY held-out benchmark vector are flagged,
 # catching paraphrased contamination that exact n-gram overlap misses.
@@ -804,7 +803,7 @@ def embedding_contamination(spark, sf_dir):
         dot(F.col("v"), F.col("bv"), expand=_PAIR_DOT_DIM),
         F.nullif(F.col("nv") * F.col("bn"), F.lit(0.0)),
     )
-    # training side spread before the broadcast cross join (r14): the
+    # training side spread before the broadcast cross join: the
     # |train|·|bench| score map otherwise runs in the single scan task.
     per_vec = (
         _spread(e.filter(F.col("label") != 0))

@@ -34,7 +34,7 @@ def profile_frame(
     seeded ``fraction`` sample of ``df``, deterministic tie-break.
 
     Separate from :func:`profile_hot_keys` so ``tests/test_plans.py`` can
-    pin its plan like every other stage (VERDICT r9 #6): sampled scan →
+    pin its plan like every other stage: sampled scan →
     partial agg → one exchange → TakeOrderedAndProject(n_keys) — the
     sample is scan-side, the shuffle carries only the sampled (key, count)
     pairs, and the top-k never global-sorts."""
@@ -56,10 +56,10 @@ def profile_hot_keys(
     hot_rows_budget: int = 2_000_000,
 ) -> list:
     """Profile ``df[on]`` and return the keys that are ACTUALLY hot —
-    empty when nothing qualifies (r10, VERDICT r9 #2: the r9 profile
-    always nominated 16 keys, so on uniform data the flagship silently
-    paid the two-branch plan for a join with no skew, and the recipe
-    taught users to skip the decision a real mitigation starts with).
+    empty when nothing qualifies (a profile that always nominated 16
+    keys would make the flagship pay the two-branch plan on uniform data
+    for a join with no skew, and would teach users to skip the decision
+    a real mitigation starts with).
 
     The hotness verdict is the shuffle-task budget rule: a key is hot iff
     its estimated full-table row count (``n_sampled / fraction``) exceeds
@@ -164,8 +164,7 @@ def skew_salted_revenue(spark, sf_dir):
     """,
 )
 def skew_salted_hot_revenue(spark, sf_dir):
-    """The RECOMMENDED skew pattern (r9, VERDICT r8 #1; decision rule
-    r10, VERDICT r9 #2) — profile, DECIDE, then salt only the keys that
+    """The RECOMMENDED skew pattern — profile, DECIDE, then salt only the keys that
     are actually hot.  Oracle-verified against the same plain-join SQL
     that pins ``skew_salted_revenue``: identical answers whatever the
     profile decides (empty hot set → the vanilla AQE-optimized join via
@@ -182,8 +181,8 @@ def skew_salted_hot_revenue(spark, sf_dir):
     decade and the flagship takes the single vanilla join — measured at
     ~zero overhead vs the plain join, while on genuinely skewed data the
     same recipe salts only the hot keys (the win + overhead table lives
-    in BASELINE.md "Skew decision rule", from
-    ``tools/bench_skew_win.py``)."""
+    in BASELINE.md "skew decision rule + the first measured skew
+    WIN")."""
     l = load(spark, sf_dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     hot = profile_hot_keys(l, on="o_orderkey")
@@ -236,7 +235,7 @@ def salted_join_hot(
     if salt_from is None:
         salt_from = F.xxhash64(*[F.col(c) for c in left.columns])
     is_hot = F.col(on).isin(list(hot_keys))
-    # NULL join keys route to the COLD branch (ADVICE r8 high): for a
+    # NULL join keys route to the COLD branch: for a
     # NULL key ``is_hot`` is NULL, so BOTH ``filter(is_hot)`` and
     # ``filter(~is_hot)`` would drop the row — a plain left join keeps
     # it with NULL right columns.  NULL never equi-joins, so the cold

@@ -157,7 +157,7 @@ def zscore_outlier_counts(spark, sf_dir):
         "event_type",
         "n_events",
         (F.col("sx") / F.col("n_events")).alias("mean_value"),
-        # GREATEST(...,0) on both engines (review r4): cancellation in
+        # GREATEST(...,0) on both engines: cancellation in
         # E[x2]-E[x]2 can go to -1e-21 for constant-value groups —
         # Spark sqrt(neg) silently NaNs every z-comparison while DuckDB
         # sqrt(neg) hard-errors the oracle
@@ -235,7 +235,7 @@ def corr_quantity_price(spark, sf_dir):
         F.sum(qd * pd_).cast("double").alias("sxy"),
     )
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    # GREATEST + try_divide (review r4): a constant-x group makes the
+    # GREATEST + try_divide: a constant-x group makes the
     # variance product 0 (ANSI divide-by-zero aborts the job) or, via
     # cancellation, slightly negative (sqrt NaN vs DuckDB hard error)
     den = F.sqrt(
@@ -590,7 +590,7 @@ def regr_price_on_quantity(spark, sf_dir):
         F.sum(qd * qd).cast("double").alias("sxx"),
         F.sum(qd * pd_).cast("double").alias("sxy"),
     )
-    # NULLIF denominator (review r4): a constant-quantity group has
+    # NULLIF denominator: a constant-quantity group has
     # n*sxx - sx*sx exactly 0 — ANSI division would abort the job
     slope = F.try_divide(
         F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"),
@@ -654,7 +654,7 @@ def time_weighted_value(spark, sf_dir):
     ).filter(F.col("dt_us").isNotNull())
     return d.groupBy("user_id").agg(
         F.count("dt_us").alias("n_intervals"),
-        # try_divide (review r4): a user whose events all share one
+        # try_divide: a user whose events all share one
         # microsecond makes SUM(dt_us)=0 — under ANSI a plain division
         # aborts the whole job for one degenerate user; NULL matches the
         # DuckDB oracle's NULLIF
@@ -1143,8 +1143,8 @@ def approx_value_percentiles(spark, sf_dir):
     per-group sort-based percentiles would shuffle the world.  Sketches
     merge associatively (map-side partials), so cost is one small shuffle
     of sketch state.  Sketch values are engine-specific, so the oracle is
-    INEQUALITY-style (VERDICT r2 #7): exact percentiles are verified
-    value-for-value cross-engine (6dp-rounded both engines, ADVICE r3),
+    INEQUALITY-style: exact percentiles are verified
+    value-for-value cross-engine (6dp-rounded both engines),
     and the sketch is gated by a +-1%%-rank window folded into
     ``within_tol``."""
     e = load(spark, sf_dir, "events")
@@ -1168,7 +1168,7 @@ def approx_value_percentiles(spark, sf_dir):
             F.col("ap")[i] <= F.col("rw")[2 * i + 1] + F.lit(1e-9)
         )
 
-    # 6dp rounding on BOTH engines (ADVICE r3): linear-interpolation
+    # 6dp rounding on BOTH engines: linear-interpolation
     # percentiles differ by an ULP across engines on knife-edge ranks,
     # which the 9dp value-hash does not absorb; matches the
     # winsorized_value_stats convention.
@@ -1311,7 +1311,7 @@ def ols_price_model(spark, sf_dir):
     c11 = n * s22 - s2 * s2
     c12 = s1 * s2 - n * s12
     c22 = n * s11 - s1 * s1
-    # NULLIF det (review r4): collinear features make det exactly 0 —
+    # NULLIF det: collinear features make det exactly 0 —
     # ANSI division aborts; NULL betas match the oracle's NULLIF
     det = F.nullif(c00 * n + c01 * s1 + c02 * s2, F.lit(0.0))
     # ROUND(β, 6) on BOTH sides (r10, the sf10 correctness decade): the
@@ -1434,7 +1434,7 @@ def weekly_revenue_growth(spark, sf_dir):
 
 
 # first-snapshot cutoff shared by the Spark plan and the oracle (ONE
-# definition — review r4: the hardcoded pair could silently drift)
+# definition: a hardcoded pair could silently drift)
 _DIFF_CUTOFF = "2024-01-03 00:00:00"
 
 
@@ -1826,7 +1826,7 @@ def chi2_lang_source(spark, sf_dir):
         .withColumn("c", F.sum("n").over(Window.partitionBy("source")))
         .withColumn("big_n", F.sum("n").over(Window.partitionBy()))
     )
-    # factors cast to DECIMAL(38,0) BEFORE multiplying (review r4): at
+    # factors cast to DECIMAL(38,0) BEFORE multiplying: at
     # ~2e10 documents the int64 products r*c and n*big_n overflow and
     # ANSI aborts — exactly the scale the docstring targets.  The diff
     # collapses to double immediately after (it is divided by a double
@@ -1896,7 +1896,7 @@ def benford_price_digits(spark, sf_dir):
             "first_digit"
         )
     )
-    # '1'..'9' only (review r4): a value in (0,1) renders '0.xx' and a
+    # '1'..'9' only: a value in (0,1) renders '0.xx' and a
     # negative renders '-...' — digit '0' makes 1/d an ANSI
     # divide-by-zero (job abort) and '-' an ANSI cast error; Benford's
     # law is undefined for both anyway, so both engines drop them
@@ -2106,7 +2106,7 @@ def dq_assertion_suite(spark, sf_dir):
         o.join(F.broadcast(c.select("c_custkey")), o.o_custkey == c.c_custkey,
                "left_anti")
         .agg(F.count(F.lit(1)).alias("v"))
-        # reuse the fused aggregate's total (review r4): a separate
+        # reuse the fused aggregate's total: a separate
         # o.agg(count) was a THIRD full scan of orders — identical
         # subtrees let AQE reuse o_stats's exchange instead
         .crossJoin(o_stats.select("total"))

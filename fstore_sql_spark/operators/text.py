@@ -39,7 +39,7 @@ def text_token_stats(spark, sf_dir):
     """Whitespace token counting, aggregated per language — the token-budget
     accounting query of a training-data pipeline.
 
-    ``tok_digest`` (r11, VERDICT r10 #5): an order-insensitive 32-bit-sum
+    ``tok_digest``: an order-insensitive 32-bit-sum
     digest of the token CONTENTS, so a tokenizer bug that preserves
     per-doc counts (the r10 BPE regex class) cannot keep this gate green.
     NULL text must stay NULL on the Spark side: ``concat_ws`` treats a
@@ -144,9 +144,9 @@ def text_quality_filter(spark, sf_dir):
 )
 def text_fingerprint(spark, sf_dir):
     """Rolling-hash document fingerprint: min digest over all 8-gram BYTE
-    shingles (winnowing with window = whole doc).  Two r9 changes
-    (VERDICT r8 #4), both pinned by `tools/bench_fingerprint_state.py`
-    in BASELINE.md:
+    shingles (winnowing with window = whole doc).  Two changes, both
+    measured in BASELINE.md "text_fingerprint per-row cost:
+    characterized and fixed":
 
     - RUNNING min via ``F.aggregate`` instead of
       ``array_min(transform(...))`` — O(1) live digest strings per row
@@ -157,7 +157,7 @@ def text_fingerprint(spark, sf_dir):
       the whole fingerprint O(len²) per doc: measured 170 s for ONE
       250k-char doc vs 0.75 s byte-indexed (226×), 3.3 s at 4M chars.
 
-    Two r10 changes (ADVICE r9), both exercised by the adversarial
+    Two choices, both exercised by the adversarial
     non-ASCII fixture (`tests/test_text_adversarial.py`):
 
     - The digested unit is the HEX encoding of the byte slice
@@ -182,7 +182,7 @@ def text_fingerprint(spark, sf_dir):
         F.lit("g"),
         lambda acc, i: F.least(acc, F.md5(F.hex(F.substring(b, i, 8)))),
     )
-    # spread (r14): one md5 per byte position per doc — by far the most
+    # spread: one md5 per byte position per doc — by far the most
     # compute per input byte of any scan-shaped operator — otherwise runs
     # entirely in the single scan task of the small corpus file.
     return spread(load(spark, sf_dir, "documents")).select(
@@ -272,7 +272,7 @@ def text_langid(spark, sf_dir):
     SQL, so the oracle now re-implements it exactly (list_filter +
     list_contains per profile, CASE cascade in alphabetical lang order ≡
     the Python loop's first-wins-on-ties) — a full value oracle, not an
-    agreement bound (VERDICT r2 #7)."""
+    agreement bound."""
     d = load(spark, sf_dir, "documents")
     langid = _make_langid_udf()
     return (
@@ -321,7 +321,7 @@ def text_bpe_token_counts(spark, sf_dir):
     # so only a corpus with consecutive-space/RTL/tab text exposed it.
     bpe_n = F.size(F.regexp_extract_all("text", F.lit(BPE_ISH_PATTERN), 0))
     ws_n = F.size(F.split(F.col("text"), " "))
-    # bpe_digest (r11, VERDICT r10 #5): token CONTENTS, not just counts —
+    # bpe_digest: token CONTENTS, not just counts —
     # the r10 '\s'-collapse bug kept counts equal on ASCII while contents
     # were wrong; this column makes that class impossible to miss.  NULL
     # and ZERO-TOKEN docs both digest to NULL: DuckDB's array_to_string
@@ -666,7 +666,7 @@ def doc_repetition_stats(spark, sf_dir):
             (max_run.cast("double") / F.size("_sb").cast("double")).alias(
                 "top_bigram_frac"
             ),
-            # r11 content digest (VERDICT r10 #5): the fractions above
+            # content digest: the fractions above
             # could collide under a wrong-bigram bug; the sorted bigram
             # array's md5 pins the contents per doc (the _sb sort makes
             # it order-insensitive by construction).
@@ -937,7 +937,7 @@ def repeated_ngram_stats(spark, sf_dir):
             F.round(
                 F.avg(F.when(F.col("n_docs_with") > 1, 1.0).otherwise(0.0)), 6
             ).alias("crossdoc_share"),
-            # r11 content digest (VERDICT r10 #5): the n-gram OCCURRENCE
+            # content digest: the n-gram OCCURRENCE
             # multiset, not just its counts
             F.sum(hash32(F.col("g"))).alias("gram_digest"),
         )
@@ -1032,7 +1032,7 @@ def dsir_importance_weights(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------- #
-# PII detection / redaction (r4).  A production training-data pipeline
+# PII detection / redaction.  A production training-data pipeline
 # scrubs emails / phone numbers / IP addresses before anything reaches a
 # tokenizer (C4 and Dolma both ship exactly this regex family).  The
 # synthetic corpus contains no organic PII, so the query plants
@@ -1126,7 +1126,7 @@ def pii_redaction_stats(spark, sf_dir):
             # SortAggregate fallback — the cheap plan at corpus scale.
             F.min(_md5_sig(F.col("red"))).alias("min_red_sig"),
             F.max(_md5_sig(F.col("red"))).alias("max_red_sig"),
-            # r11 (VERDICT r10 #5): min/max pin only two rows per group;
+            # min/max pin only two rows per group;
             # the 32-bit SUM pins every redacted doc's contents.
             F.sum(hash32(F.col("red"))).alias("sum_red_sig"),
         )
@@ -1134,7 +1134,7 @@ def pii_redaction_stats(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------- #
-# Gopher-style quality rule suite (r4).  The Gopher / MassiveText cleaning
+# Gopher-style quality rule suite.  The Gopher / MassiveText cleaning
 # rules (word-count band, mean-word-length band, alphabetic-word ratio,
 # minimum stopword evidence) as independent per-doc flags, aggregated to a
 # per-source rule report — the "why was this doc dropped" accounting view a
@@ -1214,7 +1214,7 @@ def gopher_quality_rules(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------- #
-# Token-budget mixture planner (r4).  Dolma-style mixing: given a corpus
+# Token-budget mixture planner.  Dolma-style mixing: given a corpus
 # token budget and per-source mixing weights (uniform here), compute each
 # source's sampling rate, planned token yield, and epoch factor
 # (rate > 1 ⇒ the source must be up-sampled / repeated to hit its
@@ -1268,7 +1268,7 @@ def token_budget_mixture(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------- #
-# BM25 lexical retrieval (r4).  The lexical half of a hybrid RAG retrieval
+# BM25 lexical retrieval.  The lexical half of a hybrid RAG retrieval
 # stack, complementing the ANN family in operators/similarity.py.  Corpus
 # statistics (N, avgdl, per-term df) are tiny aggregates that BROADCAST;
 # term frequencies are computed only for the query terms (the explode is
@@ -1355,7 +1355,7 @@ def bm25_topk(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------- #
-# Hybrid retrieval fusion (r4).  Reciprocal-rank fusion of the BM25
+# Hybrid retrieval fusion.  Reciprocal-rank fusion of the BM25
 # lexical ranking with a deterministic second ranking — the standard way
 # a RAG stack combines lexical and semantic retrievers without score
 # calibration.  Here the second ranker is recency (doc_id desc) so the

@@ -82,7 +82,7 @@ def shuffle_exchange_count(df: DataFrame) -> int:
 
 def spread_exchange_count(df: DataFrame) -> int:
     """Round-robin REPARTITION_BY_NUM exchanges — the ``spread()``
-    parallelism floor (r14).  These exist only when the input collapses
+    parallelism floor.  These exist only when the input collapses
     to fewer partitions than the session's parallelism (single-row-group
     local test files); on any at-scale input ``spread`` is a no-op and
     the node disappears, so plan pins should budget them separately from
@@ -91,7 +91,7 @@ def spread_exchange_count(df: DataFrame) -> int:
     n = 0
     for m in re.finditer(r"^\((\d+)\) Exchange\b", plan, re.M):
         # The Arguments: line for this node, searched ONLY inside the
-        # node's own detail block (ADVICE r14: a lazy forward scan would
+        # node's own detail block (a lazy forward scan would
         # silently attribute the NEXT node's Arguments if a formatted-
         # explain variant ever omitted this node's line).  A detail block
         # is the run of non-blank lines following the `(N) Name` header.
@@ -114,7 +114,7 @@ def data_shuffle_count(df: DataFrame, max_spread: int = 1) -> int:
     count that actually scales with data volume at 100 TB (the floor
     exchange only exists on tiny local inputs).
 
-    ``max_spread`` caps the subtraction (ADVICE r14): every pinned query
+    ``max_spread`` caps the subtraction: every pinned query
     has at most ONE spread() site, so a future genuine ``repartition(n)``
     added for data redistribution — which also plans as a RoundRobin
     REPARTITION_BY_NUM exchange — still trips the zero-data-shuffle pins

@@ -102,8 +102,7 @@ def _norm_ntz(df: DataFrame) -> DataFrame:
 
 
 # starved_only fires only at <= this many input partitions — the single-
-# row-group pathology.  Named constant (ADVICE r14): the value comes from
-# the r14 session-5 interleaved A/B table (OPTIMIZATION_r14.md #8): a
+# row-group pathology.  The value comes from an interleaved A/B: a
 # 1-partition scan won -17..-49 % from the floor, while the same operators
 # at a 16-partition sf1 scan LOST 8-84 % (the exchange of heavy rows
 # outweighed the 16->32 lift), so the gate admits only near-single-
@@ -157,7 +156,7 @@ def spread(df: DataFrame, starved_only: bool = False) -> DataFrame:
 def hash32(col) -> F.Column:
     """First 8 md5 hex chars as BIGINT — the cross-engine 32-bit content
     hash (identical in Spark and DuckDB via ``hash32_sql``).  Used by the
-    r11 CONTENT-DIGEST columns (VERDICT r10 #5): count-shaped gate
+    CONTENT-DIGEST columns: count-shaped gate
     queries sum this over their pre-aggregation rows so a wrong-contents/
     right-counts bug (the r10 BPE regex class) flips the value hash
     instead of sitting green.  32 bits keeps a SUM over 2^30 rows far
@@ -306,7 +305,7 @@ def es_stream_next_offset(spark, sf_dir):
         ).alias("last_offset")
     )
     return (
-        # no broadcast hint (review r4): last_off has one row per user,
+        # no broadcast hint: last_off has one row per user,
         # which GROWS with the data — at sf0.1 AQE broadcasts it anyway,
         # at cluster scale a user_id shuffle join is the safe plan (and
         # the downstream groupBy reuses that partitioning)
@@ -464,7 +463,7 @@ def q1_pricing_summary(spark, sf_dir):
     one = F.lit(1).cast("decimal(18,2)")
     disc_price = _dec("l_extendedprice") * (one - _dec("l_discount"))
     return (
-        # spread (r14): eight exact-decimal aggregates over a single-row-
+        # spread: eight exact-decimal aggregates over a single-row-
         # group scan otherwise fold in one task (measured -25 %, 8-round
         # interleaved A/B; the exchange moves only the 7 pruned columns).
         spread(load(spark, sf_dir, "lineitem"), starved_only=True)
@@ -590,7 +589,7 @@ def top_customers_per_nation(spark, sf_dir):
     n = load(spark, sf_dir, "nation")
     o = load(spark, sf_dir, "orders")
     spent = (
-        # customer grows with SF — no forced broadcast (review r4); the
+        # customer grows with SF — no forced broadcast; the
         # bounded nation dim stays hinted, AQE picks the customer side's
         # strategy by size
         o.join(c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -699,7 +698,7 @@ def user_sessions(spark, sf_dir):
         .otherwise(0)
         .alias("new_session"),
     )
-    # event_id tiebreaker (review r4): under a (user_id, ts) tie the
+    # event_id tiebreaker: under a (user_id, ts) tie the
     # running sum could fold the tied rows in either order, flipping
     # which session the boundary row lands in — nondeterministic across
     # engines AND across Spark runs
@@ -731,7 +730,7 @@ def json_value_by_type(spark, sf_dir):
     return (
         load(spark, sf_dir, "events")
         .groupBy("event_type")
-        # n_k counts the UN-CAST extraction (review r4): counting the
+        # n_k counts the UN-CAST extraction: counting the
         # long-cast value would silently change n_k's meaning from "key
         # present" to "key numeric" the moment a non-numeric k appears —
         # the oracle counts json_extract_string, i.e. presence
@@ -902,7 +901,7 @@ def q18_large_orders(spark, sf_dir):
     o = load(spark, sf_dir, "orders")
     l = load(spark, sf_dir, "lineitem")
     return (
-        # customer grows with SF — strategy left to AQE (review r4)
+        # customer grows with SF — strategy left to AQE
         o.join(c, o.o_custkey == c.c_custkey)
         .join(l, l.l_orderkey == o.o_orderkey)
         .groupBy("c_custkey", "o_orderkey", "o_orderdate")
@@ -1147,7 +1146,7 @@ def asof_last_event_before(spark, sf_dir):
     """Point-in-time (as-of) lookup: per partition, the last event strictly
     before a timestamp — an as-of join against a constant time, the
     max_by/DISTINCT ON pattern under a pushdown filter."""
-    # Greatest-n-per-group with a deterministic tiebreak (review r4): a
+    # Greatest-n-per-group with a deterministic tiebreak: a
     # bare max_by(x, ts) picks an ARBITRARY row on a per-user ts tie,
     # independently per engine.  Restricting to the max-ts rows first and
     # then taking the max event_id makes both engines agree; the join is
@@ -1180,7 +1179,7 @@ def asof_last_event_before(spark, sf_dir):
 def approx_distinct_users(spark, sf_dir):
     """approx_count_distinct (HLL++, rsd 0.05) per event type — the
     approximate-distinct sketch.  Sketch internals differ across engines,
-    so the oracle is INEQUALITY-style (VERDICT r2 #7): the exact distinct
+    so the oracle is INEQUALITY-style: the exact distinct
     count is verified value-for-value cross-engine, and the sketch is
     gated by a 3-sigma relative-error bound folded into ``within_tol``
     (a sketch estimate off by >15% flips the boolean and fails the
@@ -1356,7 +1355,7 @@ def pivot_daily_event_counts(spark, sf_dir):
 def cube_lineitem_stats(spark, sf_dir):
     """CUBE (all grouping-set combinations) — the remaining member of the
     grouping-sets family (ROLLUP covered by rollup_order_stats)."""
-    # spread (r14): CUBE's Expand multiplies every input row 4x before
+    # spread: CUBE's Expand multiplies every input row 4x before
     # the partial aggregate — single scan task otherwise (measured -36 %).
     # starved_only: at 16-partition inputs (sf1) the exchange measured
     # neutral-to-worse, so fire only on the 1-row-group pathology.
@@ -2785,7 +2784,7 @@ def revenue_share_by_nation(spark, sf_dir):
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     rev = (
-        # customer grows with SF — strategy left to AQE (review r4);
+        # customer grows with SF — strategy left to AQE;
         # nation (25 rows) stays hinted
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -3060,8 +3059,8 @@ def payload_schema_evolution(spark, sf_dir):
     """,
 )
 def payload_schema_evolution_nested(spark, sf_dir):
-    """NESTED rename + widen + add across a 3-version payload chain (r7,
-    VERDICT r6 #3 — the reference's own stress corpus is nested JSONB,
+    """NESTED rename + widen + add across a 3-version payload chain (the
+    reference's own stress corpus is nested JSONB,
     tests/performance/benchmarks/test_stress_conditions.sql:35-39):
     v1 {meta {k INT}} → v2 renames meta.k→meta.k_id (dotted-path rename)
     and widens to BIGINT → v3 adds meta.note STRING and top-level tag.
@@ -3075,7 +3074,7 @@ def payload_schema_evolution_nested(spark, sf_dir):
     projection — zero shuffle, codegen end-to-end."""
     from fstore_sql_spark.functions.typed_payload import typed_payload_column
 
-    # spread (r14): the per-row from_json parse of the synthesized
+    # spread: the per-row from_json parse of the synthesized
     # 3-version payloads otherwise runs in the single scan task of the
     # small events file (measured -29/-36/-49 % across the trio).
     # starved_only: at 16-partition inputs (sf1) the exchange of the
@@ -3181,8 +3180,7 @@ def payload_schema_evolution_nested(spark, sf_dir):
 )
 def payload_schema_evolution_array(spark, sf_dir):
     """ARRAY-OF-STRUCT rename + widen + add across a 3-version payload
-    chain (r8, VERDICT r7 missing #1 — the reference's stress corpus
-    builds a 100-element array inside nested JSONB,
+    chain (the reference's stress corpus builds a 100-element array inside nested JSONB,
     tests/performance/benchmarks/test_stress_conditions.sql:35-39):
     v1 {items array<{p INT}>} → v2 renames the ELEMENT field
     items.p→items.price (dotted path through the array) and widens to
@@ -3199,7 +3197,7 @@ def payload_schema_evolution_array(spark, sf_dir):
     end-to-end (plan pinned in tests/test_plans.py)."""
     from fstore_sql_spark.functions.typed_payload import typed_payload_column
 
-    # spread (r14): the per-row from_json parse of the synthesized
+    # spread: the per-row from_json parse of the synthesized
     # 3-version payloads otherwise runs in the single scan task of the
     # small events file (measured -29/-36/-49 % across the trio).
     # starved_only: at 16-partition inputs (sf1) the exchange of the
@@ -3312,8 +3310,7 @@ def payload_schema_evolution_array(spark, sf_dir):
 )
 def payload_schema_evolution_map(spark, sf_dir):
     """MAP-VALUE-STRUCT rename + widen + add across a 3-version payload
-    chain (r9, VERDICT r8 #6 — the wall arrays broke through in r8, now
-    open for ``map<string, struct<…>>`` payloads): v1
+    chain (``map<string, struct<…>>`` payloads): v1
     {m map<string, {p INT}>} → v2 renames the VALUE field m.p→m.price
     (dotted path through the map) and widens to BIGINT → v3 renames the
     MAP itself m→attrs and adds value field q STRING.  The operator
@@ -3329,7 +3326,7 @@ def payload_schema_evolution_map(spark, sf_dir):
     projection — zero shuffle, codegen end-to-end."""
     from fstore_sql_spark.functions.typed_payload import typed_payload_column
 
-    # spread (r14): the per-row from_json parse of the synthesized
+    # spread: the per-row from_json parse of the synthesized
     # 3-version payloads otherwise runs in the single scan task of the
     # small events file (measured -29/-36/-49 % across the trio).
     # starved_only: at 16-partition inputs (sf1) the exchange of the
@@ -3414,8 +3411,8 @@ def payload_schema_evolution_map(spark, sf_dir):
     """,
 )
 def payload_schema_upcast(spark, sf_dir):
-    """Versioned payload schema registry + typed upcast view (VERDICT r4
-    #4; SURVEY.md §1.3 schema-on-read — the reference keeps payloads
+    """Versioned payload schema registry + typed upcast view (SURVEY.md
+    §1.3 schema-on-read — the reference keeps payloads
     opaque JSONB, /root/reference/schema.sql:37).  Rows alternate between
     payload v1 {k} and v2 {k, q}; the operator under test
     (``typed_payload_column``, what ``EventStore.events_typed`` applies)

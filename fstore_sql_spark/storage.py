@@ -126,7 +126,7 @@ class Manifest:
     analogue); ``max_offset`` caches the BIGSERIAL head so offset assignment
     is O(1) instead of a max() scan per append (SURVEY.md §7.4).
 
-    ``pending_rows`` (r6, ADVICE r5 medium) records how many rows the
+    ``pending_rows`` records how many rows the
     allocation ``commit_id`` is about to append — written durably BEFORE
     the log append so crash recovery can verify whether the batch landed
     COMPLETELY (publish it) or PARTIALLY (quarantine its files) instead of
@@ -207,7 +207,7 @@ class ParquetStore:
     # advances AFTER the append completes.  Sibling processes key their
     # cache invalidation on the published id, so they never rebuild from
     # a log directory that is missing (or partially containing) a batch
-    # still being written (ADVICE r2, high).
+    # still being written.
     # ------------------------------------------------------------------ #
 
     def _published_path(self, table: str) -> str:
@@ -235,7 +235,7 @@ class ParquetStore:
             empty.write.mode("overwrite").parquet(path)
             _atomic_write(os.path.join(self._log_base(table), _LATEST), "0")
             self.write_manifest(table, Manifest())
-        # Seed the published marker at bootstrap (ADVICE r3): without it,
+        # Seed the published marker at bootstrap: without it,
         # read_published falls back to the MANIFEST — which advances
         # BEFORE the append — so during the very first commit a sibling
         # could rebuild its cache from a partially-landed batch.  With
@@ -290,14 +290,14 @@ class ParquetStore:
         ``paths`` are files whose rows ALL belong to commit ``txn``,
         resolved from parquet FOOTER min/max statistics on
         ``transaction_id`` (no data read; one footer per file); ``torn``
-        are files with UNREADABLE footers (ADVICE r6: a power loss can
+        are files with UNREADABLE footers (a power loss can
         persist an append's rename while losing its data pages — such a
         file belongs to no readable batch but would fail every subsequent
         log read if left in place, so recovery must quarantine it).
         Every append writes fresh files containing only its own commit,
         so a batch's files are exactly the min==max==txn set; recovery
-        uses this to verify whether a crashed append landed completely
-        (ADVICE r5 medium).  Files without usable stats fall back to
+        uses this to verify whether a crashed append landed completely.
+        Files without usable stats fall back to
         reading just the transaction_id column (tiny — defensive only)."""
         import pyarrow.parquet as pq
 
@@ -345,7 +345,7 @@ class ParquetStore:
 
     def quarantine_log_files(self, table: str, txn: int, paths: list[str]) -> str:
         """Move log files into ``_quarantine/txn_<id>/`` under the current
-        log generation instead of unlinking them (ADVICE r6: recovery used
+        log generation instead of unlinking them (recovery used
         to DELETE a partial batch's files; a misconfigured reader on a
         flock-less mount — the documented ProcessLock limitation — could
         then destroy a live committer's in-flight batch unrecoverably.
@@ -428,7 +428,7 @@ class ParquetStore:
         and required: ``_state_entry`` prefers a ``v{N}`` DIRECTORY over
         a later ``v{N}.delta.arrow``, so a shadowing orphan would make
         every reader resolve version N to stale pre-crash state and
-        re-claim partitions another process holds (review r4)."""
+        re-claim partitions another process holds."""
         base = self._state_dir(table)
         full = os.path.join(base, f"v{version:08d}")
         if os.path.isdir(full):
@@ -472,13 +472,13 @@ class ParquetStore:
     # (default ignore_prefixes) so Spark-written snapshots load cleanly.
     # ------------------------------------------------------------------ #
 
-    # State-snapshot layout, extended (r3): a version is either a FULL
+    # State-snapshot layout, extended: a version is either a FULL
     # snapshot directory ``v{N}`` or a DELTA file ``v{N}.delta.arrow``
     # holding only the rows changed by one commit (plus a ``_deleted``
     # tombstone column).  ``_LATEST`` still names the current version.
     # Rationale: the locks ledger flushes on EVERY claim/ack tick; a full
     # snapshot rewrite is O(#lock rows) per ack, which a 10M-partition
-    # deployment cannot pay (VERDICT r2 'what's wrong' #3).  Deltas make
+    # deployment cannot pay.  Deltas make
     # the per-tick flush O(#touched rows); periodic full snapshots
     # (ledger.COMPACT_EVERY) bound the read-side chain replay.  Spark
     # ``read_state`` is only ever pointed at all-full-snapshot tables
@@ -558,7 +558,7 @@ class ParquetStore:
         recoverable by redelivery).  Measured cost of per-tick fsync on
         the b3 path: ~1.3 ms of a ~6 ms tick, -20% delivery throughput.
 
-        ``durable=True`` (the watermark maintenance path, review r6):
+        ``durable=True`` (the watermark maintenance path):
         fsync the delta file AND its directory entry before flipping a
         fsync'd pointer.  The hwm meta-invariant ("meta == C ⟹ state
         reflects C") makes a power loss that keeps the meta but drops a
@@ -590,7 +590,7 @@ class ParquetStore:
                 _fsync_dir(self._state_dir(table))
             _atomic_write(self._latest_path(table), str(version), durable=durable)
             if durable:
-                # ADVICE r6: the pointer FLIP itself must be durable too.
+                # The pointer FLIP itself must be durable too.
                 # On a filesystem persisting renames out of order, power
                 # loss could keep a LATER consumer of this version (e.g.
                 # the hwm meta, written after we return) while losing the
@@ -632,7 +632,7 @@ class ParquetStore:
                 return None
         return out
 
-    # ---- evict-cache (r6): version-tagged Arrow IPC spill of a PARSED
+    # ---- evict-cache: version-tagged Arrow IPC spill of a PARSED
     # state frame, shared by the paged locks ledger and watermark (review
     # r6: the two sides used to carry near-identical copies of this
     # protocol, one future-drift bug source).  The cache is best-effort
@@ -733,7 +733,7 @@ class ParquetStore:
             )
             os.replace(tmp, target)
             # make the rename power-loss durable before the fsync'd
-            # pointer can name it (review r6: a pointer that survives a
+            # pointer can name it (a pointer that survives a
             # snapshot that didn't leaves the table unreadable)
             _fsync_dir(self._state_dir(table))
             _atomic_write(self._latest_path(table), str(version))
@@ -770,7 +770,7 @@ class ParquetStore:
         for d in os.listdir(base):
             if ".tmp." in d:
                 # a crash between staging and os.replace orphans the tmp
-                # file forever (no other code path deletes it, ADVICE r3);
+                # file forever (no other code path deletes it);
                 # reclaim after a grace period so a LIVE writer's staging
                 # file is never yanked mid-rename
                 p = os.path.join(base, d)

@@ -116,7 +116,7 @@ class EventStore:
     # the next K unread events per claimed partition; the following K-1
     # claims of that partition are served driver-side (see stream_events).
     PREFETCH_DEPTH = 16
-    # Demand-aware window depth (r12, VERDICT r11 #3): the r11 "claim-
+    # Demand-aware window depth: the r11 "claim-
     # rotation drift" hypothesis was WRONG — instrumentation (BASELINE.md
     # r12 tail section) showed the residual sf1 tail refills are
     # SYNCHRONIZED WINDOW EXHAUSTION: the claim re-picks the same ~limit
@@ -141,7 +141,7 @@ class EventStore:
     # Sized to hold TWO refill generations (one generation = the shallow
     # budget plus the deep-window surplus), so the cap can never FORCE
     # eviction of live windows mid-cycle (the old 50k was smaller than
-    # two generations).  Computed, not hardcoded (ADVICE r11): retuning
+    # two generations).  Computed, not hardcoded: retuning
     # any constant keeps the two-generation invariant.  ~10s of MB of
     # driver dicts at worst — the same order as one collected delivery
     # batch.
@@ -150,7 +150,7 @@ class EventStore:
         + PREFETCH_DEEP_CAP * (PREFETCH_DEPTH_HOT - PREFETCH_DEPTH)
     )
 
-    # Auto paging budget (r7, VERDICT r6 #4): with ``expected_partitions``
+    # Auto paging budget: with ``expected_partitions``
     # given and no explicit residency choice, cap driver-resident consumer
     # state at this many shard frames — 16 × TARGET_ROWS_PER_SHARD ≈ 512k
     # rows (~40 MB), a plateau independent of the store's partition count.
@@ -167,7 +167,7 @@ class EventStore:
         expected_partitions: int | None = None,
         expected_consumers: int | None = None,
     ):
-        """``expected_partitions`` (r6, VERDICT r5 #3) sizes the initial
+        """``expected_partitions`` sizes the initial
         consumer-state shard count when this open CREATES the store
         (``ShardedLocksLedger.shards_for``: next power of two keeping
         shards ≤ ~32k partitions, the tick-latency sizing rule in
@@ -175,7 +175,7 @@ class EventStore:
         pins the layout; grow later with ``tools/resize_shards.py``
         (the ledger logs a p95-tick warning when that becomes due).
 
-        ``expected_consumers`` (r13, VERDICT r12 #3) adds the OTHER
+        ``expected_consumers`` adds the OTHER
         measured sizing rule to the same creation-time hint: concurrent
         claim throughput collapses once workers outnumber shards (the
         r11 scaling knee, BASELINE.md — ~5x/worker LOSS past the knee),
@@ -188,7 +188,7 @@ class EventStore:
         only the shard count a FRESH store is laid out with.
 
         Giving ``expected_partitions`` also enables the RECOMMENDED
-        production posture (r7, VERDICT r6 #4): LRU shard paging with a
+        production posture: LRU shard paging with a
         ``min(shards_for(N), AUTO_MAX_RESIDENT_SHARDS)`` residency budget,
         so a store that declares its scale gets O(active shards) driver
         memory by default.  Opt out with ``max_resident_shards="all"``
@@ -202,14 +202,14 @@ class EventStore:
         # (view, decider_id) -> {"lo": fetch-time last_offset, "rows":
         # [Row sorted by offset], "complete": window reached hwm}
         self._prefetch: dict[tuple[str, str], dict] = {}
-        # read-ahead cache observability (VERDICT r3 #6): the cache is
+        # read-ahead cache observability: the cache is
         # load-bearing for delivery perf, so hit/miss/refill are counted
         # and surfaced via stats() / asserted in bench + tests — a
         # silent ordering regression (the sf1 warm-order bug) would show
         # as a collapsed hit rate instead of just slow rounds.
         self.prefetch_counters = {"hits": 0, "misses": 0, "refills": 0}
-        # per-phase wall times of the most recent append_batch (b1
-        # profile, VERDICT r3 #3): candidates/validate/t6/commit
+        # per-phase wall times of the most recent append_batch:
+        # candidates/validate/t6/commit
         self.last_append_profile: dict[str, float] = {}
         # which validation path each append_batch call took
         self.append_paths = {"index": 0, "set": 0}
@@ -224,7 +224,7 @@ class EventStore:
         # different partitions don't serialize on one mutex; mutations
         # self-guard and never run Spark jobs.
         # ``max_resident_shards`` bounds driver-resident consumer state
-        # (LRU shard paging, VERDICT r4 #2): None keeps all shards loaded
+        # (LRU shard paging): None keeps all shards loaded
         # (right up to ~10M partitions on an 8 GiB driver — BASELINE.md
         # scale-ceiling table); an explicit budget makes residency
         # O(active shards) for the 10^8-partition regime.
@@ -236,7 +236,7 @@ class EventStore:
                 )
             max_resident_shards = None  # explicit keep-everything-resident
         elif max_resident_shards is None and expected_partitions is not None:
-            # the recommended posture (r7, VERDICT r6 #4): a declared scale
+            # the recommended posture: a declared scale
             # turns paging ON with a budget that plateaus regardless of N —
             # small stores get a budget >= their shard count (all resident,
             # zero tax), big ones get O(active shards) residency
@@ -248,7 +248,7 @@ class EventStore:
                 ),
             )
         if max_resident_shards is not None and max_resident_shards < 1:
-            # 0 would silently enable evict-everything-per-tick (ADVICE r5)
+            # 0 would silently enable evict-everything-per-tick
             raise ValueError(
                 f"max_resident_shards must be >= 1, got {max_resident_shards}"
             )
@@ -259,7 +259,7 @@ class EventStore:
             expected_partitions=expected_partitions,
             expected_consumers=expected_consumers,
         )
-        # Cross-process single-committer enforcement (VERDICT r4 #1): the
+        # Cross-process single-committer enforcement: the
         # reference gets multi-connection producer safety from
         # ``previous_id UNIQUE`` + row locks (/root/reference/schema.sql:44,
         # tests/integration/concurrency/test_concurrent_producers.sql); here
@@ -273,8 +273,8 @@ class EventStore:
             os.path.join(self.storage.root, f"{_EVENTS}_COMMITTER.lock")
         )
         self._committer_depth = threading.local()
-        # Sharded + paged per-partition high-watermark (r6, VERDICT r5
-        # #1): same crc32 shard routing and LRU budget as the ledger, so
+        # Sharded + paged per-partition high-watermark: same crc32 shard
+        # routing and LRU budget as the ledger, so
         # a paged store's TOTAL driver residency — consumer state AND
         # watermark — is O(active shards).  See hwm.py module doc.
         self._hwm_shards = ShardedHwm(
@@ -379,7 +379,7 @@ class EventStore:
         fresh, stalling or (worse) skipping events.  One tiny file read
         per call."""
         commit = self.storage.read_published(_EVENTS)
-        # Orphaned-commit roll-forward for PURE READERS (r5): if every
+        # Orphaned-commit roll-forward for PURE READERS: if every
         # writer died between manifest advance and marker publish, the
         # marker only moves again at the next committer-guard acquisition
         # — which a read-only process never performs, leaving a complete
@@ -462,7 +462,7 @@ class EventStore:
         # under the commit lock: the read rebinds shard frames, which
         # must not race an in-flight mutator thread (claim/ack/T6);
         # to_pandas itself refreshes each shard (sibling freshness) and
-        # re-enforces the paging budget when it returns (ADVICE r5)
+        # re-enforces the paging budget when it returns
         with self._commit_lock:
             self._refresh_external()
             state = self.ledger.to_pandas()
@@ -490,7 +490,7 @@ class EventStore:
 
     def locks_iter(self):
         """Shard-batched variant of ``locks()`` for operational tooling on
-        huge-partition stores (r7, VERDICT r6 wrong #3): yields one
+        huge-partition stores: yields one
         reference-shaped PANDAS frame per consumer-state shard, so peak
         driver residency is one shard (~TARGET_ROWS_PER_SHARD rows under
         the sizing rule), never the whole table.  Rows across all yielded
@@ -608,7 +608,7 @@ class EventStore:
 
     # ------------------------------------------------------------------ #
     # Versioned payload schemas + typed view (engine extension,
-    # SURVEY.md §1.3 schema-on-read; VERDICT r4 #4)
+    # SURVEY.md §1.3 schema-on-read)
     # ------------------------------------------------------------------ #
 
     def payload_schemas(self) -> DataFrame:
@@ -627,7 +627,7 @@ class EventStore:
         a NEW version, never a rewrite (the R1/R2 discipline applied to
         schemas); ``events_typed`` upcasts older versions at read time.
 
-        ``renamed_from`` (r6, VERDICT r5 #5) maps new field name → the
+        ``renamed_from`` maps new field name → the
         PREVIOUS version's name for fields this version renames; the
         typed view then routes old rows' values into the new name.
         Nested fields address by DOTTED PATH (r7: ``{"meta.k_id":
@@ -637,7 +637,7 @@ class EventStore:
         additions, explicit renames, and numeric widening (at any depth)
         pass (``SchemaEvolutionError`` otherwise) — so every historical
         row upcasts losslessly.  Versions must register in INCREASING
-        order (ADVICE r6): inserting a middle version would retroactively
+        order: inserting a middle version would retroactively
         rewire higher versions' rename walks."""
         st = as_struct_type(schema)
         ddl = ",".join(f"{f.name} {f.dataType.simpleString()}" for f in st.fields)
@@ -649,7 +649,7 @@ class EventStore:
                 raise errors.DuplicateSchemaError(event, event_version)
             prior = [r for r in reg if int(r["event_version"]) < int(event_version)]
             if len(prior) < len(reg):
-                # ADVICE r6: out-of-order registration (v3 then v2) would
+                # Out-of-order registration (v3 then v2) would
                 # validate v2 only against v1 — never v3-against-v2 — and
                 # a middle version's renames would retroactively change
                 # the rename walk of already-registered higher versions,
@@ -717,7 +717,7 @@ class EventStore:
         with no registered schema — a silent NULL payload would
         masquerade as a parse failure.
 
-        SNAPSHOT SEMANTICS (ADVICE r5): the view captures the registry
+        SNAPSHOT SEMANTICS: the view captures the registry
         AND the pre-validated version set at CONSTRUCTION time.  Rows of
         an unregistered version appended after construction fail loudly
         at evaluation (``raise_error`` in the dispatch CASE) rather than
@@ -748,7 +748,7 @@ class EventStore:
         )
 
     def events_typed_many(self, events: "list[str]") -> DataFrame:
-        """Multi-event typed view (VERDICT r5 #5): the UNION of several
+        """Multi-event typed view: the UNION of several
         event types' typed views under ONE merged payload shape — the
         union of every requested event's latest-version fields, with
         same-named fields across events required to agree up to numeric
@@ -1181,7 +1181,7 @@ class EventStore:
         the flock proves no LIVE committer is mid-append (the kernel
         released the dead holder's lock).  The manifest's ``pending_rows``
         (written with the allocation) makes recovery VERIFIED, not
-        assumed (ADVICE r5 medium) — the three crash windows:
+        assumed — the three crash windows:
 
         - log append never ran → 0 of pending_rows on disk; the
           allocation is burned; publishing records only an offset gap
@@ -1195,7 +1195,7 @@ class EventStore:
           batch's files is in the log dir.  Publishing that would break
           batch atomicity and intra-batch previous_id chains for readers,
           so the partial files are QUARANTINED (moved into the log dir's
-          ``_quarantine/txn_<id>/`` — r7, ADVICE r6: MOVED, never
+          ``_quarantine/txn_<id>/`` — MOVED, never
           unlinked, so even a misconfigured flock-less mount cannot make
           this path destroy bytes unrecoverably — together with the dead
           job's ``_temporary`` staging cleared so the next job commit
@@ -1280,7 +1280,7 @@ class EventStore:
             # row_number-over-monotonically_increasing_id derivation
             # was banned by SURVEY §7.4 exactly because a retry could
             # renumber the batch — and costs zero shuffle/window
-            # (VERDICT r4 'what's wrong' #1).  Hash ties are broken by
+            #.  Hash ties are broken by
             # event_id in every seq ordering; a chained pair colliding
             # on the hash (2^-64) is rejected by T3 like any
             # equal-seq pair — callers appending intra-batch chains
@@ -1468,8 +1468,7 @@ class EventStore:
             F.max(t3_viol).alias("t3"),
             # in-batch predecessor that hash order placed AT/AFTER its
             # successor — the tell for the no-seq scrambled-chain case
-            # (ADVICE r5: raise the targeted "supply seq" error, not a
-            # bare T3)
+            # (raise the targeted "supply seq" error, not a bare T3)
             F.max(
                 t3_viol & F.col("pred_seq").isNotNull()
             ).alias("t3_inbatch"),
@@ -1528,52 +1527,52 @@ class EventStore:
             )
         return errors.PreviousIdError()
 
-    # Batches above this many rows use the parallel two-phase numbering;
-    # below it, a plain global-window row_number (one small single-task
-    # sort beats the extra exchange + cache for micro-batches).  Tests
-    # lower it to force the parallel path on small data.
-    OFFSET_PARALLEL_THRESHOLD = 1_000_000
-
-    def _assign_offsets(self, cand: DataFrame, base_offset: int) -> DataFrame:
+    def _assign_offsets(
+        self, cand: DataFrame, base_offset: int
+    ) -> tuple[DataFrame, DataFrame]:
         """Contiguous offsets in global ``seq`` order WITHOUT a
         single-partition sort (SURVEY.md §7.4, the BIGSERIAL analogue).
 
-        Two-phase numbering: range-partition by ``seq`` (partition ids are
-        then ordered by seq range), count rows per partition, turn the
-        counts into per-partition base offsets (a window over the tiny
-        counts table), and add a partition-local row_number.  Every stage
-        is parallel — a 10⁹-row backfill batch numbers at full cluster
-        width, where ``row_number() OVER (ORDER BY seq)`` would funnel all
-        rows through one task.
+        Two-phase numbering: range-partition by ``seq`` and sort within
+        each partition, so partition ids are ordered by seq range and
+        ``monotonically_increasing_id`` holds (partition id << 33) + the
+        row's position in its partition.  One small job collects the row
+        count of each partition, the running sum of those counts gives
+        each partition's base offset, and a row's offset is its
+        partition's base plus its position.  Every stage is parallel — a 10⁹-row backfill batch
+        numbers at full cluster width, where ``row_number() OVER (ORDER
+        BY seq)`` would funnel all rows through one task.
+
+        Returns the numbered rows and the persisted frame they read, for
+        the caller to unpersist.
         """
-        ranged = cand.repartitionByRange("seq", "event_id").sortWithinPartitions(
-            "seq", "event_id"
+        # MUST be materialized before it is read twice: re-executing the
+        # range exchange for the counts and again for the rows lets AQE
+        # coalesce the two to DIFFERENT partition counts, and the
+        # positions the counts describe would not be the rows' positions.
+        # The persist pins one physical partitioning that both read.
+        withpos = (
+            cand.repartitionByRange("seq", "event_id")
+            .sortWithinPartitions("seq", "event_id")
+            .withColumn("_pos", F.monotonically_increasing_id())
+            .persist()
         )
-        # MUST be materialized before the plan forks: the counts branch and
-        # the main branch would otherwise re-execute the range exchange
-        # independently, and AQE may coalesce them to DIFFERENT partition
-        # counts — _pid spaces then disagree and the inner join silently
-        # drops rows.  The persist pins one physical partitioning that both
-        # branches read.  (Caller unpersists via the returned handle.)
-        withpid = ranged.withColumn("_pid", F.spark_partition_id()).persist()
-        counts = withpid.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-        wb = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-        bases = counts.select(
-            "_pid",
-            F.coalesce(F.sum("_cnt").over(wb), F.lit(0)).cast("long").alias("_base"),
-        )
-        wl = Window.partitionBy("_pid").orderBy("seq", "event_id")
-        assigned = (
-            withpid.join(F.broadcast(bases), "_pid")
-            .withColumn(
-                "offset",
-                (F.lit(base_offset) + F.col("_base") + F.row_number().over(wl)).cast(
-                    "long"
-                ),
-            )
-            .drop("_pid", "_base")
-        )
-        return assigned, withpid
+        pid = F.shiftright("_pos", 33).cast("int")
+        try:
+            counts = dict(withpos.groupBy(pid).count().collect())
+        except BaseException:
+            withpos.unpersist()
+            raise
+        bases, next_base = [], base_offset
+        for p in range(max(counts, default=0) + 1):
+            bases.append(next_base)
+            next_base += counts.get(p, 0)
+        position = F.col("_pos").bitwiseAND(F.lit((1 << 33) - 1))
+        assigned = withpos.withColumn(
+            "offset",
+            F.element_at(F.lit(bases).cast("array<bigint>"), pid + 1) + position + 1,
+        ).drop("_pos")
+        return assigned, withpos
 
     def _commit(
         self, cand: DataFrame, manifest: Manifest, now: datetime, n: int | None = None
@@ -1585,28 +1584,19 @@ class EventStore:
         txn = manifest.commit_id + 1
         if n is None:
             n = cand.count()
-        pinned = None
-        if n > self.OFFSET_PARALLEL_THRESHOLD:
-            assigned, pinned = self._assign_offsets(cand, manifest.max_offset)
-        else:
-            w = Window.orderBy("seq", "event_id")
-            assigned = cand.withColumn(
-                "offset",
-                (F.lit(manifest.max_offset) + F.row_number().over(w)).cast("long"),
-            )
-        finished = (
-            assigned.withColumn("created_at", F.lit(now))
-            .withColumn("transaction_id", F.lit(txn).cast("long"))
-            .select([f.name for f in EVENTS_SCHEMA.fields])
-        )
-        finished = finished.persist()
         prof = self.last_append_profile
+        _t = time.monotonic()
+        assigned, pinned = self._assign_offsets(cand, manifest.max_offset)
         try:
-            _t = time.monotonic()
-            # One job materialises the numbered batch and aggregates it
-            # per partition: the rows to fold into the sharded watermark
-            # (hwm.merge_batch), so steady ingest+deliver never
-            # re-aggregates the log, and the row count checked below.
+            finished = (
+                assigned.withColumn("created_at", F.lit(now))
+                .withColumn("transaction_id", F.lit(txn).cast("long"))
+                .select([f.name for f in EVENTS_SCHEMA.fields])
+            )
+            # One job aggregates the numbered batch per partition: the
+            # rows to fold into the sharded watermark (hwm.merge_batch),
+            # so steady ingest+deliver never re-aggregates the log, and
+            # the row count checked below.
             batch_hwm = (
                 finished.groupBy("decider_id")
                 .agg(
@@ -1629,9 +1619,7 @@ class EventStore:
             prof["offset_number_s"] = round(time.monotonic() - _t, 3)
             return self._publish(finished, manifest, n, batch_hwm, "decider_id")
         finally:
-            finished.unpersist()
-            if pinned is not None:
-                pinned.unpersist()
+            pinned.unpersist()
 
     def _publish(
         self,
@@ -1647,7 +1635,7 @@ class EventStore:
         (index decider_id, the other ``_HWM_COLS`` as columns)."""
         prof = self.last_append_profile
         txn = manifest.commit_id + 1
-        # Compare-and-swap gate (VERDICT r4 #1, defense in depth under
+        # Compare-and-swap gate (defense in depth under
         # the committer flock): if the on-disk manifest moved since this
         # append read it, a second committer raced us past the lock —
         # abort LOUDLY before allocating colliding offsets.  Nothing has
@@ -1664,7 +1652,7 @@ class EventStore:
         # the already-advanced max_offset.  The reference gets this
         # from the Postgres transaction; manifest-first is the
         # log-shipping equivalent.
-        # pending_rows rides the allocation (ADVICE r5 medium): if we
+        # pending_rows rides the allocation: if we
         # die before the marker publish, recovery can verify whether
         # the batch's files landed COMPLETELY instead of assuming so.
         self.storage.write_manifest(
@@ -1681,7 +1669,7 @@ class EventStore:
         _t = time.monotonic()
         # VISIBILITY marker: written only after the append completed,
         # so sibling processes' _refresh_external never rebuilds from
-        # a log missing this batch (ADVICE r2, high).
+        # a log missing this batch.
         self.storage.write_published(_EVENTS, txn)
         prof["marker_publish_s"] = round(time.monotonic() - _t, 3)
         self._see_log(txn, self.storage._log_gen(_EVENTS))
@@ -1849,11 +1837,11 @@ class EventStore:
         the ``created_at`` predicate pushed to the scan); the COALESCE
         against the high-watermark and the merge are driver-side frame
         ops.  Result cardinality = #partitions — the inherent write size
-        of T7.  On a PAGED store (r6) the backfill runs SHARD-AT-A-TIME:
+        of T7.  On a PAGED store the backfill runs SHARD-AT-A-TIME:
         the aggregate is written ONCE as a shard-partitioned parquet
         staging (the same layout trick as ``ShardedHwm._rebuild``) and
         each ``shard=k`` directory is then read directly with pyarrow —
-        O(|aggregate|) total scan work (ADVICE r6: the previous
+        O(|aggregate|) total scan work (the previous
         filter-the-persisted-DF-per-shard loop ran one Spark job over the
         WHOLE aggregate per shard, quadratic at the 4096-shard layouts
         ``shards_for``/resize enable), and the transient driver frame is
@@ -1990,7 +1978,7 @@ class EventStore:
                 )
                 served.extend(more)
                 drained.extend(drained2)
-            # Drained-claim release (r6): a claim whose window is complete
+            # Drained-claim release: a claim whose window is complete
             # and empty has NOTHING readable in our log view — possible
             # when the disk-backed watermark is microseconds NEWER than
             # our log view (hwm.py module doc).  Leaving it leased would
@@ -2043,7 +2031,7 @@ class EventStore:
                     # range, e.g. a nack rewound the consumer): it can
                     # never serve this consumer again — drop it rather
                     # than let the miss path leave it parked in the LRU
-                    # (ADVICE r11: a promoted-on-miss stale window read
+                    # (a promoted-on-miss stale window read
                     # as hot and shielded itself from eviction).
                     del self._prefetch[key]
                 missing.append((decider_id, last_offset))
@@ -2063,7 +2051,7 @@ class EventStore:
                 # 1.16 s/tick vs 39 ms on a hit).  Touching BEFORE the
                 # serveability check (the r11 form) promoted misses too,
                 # making "the front is the coldest" false for stale or
-                # drained windows (ADVICE r11) — now only serves promote.
+                # drained windows — now only serves promote.
                 self._prefetch[key] = self._prefetch.pop(key)
                 if count:
                     self.prefetch_counters["hits"] += 1
@@ -2081,7 +2069,7 @@ class EventStore:
     ) -> list[tuple[str, int]]:
         """The round's missing pairs plus (up to the cap) the view's other
         unread partitions, ordered the way the LEDGER WALK will actually
-        claim them (r12, VERDICT r11 #3): shards in upcoming walk order
+        claim them: shards in upcoming walk order
         (sticky first), within a shard by (hwm offset, last_offset) — the
         shard claim's own sort key.  The r11 form sorted candidates
         GLOBALLY by hwm offset, which spreads the warm budget evenly
@@ -2095,7 +2083,7 @@ class EventStore:
         tail ticks are probe ticks — n_shards slots buy those too.
         Leased partitions are included — their windows are wanted as
         soon as the ack lands.  Driver-frame scan only; no Spark work.
-        Per-shard watermark frames (r6): ledger shard k's candidates
+        Per-shard watermark frames: ledger shard k's candidates
         only need hwm shard k, and non-resident ledger shards are
         skipped outright — a paged store's refill never faults in the
         whole table."""
@@ -2251,7 +2239,7 @@ class EventStore:
         # releasing the lock first let a delivery tick re-lease the
         # partition before the read, so the returned row showed a fresh
         # lease instead of the released state the ack just wrote
-        # (review r4; _commit_lock is reentrant).
+        # (_commit_lock is reentrant).
         with self._commit_lock:
             self.ledger.ack(view, [(decider_id, int(offset))], now)
             return self._locks_rows(view, [decider_id])

@@ -88,7 +88,7 @@ class PushDelivery:
         fanout_partitions: int = 8,
         ack_on_success: bool | None = None,
     ):
-        """``mode`` (r6, VERDICT r5 #6):
+        """``mode``:
 
         - ``"driver"`` (default) — POSTs run on a bounded driver-side
           thread pool, parity with pg_net's single background worker
@@ -133,7 +133,7 @@ class PushDelivery:
         self._queries: dict[str, StreamingQuery] = {}
         # (pooling_delay_s, edge_function_url) each query was STARTED
         # with — sync() compares against the views table to implement
-        # T9's restart-on-update (review r4: membership alone kept
+        # T9's restart-on-update (membership alone kept
         # posting to a decommissioned URL forever)
         self._configs: dict[str, tuple] = {}
         # outstanding POSTs: bound the backlog, not just the workers
@@ -145,7 +145,7 @@ class PushDelivery:
         # housekeeping job can't leak memory either.
         self.run_details: deque = deque(maxlen=100_000)
         self._run_details_lock = threading.Lock()
-        # executor-mode delivery-JOB failures (review r6): a job() dying
+        # executor-mode delivery-JOB failures: a job() dying
         # inside the pool — unpicklable custom post, Spark submission
         # error, ack failure — used to vanish in an unobserved Future,
         # degenerating into a silent claim→expire→reclaim loop.  Bounded;
@@ -160,7 +160,7 @@ class PushDelivery:
         if view == self._HOUSEKEEPING:
             # the maintenance query shares the _queries map; a view with
             # the reserved name would silently kill housekeeping and then
-            # be skipped by sync() forever (review r4)
+            # be skipped by sync() forever
             raise ValueError(f"view name {view!r} is reserved")
         cfg = self.store.views().filter(F.col("view") == view).collect()
         if not cfg:
@@ -173,7 +173,7 @@ class PushDelivery:
         if url is None:
             # a None URL would claim + lease every tick and post into
             # urllib's ValueError (swallowed) — an undiagnosable
-            # claim/expire blackhole; fail at start instead (review r4)
+            # claim/expire blackhole; fail at start instead
             raise ValueError(f"view {view!r} has no edge_function_url")
         if view in self._queries:
             self.stop(view)
@@ -202,7 +202,7 @@ class PushDelivery:
                 # executor's queue is unbounded — claiming anyway would
                 # enqueue event payloads without limit until the driver
                 # OOMs.  Skipping the tick leaves events unleased; they
-                # deliver when the endpoint drains (review r4).
+                # deliver when the endpoint drains.
                 if backlog.full():
                     return
                 # The tick payload is ignored; the claim runs on the

@@ -49,56 +49,6 @@ def claim_worker(root: str, out_path: str, rounds: int, limit: int) -> None:
         json.dump(claims, f)
 
 
-def bench_claim_ack_worker(
-    root: str, out_path: str, limit: int = 50, n_shards: int | None = None
-) -> None:
-    """One bench consumer process: the steady-state consumer tick —
-    ``ack_and_claim`` fuses the previous round's batch ack with the next
-    claim (ONE shard lock + ONE delta flush on the sticky shard), looping
-    until the work pool drains.  Spark-free — this measures the sharded
-    ledger's cross-process claim/ack (row-lock-granularity SKIP LOCKED
-    analogue) throughput under real contention.  Records every
-    (decider_id, acked_offset) so the parent can assert global
-    disjointness.  ``n_shards=None`` adopts the store's pinned layout
-    marker (ADVICE r3)."""
-    import json as _json
-    import time as _time
-
-    import pandas as pd
-
-    from fstore_sql_spark.ledger import ShardedLocksLedger
-    from fstore_sql_spark.storage import ParquetStore
-
-    ledger = ShardedLocksLedger(ParquetStore(None, root), n_shards=n_shards)
-    hwm = pd.read_parquet(os.path.join(root, "hwm.parquet")).set_index("decider_id")
-    acked: list[list] = []
-    pend: list[tuple[str, int]] = []  # delivered batch awaiting ack
-    empties = 0
-    t0 = _time.time()
-    while empties < 3:  # transient empties happen only at the tail
-        now = _now()
-        got = ledger.ack_and_claim(
-            "v",
-            [(d, lo + 1) for d, lo in pend],
-            hwm,
-            limit,
-            now,
-            now + timedelta(seconds=300),
-        )
-        # ack_and_claim applies acks before returning — safe to record
-        acked.extend([d, lo + 1] for d, lo in pend)
-        pend = got
-        if got:
-            empties = 0
-        else:
-            empties += 1
-            _time.sleep(0.01)
-    # no tail ack needed: the loop can only exit after an empty round,
-    # and every empty round first acked (and cleared) the prior batch
-    with open(out_path, "w", encoding="utf-8") as f:
-        _json.dump({"acked": acked, "elapsed": _time.time() - t0}, f)
-
-
 def lock_counter_worker(root: str, iters: int) -> None:
     """Increment a shared file counter under ProcessLock — lost updates
     reveal a broken mutex."""
@@ -136,93 +86,3 @@ def claim_and_hang_worker(root: str, out_path: str, limit: int, lease_s: float) 
         _json.dump([d for d, _ in got], f)
     ledger.shards[0]._plock.acquire()
     _time.sleep(120)  # parent kills us long before this
-
-
-def run_claim_ack_harness(
-    n_workers: int,
-    n_parts: int,
-    per_part: int,
-    claim_limit: int = 50,
-    size_by_parts: bool = False,
-    join_timeout_s: float = 300.0,
-    n_shards: int | None = None,
-) -> tuple[float, float]:
-    """The shared b3c harness (bench.py B3c + tools/bench_b3c.py): seed a
-    fresh ledger-only store with ``n_parts`` partitions x ``per_part``
-    events of watermark headroom, drain it with ``n_workers`` concurrent
-    claim/ack processes, assert global (partition, offset) ack
-    disjointness, and return (events/s by the slowest worker clock,
-    slowest-worker elapsed seconds).  One definition so the standalone
-    tool and the bench can never measure different regimes by drift."""
-    import json as _json2
-    import multiprocessing as _mp
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    import pandas as _pd
-
-    from fstore_sql_spark.ledger import ShardedLocksLedger
-    from fstore_sql_spark.storage import ParquetStore
-
-    mp_root = _tempfile.mkdtemp(prefix="bench_mp_")
-    try:
-        past = _now() - timedelta(hours=1)
-        # size_by_parts (r8, sf100): create the store under the sizing
-        # rule's layout for n_parts — the workers adopt the pinned marker
-        # (n_shards=None), so this is exactly the production posture of a
-        # scale-declaring store.  Default False keeps the historical
-        # 8-shard pools comparable across rounds.  n_shards (r11, knee
-        # sweep): explicit override so the shard-convoy mechanism can be
-        # isolated — workers beyond the shard count serialize on shard
-        # flocks regardless of CPU headroom (BASELINE.md "consumer
-        # scaling knee").
-        ledger = ShardedLocksLedger(
-            ParquetStore(None, mp_root),
-            n_shards=n_shards,
-            expected_partitions=(
-                n_parts if size_by_parts and n_shards is None else None
-            ),
-        )
-        seed = _pd.DataFrame(
-            {
-                "view": "v",
-                "decider_id": [f"p{i:05d}" for i in range(n_parts)],
-                "last_offset": 0,
-                "locked_until": _pd.Timestamp(past),
-                "created_at": _pd.Timestamp(past),
-                "updated_at": _pd.Timestamp(past),
-            }
-        )
-        ledger.insert_missing(seed)
-        _pd.DataFrame(
-            {
-                "decider_id": seed["decider_id"],
-                "offset": per_part,
-                "offset_final": False,
-            }
-        ).to_parquet(os.path.join(mp_root, "hwm.parquet"))
-        ctx = _mp.get_context("spawn")
-        outs = [os.path.join(mp_root, f"out_{i}.json") for i in range(n_workers)]
-        procs = [
-            ctx.Process(target=bench_claim_ack_worker, args=(mp_root, o, claim_limit))
-            for o in outs
-        ]
-        for p in procs:
-            p.start()
-        for p in procs:
-            p.join(join_timeout_s)
-        all_acks: list[tuple] = []
-        worker_elapsed = 0.0
-        for o in outs:
-            with open(o, encoding="utf-8") as f:
-                d = _json2.load(f)
-            all_acks.extend(tuple(a) for a in d["acked"])
-            worker_elapsed = max(worker_elapsed, d["elapsed"])
-        expected = n_parts * per_part
-        assert len(all_acks) == len(set(all_acks)) == expected, (
-            f"concurrent claim disjointness violated: "
-            f"{len(all_acks)} acks, {len(set(all_acks))} unique, want {expected}"
-        )
-        return round(expected / worker_elapsed, 1), worker_elapsed
-    finally:
-        _shutil.rmtree(mp_root, ignore_errors=True)

@@ -159,7 +159,6 @@ def test_large_batch_offsets_contiguous(store, spark):
     rows at the _pid join.)"""
     from pyspark.sql import functions as F
 
-    store.OFFSET_PARALLEL_THRESHOLD = 1000  # force the two-phase path
     store.register_decider_event("d", "e", "")
     n = 5000
     batch = (
@@ -377,8 +376,8 @@ def test_compaction_policy_bounds_replay_latency(store, spark):
     the threshold (plus the files of the ticks since the last trigger),
     at least one compaction actually fired, the log is intact, and the
     probe partition's replay latency stays bounded (generous absolute
-    bound: the latency curve itself is measured by
-    tools/bench_compaction.py and pinned in BASELINE.md)."""
+    bound: the latency curve itself is in BASELINE.md "compaction
+    policy measurement")."""
     import time as _time
 
     store.register_decider_event("probe", "tick", "soak")

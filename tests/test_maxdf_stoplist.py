@@ -1,7 +1,7 @@
 """PPJoin ``max_df`` stop-list recall pins (r11, VERDICT r10 #2).
 
-The measured dial markings live in BASELINE.md ("PPJoin stop-list — where
-it bites", tools/bench_maxdf.py).  This module pins the recall semantics
+The measured dial markings live in BASELINE.md ("max_df stop-list
+measured where it bites").  This module pins the recall semantics
 on a corpus small enough that every count is derivable BY HAND, so the
 lever's contract — output is a strict subset of the exact join, and the
 loss is exactly the pairs whose every prefix shingle exceeds the bound —

@@ -51,16 +51,6 @@ def test_prefix_filter_max_df_stoplist(spark):
     assert same == exact
 
 
-def test_engine_noise_probe_shape():
-    """r10: the code-frozen engine probe must be runnable standalone and
-    return a positive wall-clock (it backs engine_noise_index)."""
-    import bench
-
-    assert bench.ENGINE_PROBE_PIN_R10 and bench.ENGINE_PROBE_PIN_R10 > 0
-    t = bench.engine_noise_probe()
-    assert isinstance(t, float) and t > 0
-
-
 def test_jaccard_verify_scores(docs):
     cands = docs.sparkSession.createDataFrame(
         [(1, 2), (1, 4)], ["doc_a", "doc_b"]

@@ -13,9 +13,10 @@ Usage: python tools/resize_shards.py --store /path/to/store --shards 64
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fstore_sql_spark.ledger import resize_shards  # noqa: E402
 from fstore_sql_spark.storage import ParquetStore  # noqa: E402
