@@ -19,7 +19,7 @@ ledger got in r4/r5:
 
 - **Sharded by ``crc32(decider_id) % n_shards``** — the exact routing of
   ``ShardedLocksLedger`` (verified Spark ``F.crc32`` ≡ ``zlib.crc32``), so
-  ledger shard k's eligibility scan needs ONLY hwm shard k: the fused
+  ledger shard k's eligibility scan needs ONLY hwm shard k: a
   claim tick touches one ledger shard + one hwm shard, never the whole
   table.
 - **Disk-backed in the ParquetStore state layout** (``hwm_s{k:02d}_state``

@@ -108,12 +108,10 @@ class ProcessLock:
     included.  The lock file is never unlinked — unlink-on-release would
     reopen the classic flock race where a waiter holds an fd to the
     unlinked inode and locks a different file than later arrivals.
-    ``ttl_s`` is kept for constructor compatibility; crash recovery is
-    the kernel's, not a timer's."""
+    Crash recovery is the kernel's, not a timer's."""
 
-    def __init__(self, path: str, ttl_s: float = 30.0):
+    def __init__(self, path: str):
         self.path = path
-        self.ttl_s = ttl_s
         self._held = threading.local()  # per-thread fd while held
 
     def _check_not_held(self) -> None:
@@ -252,7 +250,7 @@ class LocksLedger:
     # ------------------------------------------------------------------ #
 
     @contextmanager
-    def guard(self, flush: bool = True):
+    def guard(self):
         """The cross-process critical section: lock file → reload if a
         sibling process advanced the snapshot → mutate → flush → unlock.
 
@@ -270,11 +268,11 @@ class LocksLedger:
             except BaseException:
                 self._invalidate()
                 raise
-            if flush and self._dirty:
+            if self._dirty:
                 self.flush()
 
     @contextmanager
-    def try_guard(self, flush: bool = True):
+    def try_guard(self):
         """Non-blocking :meth:`guard` — yields True with the critical
         section held, or False immediately when another process holds the
         shard (the caller SKIPs it, exactly ``FOR UPDATE SKIP LOCKED``).
@@ -289,7 +287,7 @@ class LocksLedger:
             except BaseException:
                 self._invalidate()
                 raise
-            if self._dirty and flush:
+            if self._dirty:
                 self.flush()
         finally:
             self._plock.release()
@@ -755,10 +753,10 @@ class LocksLedger:
         cols = self._df.columns
         self._df.iloc[gpos, cols.get_loc("last_offset")] = vals
         # Release to now - 1us, not now: eligibility is STRICTLY
-        # locked_until < now, and the fused ack_and_claim tick evaluates
-        # both halves at the same ``now`` — an exact-now release would
-        # exclude a just-acked hot partition from the same tick's claim,
-        # forcing an empty round whenever claimable partitions <= limit.
+        # locked_until < now, so an exact-now release would exclude a
+        # just-acked hot partition from a claim evaluated at the same
+        # ``now``, forcing an empty round whenever claimable partitions
+        # <= limit.
         # The reference relies on NOW() advancing between
         # statements for the same effect (schema.sql:436-446).
         self._df.iloc[gpos, cols.get_loc("locked_until")] = now64 - np.timedelta64(1, "us")
@@ -833,9 +831,9 @@ def shard_of(decider_id: str, n_shards: int) -> int:
 
 def _shard_hwm(hwm, k: int) -> pd.DataFrame:
     """Resolve the watermark for shard ``k``: a ``ShardedHwm`` serves its
-    per-shard frame (r6 — the fused tick then touches one ledger shard +
-    one hwm shard); a plain whole-table pandas frame (tests, tools,
-    pre-r6 callers) is used as-is for every shard — correct because a
+    per-shard frame (a claim then touches one ledger shard + one hwm
+    shard); a plain whole-table pandas frame (tests, tools) is used
+    as-is for every shard — correct because a
     shard's ``_eligible_scan`` only probes its own decider ids."""
     fs = getattr(hwm, "for_shard", None)
     return fs(k) if fs is not None else hwm
@@ -873,11 +871,6 @@ class ShardedLocksLedger:
       blocking fallback pass guarantees progress when every candidate
       shard was momentarily held (a claim may not falsely return "empty
       store" just because siblings were mid-tick).
-    - **Fused tick** (:meth:`ack_and_claim`): a consumer's steady-state
-      round trip — ack the delivered batch, claim the next — lands on
-      its sticky shard and pays ONE lock acquisition + ONE delta flush
-      for both mutations, the analogue of the reference's single
-      claim-update statement (schema.sql:405-417).
 
     Within a shard claims stay lowest-watermark-first; the reference's
     ORDER BY "offset" preference (schema.sql:410) is fairness, not a
@@ -917,7 +910,7 @@ class ShardedLocksLedger:
     TARGET_ROWS_PER_SHARD = 32_768
     MAX_SHARDS = 4096
     # rolling p95 tick latency above this emits the one-line resize
-    # warning (see ack_and_claim) — the curve says a healthy shard count
+    # warning (see _note_tick_latency) — the curve says a healthy shard count
     # stays well under it
     TICK_P95_WARN_S = 0.050
     TICK_WINDOW = 128  # ticks in the rolling latency window
@@ -1011,9 +1004,9 @@ class ShardedLocksLedger:
         # sticky claim shard; pid-seeded start so concurrent consumers
         # begin their first walk on different shards
         self._sticky = os.getpid() % self.n_shards
-        # fairness rotation state: every FAIRNESS_EVERY-th claim starts
-        # the walk at the rotor (which then advances) instead of the
-        # sticky shard — see ack_and_claim
+        # fairness rotation state: every FAIRNESS_EVERY-th claim also
+        # probes the rotor's shard (which then advances) — see
+        # _fairness_probe
         self._tick = 0
         self._rotor = (self._sticky + 1) % self.n_shards
         # shard -> last observed claim stamp: the live-sibling detector
@@ -1259,18 +1252,8 @@ class ShardedLocksLedger:
 
     # ---- mutators (self-guarding) ------------------------------------ #
 
-    def claim(
-        self,
-        view: str,
-        hwm: pd.DataFrame,
-        limit: int,
-        now,
-        lease_until,
-    ) -> list[tuple[str, int]]:
-        return self.ack_and_claim(view, [], hwm, limit, now, lease_until)
-
     def upcoming_walk_order(self) -> list[int]:
-        """Shard indices in the order the NEXT ``ack_and_claim`` walk
+        """Shard indices in the order the NEXT ``claim`` walk
         will visit them (sticky first).  Exposed for the prefetch warm
         set: warming in this order instead of
         global hwm-offset order makes the warmed windows the ones the
@@ -1295,9 +1278,7 @@ class ShardedLocksLedger:
             if k != self._sticky
         ]
 
-    def _fairness_probe(
-        self, view, hwm, now, lease_until, skip_shards=()
-    ) -> list[tuple[str, int]]:
+    def _fairness_probe(self, view, hwm, now, lease_until) -> list[tuple[str, int]]:
         """The starvation guard (every FAIRNESS_EVERY-th claim): inspect
         ONE rotating foreign shard and claim AT MOST ONE partition from
         it, preferring shards that look ORPHANED — no commits since our
@@ -1333,18 +1314,11 @@ class ShardedLocksLedger:
           sibling is genuinely consuming our view there (measured on
           b3c: a blind every-Nth forced claim cost ~20% aggregate
           throughput in the all-shards-live drain regime; the stamp
-          makes that regime zero-cost again).
-
-        Shards in ``skip_shards`` (this tick's pending acks) are never
-        probed: an un-acked partition there may hold an expired lease,
-        and claiming it before the ack lands would both redeliver
-        already-consumed offsets and let the subsequent ack release the
-        just-taken lease.  Such a shard is our own working set — the
-        walk visits it this very tick — so skipping costs no liveness."""
+          makes that regime zero-cost again)."""
         n = self.n_shards
         k = self._rotor
         self._rotor = (self._rotor + 1) % n
-        if k == self._sticky or k in skip_shards:
+        if k == self._sticky:
             return []
         s = self.shards[k]
         self._note_use(k)
@@ -1371,32 +1345,23 @@ class ShardedLocksLedger:
             self._fairness_stamp[k] = (s._version, (view,))
         return got
 
-    def ack_and_claim(
+    def claim(
         self,
         view: str,
-        acks: list[tuple[str, int]],
         hwm: pd.DataFrame,
         limit: int,
         now,
         lease_until,
     ) -> list[tuple[str, int]]:
-        """One consumer tick: apply the previous round's acks AND claim
-        the next batch (see class doc).  Acks are MANDATORY — they must
-        be durable before return, else a sibling could re-claim an
-        already-consumed offset and break ack-set disjointness — so
-        shards with pending acks fall back to a blocking lock if the
-        non-blocking pass skipped them.  Claims are OPPORTUNISTIC (SKIP
-        LOCKED), with one blocking retry only when the whole walk
-        claimed nothing but skipped a busy candidate shard."""
+        """One consumer tick: lease up to ``limit`` claimable partitions
+        (see class doc).  Claims are OPPORTUNISTIC (SKIP LOCKED), with
+        one blocking retry only when the whole walk claimed nothing but
+        skipped a busy candidate shard."""
         self._verify_layout()
         tick_t0 = time.perf_counter()
         use_clock0 = self._use_clock  # shards touched this tick advance it
         limit = int(limit)
-        pending: dict[int, list[tuple[str, int]]] = {}
-        for d, o in acks:
-            pending.setdefault(shard_of(d, self.n_shards), []).append((d, o))
         got: list[tuple[str, int]] = []
-        n = self.n_shards
         # Fairness probe (starvation guard): the walk always starts at
         # the sticky shard — but when that shard can fill ``limit``
         # indefinitely (continuous appends), the walk would never reach
@@ -1405,66 +1370,38 @@ class ShardedLocksLedger:
         # rotating foreign shard for at most one partition (full
         # detector semantics and the bounded-deferral guarantee in
         # _fairness_probe), while the other ticks keep the affinity
-        # that makes concurrent consumers scale.  Shards carrying this
-        # tick's acks are excluded — their acks must land before any
-        # re-claim there is sound.
+        # that makes concurrent consumers scale.
         self._tick += 1
         if self._tick % self.FAIRNESS_EVERY == 0 and limit > 0:
-            got.extend(
-                self._fairness_probe(
-                    view, hwm, now, lease_until, skip_shards=pending.keys()
-                )
-            )
-        order = [(self._sticky + i) % n for i in range(n)]
+            got.extend(self._fairness_probe(view, hwm, now, lease_until))
         busy_claimable: list[int] = []
-        for k in order:
+        for k in self.upcoming_walk_order():
             want = limit - len(got)
-            if want <= 0 and not pending:
+            if want <= 0:
                 break
             s = self.shards[k]
-            shard_acks = pending.get(k)
-            if shard_acks is not None:
+            # Pre-check outside the lock (claim under the lock
+            # re-verifies): probe the possibly-STALE frame first — zero
+            # IO — and pay the refresh (sibling delta replay) only when
+            # the stale frame shows nothing claimable.  Walking past a
+            # shard a sibling fully drained then costs one refresh on
+            # first visit and nothing after.
+            hwm_k = _shard_hwm(hwm, k)
+            if not s.has_eligible(view, hwm_k, now):
+                s.refresh()
                 self._note_use(k)
-            hwm_k = None  # resolved lazily: an ack-only visit with no
-            # claim budget never needs (or faults in) the hwm shard
-            if shard_acks is None:
-                if want <= 0:
-                    continue
-                # Pre-check outside the lock (claim under the lock
-                # re-verifies): probe the possibly-STALE frame first —
-                # zero IO — and pay the refresh (sibling delta replay)
-                # only when the stale frame shows nothing claimable.
-                # Walking past a shard a sibling fully drained then
-                # costs one refresh on first visit and nothing after.
-                hwm_k = _shard_hwm(hwm, k)
                 if not s.has_eligible(view, hwm_k, now):
-                    s.refresh()
-                    self._note_use(k)
-                    if not s.has_eligible(view, hwm_k, now):
-                        continue
+                    continue
             with s.try_guard() as held:
                 if not held:
-                    if want > 0:
-                        busy_claimable.append(k)
+                    busy_claimable.append(k)
                     continue
                 self._verify_layout()
                 self._note_use(k)
-                if shard_acks is not None:
-                    s.ack(view, shard_acks, now)
-                    pending.pop(k)
-                if want > 0:
-                    if hwm_k is None:
-                        hwm_k = _shard_hwm(hwm, k)
-                    res = s.claim(view, hwm_k, want, now, lease_until)
-                    if res and not got:
-                        self._sticky = k  # first yielding shard = next tick's start
-                    got.extend(res)
-        for k, shard_acks in pending.items():  # blocked-shard acks: must land
-            s = self.shards[k]
-            self._note_use(k)
-            with s.guard():
-                self._verify_layout()
-                s.ack(view, shard_acks, now)
+                res = s.claim(view, hwm_k, want, now, lease_until)
+                if res and not got:
+                    self._sticky = k  # first yielding shard = next tick's start
+                got.extend(res)
         if not got and busy_claimable:
             # progress guarantee: everything claimable was mid-tick
             # elsewhere — wait once rather than report a falsely empty
@@ -1499,7 +1436,7 @@ class ShardedLocksLedger:
 
     def _note_tick_latency(self, dt: float, shard_rows: int = 0) -> None:
         """The shard-sizing early-warning: when the
-        rolling p95 ``ack_and_claim`` latency crosses TICK_P95_WARN_S AND
+        rolling p95 ``claim`` latency crosses TICK_P95_WARN_S AND
         the shards those ticks scanned actually exceed the
         TARGET_ROWS_PER_SHARD sizing rule, log ONE actionable line naming
         the fix.  Both gates are required: p95

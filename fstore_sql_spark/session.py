@@ -4,8 +4,9 @@ Local testing runs on ``local[N]``; the configuration below is written so the
 same settings are correct on a 1000-executor cluster:
 
 - AQE on (runtime shuffle-partition coalescing + skew-join splitting)
-- broadcast threshold left at default (10 MB) — engine code marks small
-  dimensions with ``F.broadcast`` explicitly instead of relying on stats
+- broadcast threshold raised to 32 MB (Spark's default is 10 MB); engine
+  code still marks small dimensions with ``F.broadcast`` explicitly
+  instead of relying on stats
 - session timezone UTC, matching the reference test env
   (``/root/reference/tests/setup/test-database.sql:69`` sets UTC)
 - Arrow enabled for the Pandas-UDF operators (vectorized Python boundary)

@@ -112,43 +112,16 @@ class EventStore:
     reads are safe from anywhere.
     """
 
-    # Read-ahead depth of the delivery cache: one refill Spark job fetches
-    # the next K unread events per claimed partition; the following K-1
-    # claims of that partition are served driver-side (see stream_events).
-    PREFETCH_DEPTH = 16
-    # Demand-aware window depth: the r11 "claim-
-    # rotation drift" hypothesis was WRONG — instrumentation (BASELINE.md
-    # r12 tail section) showed the residual sf1 tail refills are
-    # SYNCHRONIZED WINDOW EXHAUSTION: the claim re-picks the same ~limit
-    # hot partitions every tick (lowest (hwm, last_offset) of the sticky
-    # shard until drained), each tick consumes exactly one event per
-    # partition, so all ~100 windows exhaust together every
-    # PREFETCH_DEPTH ticks — a mass miss at ticks 16/32/48, plus phase-
-    # shifted stragglers.  Partitions that MISS have demonstrated demand:
-    # they get 4x-deep windows on refill, stretching the mass cadence to
-    # PREFETCH_DEPTH_HOT ticks, while the speculative top-up (most of
-    # which is never claimed before the next commit clears the cache)
-    # stays shallow.  DEEP_CAP bounds the extra rows per refill so the
-    # two-generation cap invariant stays computable.
-    PREFETCH_DEPTH_HOT = 64
-    PREFETCH_DEEP_CAP = 512
-    # Partitions covered per refill job: bounds the windows fetched to
-    # PREFETCH_PARTITIONS * PREFETCH_DEPTH (+ the deep-window surplus)
-    # rows per job.
+    # Delivery read-ahead (see stream_events): one refill Spark job fetches
+    # the next PREFETCH_DEPTH unread events of up to PREFETCH_PARTITIONS of
+    # a view's partitions, and later claims of those partitions are served
+    # driver-side.  A refill replaces its view's windows and, once the
+    # cache holds more than PREFETCH_PARTITIONS * PREFETCH_DEPTH rows,
+    # drops every other view's, so the cache stays within that bound
+    # (unless one claim alone misses on more than PREFETCH_PARTITIONS
+    # partitions: its windows are all kept).
+    PREFETCH_DEPTH = 64
     PREFETCH_PARTITIONS = 2000
-    # Total cached event rows across (view, partition) windows before LRU
-    # eviction — bounds driver memory like any client-side cursor buffer.
-    # Sized to hold TWO refill generations (one generation = the shallow
-    # budget plus the deep-window surplus), so the cap can never FORCE
-    # eviction of live windows mid-cycle (the old 50k was smaller than
-    # two generations).  Computed, not hardcoded: retuning
-    # any constant keeps the two-generation invariant.  ~10s of MB of
-    # driver dicts at worst — the same order as one collected delivery
-    # batch.
-    PREFETCH_MAX_ROWS = 2 * (
-        PREFETCH_PARTITIONS * PREFETCH_DEPTH
-        + PREFETCH_DEEP_CAP * (PREFETCH_DEPTH_HOT - PREFETCH_DEPTH)
-    )
 
     # Auto paging budget: with ``expected_partitions``
     # given and no explicit residency choice, cap driver-resident consumer
@@ -199,9 +172,9 @@ class EventStore:
         self._commit_lock = threading.RLock()
         # table or "log_relation" -> (version, lazy DataFrame): see _handle
         self._handles: dict[str, tuple[object, DataFrame]] = {}
-        # (view, decider_id) -> {"lo": fetch-time last_offset, "rows":
-        # [Row sorted by offset], "complete": window reached hwm}
-        self._prefetch: dict[tuple[str, str], dict] = {}
+        # view -> decider_id -> {"lo": fetch-time last_offset, "rows":
+        # [row dicts sorted by offset], "complete": window reached hwm}
+        self._prefetch: dict[str, dict[str, dict]] = {}
         # read-ahead cache observability: the cache is
         # load-bearing for delivery perf, so hit/miss/refill are counted
         # and surfaced via stats() / asserted in bench + tests — a
@@ -1936,22 +1909,22 @@ class EventStore:
         the ledger reloads any sibling process's flushed leases before
         picking — so concurrent claimers always get disjoint partitions.
 
-        Cost model (the b3 hot path): the claim+lease is driver-side
-        (pandas over the ledger + hwm frames, one pyarrow snapshot flush)
-        — no Spark job.  Delivery reads through a READ-AHEAD cache: one
-        refill Spark job fetches the next ``PREFETCH_DEPTH_HOT`` unread
-        events per MISSED partition and ``PREFETCH_DEPTH`` per
-        speculatively-warmed one (broadcast the claimed pairs + depths
-        against one offset-pruned scan of the log, per-partition
-        row_number ≤ depth); the next K−1 claims of those partitions are
-        then served from the driver buffer with no cluster work.  The
+        Cost model: the claim+lease is driver-side (pandas over the
+        ledger + hwm frames, one pyarrow snapshot flush) — no Spark job.
+        Delivery reads through a READ-AHEAD cache: when a claim misses,
+        one refill Spark job fetches the next ``PREFETCH_DEPTH`` unread
+        events of the missed partitions and of the view's other unread
+        partitions (broadcast the pairs against one offset-pruned scan of
+        the log, per-partition row_number ≤ depth), and replaces the
+        view's windows with them; later claims of those partitions are
+        served from the driver buffer with no cluster work.  The
         delivered result is driver-bound by contract anyway (the consumer
         collects ≤limit single events), so buffering it driver-side is
-        exactly a DB cursor's read-ahead, not a scale compromise; the
-        buffer is LRU capped at ``PREFETCH_MAX_ROWS``.  Append-only log + per-commit
-        invalidation keep the cache trivially coherent.  The reference's
-        plan (schema.sql:418-428) does a B-tree probe per partition; this
-        does one batched probe per K rounds."""
+        exactly a DB cursor's read-ahead, not a scale compromise.
+        Append-only log + per-commit invalidation keep the cache
+        trivially coherent.  The reference's plan (schema.sql:418-428)
+        does a B-tree probe per partition; this does one batched probe
+        per refill."""
         with self._commit_lock:
             now = _utcnow()
             self._refresh_external()
@@ -1969,9 +1942,7 @@ class EventStore:
                 # whole eligible set makes the cache hit regardless of
                 # which partitions the sharded claim rotation picks next.
                 self._refill_prefetch(
-                    view,
-                    self._union_eligible_pairs(view, missing, hwm),
-                    hot=[d for d, _ in missing],
+                    view, self._union_eligible_pairs(view, missing, hwm)
                 )
                 more, _, drained2 = self._serve_from_prefetch(
                     view, missing, count=False
@@ -2007,13 +1978,14 @@ class EventStore:
         releases).  A window fetched at consumer position ``lo`` covers
         offsets (lo, last-row] completely (``complete`` = it reached the
         partition watermark), so for a claim at position L ≥ lo the first
-        cached row above L IS the next unread event.  ``count=False``
-        (the post-refill retry) keeps the hit/miss counters measuring
-        only FIRST-attempt serves — the cache's steady-state hit rate."""
+        cached row above L IS the next unread event; a claim below ``lo``
+        is a miss.  ``count=False`` (the post-refill retry) keeps the
+        hit/miss counters measuring only FIRST-attempt serves — the
+        cache's steady-state hit rate."""
         served, missing, drained = [], [], []
+        windows = self._prefetch.get(view, {})
         for decider_id, last_offset in claimed:
-            key = (view, decider_id)
-            win = self._prefetch.get(key)
+            win = windows.get(decider_id)
             row = None
             if win is not None and last_offset >= win["lo"]:
                 # prune rows at or below the committed position
@@ -2026,39 +1998,16 @@ class EventStore:
                 elif win["complete"]:
                     row = False  # definitively drained (hwm-stale claim)
             if row is None:
-                if win is not None and last_offset < win["lo"]:
-                    # Stale window (claim regressed below the fetched
-                    # range, e.g. a nack rewound the consumer): it can
-                    # never serve this consumer again — drop it rather
-                    # than let the miss path leave it parked in the LRU
-                    # (a promoted-on-miss stale window read
-                    # as hot and shielded itself from eviction).
-                    del self._prefetch[key]
                 missing.append((decider_id, last_offset))
                 if count:
                     self.prefetch_counters["misses"] += 1
+                continue
+            if count:
+                self.prefetch_counters["hits"] += 1
+            if row is False:
+                drained.append((decider_id, last_offset))
             else:
-                # True-LRU touch ON HIT ONLY: move the window that just
-                # served to the END of the insertion-ordered dict the
-                # evictor pops from the front of.  Without any touch
-                # (r11 tail-window find), a re-warmed window KEPT its
-                # original dict position — Python dict assignment to an
-                # existing key does not move it — so the evictor
-                # preferentially killed the hottest (stickiest-claimed)
-                # partitions the moment the row cap tripped: at sf1
-                # (>2000-partition view) every post-cap tick missed,
-                # refilled, and was evicted again (48/48 tail refills,
-                # 1.16 s/tick vs 39 ms on a hit).  Touching BEFORE the
-                # serveability check (the r11 form) promoted misses too,
-                # making "the front is the coldest" false for stale or
-                # drained windows — now only serves promote.
-                self._prefetch[key] = self._prefetch.pop(key)
-                if count:
-                    self.prefetch_counters["hits"] += 1
-                if row is not False:
-                    served.append(row)
-                else:
-                    drained.append((decider_id, last_offset))
+                served.append(row)
         return served, missing, drained
 
     def _union_eligible_pairs(
@@ -2067,26 +2016,21 @@ class EventStore:
         missing: list[tuple[str, int]],
         hwm: ShardedHwm,
     ) -> list[tuple[str, int]]:
-        """The round's missing pairs plus (up to the cap) the view's other
-        unread partitions, ordered the way the LEDGER WALK will actually
-        claim them: shards in upcoming walk order
-        (sticky first), within a shard by (hwm offset, last_offset) — the
-        shard claim's own sort key.  The r11 form sorted candidates
-        GLOBALLY by hwm offset, which spreads the warm budget evenly
-        across all shards while the walk drains the sticky shard in
-        full first — so every ~PREFETCH_DEPTH ticks the walk crossed
-        into an unwarmed batch of its own shard and paid a refill (the
-        sf1 residual 9/48 tail refills; hit p50 35 ms vs refill p50
-        1.23 s).  Before the walk stream, each foreign shard's single
-        HEAD candidate is warmed in fairness-rotor order: the every-8th-
-        tick fairness probe claims exactly that partition, and 6 of 48
-        tail ticks are probe ticks — n_shards slots buy those too.
-        Leased partitions are included — their windows are wanted as
-        soon as the ack lands.  Driver-frame scan only; no Spark work.
-        Per-shard watermark frames: ledger shard k's candidates
-        only need hwm shard k, and non-resident ledger shards are
-        skipped outright — a paged store's refill never faults in the
-        whole table."""
+        """The round's missing pairs plus (up to PREFETCH_PARTITIONS) the
+        view's other unread partitions, ordered the way the LEDGER WALK
+        will actually claim them: shards in upcoming walk order (sticky
+        first), within a shard by (hwm offset, last_offset) — the shard
+        claim's own sort key.  A global hwm-offset order would spread the
+        budget evenly across all shards while the walk drains the sticky
+        shard in full first, so the walk would soon cross into an
+        unwarmed part of its own shard.  Before the walk stream, each
+        foreign shard's single HEAD candidate is warmed in fairness-rotor
+        order: the every-FAIRNESS_EVERY-th-tick probe claims exactly that
+        partition.  Leased partitions are included — their windows are
+        wanted as soon as the ack lands.  Driver-frame scan only; no
+        Spark work.  Ledger shard k's candidates only need hwm shard k,
+        and non-resident ledger shards are skipped outright — a paged
+        store's refill never faults in the whole table."""
         pairs = dict(missing)
         budget = self.PREFETCH_PARTITIONS - len(pairs)
         if budget <= 0:
@@ -2112,7 +2056,7 @@ class EventStore:
         def take(cand: tuple[int, int, str]) -> None:
             nonlocal budget
             _, lo, d = cand
-            if d not in pairs and (view, d) not in self._prefetch:
+            if d not in pairs:
                 pairs[d] = lo
                 budget -= 1
 
@@ -2128,71 +2072,47 @@ class EventStore:
                 take(cand)
         return list(pairs.items())
 
-    def _refill_prefetch(
-        self,
-        view: str,
-        pairs: list[tuple[str, int]],
-        hot: list[str] | None = None,
-    ) -> None:
-        """ONE Spark job: next K unread events for every partition in
-        ``pairs``.  Broadcast join + per-partition topK — the batched
-        index-probe analogue of schema.sql:418-423.
-
-        ``hot`` partitions (this round's actual MISSES — demonstrated
-        demand, see PREFETCH_DEPTH_HOT) get a PREFETCH_DEPTH_HOT-deep
-        window, capped at PREFETCH_DEEP_CAP partitions; the speculative
-        remainder stays PREFETCH_DEPTH-shallow.  The per-partition depth
-        rides the broadcast pairs frame, so the job shape is unchanged:
-        one scan, one broadcast join, one windowed topK."""
+    def _refill_prefetch(self, view: str, pairs: list[tuple[str, int]]) -> None:
+        """ONE Spark job: the next PREFETCH_DEPTH unread events of every
+        partition in ``pairs``, which become the view's windows.
+        Broadcast join + per-partition topK — the batched index-probe
+        analogue of schema.sql:418-423."""
         self.prefetch_counters["refills"] += 1
         k = self.PREFETCH_DEPTH
-        deep = set(list(hot or ())[: self.PREFETCH_DEEP_CAP])
-        depth_of = {
-            d: (self.PREFETCH_DEPTH_HOT if d in deep else k) for d, _ in pairs
-        }
-        events = self.events()
         pairs_df = F.broadcast(
-            self.spark.createDataFrame(
-                [(d, lo, depth_of[d]) for d, lo in pairs],
-                "decider_id string, last_offset long, __depth int",
-            )
+            self.spark.createDataFrame(pairs, "decider_id string, last_offset long")
         )
         min_last = min(lo for _, lo in pairs)
         w = Window.partitionBy("decider_id").orderBy("offset")
         cols = [f.name for f in EVENTS_SCHEMA.fields]
         fetched = (
-            events.filter(F.col("offset") > F.lit(min_last))
+            self.events()
+            .filter(F.col("offset") > F.lit(min_last))
             .join(pairs_df, "decider_id")
             .filter(F.col("offset") > F.col("last_offset"))
             .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= F.col("__depth"))
+            .filter(F.col("__rn") <= F.lit(k))
             .select(*cols)
             .toPandas()  # Arrow transfer; rows cached as plain dicts
         )
         by_part: dict[str, list] = {}
         for r in fetched.to_dict("records"):
             by_part.setdefault(r["decider_id"], []).append(r)
+        windows = {}
         for decider_id, last_offset in pairs:
             rows = sorted(by_part.get(decider_id, []), key=lambda r: r["offset"])
-            # move-to-end on re-warm (true LRU; see _serve_from_prefetch)
-            self._prefetch.pop((view, decider_id), None)
-            self._prefetch[(view, decider_id)] = {
+            windows[decider_id] = {
                 "lo": last_offset,
                 "rows": rows,
                 # fewer rows than asked ⇒ the window reached the watermark
-                "complete": len(rows) < depth_of[decider_id],
+                "complete": len(rows) < k,
             }
-        self._evict_prefetch()
-
-    def _evict_prefetch(self) -> None:
-        total = sum(len(w["rows"]) for w in self._prefetch.values())
-        if total <= self.PREFETCH_MAX_ROWS:
-            return
-        for key in list(self._prefetch):  # dict order = true LRU (touch on
-            # serve + move-to-end on re-warm), so the front IS the coldest
-            total -= len(self._prefetch.pop(key)["rows"])
-            if total <= self.PREFETCH_MAX_ROWS:
-                return
+        self._prefetch[view] = windows
+        cached = sum(
+            len(w["rows"]) for ws in self._prefetch.values() for w in ws.values()
+        )
+        if cached > self.PREFETCH_PARTITIONS * k:
+            self._prefetch = {view: windows}
 
     # ------------------------------------------------------------------ #
     # A7/A8/A9 ack / nack / schedule_nack
@@ -2307,6 +2227,7 @@ class EventStore:
             self.storage.write_state(_VIEWS, views.filter(F.col("view") != view))
             self.views()  # take up the new snapshot now (re-binds views)
             self.ledger.delete_view(view)
+            self._prefetch.pop(view, None)
             return deleted
 
     # ------------------------------------------------------------------ #
@@ -2343,7 +2264,9 @@ class EventStore:
         would poll): log row/partition/file counts, the committed
         high-watermark offset and transaction id, registry sizes, and
         state snapshot versions.  One log aggregate (a scan of the lazy
-        ``events()`` handle) plus metadata reads."""
+        ``events()`` handle) is its only Spark work; the registry sizes
+        come from the pyarrow memos of the registry tables, the rest
+        from metadata and driver-side state."""
         manifest = self.storage.read_manifest(_EVENTS)
         agg = self.events().agg(
             F.count(F.lit(1)).alias("n"),
@@ -2355,8 +2278,8 @@ class EventStore:
             "max_offset": manifest.max_offset,
             "commit_id": manifest.commit_id,
             "log_files": self.storage.log_file_count(_EVENTS),
-            "n_registered_events": self.deciders().count(),
-            "n_views": self.views().count(),
+            "n_registered_events": len(self._registered_events()),
+            "n_views": len(self._view_names()),
             "prefetch": dict(self.prefetch_counters),
             "append_paths": dict(self.append_paths),
             "last_append_profile": dict(self.last_append_profile),

@@ -277,7 +277,10 @@ def test_append_on_conflict_ignore_replays_suffix(store):
         store.append_batch([batch[1]])
 
 
-def test_stats_snapshot(store):
+def test_stats_snapshot(store, spark):
+    from pyspark.sql import functions as F
+    from test_index_path import _jobs
+
     store.register_decider_event("d", "e", "x")
     store.append_event("e", uid(), "d", "p1")
     store.append_event("e", uid(), "d", "p2")
@@ -287,6 +290,12 @@ def test_stats_snapshot(store):
     assert s["max_offset"] == 2 and s["commit_id"] == 2
     assert s["n_registered_events"] == 1 and s["n_views"] == 1
     assert s["log_files"] >= 1 and s["state_versions"]["views"] >= 1
+    # the registry sizes come from pyarrow memos: the log aggregate is
+    # the only Spark work stats() does
+    log_agg = _jobs(spark, lambda: store.events().agg(
+        F.count(F.lit(1)), F.count_distinct("decider_id")
+    ).collect())
+    assert _jobs(spark, store.stats) == log_agg
 
 
 def test_get_events_many_replays_selected_streams(store):

@@ -263,20 +263,16 @@ def test_prefetch_hit_rate_steady_state(store):
 
 
 def test_prefetch_deep_windows_for_missed_partitions(store):
-    """r12 (VERDICT r11 #3, the real mechanism): the residual sf1 tail
-    refills were SYNCHRONIZED WINDOW EXHAUSTION — the claim re-picks the
-    same ~limit partitions every tick, one event each, so all their
-    16-deep windows exhaust together every 16 ticks.  Partitions that
-    MISS have demonstrated demand and must get PREFETCH_DEPTH_HOT-deep
-    windows on refill; a 20-event partition then fits ONE window (20 <=
-    64) and the whole drain pays exactly one refill job, where the
-    shallow depth would exhaust at 16 and pay a second."""
+    """A claim re-picks the same few partitions every tick and consumes
+    one event of each, so all their windows exhaust together; the depth
+    (PREFETCH_DEPTH = 64) must cover a 20-event backlog in ONE window,
+    so the whole drain pays exactly one refill job."""
     seed(store, n_partitions=2, events_per=20)
     store.register_view("v1", start_at=now_utc() - timedelta(hours=1))
     rows = store.stream_events("v1", limit=2).collect()
     assert len(rows) == 2
     for part in ("p0", "p1"):
-        win = store._prefetch[("v1", part)]
+        win = store._prefetch["v1"][part]
         assert win["complete"], win  # whole history fetched in one window
         assert len(win["rows"]) == 20, (part, len(win["rows"]))
     drained = 2
@@ -352,45 +348,56 @@ def test_union_eligible_pairs_warms_in_walk_order():
     # walk stream (shard 1 in full, then shard 2 minus the taken head)
     assert got == ["c0", "a0", "b0", "b1", "b2", "b3", "c1"], got
 
-    # missing pairs are mandatory and already-warm partitions skipped
-    Fake._prefetch = {("v", "b1"): {}}
+    # missing pairs are mandatory, and already-warm partitions are
+    # fetched again: the refill replaces the view's windows
+    Fake._prefetch = {"v": {"b1": {}}}
     got = [
         d
         for d, _ in EventStore._union_eligible_pairs(
             Fake(), "v", [("c3", 0)], Hwm()
         )
     ]
-    assert got[0] == "c3" and "b1" not in got and len(got) == 7, got
+    assert got == ["c3", "c0", "a0", "b0", "b1", "b2", "b3"], got
 
 
-def test_prefetch_eviction_is_true_lru(store):
-    """r11 (found by the b3 tail window at sf1): the evictor pops from
-    the FRONT of the insertion-ordered dict, but plain dict assignment
-    to an existing key keeps its original position — so a re-warmed or
-    just-served window stayed at the front and the evictor killed the
-    hottest (stickiest-claimed) partitions first.  Past the row cap
-    every tick missed → refilled → was evicted again: 48/48 tail
-    refills at sf1, 1.16 s/tick vs 39 ms on a hit.  The serve path must
-    therefore TOUCH (move-to-end) windows it reads, making eviction
-    order true LRU."""
-    store._prefetch.clear()
-
-    def mk(n):
-        return {
-            "lo": 0,
-            "rows": [{"offset": i + 1} for i in range(n)],
-            "complete": False,
-        }
-
-    store._prefetch[("v", "hot")] = mk(2)
-    store._prefetch[("v", "cold1")] = mk(2)
-    store._prefetch[("v", "cold2")] = mk(2)
-    served, missing, drained = store._serve_from_prefetch("v", [("hot", 0)])
-    assert [r["offset"] for r in served] == [1] and not missing
-    # the served window moved behind the untouched ones
-    assert list(store._prefetch) == [("v", "cold1"), ("v", "cold2"), ("v", "hot")]
-    store.PREFETCH_MAX_ROWS = 4  # instance shadow; forces one eviction
-    store._evict_prefetch()
-    assert ("v", "hot") in store._prefetch          # survived: hottest
-    assert ("v", "cold1") not in store._prefetch    # evicted: coldest
-    assert ("v", "cold2") in store._prefetch
+def test_prefetch_two_views_stay_within_row_bound(store):
+    """Two views drained alternately, each with more unread partitions
+    than one refill covers: every refill replaces its view's windows and,
+    past PREFETCH_PARTITIONS * PREFETCH_DEPTH cached rows, drops the
+    other view's.  Delivery stays exactly-once in per-partition order,
+    and the cache never holds more rows than the bound."""
+    store.PREFETCH_PARTITIONS = 3  # instance shadows
+    store.PREFETCH_DEPTH = 2
+    bound = store.PREFETCH_PARTITIONS * store.PREFETCH_DEPTH
+    seed(store, n_partitions=6, events_per=4)
+    past = now_utc() - timedelta(hours=1)
+    views = ("v1", "v2")
+    for v in views:
+        store.register_view(v, start_at=past)
+    seen = {v: [] for v in views}
+    live = list(views)
+    dropped = False
+    while live:
+        for v in list(live):
+            other = "v2" if v == "v1" else "v1"
+            warm_other = other in store._prefetch
+            rows = store.stream_events(v, limit=2).collect()
+            cached = sum(
+                len(w["rows"]) for ws in store._prefetch.values() for w in ws.values()
+            )
+            assert cached <= bound, (cached, bound)
+            dropped |= warm_other and other not in store._prefetch
+            if not rows:
+                live.remove(v)
+                continue
+            assert len({r["decider_id"] for r in rows}) == len(rows)
+            store.ack_events(v, [(r["decider_id"], r["offset"]) for r in rows])
+            seen[v].extend((r["decider_id"], r["offset"]) for r in rows)
+    assert dropped, "no refill ever dropped the other view's windows"
+    for v in views:
+        assert len(seen[v]) == 24 and len(set(seen[v])) == 24, (v, seen[v])
+        per_part: dict[str, list[int]] = {}
+        for part, off in seen[v]:
+            per_part.setdefault(part, []).append(off)
+        for part, offs in per_part.items():
+            assert offs == sorted(offs) and len(offs) == 4, (v, part, offs)

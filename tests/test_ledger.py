@@ -421,7 +421,7 @@ class TestProcessLockCrashRecovery:
         with open(lock_path, "w", encoding="utf-8") as f:
             f.write(json.dumps({"pid": 999999, "ts": 0}))
         os.utime(lock_path, (0, 0))  # arbitrarily old — irrelevant to flock
-        lock = ProcessLock(lock_path, ttl_s=1.0)
+        lock = ProcessLock(lock_path)
         lock.acquire(timeout_s=5)
         lock.release()
 
@@ -468,10 +468,10 @@ class TestR4Hardening:
         with pytest.raises(ValueError, match="mis-route"):
             ShardedLocksLedger(ParquetStore(None, root), n_shards=8)
 
-    def test_ack_and_claim_fused_tick(self, root):
-        """The fused consumer tick: previous batch's acks land (durable,
-        visible to a cold reader) and the next claim excludes them in
-        the same call."""
+    def test_ack_then_claim_same_tick(self, root):
+        """A consumer tick: the previous batch's acks land (durable,
+        visible to a cold reader) and a claim at the same ``now``
+        excludes them."""
         ledger = ShardedLocksLedger(ParquetStore(None, root))
         ledger.insert_missing(seed_rows("v", 8))
         hwm = hwm_frame(8, offset=1)  # one event per partition
@@ -479,9 +479,9 @@ class TestR4Hardening:
         first = ledger.claim("v", hwm, 4, now, now + timedelta(seconds=300))
         assert len(first) == 4
         acks = [(d, lo + 1) for d, lo in first]
-        second = ledger.ack_and_claim(
-            "v", acks, hwm, 8, now_utc(), now_utc() + timedelta(seconds=300)
-        )
+        now = now_utc()
+        ledger.ack("v", acks, now)
+        second = ledger.claim("v", hwm, 8, now, now + timedelta(seconds=300))
         # the 4 acked partitions are consumed (last_offset == hwm); the
         # other 4 are claimable — and only those come back
         assert len(second) == 4
@@ -549,45 +549,6 @@ class TestFairness:
                 break
         assert target <= seen, "starved partitions: " + str(target - seen)
 
-    def test_fairness_probe_never_reclaims_pending_ack_partition(self, root):
-        """Review r4 finding #2: on a fairness tick the probe must not
-        claim a partition whose ack is pending in the SAME call — the
-        stale last_offset would redeliver consumed events and the
-        later ack would release the just-taken lease.  Force the
-        pathological alignment (rotor on the acked partition's shard,
-        expired lease, fairness tick) and assert any claim of that
-        partition reflects the post-ack offset."""
-        from fstore_sql_spark.ledger import shard_of
-
-        ledger = ShardedLocksLedger(ParquetStore(None, root))
-        n_parts = 16
-        ledger.insert_missing(seed_rows("v", n_parts))
-        hwm = hwm_frame(n_parts, offset=10**6)
-        now = now_utc()
-        # deliver one batch, let its lease EXPIRE un-acked
-        first = ledger.claim("v", hwm, 1, now, now - timedelta(seconds=1))
-        assert first
-        p, stale_lo = first[0]
-        ack_offset = stale_lo + 500
-        # align the pathological tick: next claim is a fairness tick
-        # whose rotor lands on p's shard
-        ledger._tick = ledger.FAIRNESS_EVERY - 1
-        ledger._rotor = shard_of(p, ledger.n_shards)
-        ledger._sticky = (ledger._rotor + 1) % ledger.n_shards
-        got = ledger.ack_and_claim(
-            "v", [(p, ack_offset)], hwm, n_parts, now, now + timedelta(seconds=300)
-        )
-        for d, lo in got:
-            if d == p:
-                assert lo == ack_offset, (
-                    f"probe re-claimed {p} at stale offset {lo} before its ack"
-                )
-        # and the ack must have landed regardless
-        shard = ledger.shards[shard_of(p, ledger.n_shards)]
-        shard.refresh()
-        assert int(shard._df.loc[("v", p), "last_offset"]) == ack_offset
-
-
     def test_probe_claims_for_view_b_despite_live_view_a_consumer(self, root):
         """View-qualified stamp semantics: a consumer busily claiming
         view A on shard k must NOT defer another consumer's fairness
@@ -629,10 +590,10 @@ class TestFairness:
 
 
     def test_fused_tick_reclaims_hot_partition_same_now(self, root):
-        """Review r4: ack releases at now - 1us, so a hot partition with
-        remaining headroom is claimable by the SAME fused tick's claim
-        half (strict lu < now).  With an exact-now release every other
-        tick came back empty, halving hot-partition throughput."""
+        """An ack releases at now - 1us, so a hot partition with
+        remaining headroom is claimable by a claim at the SAME ``now``
+        (strict lu < now).  With an exact-now release every other tick
+        came back empty, halving hot-partition throughput."""
         ledger = ShardedLocksLedger(ParquetStore(None, root))
         ledger.insert_missing(seed_rows("v", 1))
         hwm = hwm_frame(1, offset=10**6)
@@ -641,11 +602,9 @@ class TestFairness:
         assert len(got) == 1
         for _ in range(5):
             now = now_utc()
-            acks = [(d, lo + 1) for d, lo in got]
-            got = ledger.ack_and_claim(
-                "v", acks, hwm, 1, now, now + timedelta(seconds=300)
-            )
-            assert len(got) == 1, "fused tick failed to re-claim hot partition"
+            ledger.ack("v", [(d, lo + 1) for d, lo in got], now)
+            got = ledger.claim("v", hwm, 1, now, now + timedelta(seconds=300))
+            assert len(got) == 1, "tick failed to re-claim hot partition"
 
 
 class TestUnpublishedOrphans:
@@ -1183,13 +1142,11 @@ class TestShardSizing:
         import logging
 
         with caplog.at_level(logging.WARNING, logger="fstore_sql_spark.ledger"):
-            pend: list[tuple[str, int]] = []
+            got: list[tuple[str, int]] = []
             for _ in range(ledger.TICK_WINDOW + 16):
-                got = ledger.ack_and_claim(
-                    "v", [(d, lo + 1) for d, lo in pend], hwm, 4, now_utc(),
-                    now_utc() + timedelta(seconds=300),
-                )
-                pend = got
+                now = now_utc()
+                ledger.ack("v", [(d, lo + 1) for d, lo in got], now)
+                got = ledger.claim("v", hwm, 4, now, now + timedelta(seconds=300))
         warnings = [r for r in caplog.records if "resize_shards" in r.getMessage()]
         assert warnings, "no resize warning emitted past the p95 threshold"
         assert len(warnings) == 1, "warning not throttled"
@@ -1210,13 +1167,11 @@ class TestShardSizing:
         import logging
 
         with caplog.at_level(logging.WARNING, logger="fstore_sql_spark.ledger"):
-            pend: list[tuple[str, int]] = []
+            got: list[tuple[str, int]] = []
             for _ in range(ledger.TICK_WINDOW + 16):
-                got = ledger.ack_and_claim(
-                    "v", [(d, lo + 1) for d, lo in pend], hwm, 4, now_utc(),
-                    now_utc() + timedelta(seconds=300),
-                )
-                pend = got
+                now = now_utc()
+                ledger.ack("v", [(d, lo + 1) for d, lo in got], now)
+                got = ledger.claim("v", hwm, 4, now, now + timedelta(seconds=300))
         assert not [r for r in caplog.records if "resize_shards" in r.getMessage()], (
             "latency-only breach warned despite healthy rows/shard"
         )
@@ -1250,11 +1205,9 @@ class TestShardSizing:
         import logging
 
         with caplog.at_level(logging.WARNING, logger="fstore_sql_spark.ledger"):
-            pend: list[tuple[str, int]] = []
+            got: list[tuple[str, int]] = []
             for _ in range(ledger.TICK_WINDOW + 16):
-                got = ledger.ack_and_claim(
-                    "v", [(d, lo + 1) for d, lo in pend], hwm, 4, now_utc(),
-                    now_utc() + timedelta(seconds=300),
-                )
-                pend = got
+                now = now_utc()
+                ledger.ack("v", [(d, lo + 1) for d, lo in got], now)
+                got = ledger.claim("v", hwm, 4, now, now + timedelta(seconds=300))
         assert not [r for r in caplog.records if "resize_shards" in r.getMessage()]
