@@ -139,6 +139,52 @@ class Manifest:
     pending_rows: int | None = None
 
 
+# The columns whose footer min/max a ``LogFile`` keeps: what point reads
+# of the event log prune files on.
+_RANGE_COLS = ("transaction_id", "offset", "decider_id")
+
+
+@dataclass(frozen=True)
+class LogFile:
+    """One event-log parquet file's footer figures: its row count and the
+    (min, max) of ``transaction_id``, ``offset`` and ``decider_id`` —
+    None for an empty file."""
+
+    path: str
+    rows: int
+    txn: "tuple[int, int] | None"
+    offset: "tuple[int, int] | None"
+    decider_id: "tuple[str, str] | None"
+
+
+def read_footer(path: str) -> LogFile:
+    """A log file's ``LogFile`` from its parquet footer alone (one small
+    read).  A column without min/max statistics in some row group falls
+    back to reading that column (defensive only: Spark and pyarrow both
+    write statistics).  Raises when the footer is unreadable."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    if md.num_rows == 0:
+        return LogFile(path, 0, None, None, None)
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+    ranges, missing = {}, []
+    for c in _RANGE_COLS:
+        ci = names.index(c)
+        stats = [md.row_group(g).column(ci).statistics for g in range(md.num_row_groups)]
+        if all(st is not None and st.has_min_max for st in stats):
+            ranges[c] = (min(st.min for st in stats), max(st.max for st in stats))
+        else:
+            missing.append(c)
+    if missing:
+        t = pq.read_table(path, columns=missing)
+        for c in missing:
+            mm = pc.min_max(t[c])
+            ranges[c] = (mm["min"].as_py(), mm["max"].as_py())
+    return LogFile(path, md.num_rows, *(ranges[c] for c in _RANGE_COLS))
+
+
 class ParquetStore:
     """Single-writer parquet store for one EventStore instance.
 
@@ -153,6 +199,7 @@ class ParquetStore:
         self.spark = spark
         self.root = root
         self._lock = threading.RLock()
+        self._footers: dict[str, LogFile] = {}  # path -> footer: see log_files
         os.makedirs(root, exist_ok=True)
 
     # ------------------------------------------------------------------ #
@@ -283,65 +330,82 @@ class ParquetStore:
         cached listings, so a sibling process's files show up."""
         df._jdf.queryExecution().analyzed().relation().location().refresh()
 
-    def txn_log_files(
-        self, table: str, txn: int
-    ) -> "tuple[list[str], int, list[str]]":
-        """(paths, total_rows, torn) of current-generation log files —
-        ``paths`` are files whose rows ALL belong to commit ``txn``,
-        resolved from parquet FOOTER min/max statistics on
-        ``transaction_id`` (no data read; one footer per file); ``torn``
-        are files with UNREADABLE footers (a power loss can
-        persist an append's rename while losing its data pages — such a
-        file belongs to no readable batch but would fail every subsequent
-        log read if left in place, so recovery must quarantine it).
-        Every append writes fresh files containing only its own commit,
-        so a batch's files are exactly the min==max==txn set; recovery
-        uses this to verify whether a crashed append landed completely.
-        Files without usable stats fall back to
-        reading just the transaction_id column (tiny — defensive only)."""
-        import pyarrow.parquet as pq
+    def log_files(
+        self, table: str, gen: int | None = None
+    ) -> "tuple[list[LogFile], list[str]]":
+        """``(files, torn)``: the footer figures (``LogFile``) of every
+        non-empty ``*.parquet`` directly under the log generation ``gen``
+        (default: the current one), and the paths whose footer is
+        unreadable.  ``_temporary/`` and ``_quarantine/`` are
+        subdirectories, so they are never listed.
 
-        d = self._log_dir(table)
-        paths: list[str] = []
+        Footers come from a memo keyed by path.  A log file is never
+        rewritten in place: an append writes new names, compaction a new
+        generation directory, recovery moves files out of the directory.
+        So an entry never goes stale; the memo keeps only the paths of
+        the last listing, which bounds it by one generation's file
+        count."""
+        d = self._log_dir(table, gen)
+        memo = self._footers
+        files: list[LogFile] = []
         torn: list[str] = []
-        rows = 0
+        listed: dict[str, LogFile] = {}
         for name in os.listdir(d):
             if not name.endswith(".parquet"):
                 continue
             p = os.path.join(d, name)
-            try:
-                md = pq.ParquetFile(p).metadata
-            except Exception:  # unreadable footer: torn by power loss
-                torn.append(p)
-                continue
-            if md.num_rows == 0:
-                continue
-            lo = hi = None
-            ok = True
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                st = None
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    if col.path_in_schema == "transaction_id":
-                        st = col.statistics
-                        break
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if not ok:
+            f = memo.get(p)
+            if f is None:
                 try:
-                    t = pq.read_table(p, columns=["transaction_id"])
-                    vals = t.column(0).to_pylist()
-                    lo, hi = min(vals), max(vals)
-                except Exception:
+                    f = read_footer(p)
+                except Exception:  # unreadable footer: torn by power loss
+                    torn.append(p)
                     continue
-            if lo == hi == txn:
-                paths.append(p)
-                rows += md.num_rows
-        return paths, rows, torn
+            listed[p] = f
+            if f.rows:
+                files.append(f)
+        self._footers = listed
+        return files, torn
+
+    def txn_log_files(
+        self, table: str, txn: int
+    ) -> "tuple[list[str], int, list[str]]":
+        """(paths, total_rows, torn) of current-generation log files —
+        ``paths`` are files whose rows ALL belong to commit ``txn``, by
+        the footer ranges of ``log_files`` (no data read); ``torn`` are
+        files with UNREADABLE footers (a power loss can persist an
+        append's rename while losing its data pages — such a file belongs
+        to no readable batch but would fail every subsequent log read if
+        left in place, so recovery must quarantine it).  Every append
+        writes fresh files containing only its own commit, so a batch's
+        files are exactly the min==max==txn set; recovery uses this to
+        verify whether a crashed append landed completely."""
+        files, torn = self.log_files(table)
+        mine = [f for f in files if f.txn == (txn, txn)]
+        return [f.path for f in mine], sum(f.rows for f in mine), torn
+
+    @staticmethod
+    def read_log_files(
+        files: "list[LogFile]", schema: StructType, columns: list[str], where
+    ):
+        """The rows of ``files`` matching the pyarrow expression ``where``,
+        as a pyarrow Table of ``columns`` typed by ``schema`` — a
+        driver-side read with no Spark job.  Row groups whose statistics
+        rule ``where`` out are skipped.  Timestamps (INT96 in Spark's
+        files) read as naive microseconds, as Spark reads them in a UTC
+        session."""
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        dataset = ds.dataset(
+            [f.path for f in files],
+            schema=to_arrow_schema(schema, timestamp_utc=False),
+            format=fmt,
+        )
+        return dataset.to_table(columns=columns, filter=where)
 
     def quarantine_log_files(self, table: str, txn: int, paths: list[str]) -> str:
         """Move log files into ``_quarantine/txn_<id>/`` under the current
