@@ -65,7 +65,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from fstore_sql_spark.ledger import ProcessLock, shard_of
-from fstore_sql_spark.storage import _fsync_dir
+from fstore_sql_spark.storage import _fsync_dir, apply_state_delta
 
 _HWM_COLS = ["decider_id", "offset", "offset_final", "decider", "event_id"]
 # Layout version of the state tables, recorded in ``hwm_META.json``.  A
@@ -398,20 +398,13 @@ class ShardedHwm:
         pdf, v = hit
         if v > disk or disk - v > self.COMPACT_EVERY:
             return None
-        frame = _norm_hwm(pdf) if len(pdf) else _empty_hwm()
         if v < disk:
             deltas = self.storage.read_state_deltas(self._table(k), v, disk)
             if deltas is None:
                 return None
             for dpdf in deltas:
-                # same semantics as apply_state_delta: drop every key the
-                # delta names, re-insert its non-tombstoned rows
-                keys = pd.Index(dpdf["decider_id"])
-                frame = frame.drop(index=keys, errors="ignore")
-                up = dpdf[~dpdf["_deleted"]]
-                if len(up):
-                    frame = pd.concat([frame, _norm_hwm(up)]).sort_index()
-        return frame
+                pdf = apply_state_delta(pdf, dpdf, ["decider_id"])
+        return _norm_hwm(pdf) if len(pdf) else _empty_hwm()
 
     def resident_shards(self) -> int:
         return len(self._frames)

@@ -46,6 +46,7 @@ semantics, and delta-spark is not installable here.)
 
 from __future__ import annotations
 
+import itertools
 import json
 import logging
 import os
@@ -397,6 +398,24 @@ class LocksLedger:
         scan = self._eligible_scan(view, hwm, now)
         return scan is not None and scan[4].size > 0
 
+    def _claim_order(self, view: str, hwm: pd.DataFrame, now):
+        """(start, ids, lo_vals, order): the claimable slice positions in
+        the order :meth:`claim` leases them, or None when the view has no
+        rows.  Order: hwm offset (the reference's ORDER BY "offset",
+        schema.sql:410), then last_offset ascending — the tie-break
+        matters: with equal watermarks and a small limit, a pure id-order
+        tie would re-pick the same partitions every round and starve the
+        rest; fewest-consumed-first makes round-robin emerge among ties.
+        lexsort is stable, so remaining ties fall back to id order
+        (deterministic)."""
+        import numpy as np
+
+        scan = self._eligible_scan(view, hwm, now)
+        if scan is None:
+            return None
+        start, ids, lo_vals, hoff_at, cand = scan
+        return start, ids, lo_vals, cand[np.lexsort((lo_vals[cand], hoff_at[cand]))]
+
     def _apply_delta(self, dpdf: pd.DataFrame) -> None:
         # Indexed-frame twin of storage.apply_state_delta (which serves
         # the cold-reader reconstruction on unindexed frames) — the two
@@ -692,24 +711,14 @@ class LocksLedger:
         import numpy as np
 
         # Positional scan (no MultiIndex alignment) over the view's
-        # sorted id slice; candidate ordering below deliberately refines
-        # the reference's ORDER BY "offset" (schema.sql:410) — see the
-        # tie-break comment.
-        scan = self._eligible_scan(view, hwm, now)
+        # sorted id slice, in the order of _claim_order.
+        scan = self._claim_order(view, hwm, now)
         if scan is None:
             return []
-        start, ids, lo_vals, hoff_at, cand = scan
-        if cand.size == 0:
+        start, ids, lo_vals, order = scan
+        take = order[: int(limit)]
+        if take.size == 0:
             return []
-        # Order: hwm offset (the reference's ORDER BY "offset",
-        # schema.sql:410), then last_offset ascending — the tie-break
-        # matters: with equal watermarks and a small limit, a pure
-        # id-order tie would re-pick the same partitions every round
-        # and starve the rest; fewest-consumed-first makes round-robin
-        # emerge among ties.  lexsort is stable, so remaining ties fall
-        # back to id order (deterministic).
-        order = np.lexsort((lo_vals[cand], hoff_at[cand]))[: int(limit)]
-        take = cand[order]
         gpos = start + take
         now64 = np.datetime64(pd.Timestamp(now), "us")
         self._df.iloc[gpos, self._df.columns.get_loc("locked_until")] = (
@@ -887,9 +896,9 @@ class ShardedLocksLedger:
     FAIRNESS_EVERY x n_shards claims and must yield unless its
     partitions are already being served — a bounded delivery delay
     for every partition.  The store's delivery
-    read-ahead stays effective regardless of claim order because
-    refills warm ALL eligible partitions of the view in one job
-    (store._refill_prefetch).
+    read-ahead follows this claim order: each refill warms up to
+    ``PREFETCH_PARTITIONS`` of the view's partitions, in the order
+    :meth:`upcoming_claims` says the probe and the walk will reach them.
 
     The shard count is part of the persistent layout: routing is
     ``crc32(decider_id) % n_shards``, so opening one store with two
@@ -1254,29 +1263,50 @@ class ShardedLocksLedger:
 
     def upcoming_walk_order(self) -> list[int]:
         """Shard indices in the order the NEXT ``claim`` walk
-        will visit them (sticky first).  Exposed for the prefetch warm
-        set: warming in this order instead of
-        global hwm-offset order makes the warmed windows the ones the
-        claim walk will actually reach — the walk consumes the sticky
-        shard's candidates in full before touching shard sticky+1, so a
-        globally-hwm-sorted warm set strands most of its budget on
-        shards the walk won't visit for thousands of ticks."""
+        will visit them (sticky first)."""
         n = self.n_shards
         return [(self._sticky + i) % n for i in range(n)]
 
-    def upcoming_probe_order(self) -> list[int]:
-        """Shard indices in the order the fairness rotor will inspect
-        them (one per FAIRNESS_EVERY ticks, sticky skipped).  The probe
-        claims each inspected shard's single best candidate, so warming
-        ONE head partition per shard in this order covers the probe's
-        misses for n_shards x FAIRNESS_EVERY ticks at a cost of
-        n_shards warm slots."""
-        n = self.n_shards
-        return [
-            k
-            for k in ((self._rotor + i) % n for i in range(n))
-            if k != self._sticky
-        ]
+    def upcoming_claims(
+        self, view: str, hwm, n: int, first=()
+    ) -> list[tuple[str, int]]:
+        """Up to ``n`` of ``view``'s partitions with unread events, as
+        ``(decider_id, last_offset)``, in the order claims will reach
+        them — the delivery read-ahead's warm set:
+
+        - first the ``first`` pairs (claims already made), all of them;
+        - then each foreign shard's head, in fairness-rotor order
+          (sticky skipped): the probe claims exactly that partition, so
+          one slot per shard covers its misses for n_shards x
+          FAIRNESS_EVERY ticks;
+        - then the walk's shards from the sticky one, each in claim
+          order.  The walk drains the sticky shard in full before it
+          moves on, so a global hwm-offset order would strand the budget
+          on shards the walk will not visit for thousands of ticks.
+
+        Leased partitions are included (a far-future ``now``): their
+        events are wanted as soon as the ack lands.  A scan of the
+        resident frames under no lock; a shard without rows of the view
+        (an evicted one included) is skipped before its hwm shard is
+        read, so a paged store never faults the table in here."""
+        far = pd.Timestamp.max
+        runs: dict[int, list[tuple[str, int]]] = {}
+        for k, s in enumerate(self.shards):
+            if s._view_slice(view) is None:
+                continue
+            scan = s._claim_order(view, _shard_hwm(hwm, k), far)
+            if scan is not None and scan[3].size:
+                _, ids, lo_vals, order = scan
+                runs[k] = [(str(ids[i]), int(lo_vals[i])) for i in order[:n]]
+        rotor = ((self._rotor + i) % self.n_shards for i in range(self.n_shards))
+        heads = [runs[k][0] for k in rotor if k != self._sticky and k in runs]
+        walk = (p for k in self.upcoming_walk_order() for p in runs.get(k, ()))
+        out = dict(first)
+        for d, lo in itertools.chain(heads, walk):
+            if len(out) >= n:
+                break
+            out.setdefault(d, lo)
+        return list(out.items())
 
     def _fairness_probe(self, view, hwm, now, lease_until) -> list[tuple[str, int]]:
         """The starvation guard (every FAIRNESS_EVERY-th claim): inspect

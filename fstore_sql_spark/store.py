@@ -44,6 +44,7 @@ Design decisions (SURVEY.md §7):
 
 from __future__ import annotations
 
+import bisect
 import threading
 import time
 import uuid as _uuid
@@ -114,14 +115,14 @@ class EventStore:
     reads are safe from anywhere.
     """
 
-    # Delivery read-ahead (see stream_events): one refill Spark job fetches
+    # Delivery read-ahead (see stream_events): one refill read fetches
     # the next PREFETCH_DEPTH unread events of up to PREFETCH_PARTITIONS of
     # a view's partitions, and later claims of those partitions are served
-    # driver-side.  A refill replaces its view's windows and, once the
-    # cache holds more than PREFETCH_PARTITIONS * PREFETCH_DEPTH rows,
+    # driver-side.  A refill replaces its view's window and, once the
+    # windows hold more than PREFETCH_PARTITIONS * PREFETCH_DEPTH rows,
     # drops every other view's, so the cache stays within that bound
     # (unless one claim alone misses on more than PREFETCH_PARTITIONS
-    # partitions: its windows are all kept).
+    # partitions: its rows are all kept).
     PREFETCH_DEPTH = 64
     PREFETCH_PARTITIONS = 2000
 
@@ -183,14 +184,13 @@ class EventStore:
         self._commit_lock = threading.RLock()
         # table or "log_relation" -> (version, lazy DataFrame): see _handle
         self._handles: dict[str, tuple[object, DataFrame]] = {}
-        # view -> decider_id -> {"lo": fetch-time last_offset, "rows":
-        # [row dicts sorted by offset], "complete": window reached hwm}
-        self._prefetch: dict[str, dict[str, dict]] = {}
-        # read-ahead cache observability: the cache is
-        # load-bearing for delivery perf, so hit/miss/refill are counted
-        # and surfaced via stats() / asserted in bench + tests — a
-        # silent ordering regression (the sf1 warm-order bug) would show
-        # as a collapsed hit rate instead of just slow rounds.
+        # view -> its read-ahead window (see _refill_prefetch): (rows,
+        # their offsets, decider_id -> (start, stop, fetch-time lo))
+        self._prefetch: dict[str, tuple] = {}
+        # read-ahead observability: the cache is load-bearing for
+        # delivery perf, so hit/miss/refill are counted and surfaced via
+        # stats() — a warm set that misses the claim order shows as a
+        # collapsed hit rate instead of just slow rounds.
         self.prefetch_counters = {"hits": 0, "misses": 0, "refills": 0}
         # per-phase wall times of the most recent append_batch:
         # candidates/validate/t6/commit
@@ -504,26 +504,21 @@ class EventStore:
             self._refresh_external()
             state = self.ledger.to_pandas()
             hwm = self._hwm_pandas().reset_index()
-        schema = (
-            "view string, decider_id string, offset long, last_offset long, "
-            "locked_until timestamp, offset_final boolean, "
-            "created_at timestamp, updated_at timestamp"
-        )
-        merged = state.merge(hwm, on="decider_id", how="inner")[self._LOCKS_COLS]
-        if merged.empty:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(merged, schema=schema)
+        return self._locks_frame(state.merge(hwm, on="decider_id", how="inner"))
 
-    _LOCKS_COLS = [
-        "view",
-        "decider_id",
-        "offset",
-        "last_offset",
-        "locked_until",
-        "offset_final",
-        "created_at",
-        "updated_at",
-    ]
+    _LOCKS_VIEW_SCHEMA = (
+        "view string, decider_id string, offset long, last_offset long, "
+        "locked_until timestamp, offset_final boolean, "
+        "created_at timestamp, updated_at timestamp"
+    )
+    _LOCKS_COLS = [c.split()[0] for c in _LOCKS_VIEW_SCHEMA.split(", ")]
+
+    def _locks_frame(self, merged: pd.DataFrame) -> DataFrame:
+        """Reference-shaped lock rows from a ledger ⋈ hwm pandas merge."""
+        merged = merged[self._LOCKS_COLS]
+        if merged.empty:
+            return self.spark.createDataFrame([], self._LOCKS_VIEW_SCHEMA)
+        return self.spark.createDataFrame(merged, schema=self._LOCKS_VIEW_SCHEMA)
 
     def locks_iter(self):
         """Shard-batched variant of ``locks()`` for operational tooling on
@@ -2012,22 +2007,26 @@ class EventStore:
 
         Cost model: the claim+lease is driver-side (pandas over the
         ledger + hwm frames, one pyarrow snapshot flush) — no Spark job.
-        Delivery reads through a READ-AHEAD cache: when a claim misses,
-        one refill (``_refill_prefetch``) fetches the next
+        Delivery reads through a READ-AHEAD window per view: when a claim
+        misses, one refill (``_refill_prefetch``) fetches the next
         ``PREFETCH_DEPTH`` unread events of the missed partitions and of
-        the view's other unread partitions, and replaces the view's
-        windows with them; later claims of those partitions are served
-        from the driver buffer.  Within the point-read budget the refill
-        is a driver-side pyarrow read of the files holding offsets above
-        the smallest claimed position, so a poll runs no Spark job; above
-        it (a consumer far behind) it is one Spark job.  The
-        delivered result is driver-bound by contract anyway (the consumer
-        collects ≤limit single events), so buffering it driver-side is
-        exactly a DB cursor's read-ahead, not a scale compromise.
-        Append-only log + per-commit invalidation keep the cache
-        trivially coherent.  The reference's plan (schema.sql:418-428)
-        does a B-tree probe per partition; this does one batched read
-        per refill, and the rows come back as a LocalRelation."""
+        up to ``PREFETCH_PARTITIONS`` of the view's other unread
+        partitions, picked by the ledger in the order its claims will
+        reach them (``ShardedLocksLedger.upcoming_claims``).  That frame
+        replaces the view's window; a later claim is served by a binary
+        search in its partition's row span.  Within the point-read budget
+        the refill is a driver-side pyarrow read of the files holding
+        offsets above the smallest claimed position, so a poll runs no
+        Spark job; above it (a consumer far behind) it is one Spark plan,
+        whose jobs the window then amortises over up to
+        ``PREFETCH_DEPTH`` polls.  The delivered result is driver-bound by contract anyway
+        (the consumer collects ≤limit single events), so buffering it
+        driver-side is exactly a DB cursor's read-ahead, not a scale
+        compromise.  Append-only log + per-commit invalidation keep the
+        cache trivially coherent.  The reference's plan
+        (schema.sql:418-428) does a B-tree probe per partition; this does
+        one batched read per refill, and the rows come back as a
+        LocalRelation."""
         with self._commit_lock:
             now = _utcnow()
             self._refresh_external()
@@ -2039,18 +2038,20 @@ class EventStore:
                 return self.events().limit(0)
             served, missing, drained = self._serve_from_prefetch(view, claimed)
             if missing:
-                # Warm the windows for ALL of the view's unread
-                # partitions (bounded), not just this round's claims: the
-                # refill is ONE Spark job either way, and covering the
-                # whole eligible set makes the cache hit regardless of
-                # which partitions the sharded claim rotation picks next.
+                # One read warms the misses and, up to PREFETCH_PARTITIONS
+                # in all, the view's other unread partitions in the order
+                # the ledger's claims will reach them, so later claims hit
+                # whichever partitions the sharded claim rotation picks.
                 self._refill_prefetch(
-                    view, self._union_eligible_pairs(view, missing, hwm)
+                    view,
+                    self.ledger.upcoming_claims(
+                        view, hwm, self.PREFETCH_PARTITIONS, first=missing
+                    ),
                 )
                 more, _, drained2 = self._serve_from_prefetch(
                     view, missing, count=False
                 )
-                served.extend(more)
+                served = more if served is None else pd.concat([served, more])
                 drained.extend(drained2)
             # Drained-claim release: a claim whose window is complete
             # and empty has NOTHING readable in our log view — possible
@@ -2058,131 +2059,61 @@ class EventStore:
             # our log view (hwm.py module doc).  Leaving it leased would
             # stall that partition for the full lease; release it now so
             # the next tick (with a caught-up log) redelivers.
-            for decider_id, _lo in drained:
+            for decider_id in drained:
                 self.ledger.set_locked_until(
                     view, decider_id, now - _UNLOCK_DELTA, now
                 )
-        if not served:
+        if served.empty:
             return self.events().limit(0)
-        served.sort(key=lambda r: r["offset"])
         # pandas → Arrow ⇒ a true LocalRelation: .collect() is then a
         # driver-local read (~10ms), where a tuple-list DataFrame would be
         # RDD-backed and pay a full job per collect (~300ms measured).
-        cols = [f.name for f in EVENTS_SCHEMA.fields]
-        pdf = pd.DataFrame(served, columns=cols)
-        return self.spark.createDataFrame(pdf, schema=EVENTS_SCHEMA)
+        served = served.sort_values("offset", ignore_index=True)
+        return self.spark.createDataFrame(served, schema=EVENTS_SCHEMA)
 
     def _serve_from_prefetch(
         self, view: str, claimed: list[tuple[str, int]], count: bool = True
-    ) -> tuple[list, list[tuple[str, int]], list[tuple[str, int]]]:
-        """Split claims into rows servable from cached windows, claims
-        needing a refill, and DRAINED claims (complete window, nothing
-        above the claim position — the hwm-ahead-of-log case the caller
-        releases).  A window fetched at consumer position ``lo`` covers
-        offsets (lo, last-row] completely (``complete`` = it reached the
-        partition watermark), so for a claim at position L ≥ lo the first
-        cached row above L IS the next unread event; a claim below ``lo``
-        is a miss.  ``count=False`` (the post-refill retry) keeps the
-        hit/miss counters measuring only FIRST-attempt serves — the
-        cache's steady-state hit rate."""
-        served, missing, drained = [], [], []
-        windows = self._prefetch.get(view, {})
+    ) -> "tuple[pd.DataFrame | None, list[tuple[str, int]], list[str]]":
+        """Split claims into the window rows that serve them (None when
+        the view has no window), claims needing a refill, and the
+        decider_ids of DRAINED claims (complete span, nothing above the
+        claim position — the hwm-ahead-of-log case the caller releases).
+        A partition's span, fetched at position ``lo``, holds every
+        event in (lo, its last row], and all events above ``lo`` when it
+        holds fewer than PREFETCH_DEPTH rows; so for a claim at L ≥ lo
+        the first row above L IS the next unread event, and a claim
+        below ``lo`` is a miss.  ``count=False`` (the post-refill retry)
+        keeps the hit/miss counters measuring only FIRST-attempt serves
+        — the cache's steady-state hit rate."""
+        rows, offsets, spans = self._prefetch.get(view, (None, None, {}))
+        pos, missing, drained = [], [], []
         for decider_id, last_offset in claimed:
-            win = windows.get(decider_id)
-            row = None
-            if win is not None and last_offset >= win["lo"]:
-                # prune rows at or below the committed position
-                rows = win["rows"] = [
-                    r for r in win["rows"] if r["offset"] > last_offset
-                ]
-                win["lo"] = last_offset
-                if rows:
-                    row = rows[0]
-                elif win["complete"]:
-                    row = False  # definitively drained (hwm-stale claim)
-            if row is None:
-                missing.append((decider_id, last_offset))
-                if count:
-                    self.prefetch_counters["misses"] += 1
-                continue
-            if count:
-                self.prefetch_counters["hits"] += 1
-            if row is False:
-                drained.append((decider_id, last_offset))
-            else:
-                served.append(row)
-        return served, missing, drained
-
-    def _union_eligible_pairs(
-        self,
-        view: str,
-        missing: list[tuple[str, int]],
-        hwm: ShardedHwm,
-    ) -> list[tuple[str, int]]:
-        """The round's missing pairs plus (up to PREFETCH_PARTITIONS) the
-        view's other unread partitions, ordered the way the LEDGER WALK
-        will actually claim them: shards in upcoming walk order (sticky
-        first), within a shard by (hwm offset, last_offset) — the shard
-        claim's own sort key.  A global hwm-offset order would spread the
-        budget evenly across all shards while the walk drains the sticky
-        shard in full first, so the walk would soon cross into an
-        unwarmed part of its own shard.  Before the walk stream, each
-        foreign shard's single HEAD candidate is warmed in fairness-rotor
-        order: the every-FAIRNESS_EVERY-th-tick probe claims exactly that
-        partition.  Leased partitions are included — their windows are
-        wanted as soon as the ack lands.  Driver-frame scan only; no
-        Spark work.  Ledger shard k's candidates only need hwm shard k,
-        and non-resident ledger shards are skipped outright — a paged
-        store's refill never faults in the whole table."""
-        pairs = dict(missing)
-        budget = self.PREFETCH_PARTITIONS - len(pairs)
-        if budget <= 0:
-            return list(pairs.items())
-        per_shard: dict[int, list[tuple[int, int, str]]] = {}
-        for k, s in enumerate(self.ledger.shards):
-            df = s._df
-            if df.empty or view not in df.index.get_level_values(0):
-                continue
-            sub = df.xs(view, level=0, drop_level=True)
-            hk = hwm.for_shard(k)
-            offs = hk["offset"].reindex(sub.index)
-            el = sub[offs.notna() & (sub["last_offset"] < offs)]
-            cands = sorted(
-                (int(o), int(lo), str(d))
-                for o, d, lo in zip(
-                    offs.loc[el.index], el.index, el["last_offset"]
-                )
-            )
-            if cands:
-                per_shard[k] = cands
-
-        def take(cand: tuple[int, int, str]) -> None:
-            nonlocal budget
-            _, lo, d = cand
-            if d not in pairs:
-                pairs[d] = lo
-                budget -= 1
-
-        for k in self.ledger.upcoming_probe_order():  # fairness heads
-            if budget <= 0:
-                break
-            if k in per_shard:
-                take(per_shard[k][0])
-        for k in self.ledger.upcoming_walk_order():  # the claim stream
-            for cand in per_shard.get(k, ()):
-                if budget <= 0:
-                    return list(pairs.items())
-                take(cand)
-        return list(pairs.items())
+            span = spans.get(decider_id)
+            if span is not None and last_offset >= span[2]:
+                start, stop, _ = span
+                i = bisect.bisect_right(offsets, last_offset, start, stop)
+                if i < stop:
+                    pos.append(i)
+                    continue
+                if stop - start < self.PREFETCH_DEPTH:
+                    drained.append(decider_id)
+                    continue
+            missing.append((decider_id, last_offset))
+        if count:
+            self.prefetch_counters["misses"] += len(missing)
+            self.prefetch_counters["hits"] += len(claimed) - len(missing)
+        return (None if rows is None else rows.iloc[pos]), missing, drained
 
     def _refill_prefetch(self, view: str, pairs: list[tuple[str, int]]) -> None:
         """The next PREFETCH_DEPTH unread events of every partition in
         ``pairs`` (decider_id, last_offset), which become the view's
-        windows — the batched index-probe analogue of schema.sql:418-423.
+        window — the batched index-probe analogue of schema.sql:418-423.
         Within the point-read budget it is one driver-side read of the
         files holding offsets above the smallest ``last_offset``, then a
-        per-partition head in pandas; above it, ONE Spark job (broadcast
-        join + per-partition topK over an offset-pruned scan)."""
+        per-partition head in pandas; above it, one Spark plan (broadcast
+        join + per-partition topK over an offset-pruned scan).  The
+        window is the fetched frame, sorted by (decider_id, offset), with
+        each pair's row span and fetch-time ``last_offset``."""
         self.prefetch_counters["refills"] += 1
         k = self.PREFETCH_DEPTH
         min_last = min(lo for _, lo in pairs)
@@ -2211,63 +2142,34 @@ class EventStore:
                 .withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") <= F.lit(k))
                 .select([f.name for f in EVENTS_SCHEMA.fields])
-                .toPandas()  # Arrow transfer; rows cached as plain dicts
+                .toPandas()  # Arrow transfer
+                .sort_values(["decider_id", "offset"])
             )
-        by_part: dict[str, list] = {}
-        for r in fetched.to_dict("records"):
-            by_part.setdefault(r["decider_id"], []).append(r)
-        windows = {}
-        for decider_id, last_offset in pairs:
-            rows = sorted(by_part.get(decider_id, []), key=lambda r: r["offset"])
-            windows[decider_id] = {
-                "lo": last_offset,
-                "rows": rows,
-                # fewer rows than asked ⇒ the window reached the watermark
-                "complete": len(rows) < k,
-            }
-        self._prefetch[view] = windows
-        cached = sum(
-            len(w["rows"]) for ws in self._prefetch.values() for w in ws.values()
-        )
-        if cached > self.PREFETCH_PARTITIONS * k:
-            self._prefetch = {view: windows}
+        part = fetched["decider_id"]
+        spans = {
+            d: (int(a), int(b), lo)
+            for (d, lo), a, b in zip(
+                pairs, part.searchsorted(ids, "left"), part.searchsorted(ids, "right")
+            )
+        }
+        self._prefetch[view] = (fetched, fetched["offset"].to_numpy(), spans)
+        if sum(len(w[0]) for w in self._prefetch.values()) > self.PREFETCH_PARTITIONS * k:
+            self._prefetch = {view: self._prefetch[view]}
 
     # ------------------------------------------------------------------ #
     # A7/A8/A9 ack / nack / schedule_nack
     # (/root/reference/schema.sql:436-468)
     # ------------------------------------------------------------------ #
 
-    _LOCKS_VIEW_SCHEMA = (
-        "view string, decider_id string, offset long, last_offset long, "
-        "locked_until timestamp, offset_final boolean, "
-        "created_at timestamp, updated_at timestamp"
-    )
-
     def _locks_rows(self, view: str, decider_ids: list[str]) -> DataFrame:
         """RETURNING-clause analogue: reference-shaped lock rows for the
         touched keys, built from the driver frames (no Spark job, no full
         table materialization — and on a paged store, touching ONLY the
-        keys' ledger + hwm shards, r6)."""
+        keys' ledger + hwm shards)."""
         with self._commit_lock:  # see locks(): reads must not race mutators
             state = self.ledger.rows_for(view, decider_ids)
             hwm_reset = self._hwm_view().lookup(decider_ids).reset_index()
-        merged = state.merge(
-            hwm_reset, on="decider_id", how="inner"
-        )[
-            [
-                "view",
-                "decider_id",
-                "offset",
-                "last_offset",
-                "locked_until",
-                "offset_final",
-                "created_at",
-                "updated_at",
-            ]
-        ]
-        if merged.empty:
-            return self.spark.createDataFrame([], self._LOCKS_VIEW_SCHEMA)
-        return self.spark.createDataFrame(merged, schema=self._LOCKS_VIEW_SCHEMA)
+        return self._locks_frame(state.merge(hwm_reset, on="decider_id", how="inner"))
 
     def ack_event(self, view: str, decider_id: str, offset: int) -> DataFrame:
         """Commit + release: last_offset = offset, locked_until = NOW()

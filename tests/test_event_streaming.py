@@ -7,6 +7,10 @@ ack commits the consumer offset."""
 import uuid
 from datetime import datetime, timedelta, timezone
 
+import pyarrow.compute as pc
+
+from test_index_path import _jobs
+
 
 def uid() -> str:
     return str(uuid.uuid4())
@@ -262,102 +266,85 @@ def test_prefetch_hit_rate_steady_state(store):
     assert pf["hits"] / (pf["hits"] + pf["misses"]) >= 0.75, pf
 
 
-def test_prefetch_deep_windows_for_missed_partitions(store):
-    """A claim re-picks the same few partitions every tick and consumes
-    one event of each, so all their windows exhaust together; the depth
-    (PREFETCH_DEPTH = 64) must cover a 20-event backlog in ONE window,
-    so the whole drain pays exactly one refill job."""
+def _drain_deep_backlog(spark, store):
+    """Two partitions with a 20-event backlog each, drained two claims
+    per poll: a claim re-picks the same few partitions every tick and
+    consumes one event of each, so their windows exhaust together; the
+    depth (PREFETCH_DEPTH = 64) covers each backlog in ONE span, so the
+    whole drain pays exactly one refill.  Returns the Spark job count of
+    each poll."""
     seed(store, n_partitions=2, events_per=20)
     store.register_view("v1", start_at=now_utc() - timedelta(hours=1))
-    rows = store.stream_events("v1", limit=2).collect()
-    assert len(rows) == 2
-    for part in ("p0", "p1"):
-        win = store._prefetch["v1"][part]
-        assert win["complete"], win  # whole history fetched in one window
-        assert len(win["rows"]) == 20, (part, len(win["rows"]))
-    drained = 2
-    while True:
-        store.ack_events(
-            "v1", [(r["decider_id"], r["offset"]) for r in rows]
-        )
+    seen, jobs = [], []
+
+    def poll():
         rows = store.stream_events("v1", limit=2).collect()
-        if not rows:
+        store.ack_events("v1", [(r["decider_id"], r["offset"]) for r in rows])
+        seen.extend(rows)
+        return rows
+
+    while True:
+        n = len(seen)
+        jobs.append(_jobs(spark, poll))
+        if len(seen) == n:
             break
-        drained += len(rows)
-    assert drained == 40
+        assert len(seen) == n + 2
+    assert len(seen) == 40
     assert store.prefetch_counters["refills"] == 1, store.prefetch_counters
+    rows, _, spans = store._prefetch["v1"]
+    assert len(rows) == 40
+    for part in ("p0", "p1"):
+        start, stop, _ = spans[part]
+        assert set(rows["decider_id"].iloc[start:stop]) == {part}
+        # the whole history in one span, and the span is complete
+        assert stop - start == 20 < store.PREFETCH_DEPTH, (part, start, stop)
+    return jobs
 
 
-def test_union_eligible_pairs_warms_in_walk_order():
-    """r12 (VERDICT r11 #3, the named prefetch drift lever): the warm
-    set must follow the LEDGER's upcoming claim order — shards in walk
-    order from the sticky shard, (hwm offset, last_offset) within a
-    shard, with each foreign shard's HEAD candidate first in fairness-
-    rotor order.  The r11 form sorted candidates GLOBALLY by hwm
-    offset, spreading the budget evenly over all shards while the walk
-    drained the sticky shard in full first — so the walk crossed into
-    unwarmed batches of its own shard every ~PREFETCH_DEPTH ticks (the
-    sf1 residual 9/48 tail refills).  Spark-free: synthetic ledger
-    frames, unbound call."""
-    import pandas as pd
+def test_prefetch_deep_windows_for_missed_partitions(spark, store):
+    """Within the point-read budget the one refill is a driver-side
+    read: no poll of the drain runs a Spark job."""
+    assert set(_drain_deep_backlog(spark, store)) == {0}
 
-    from fstore_sql_spark.ledger import ShardedLocksLedger
-    from fstore_sql_spark.store import EventStore
 
-    class Shard:
-        def __init__(self, ids, hwm_base):
-            self._df = pd.DataFrame(
-                {"last_offset": [0] * len(ids)},
-                index=pd.MultiIndex.from_tuples(
-                    [("v", d) for d in ids], names=["view", "decider_id"]
-                ),
-            )
-            self.hwm = pd.DataFrame(
-                {"offset": range(hwm_base, hwm_base + len(ids))}, index=ids
-            )
+def test_prefetch_deep_windows_over_point_read_budget(spark, store):
+    """Over the point-read budget (instance-shadowed to 0) the refill is
+    the Spark plan, and the window is what keeps a consumer far behind
+    from paying Spark jobs on every poll: the first poll's refill runs
+    them, the other 20 polls of the drain run none."""
+    store.POINT_READ_MAX_ROWS = 0
+    first, *rest = _drain_deep_backlog(spark, store)
+    assert first > 0 and set(rest) == {0}, (first, rest)
 
-    # shard 0 holds the GLOBALLY lowest hwm offsets — the r11 global
-    # sort would spend the whole budget there; the walk starts at 1.
-    shards = [
-        Shard(["a0", "a1", "a2", "a3"], hwm_base=1),
-        Shard(["b0", "b1", "b2", "b3"], hwm_base=100),
-        Shard(["c0", "c1", "c2", "c3"], hwm_base=200),
-    ]
 
-    class Ledger:
-        n_shards = 3
-        _sticky = 1
-        _rotor = 2
-        upcoming_walk_order = ShardedLocksLedger.upcoming_walk_order
-        upcoming_probe_order = ShardedLocksLedger.upcoming_probe_order
-
-        def __init__(self):
-            self.shards = shards
-
-    class Hwm:
-        def for_shard(self, k):
-            return shards[k].hwm
-
-    class Fake:
-        PREFETCH_PARTITIONS = 7
-        ledger = Ledger()
-        _prefetch = {}
-
-    got = [d for d, _ in EventStore._union_eligible_pairs(Fake(), "v", [], Hwm())]
-    # probe heads first (rotor order 2,0 — sticky 1 skipped), then the
-    # walk stream (shard 1 in full, then shard 2 minus the taken head)
-    assert got == ["c0", "a0", "b0", "b1", "b2", "b3", "c1"], got
-
-    # missing pairs are mandatory, and already-warm partitions are
-    # fetched again: the refill replaces the view's windows
-    Fake._prefetch = {"v": {"b1": {}}}
-    got = [
-        d
-        for d, _ in EventStore._union_eligible_pairs(
-            Fake(), "v", [("c3", 0)], Hwm()
-        )
-    ]
-    assert got == ["c3", "c0", "a0", "b0", "b1", "b2", "b3"], got
+def test_drained_claim_is_released(store, monkeypatch):
+    """A claim whose refilled span is complete and empty has nothing
+    readable in the store's log view (the watermark can be ahead of
+    it).  Its lease is released at once, so the next poll after a
+    commit claims the partition again instead of waiting out the
+    lease.  The refill's log read withholds p0's rows to stage that."""
+    seed(store, n_partitions=2, events_per=2)  # p0: 1, 3; p1: 2, 4
+    store.register_view("v1", start_at=now_utc() - timedelta(hours=1))
+    read = store._read_files
+    monkeypatch.setattr(
+        store,
+        "_read_files",
+        lambda files, where, columns=None: read(files, where, columns).filter(
+            pc.field("decider_id") != "p0"
+        ),
+    )
+    rows = store.stream_events("v1", limit=2, seconds=300).collect()
+    monkeypatch.undo()
+    assert [(r["decider_id"], r["offset"]) for r in rows] == [("p1", 2)]
+    window, _, spans = store._prefetch["v1"]
+    start, stop, _ = spans["p0"]
+    assert start == stop and "p0" not in set(window["decider_id"])
+    lock = store.locks().filter("decider_id = 'p0'").collect()[0]
+    assert lock["locked_until"] < now_utc(), lock
+    # a commit clears the window; p1 is still leased, p0 is claimable
+    store.append_event("e", uid(), "d", "p2")
+    rows = store.stream_events("v1", limit=2).collect()
+    assert sorted((r["decider_id"], r["offset"]) for r in rows) == [("p0", 1), ("p2", 5)]
 
 
 def test_prefetch_two_views_stay_within_row_bound(store):
@@ -382,10 +369,12 @@ def test_prefetch_two_views_stay_within_row_bound(store):
             other = "v2" if v == "v1" else "v1"
             warm_other = other in store._prefetch
             rows = store.stream_events(v, limit=2).collect()
-            cached = sum(
-                len(w["rows"]) for ws in store._prefetch.values() for w in ws.values()
-            )
+            cached = sum(len(w) for w, _, _ in store._prefetch.values())
             assert cached <= bound, (cached, bound)
+            for w, _, spans in store._prefetch.values():
+                lengths = [stop - start for start, stop, _ in spans.values()]
+                assert sum(lengths) == len(w), (lengths, len(w))
+                assert max(lengths) <= store.PREFETCH_DEPTH, lengths
             dropped |= warm_other and other not in store._prefetch
             if not rows:
                 live.remove(v)

@@ -191,6 +191,40 @@ class TestShardedLedger:
                 break
         assert sorted(seen) == sorted(f"p{i:04d}" for i in range(64))
 
+    def test_upcoming_claims_follow_claim_order(self, root):
+        """The delivery read-ahead's warm set is the ledger's upcoming
+        claim order: each foreign shard's HEAD in fairness-rotor order
+        (the probe claims exactly that partition), then the walk's
+        shards from the sticky one, each by (hwm offset, last_offset).
+        Shard 0 holds the globally lowest watermarks, so a global
+        hwm-offset order would spend the budget there while the walk
+        drains shard 1 first.  A leased partition stays in the set, and
+        ``first`` pairs (the claims that missed) lead it."""
+        ledger = ShardedLocksLedger(ParquetStore(None, root), n_shards=3)
+        ids, offsets = [], []
+        for k, (name, base) in enumerate(zip("abc", (1, 100, 200))):
+            rows = seed_rows("v", 4).assign(
+                decider_id=[f"{name}{i}" for i in range(4)]
+            )
+            # placed by hand, not routed: the test fixes each shard's ids
+            with ledger.shards[k].guard():
+                ledger.shards[k].insert_missing(rows)
+            ids += list(rows["decider_id"])
+            offsets += range(base, base + 4)
+        hwm = pd.DataFrame({"offset": offsets}, index=pd.Index(ids, name="decider_id"))
+        now = now_utc()
+        with ledger.shards[1].guard():
+            ledger.shards[1].set_locked_until("v", "b1", now + timedelta(hours=1), now)
+        ledger._sticky, ledger._rotor = 1, 2
+
+        got = ledger.upcoming_claims("v", hwm, 7)
+        # probe heads first (rotor order 2,0 — sticky 1 skipped), then
+        # the walk (shard 1 in full, then shard 2 less its taken head)
+        assert [d for d, _ in got] == ["c0", "a0", "b0", "b1", "b2", "b3", "c1"]
+        assert {lo for _, lo in got} == {0}
+        got = ledger.upcoming_claims("v", hwm, 7, first=[("c3", 0)])
+        assert [d for d, _ in got] == ["c3", "c0", "a0", "b0", "b1", "b2", "b3"]
+
     def test_delete_view_cascades_across_shards(self, root):
         ledger = ShardedLocksLedger(ParquetStore(None, root))
         ledger.insert_missing(seed_rows("a", 32))

@@ -226,10 +226,8 @@ def compare(store, history, data, hidden=()):
     for way in ("reader", "spark"):
         call = lambda: store._refill_prefetch(VIEW, pairs)  # noqa: E731
         call() if way == "reader" else spark_plan(store, call)
-        windows[way] = {
-            d: (w["lo"], w["complete"], [tuple(r.values()) for r in w["rows"]])
-            for d, w in store._prefetch[VIEW].items()
-        }
+        rows, _, spans = store._prefetch[VIEW]
+        windows[way] = (rows.values.tolist(), spans)
     assert windows["reader"] == windows["spark"]
     store._prefetch.clear()
 
