@@ -10,12 +10,10 @@ probe analogue, /root/reference/schema.sql:56).
 
 Why this exists: the claim path needs, per partition, the
 log's max offset + final flag ("the derived half of the reference's T6
-dual-write", /root/reference/schema.sql:240-263).  Through r5 that was ONE
-driver-resident pandas frame (``EventStore._hwm_pandas``), 76 B/partition,
-always fully resident once any claim materialized it — the last unbounded
-driver-resident structure (at 10⁸ partitions ≈ 7.6 GB with no budget
-knob).  This module gives the watermark the SAME treatment the locks
-ledger got in r4/r5:
+dual-write", /root/reference/schema.sql:240-263).  As ONE driver-resident
+pandas frame that is 76 B/partition, fully resident once any claim
+materializes it (at 10⁸ partitions ≈ 7.6 GB).  This module gives the
+watermark the SAME treatment as the locks ledger:
 
 - **Sharded by ``crc32(decider_id) % n_shards``** — the exact routing of
   ``ShardedLocksLedger`` (verified Spark ``F.crc32`` ≡ ``zlib.crc32``), so
@@ -28,9 +26,11 @@ ledger got in r4/r5:
   the log, and a sibling consumer PROCESS freeloads the committer's
   maintained watermark instead of recomputing the full aggregate after
   every external commit.
-- **LRU budget** (``max_resident`` shards): total driver residency of a
-  paged store is O(active shards) for ledger AND hwm — closing the table
-  in BASELINE.md that still carried an O(#partitions) hwm term.
+- **LRU budget**: the store passes the ledger's ``max_resident`` (set
+  by the pinned shard count, see ``ShardedLocksLedger``), so a paged
+  layout keeps at most that many hwm shard frames resident too — total
+  driver residency O(active shards) for ledger AND hwm; ``None`` keeps
+  every shard resident.
 
 Consistency contract: ``hwm_META.json`` holds the PUBLISHED log commit id
 the state tables collectively reflect; the invariant "meta == C ⟹ every
@@ -224,8 +224,8 @@ class ShardedHwm:
         """Full recompute (called under the hwm lock): ONE Spark
         aggregation over the log, written as a shard-partitioned parquet
         staging and ADOPTED dir-by-dir into the state layout — the
-        watermark never funnels through the driver (the pre-r6
-        ``toPandas`` materialization spiked O(#partitions) driver RSS).
+        watermark never funnels through the driver (a ``toPandas``
+        materialization would spike O(#partitions) driver RSS).
         Commit 0 is the empty log (every commit holds at least one row),
         so its watermark is written as empty snapshots with no Spark job."""
         self.rebuild_count += 1
@@ -369,7 +369,7 @@ class ShardedHwm:
             self._frames.pop(k, None)
             self._versions.pop(k, None)
 
-    # ---- evict-cache (r6, same pattern as LocksLedger.evict): spill the
+    # ---- evict-cache (same pattern as LocksLedger.evict): spill the
     # PARSED frame as version-tagged Arrow IPC so a re-visit (fairness
     # probe, ack routing, sibling reload) pays one mmap read + the delta
     # tail since the tag, not a parquet snapshot + full chain replay.
@@ -444,7 +444,7 @@ class ShardedHwm:
         """``merge_batch``'s compact-fold load: called with ``_plock``
         already HELD (ProcessLock is non-reentrant, so repair must call
         ``_rebuild`` directly, never ``sync``).  An unreadable shard —
-        power loss tearing a pre-r6 non-durable delta, a corrupt snapshot
+        power loss tearing a delta, a corrupt snapshot
         — raises out of ``read_state_pandas``; the watermark is DERIVED,
         so the log is always the authority: rebuild everything at
         ``commit_id`` (the batch being folded is already in the published

@@ -3,9 +3,9 @@
 Why this exists: the reference's ``locks`` table
 lives in a central Postgres server, so claim/lease/ack are row updates with
 ~ms latency and ``FOR UPDATE SKIP LOCKED`` gives cross-connection disjoint
-claims (/root/reference/schema.sql:402-446).  Round 1 expressed every lock
-mutation as a Spark join + full-snapshot parquet rewrite: correct, but a
-claim→deliver→ack round trip paid 3 Spark jobs and landed at ~48 events/s.
+claims (/root/reference/schema.sql:402-446).  Expressed as a Spark join +
+full-snapshot parquet rewrite per lock mutation, the same semantics cost a
+claim→deliver→ack round trip 3 Spark jobs (~48 events/s).
 
 This module is the embedded-KV analogue of that central table:
 
@@ -14,7 +14,7 @@ This module is the embedded-KV analogue of that central table:
   rows; the reference holds the very same table on one Postgres box), so a
   driver-resident frame IS the 100 TB-scale design, not a shortcut.
 - **Durable snapshots in the ParquetStore state layout**
-  (``locks_state/v{N}`` full snapshots + ``v{N}.delta.parquet`` deltas +
+  (``locks_s{k:02d}_state/v{N}`` full snapshots + ``v{N}.delta.arrow`` deltas +
   ``_LATEST`` pointer): every mutating API call flushes before returning,
   so at-least-once delivery survives a crash (an unflushed lease/ack
   redelivers — permitted; a lost ack is the at-least-once contract, a
@@ -39,9 +39,9 @@ longer grows with the table (deltas); the remaining growth axes are the
 in-memory frame itself and the periodic full compaction — both
 O(#views × #partitions), the same central ceiling as the reference's
 ``locks`` table.  (A Delta MERGE backend was considered as an escape
-hatch and formally struck in r4 — see SURVEY.md §7.1 step 2: the
-sharded append-delta layout already provides the MERGE-shaped
-semantics, and delta-spark is not installable here.)
+hatch and struck — see SURVEY.md §7.1 step 2: the sharded append-delta
+layout already provides the MERGE-shaped semantics, and delta-spark is
+not a dependency.)
 """
 
 from __future__ import annotations
@@ -499,8 +499,8 @@ class LocksLedger:
             # when the accumulated view set changes, or after
             # STAMP_MAX_AGE_S regardless (a SLOW consumer flushing less
             # than STAMP_EVERY times between two probes would otherwise
-            # look orphaned and be stolen from on every probe, review
-            # r4).  Views ACCUMULATE across unpublished flushes — they
+            # look orphaned and be stolen from on every probe).  Views
+            # ACCUMULATE across unpublished flushes — they
             # are cleared only when a publish lands.
             views = sorted(self._consumer_views)
             due = (
@@ -660,7 +660,7 @@ class LocksLedger:
         """Sorted-index positions of the EXISTING keys among ``keys``
         ((view, decider_id) tuples) — binary search per view against the
         lexsorted index, avoiding MultiIndex factorization (the pandas
-        ``.loc``/``isin`` alignment cost that dominated the r3 tick)."""
+        ``.loc``/``isin`` alignment cost that dominated the claim tick)."""
         import numpy as np
 
         if self._df.empty:
@@ -906,9 +906,24 @@ class ShardedLocksLedger:
     pairs) and redeliver forever.  A ``<table>_SHARDS`` marker written at
     first creation pins the count; reopening adopts it, and an EXPLICIT
     mismatching ``n_shards`` argument fails loudly.
+
+    Driver residency follows that pinned count, decided once at open: a
+    layout of more than ``MAX_RESIDENT_SHARDS`` shards pages (LRU) with
+    that many shard frames resident — memory O(active shards), not
+    O(#partitions); the sticky claim path touches ~1 shard per consumer,
+    and an evicted shard reloads on demand (evict-cache or snapshot +
+    delta tail).  A smaller layout keeps every shard resident.  So a
+    store created with ``expected_partitions`` large enough, or resized
+    past the budget with ``tools/resize_shards.py``, pages on every
+    open, as its layout says, whatever process opens it.
     """
 
     DEFAULT_SHARDS = 8
+    # Residency budget of a paged layout, in shard frames: 16 ×
+    # TARGET_ROWS_PER_SHARD ≈ 512k rows (~40 MB), a plateau independent
+    # of the partition count.  BASELINE.md measured the evict-cache's
+    # worst-case paging tax at 8-11%.
+    MAX_RESIDENT_SHARDS = 16
     # claims between fairness-probe ticks (see _fairness_probe): lower
     # = tighter starvation bound, higher = more shard affinity
     FAIRNESS_EVERY = 8
@@ -944,7 +959,7 @@ class ShardedLocksLedger:
         """Shard floor for a declared concurrent-consumer count: next
         power of two >= N, clamped to [DEFAULT_SHARDS, MAX_SHARDS].
 
-        This encodes the measured r11 scaling knee (BASELINE.md
+        This encodes the measured scaling knee (BASELINE.md
         "consumer-scaling knee"): disjoint cross-process claims hand each
         consumer a sticky shard, so once workers outnumber shards the
         extra workers CONTEND instead of scaling — measured ~5x/worker
@@ -963,7 +978,6 @@ class ShardedLocksLedger:
         storage,
         table: str = "locks",
         n_shards: int | None = None,
-        max_resident: int | None = None,
         expected_partitions: int | None = None,
         expected_consumers: int | None = None,
     ):
@@ -978,7 +992,7 @@ class ShardedLocksLedger:
             # two racing first-openers with different hints just adopt
             # the winner's count).  The count is the max of the two
             # sizing rules: rows/shard (tick latency) and shards >=
-            # consumers (the r11 knee — see shards_for_consumers).
+            # consumers (the scaling knee — see shards_for_consumers).
             hint = max(
                 self.shards_for(int(expected_partitions))
                 if expected_partitions is not None
@@ -988,15 +1002,13 @@ class ShardedLocksLedger:
                 else self.DEFAULT_SHARDS,
             )
         self.n_shards = self._pin_shard_count(storage, table, n_shards, hint)
-        # LRU shard paging: with ``max_resident`` set,
-        # at most that many shard frames stay loaded on the driver —
-        # resident memory is O(active shards), not O(#partitions).  The
-        # sticky-affinity claim path touches ~1 shard per consumer, so a
-        # small budget costs nothing in steady state; evicted shards
-        # reload on demand (full snapshot + delta tail).  ``None``
-        # (default) keeps every shard resident — correct for stores whose
-        # partition count fits the driver comfortably.
-        self.max_resident = max_resident
+        # LRU shard paging follows the pinned layout (see class doc):
+        # None keeps every shard resident
+        self.max_resident = (
+            self.MAX_RESIDENT_SHARDS
+            if self.n_shards > self.MAX_RESIDENT_SHARDS
+            else None
+        )
         # Layout pins for the live-resize guard: _verify_layout re-reads these on every read surface and
         # after every shard-lock acquisition.
         self._marker_path = os.path.join(storage.root, f"{table}_SHARDS")
@@ -1005,7 +1017,7 @@ class ShardedLocksLedger:
         # finish it BEFORE any shard frame is loaded (see resize_shards).
         _recover_resize(storage, table, self.n_shards)
         self.shards = [
-            LocksLedger(storage, f"{table}_s{i:02d}", lazy=max_resident is not None)
+            LocksLedger(storage, f"{table}_s{i:02d}", lazy=self.max_resident is not None)
             for i in range(self.n_shards)
         ]
         self._use_clock = 0
@@ -1033,33 +1045,18 @@ class ShardedLocksLedger:
         self._tick_rows: deque = deque(maxlen=self.TICK_WINDOW)
         self._tick_count = 0  # monotonic — the deque length saturates
         self._tick_warned_at = 0.0
-        self._maybe_migrate_legacy(storage)
 
     @staticmethod
     def _pin_shard_count(
         storage, table: str, requested: int | None, hint: int | None = None
     ) -> int:
-        import re
         import uuid as _uuid
 
         marker = os.path.join(storage.root, f"{table}_SHARDS")
         if not os.path.exists(marker):
-            # Pre-marker sharded stores must be DETECTED, not
-            # guessed: adopting a default of 8 on a store laid out with
-            # another count would silently mis-route — the exact failure
-            # the marker exists to prevent.  Every shard's state dir is
-            # created eagerly at open, so counting them recovers the
-            # true layout.
-            pat = re.compile(rf"^{re.escape(table)}_s(\d+)_state$")
-            found = [
-                int(m.group(1))
-                for d in os.listdir(storage.root)
-                if (m := pat.match(d))
-            ]
-            if found:
-                n = max(found) + 1
-            else:
-                n = requested or hint or ShardedLocksLedger.DEFAULT_SHARDS
+            # the marker is published before any shard state dir exists,
+            # so no marker means a fresh store
+            n = requested or hint or ShardedLocksLedger.DEFAULT_SHARDS
             # Atomic first-writer-wins publish: hard-link the fully
             # written tmp into place.  os.link fails with EEXIST when a
             # concurrent opener already published, so two first-openers
@@ -1088,29 +1085,6 @@ class ShardedLocksLedger:
                 "the on-disk layout)"
             )
         return pinned
-
-    def _maybe_migrate_legacy(self, storage) -> None:
-        """One-time in-place upgrade: a store written before r3 holds all
-        consumer state in the single unsharded ``locks`` table; without
-        this, opening it with the sharded ledger would silently show zero
-        lock rows and delivery for pre-upgrade views would stop.  Rows
-        route into their shards via insert_missing (ON CONFLICT DO
-        NOTHING), so a concurrent double-migration is harmless; the
-        marker just skips the read on later opens."""
-        legacy_dir = os.path.join(storage.root, f"{self.table}_state")
-        marker = os.path.join(legacy_dir, "_MIGRATED")
-        if os.path.exists(marker) or storage.state_version(self.table) < 0:
-            return
-        pdf = storage.read_state_pandas(
-            self.table, key_cols=["view", "decider_id"]
-        )
-        if len(pdf):
-            self.insert_missing(pdf[_COLS])
-        try:
-            with open(marker, "w", encoding="utf-8") as f:
-                f.write("migrated to sharded layout (r3)")
-        except OSError:
-            pass
 
     # ---- LRU shard paging -------------------------------------------- #
 
@@ -1157,11 +1131,8 @@ class ShardedLocksLedger:
                 "has a resize in progress (or an unrecovered crashed "
                 "one: staging export present)",
             )
-        try:
-            with open(self._marker_path, encoding="utf-8") as f:
-                cur = int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return  # markerless legacy layout: nothing to compare
+        with open(self._marker_path, encoding="utf-8") as f:
+            cur = int(f.read().strip())
         if cur != self.n_shards:
             raise errors.ShardLayoutChangedError(
                 self.table, self.n_shards, f"was resized to {cur} shards"
@@ -1690,7 +1661,7 @@ def resize_shards(storage, table: str, new_n_shards: int) -> int:
                 f.write(str(new_n_shards))
             os.replace(mtmp, marker)
             # 3b. the DERIVED hwm layout shares this routing — clear it so
-            # the next open rebuilds at the new count (r6; leaving it
+            # the next open rebuilds at the new count (leaving it
             # would mis-route watermark lookups and stall delivery).
             # Before the staging unlink: a crash here re-runs recovery,
             # which clears again (idempotent).

@@ -105,8 +105,8 @@ def apply_state_delta(pdf, dpdf, key_cols: list[str]):
     keyed = pdf.set_index(key_cols)
     # A single key column indexes as a FLAT Index (set_index semantics);
     # dropping MultiIndex keys from it silently matches nothing and turns
-    # the upsert into a duplicate append (r6 bug, caught by the hwm
-    # tables' one-column key) — build the matching index kind.
+    # the upsert into a duplicate append (the hwm tables' one-column key
+    # hit this) — build the matching index kind.
     if len(key_cols) == 1:
         keys = pd.Index(dpdf[key_cols[0]])
     else:
@@ -131,12 +131,12 @@ class Manifest:
     the log append so crash recovery can verify whether the batch landed
     COMPLETELY (publish it) or PARTIALLY (quarantine its files) instead of
     assuming append-never-ran / append-fully-completed are the only crash
-    windows.  ``None`` on pre-r6 manifests → legacy roll-forward.
+    windows.  0 at the bootstrap commit, where recovery never runs.
     """
 
     max_offset: int = 0
     commit_id: int = 0
-    pending_rows: int | None = None
+    pending_rows: int = 0
 
 
 # The columns whose footer min/max a ``LogFile`` keeps: what point reads
@@ -232,7 +232,8 @@ class ParquetStore:
         return Manifest(
             max_offset=d["max_offset"],
             commit_id=d["commit_id"],
-            pending_rows=d.get("pending_rows"),
+            # null in a bootstrap manifest written before it defaulted to 0
+            pending_rows=d.get("pending_rows") or 0,
         )
 
     def write_manifest(self, table: str, manifest: Manifest) -> None:
@@ -261,11 +262,9 @@ class ParquetStore:
         return os.path.join(self.root, f"{table}_PUBLISHED")
 
     def read_published(self, table: str) -> int:
-        """Commit id of the last fully appended (visible) batch.  Falls
-        back to the manifest for pre-marker layouts."""
+        """Commit id of the last fully appended (visible) batch
+        (``init_log`` seeds the marker)."""
         path = self._published_path(table)
-        if not os.path.exists(path):
-            return self.read_manifest(table).commit_id
         with open(path, encoding="utf-8") as f:
             return int(f.read().strip())
 
@@ -282,12 +281,9 @@ class ParquetStore:
             empty.write.mode("overwrite").parquet(path)
             _atomic_write(os.path.join(self._log_base(table), _LATEST), "0")
             self.write_manifest(table, Manifest())
-        # Seed the published marker at bootstrap: without it,
-        # read_published falls back to the MANIFEST — which advances
-        # BEFORE the append — so during the very first commit a sibling
-        # could rebuild its cache from a partially-landed batch.  With
-        # the marker present from init, visibility is marker-gated from
-        # the FIRST commit, not the second.
+        # Seed the published marker at bootstrap, from the manifest
+        # before its first advance: visibility is marker-gated from the
+        # first commit on, and every reader finds the marker.
         if not os.path.exists(self._published_path(table)):
             self.write_published(table, self.read_manifest(table).commit_id)
 
@@ -497,11 +493,10 @@ class ParquetStore:
         full = os.path.join(base, f"v{version:08d}")
         if os.path.isdir(full):
             shutil.rmtree(full, ignore_errors=True)
-        for ext in (".delta.arrow", ".delta.parquet"):
-            try:
-                os.unlink(os.path.join(base, f"v{version:08d}{ext}"))
-            except FileNotFoundError:
-                pass
+        try:
+            os.unlink(f"{full}.delta.arrow")
+        except FileNotFoundError:
+            pass
 
     def write_state(self, table: str, df: DataFrame) -> int:
         """Write a complete new snapshot, then flip the pointer.
@@ -553,27 +548,20 @@ class ParquetStore:
         """('full'|'delta', path) for one version, None if absent.  Deltas
         are Arrow IPC files (``.delta.arrow``): ~5-10x cheaper to write
         and read than parquet at per-commit sizes, and only the ledger's
-        pyarrow path ever touches them (Spark reads full snapshots only).
-        ``.delta.parquet`` is recognized for layouts written before r3."""
-        base = self._state_dir(table)
-        full = os.path.join(base, f"v{version:08d}")
+        pyarrow path ever touches them (Spark reads full snapshots only)."""
+        full = os.path.join(self._state_dir(table), f"v{version:08d}")
         if os.path.isdir(full):
             return ("full", full)
-        for ext in (".delta.arrow", ".delta.parquet"):
-            delta = os.path.join(base, f"v{version:08d}{ext}")
-            if os.path.exists(delta):
-                return ("delta", delta)
+        if os.path.exists(f"{full}.delta.arrow"):
+            return ("delta", f"{full}.delta.arrow")
         return None
 
     @staticmethod
     def _read_delta_pandas(path: str):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        if path.endswith(".arrow"):
-            with pa.memory_map(path) as m:
-                return pa.ipc.open_file(m).read_all().to_pandas()
-        return pq.read_table(path).to_pandas()
+        with pa.memory_map(path) as m:
+            return pa.ipc.open_file(m).read_all().to_pandas()
 
     def latest_full_state_version(self, table: str) -> int:
         v = self.state_version(table)
@@ -697,9 +685,9 @@ class ParquetStore:
         return out
 
     # ---- evict-cache: version-tagged Arrow IPC spill of a PARSED
-    # state frame, shared by the paged locks ledger and watermark (review
-    # r6: the two sides used to carry near-identical copies of this
-    # protocol, one future-drift bug source).  The cache is best-effort
+    # state frame, shared by the paged locks ledger and watermark (one
+    # copy of the protocol, so the two sides cannot drift apart).  The
+    # cache is best-effort
     # only — atomic rename, no fsync, torn/absent/foreign caches are
     # simply misses; the snapshot+delta chain stays the durable truth.
     # Each owner passes its own ``tag`` key so a foreign writer's cache
@@ -849,10 +837,8 @@ class ParquetStore:
                 continue
             if d.startswith("v") and d[1:].isdigit():
                 entries.append((int(d[1:]), d, True))
-            elif d.startswith("v") and (
-                d.endswith(".delta.parquet") or d.endswith(".delta.arrow")
-            ):
-                core = d[1:].split(".delta.", 1)[0]
+            elif d.startswith("v") and d.endswith(".delta.arrow"):
+                core = d[1:-len(".delta.arrow")]
                 if core.isdigit():
                     entries.append((int(core), d, False))
         fulls = sorted(v for v, _, is_full in entries if is_full)

@@ -135,50 +135,26 @@ class EventStore:
     # 500 ms) and level with it at 3M.
     POINT_READ_MAX_ROWS = 1_000_000
 
-    # Auto paging budget: with ``expected_partitions``
-    # given and no explicit residency choice, cap driver-resident consumer
-    # state at this many shard frames — 16 × TARGET_ROWS_PER_SHARD ≈ 512k
-    # rows (~40 MB), a plateau independent of the store's partition count.
-    # BASELINE.md measured the r6 evict-cache's worst-case paging tax at
-    # 8-11%, which made paging "a reasonable DEFAULT posture"; this makes
-    # it the actual default for stores that declare their scale.
-    AUTO_MAX_RESIDENT_SHARDS = 16
-
     def __init__(
         self,
         spark: SparkSession,
         path: str,
-        max_resident_shards: "int | str | None" = None,
         expected_partitions: int | None = None,
         expected_consumers: int | None = None,
     ):
-        """``expected_partitions`` sizes the initial
-        consumer-state shard count when this open CREATES the store
-        (``ShardedLocksLedger.shards_for``: next power of two keeping
-        shards ≤ ~32k partitions, the tick-latency sizing rule in
-        BASELINE.md).  Ignored for existing stores — the on-disk marker
-        pins the layout; grow later with ``tools/resize_shards.py``
+        """``expected_partitions`` and ``expected_consumers`` are sizing
+        hints, read only when this open CREATES the store: the consumer
+        state is laid out with ``max(shards_for(expected_partitions),
+        shards_for_consumers(expected_consumers))`` shards
+        (``ShardedLocksLedger``; the tick-latency and consumer-scaling
+        rules of BASELINE.md).  An existing store keeps the shard count
+        its on-disk marker pins; grow it with ``tools/resize_shards.py``
         (the ledger logs a p95-tick warning when that becomes due).
 
-        ``expected_consumers`` adds the OTHER
-        measured sizing rule to the same creation-time hint: concurrent
-        claim throughput collapses once workers outnumber shards (the
-        r11 scaling knee, BASELINE.md — ~5x/worker LOSS past the knee),
-        and the partition-based rule under-shards for concurrency (8
-        shards at 200k partitions; the knee wants shards >= workers).
-        The layout is created with ``max(shards_for(expected_partitions),
-        next_pow2(expected_consumers))``, both clamped to the supported
-        range.  Like ``expected_partitions`` it is a hint: an existing
-        on-disk marker wins, and it never changes delivered semantics —
-        only the shard count a FRESH store is laid out with.
-
-        Giving ``expected_partitions`` also enables the RECOMMENDED
-        production posture: LRU shard paging with a
-        ``min(shards_for(N), AUTO_MAX_RESIDENT_SHARDS)`` residency budget,
-        so a store that declares its scale gets O(active shards) driver
-        memory by default.  Opt out with ``max_resident_shards="all"``
-        (keep every shard resident — the pre-r7 default), or override
-        with an explicit integer budget."""
+        Driver residency follows that layout: a store of more than
+        ``ShardedLocksLedger.MAX_RESIDENT_SHARDS`` shards pages its
+        consumer state and watermark shard frames (LRU) within that
+        budget; a smaller one keeps every shard resident."""
         self.spark = spark
         self.storage = ParquetStore(spark, path)
         self._commit_lock = threading.RLock()
@@ -207,39 +183,9 @@ class EventStore:
         # hash(decider_id) so concurrent consumer processes claiming
         # different partitions don't serialize on one mutex; mutations
         # self-guard and never run Spark jobs.
-        # ``max_resident_shards`` bounds driver-resident consumer state
-        # (LRU shard paging): None keeps all shards loaded
-        # (right up to ~10M partitions on an 8 GiB driver — BASELINE.md
-        # scale-ceiling table); an explicit budget makes residency
-        # O(active shards) for the 10^8-partition regime.
-        if isinstance(max_resident_shards, str):
-            if max_resident_shards != "all":
-                raise ValueError(
-                    "max_resident_shards must be an integer >= 1, None, or "
-                    f"'all', got {max_resident_shards!r}"
-                )
-            max_resident_shards = None  # explicit keep-everything-resident
-        elif max_resident_shards is None and expected_partitions is not None:
-            # the recommended posture: a declared scale
-            # turns paging ON with a budget that plateaus regardless of N —
-            # small stores get a budget >= their shard count (all resident,
-            # zero tax), big ones get O(active shards) residency
-            max_resident_shards = max(
-                2,
-                min(
-                    self.AUTO_MAX_RESIDENT_SHARDS,
-                    ShardedLocksLedger.shards_for(int(expected_partitions)),
-                ),
-            )
-        if max_resident_shards is not None and max_resident_shards < 1:
-            # 0 would silently enable evict-everything-per-tick
-            raise ValueError(
-                f"max_resident_shards must be >= 1, got {max_resident_shards}"
-            )
         self.ledger = ShardedLocksLedger(
             self.storage,
             _LOCKS,
-            max_resident=max_resident_shards,
             expected_partitions=expected_partitions,
             expected_consumers=expected_consumers,
         )
@@ -266,7 +212,7 @@ class EventStore:
             spark,
             self.ledger.n_shards,
             self.events,
-            max_resident=max_resident_shards,
+            max_resident=self.ledger.max_resident,
         )
         # generation before marker: see _refresh_external
         self._seen_log_gen = self.storage._log_gen(_EVENTS)
@@ -614,23 +560,16 @@ class EventStore:
         description: str,
         event_version: int = 1,
     ) -> DataFrame:
-        """INSERT into deciders RETURNING; duplicate PK ⇒ error (C4).
+        """INSERT into deciders RETURNING; duplicate PK ⇒ error (C4),
+        decided from C3's registry memo without a Spark job.
 
         Under the committer flock: write_state is a read-modify-write of
         the whole snapshot, so two registering PROCESSES would otherwise
         lose one row (last-writer-wins)."""
         with self._commit_lock, self._committer_guard():
-            existing = self.deciders()
-            dup = (
-                existing.filter(
-                    (F.col("decider") == decider)
-                    & (F.col("event") == event)
-                    & (F.col("event_version") == event_version)
-                ).count()
-                > 0
-            )
-            if dup:
+            if (decider, event, int(event_version)) in self._registered_events():
                 raise errors.DuplicateRegistrationError(decider, event, event_version)
+            existing = self.deciders()
             row = self.spark.createDataFrame(
                 [(decider, event, int(event_version), description)], DECIDERS_SCHEMA
             )
@@ -662,7 +601,7 @@ class EventStore:
         ``renamed_from`` maps new field name → the
         PREVIOUS version's name for fields this version renames; the
         typed view then routes old rows' values into the new name.
-        Nested fields address by DOTTED PATH (r7: ``{"meta.k_id":
+        Nested fields address by DOTTED PATH (``{"meta.k_id":
         "meta.k"}``); a renamed struct re-roots its nested paths, and a
         rename may not cross struct boundaries.  Evolution against the
         previous registered version is validated recursively: only
@@ -1246,8 +1185,8 @@ class EventStore:
           batch under a fresh commit.
 
         Power-loss-TORN parquet files (rename persisted, data pages lost
-        — unreadable footers) are quarantined in every window (ADVICE
-        r6): left in place they would fail all subsequent log reads.
+        — unreadable footers) are quarantined in every window: left in
+        place they would fail all subsequent log reads.
 
         SAFETY CONTRACT: this path mutates the log layout and is only
         sound under the committer flock (``_committer_guard`` holds it at
@@ -1256,20 +1195,13 @@ class EventStore:
         reader could quarantine a LIVE committer's in-flight batch —
         recoverable from ``_quarantine/`` but still an operational
         incident; such mounts are unsupported for multi-process use.
-
-        Pre-r6 manifests carry no ``pending_rows`` → legacy blind
-        roll-forward (both old windows behave as before, except torn
-        files are quarantined rather than left behind).
         """
         manifest = self.storage.read_manifest(_EVENTS)
         if self.storage.read_published(_EVENTS) < manifest.commit_id:
             files, landed, torn = self.storage.txn_log_files(
                 _EVENTS, manifest.commit_id
             )
-            if (
-                manifest.pending_rows is not None
-                and landed != manifest.pending_rows
-            ):
+            if landed != manifest.pending_rows:
                 self.storage.quarantine_log_files(
                     _EVENTS, manifest.commit_id, files
                 )
@@ -1306,13 +1238,10 @@ class EventStore:
         finally:
             conf.set("spark.sql.shuffle.partitions", prev)
 
-    def _as_candidates(self, rows_or_df) -> DataFrame:
+    def _as_candidates(self, df: DataFrame) -> DataFrame:
+        """A client DataFrame as candidate rows (``_CANDIDATE_COLS``),
+        with the defaults filled in."""
         self._last_seq_was_hashed = False
-        if not isinstance(rows_or_df, DataFrame):
-            return self.spark.createDataFrame(
-                self._prepare_rows(rows_or_df), _CANDIDATE_DDL
-            )
-        df = rows_or_df
         if "seq" not in df.columns:
             self._last_seq_was_hashed = True
             # A distributed DataFrame has NO defined row order, so a
@@ -1385,7 +1314,7 @@ class EventStore:
         """Partitions born in this batch, as a DataFrame — never collected
         (a 100 TB backfill batch can open millions of streams)."""
         keys = cand.select("decider_id", "decider").distinct()
-        # Empty-log fast path (r14, same manifest proof as
+        # Empty-log fast path (same manifest proof as
         # ``_validate_batch``): with no committed rows every candidate
         # stream is new — the semi+anti probe of the log is the identity.
         if self.storage.read_manifest(_EVENTS).max_offset == 0:
@@ -1410,7 +1339,7 @@ class EventStore:
         in the reference's trigger firing order (alphabetical trigger
         names then constraints, SURVEY.md §3.1): T1, T2, T3, C1, C2, C3.
         """
-        # EMPTY-LOG FAST PATH (r14, guide §2.4 — remove shuffles outright):
+        # EMPTY-LOG FAST PATH (a shuffle removed outright, not tuned):
         # the first bulk load into a fresh store (the 100 TB bootstrap
         # shape, and exactly bench b1) validated against FOUR probes of an
         # empty log — the tails aggregate + three existing-event scans —
@@ -2110,8 +2039,9 @@ class EventStore:
         window — the batched index-probe analogue of schema.sql:418-423.
         Within the point-read budget it is one driver-side read of the
         files holding offsets above the smallest ``last_offset``, then a
-        per-partition head in pandas; above it, one Spark plan (broadcast
-        join + per-partition topK over an offset-pruned scan).  The
+        per-partition head in pandas; above it, one Spark plan (the pairs
+        as ``isin`` and map-literal predicates, then a per-partition topK
+        over an offset-pruned scan).  The
         window is the fetched frame, sorted by (decider_id, offset), with
         each pair's row span and fetch-time ``last_offset``."""
         self.prefetch_counters["refills"] += 1
@@ -2130,15 +2060,15 @@ class EventStore:
             rows = rows[rows["offset"] > rows["decider_id"].map(dict(pairs))]
             fetched = rows.sort_values(["decider_id", "offset"]).groupby("decider_id").head(k)
         else:
-            pairs_df = F.broadcast(
-                self.spark.createDataFrame(pairs, "decider_id string, last_offset long")
-            )
+            # the pairs as predicates, not a joined relation: a DataFrame
+            # of them would cost a Spark job of its own
+            last_of = F.map_from_arrays(F.lit(ids), F.lit([lo for _, lo in pairs]))
             w = Window.partitionBy("decider_id").orderBy("offset")
             fetched = (
                 self._committed_log()
                 .filter(F.col("offset") > F.lit(min_last))
-                .join(pairs_df, "decider_id")
-                .filter(F.col("offset") > F.col("last_offset"))
+                .filter(F.col("decider_id").isin(ids))
+                .filter(F.col("offset") > F.element_at(last_of, F.col("decider_id")))
                 .withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") <= F.lit(k))
                 .select([f.name for f in EVENTS_SCHEMA.fields])

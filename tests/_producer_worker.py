@@ -1,5 +1,5 @@
 """Spawn-safe child-process workers for the cross-process COMMITTER tests
-(VERDICT r4 #1/#5).
+(racing producers, committer crash windows, the combined soak).
 
 Each worker builds its own SparkSession (own JVM) over the SHARED store
 path — the two-connections-one-database scenario the reference exercises in
@@ -89,7 +89,7 @@ def crash_committer_worker(root: str, out_path: str, kill_point: str) -> None:
     - ``after_append``: log rows landed, ``_PUBLISHED`` marker never
       written — the batch is complete on disk, so it may be visible; a
       replay with on_conflict='ignore' must be a no-op.
-    - ``mid_append`` (r6, ADVICE r5 medium): the append job's commit is
+    - ``mid_append``: the append job's commit is
       interrupted after a SUBSET of the batch's files landed — recovery
       must QUARANTINE the partial files (publishing them would break
       batch atomicity), burn the allocation, and let the replay
@@ -293,9 +293,10 @@ def soak_consumer_worker(
     lease_s: int = 8,
     max_resident: int = 2,
 ) -> None:
-    """Full-engine consumer process for the combined crash soak (r6,
-    VERDICT r5 #4): opens the shared store PAGED (``max_resident``
-    shards resident for ledger AND hwm), loops stream→ack, records every
+    """Full-engine consumer process for the combined crash soak: opens
+    the shared store PAGED (``max_resident`` of its 8 shards resident
+    for ledger AND hwm, set as ``ShardedLocksLedger.MAX_RESIDENT_SHARDS``
+    before the open), loops stream→ack, records every
     acked (decider_id, offset) incrementally (flushed per round so a
     SIGKILL loses nothing already acked), and — when
     ``kill_after_claims`` is set — dies by ``os._exit`` while HOLDING
@@ -306,9 +307,11 @@ def soak_consumer_worker(
     import time as _time
 
     from fstore_sql_spark import EventStore
+    from fstore_sql_spark.ledger import ShardedLocksLedger
 
     spark = _small_spark(f"soak-consumer-{os.path.basename(out_path)}")
-    store = EventStore(spark, root, max_resident_shards=max_resident)
+    ShardedLocksLedger.MAX_RESIDENT_SHARDS = max_resident
+    store = EventStore(spark, root)
     acked: list[tuple[str, int]] = []
     claims = 0
 

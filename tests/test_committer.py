@@ -1,4 +1,4 @@
-"""Cross-process committer safety (VERDICT r4 #1 and #5).
+"""Cross-process committer safety: racing producers and committer crashes.
 
 The reference gets multi-connection producer safety from Postgres row locks
 plus ``previous_id UNIQUE`` (/root/reference/schema.sql:44) and exercises it
@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from fstore_sql_spark import EventStore, errors
 from fstore_sql_spark.storage import Manifest
+from fstore_sql_spark.store import _CANDIDATE_DDL
 from tests._producer_worker import append_worker, crash_committer_worker
 
 pytestmark = pytest.mark.slow  # spawns extra Spark JVMs — full tier only
@@ -87,7 +88,7 @@ class TestConcurrentProducers:
                 d = json.load(f)
             committed.extend(d["committed"])
             loud_errors.extend(d["errors"])
-        # The contract (VERDICT r4 #1): all events land exactly once with
+        # The contract: all events land exactly once with
         # collision-free offsets, OR a writer raises loudly.  With the
         # blocking flock both producers serialize, so the expected outcome
         # is zero errors and full commit counts.
@@ -113,17 +114,20 @@ class TestConcurrentProducers:
             "events", Manifest(max_offset=stale.max_offset + 7, commit_id=stale.commit_id + 1)
         )
         store.storage.write_published("events", stale.commit_id + 1)
-        cand = store._as_candidates(
-            [
-                {
-                    "event": "evt",
-                    "event_id": "e2",
-                    "decider": "dec",
-                    "decider_id": "d1",
-                    "data": "{}",
-                    "previous_id": "e1",
-                }
-            ]
+        cand = spark.createDataFrame(
+            store._prepare_rows(
+                [
+                    {
+                        "event": "evt",
+                        "event_id": "e2",
+                        "decider": "dec",
+                        "decider_id": "d1",
+                        "data": "{}",
+                        "previous_id": "e1",
+                    }
+                ]
+            ),
+            _CANDIDATE_DDL,
         ).persist()
         from datetime import datetime, timezone
 
@@ -140,7 +144,7 @@ class TestConcurrentProducers:
 
 
 class TestCommitterCrashRecovery:
-    """SIGKILL the committer inside ``_commit`` (VERDICT r4 #5): every
+    """SIGKILL the committer inside ``_commit``: every
     crash window must recover to all-or-nothing visibility, an idempotent
     replay, and a free committer lock."""
 
@@ -210,7 +214,7 @@ class TestCommitterCrashRecovery:
         assert len(offsets2) == len(set(offsets2))
 
     def test_mid_append_partial_batch_quarantined(self, spark, shared_path):
-        """ADVICE r5 (medium): a committer killed mid-job-commit leaves a
+        """A committer killed mid-job-commit leaves a
         SUBSET of the batch's files in the log dir.  Recovery must NOT
         publish that subset (batch atomicity / intra-batch previous_id
         chains) — the manifest's pending_rows count exposes the mismatch,
@@ -253,11 +257,10 @@ class TestCommitterCrashRecovery:
         assert len(offsets) == len(set(offsets)), "colliding offsets after quarantine"
 
     def test_torn_parquet_quarantined_not_left_behind(self, spark, shared_path):
-        """ADVICE r6: a power loss can persist an append's rename while
+        """A power loss can persist an append's rename while
         losing its data pages — an unreadable-footer .parquet in the log
-        dir.  Pre-r7 recovery skipped such files (txn_log_files could not
-        attribute them) and left them in place, where they failed every
-        subsequent log read.  They must be MOVED to _quarantine/ (never
+        dir.  Left in place (txn_log_files cannot attribute it to a
+        commit), such a file fails every subsequent log read.  They must be MOVED to _quarantine/ (never
         unlinked — bytes stay salvageable) and the log must read clean."""
         store = EventStore(spark, shared_path)
         store.register_decider_event("dec", "evt", "torn test")
@@ -344,7 +347,7 @@ class TestCommitterCrashRecovery:
 
 
 class TestLiveSoakCrash:
-    """VERDICT r4 #5, full shape: SIGKILL the committer MID-_commit while
+    """The crash test at full shape: SIGKILL the committer MID-_commit while
     a live consumer is streaming and acking the same store, then recover
     by replay and assert end-to-end integrity (no partial batch, replay
     idempotent, gap-free per-stream delivery, nothing delivered twice
@@ -449,8 +452,8 @@ class TestLiveSoakCrash:
 
 
 class TestCombinedCrashSoak:
-    """r6 (VERDICT r5 #4): N producer + M consumer PROCESSES on one PAGED
-    store, SIGKILLing BOTH a committer (mid-append-job-commit — the
+    """N producer + M consumer PROCESSES on one PAGED store (a budget of
+    2 of its 8 shards, ``ShardedLocksLedger.MAX_RESIDENT_SHARDS``), SIGKILLing BOTH a committer (mid-append-job-commit — the
     partial-batch window) AND a claim-holding consumer, then recovering
     by replay + lease expiry.  Asserts exactly-once landing, gap-free
     per-stream chains, disjoint acks across every actor, and no stuck
@@ -464,7 +467,7 @@ class TestCombinedCrashSoak:
     #: disjointness assertion (#3) fails on CONTRACT-LEGAL behavior: a
     #: consumer stalled past its lease gets its event redelivered
     #: (at-least-once, reference locked_until semantics) and BOTH acks
-    #: land.  Measured r13: the box's post-reboot page-fault bursts
+    #: land.  Measured: a loaded box's page-fault bursts
     #: stall a consumer's Spark session multi-second, and the old 8 s
     #: lease produced 12 duplicate acks in one file-scope run (and
     #: passed solo) — a box-regime flake, not an engine bug.  45 s
@@ -474,14 +477,19 @@ class TestCombinedCrashSoak:
     #: the 300 s drain deadline.
     LEASE_S = 45
 
-    def test_producers_consumers_paging_and_kills(self, spark, shared_path):
+    def test_producers_consumers_paging_and_kills(
+        self, spark, shared_path, monkeypatch
+    ):
+        from fstore_sql_spark.ledger import ShardedLocksLedger
         from tests._producer_worker import (
             soak_batches,
             soak_consumer_worker,
             soak_producer_worker,
         )
 
-        parent = EventStore(spark, shared_path, max_resident_shards=2)
+        monkeypatch.setattr(ShardedLocksLedger, "MAX_RESIDENT_SHARDS", 2)
+        parent = EventStore(spark, shared_path)
+        assert parent.ledger.max_resident == 2
         parent.register_decider_event("dec", "evt", "combined soak")
         parent.register_view("soak", start_at="2000-01-01 00:00:00")
 

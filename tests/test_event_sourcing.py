@@ -5,6 +5,7 @@
 import uuid
 
 import pytest
+from test_index_path import _jobs
 
 from fstore_sql_spark import (
     DuplicateEventIdError,
@@ -36,6 +37,21 @@ def test_register_duplicate_fails(store):
     store.register_decider_event("d", "e", "x")
     with pytest.raises(DuplicateRegistrationError):
         store.register_decider_event("d", "e", "y")
+
+
+def test_register_duplicate_runs_no_spark_job(spark, store):
+    """The duplicate check reads C3's registry memo: a duplicate raises
+    without a Spark job, and a new version of the same event is not a
+    duplicate."""
+    store.register_decider_event("d", "e", "x")
+
+    def dup():
+        with pytest.raises(DuplicateRegistrationError):
+            store.register_decider_event("d", "e", "y")
+
+    assert _jobs(spark, dup) == 0
+    store.register_decider_event("d", "e", "v2", event_version=2)
+    assert _jobs(spark, dup) == 0
 
 
 def test_readme_flow(store):
@@ -317,7 +333,7 @@ def test_get_events_many_replays_selected_streams(store):
 
 
 def test_refresh_keys_on_publish_marker_not_manifest(store, spark):
-    """Commit VISIBILITY contract (ADVICE r2, high): a sibling reader must
+    """Commit VISIBILITY contract: a sibling reader must
     invalidate its caches only when the post-append _PUBLISHED marker
     advances — never on the pre-append allocation manifest, which moves
     BEFORE the log files land (reacting to it caches a partial batch and
@@ -332,7 +348,7 @@ def test_refresh_keys_on_publish_marker_not_manifest(store, spark):
 
     # simulate a sibling mid-append: manifest (allocation) advanced, no
     # publish marker yet, committer flock HELD (a live committer always
-    # holds it as of r5 — without the flock this state is a CRASHED
+    # holds it — without the flock this state is a CRASHED
     # committer and the reader correctly rolls the marker forward, see
     # test_pure_reader_rolls_forward_orphaned_commit) → the reader must
     # NOT invalidate
@@ -375,7 +391,7 @@ def test_maybe_compact_thresholds(store):
 
 @pytest.mark.slow
 def test_compaction_policy_bounds_replay_latency(store, spark):
-    """r8 (VERDICT r7 next-round #7): soak many small append ticks under
+    """Soak many small append ticks under
     the recommended ``maybe_compact`` cadence and assert the policy holds
     what it promises — the current-generation file count stays bounded by
     the threshold (plus the files of the ticks since the last trigger),
@@ -424,7 +440,7 @@ def test_compaction_policy_bounds_replay_latency(store, spark):
 
 def test_sql_views_stay_live_across_appends(store):
     """register_sql_views must re-bind after commits: a temp view frozen
-    at registration time served the pre-append log forever (review r4)."""
+    at registration time served the pre-append log forever."""
     import uuid
 
     store.register_decider_event("counter", "sqlv_evt", "fin")
@@ -460,9 +476,8 @@ def test_sql_views_follow_sibling_registrations(store, spark):
 def test_dataframe_without_seq_gets_deterministic_hash_order(store, spark):
     """A caller DataFrame with no ``seq`` has no defined order; the engine
     must assign one that is DETERMINISTIC across retries/re-runs
-    (VERDICT r4 'what's wrong' #1 — the old
-    row_number-over-monotonically_increasing_id could renumber on a task
-    retry).  Pin: two identical appends into two fresh stores produce
+    (a row_number over monotonically_increasing_id could renumber on a
+    task retry).  Pin: two identical appends into two fresh stores produce
     identical (event_id -> offset) maps, equal to xxhash64 order."""
     import shutil as _sh
     import tempfile as _tf
@@ -512,7 +527,7 @@ def test_dataframe_without_seq_gets_deterministic_hash_order(store, spark):
 
 
 def test_empty_log_fast_path_validation_parity(store):
-    """r14 optimization pin: on a FRESH store the validator skips the four
+    """Optimization pin: on a FRESH store the validator skips the four
     log probes (manifest.max_offset == 0 proves they match nothing), so
     every rule that can fire inside a first batch must still fire — and
     after one commit the probe path must catch log-vs-batch violations

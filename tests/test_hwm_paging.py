@@ -1,11 +1,15 @@
-"""Sharded + paged high-watermark (r6, VERDICT r5 #1).
+"""Sharded + paged high-watermark.
 
-Through r5 the per-partition watermark was ONE driver-resident frame
-(``_hwm_pandas``), unbounded at 76 B/partition; these tests pin the r6
-contract: the watermark pages under the same shard layout and LRU budget
-as the locks ledger, claims/acks behave identically, steady ingest+deliver
-never re-aggregates the log, and a sibling process freeloads the
-committer's maintained watermark instead of rebuilding."""
+As one driver-resident frame the per-partition watermark would be
+unbounded at 76 B/partition; these tests pin its contract: the watermark
+pages under the same shard layout and LRU budget as the locks ledger,
+claims/acks behave identically, steady ingest+deliver never re-aggregates
+the log, and a sibling process freeloads the committer's maintained
+watermark instead of rebuilding.
+
+Paging follows the pinned shard count (``ShardedLocksLedger``
+``MAX_RESIDENT_SHARDS``); tests page an 8-shard store by lowering that
+budget with ``_page`` before the store opens."""
 
 from __future__ import annotations
 
@@ -16,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fstore_sql_spark import EventStore
+from fstore_sql_spark.ledger import ShardedLocksLedger
 
 
 @pytest.fixture()
@@ -25,8 +30,14 @@ def path():
     shutil.rmtree(p, ignore_errors=True)
 
 
-def _seed(spark, path, n_parts=120, events_per=2, max_resident=None):
-    store = EventStore(spark, path, max_resident_shards=max_resident)
+def _page(monkeypatch, budget: int) -> None:
+    """Make stores opened from here on page with ``budget`` shard frames
+    resident (every layout of more shards than that pages)."""
+    monkeypatch.setattr(ShardedLocksLedger, "MAX_RESIDENT_SHARDS", budget)
+
+
+def _seed(spark, path, n_parts=120, events_per=2):
+    store = EventStore(spark, path)
     store.register_decider_event("dec", "evt", "hwm paging test")
     store.register_view("v", start_at="2000-01-01T00:00:00")
     rows = []
@@ -67,9 +78,10 @@ def _drain(store, view="v", limit=25, max_ticks=400):
 
 
 class TestHwmPaging:
-    def test_budget_enforced_and_delivery_unchanged(self, spark, path):
+    def test_budget_enforced_and_delivery_unchanged(self, spark, path, monkeypatch):
         n, per = 120, 2
-        store = _seed(spark, path, n, per, max_resident=2)
+        _page(monkeypatch, 2)
+        store = _seed(spark, path, n, per)
         delivered = _drain(store)
         # every event of every partition delivered exactly once, in order
         assert len(delivered) == n * per
@@ -151,7 +163,7 @@ class TestHwmPaging:
     def test_reloaded_shard_replays_same_key_deltas_without_duplicates(
         self, spark, path
     ):
-        """Regression (r6): two commits advancing the SAME partition write
+        """Regression: two commits advancing the SAME partition write
         two deltas for one key; a disk reload must REPLACE on replay, not
         duplicate (the single-key-column apply_state_delta bug — a
         duplicated index then kills the eligibility scan outright)."""
@@ -191,12 +203,15 @@ class TestHwmPaging:
         # 25*2 events total, 5 already acked above
         assert len(delivered) == 25 * 2 - 5
 
-    def test_evicted_hwm_shard_reloads_from_spill_cache(self, spark, path):
-        """r6 evict-cache for the watermark (mirror of the ledger's): an
+    def test_evicted_hwm_shard_reloads_from_spill_cache(
+        self, spark, path, monkeypatch
+    ):
+        """The evict-cache for the watermark (mirror of the ledger's): an
         evicted shard reloads from the version-tagged Arrow spill + delta
         tail — identical content, without touching the parquet snapshot
         path; a commit past the spill is covered by the tail replay."""
-        store = _seed(spark, path, 60, 1, max_resident=2)
+        _page(monkeypatch, 2)
+        store = _seed(spark, path, 60, 1)
         hwm = store._hwm_view()
         # materialize + capture every shard's content, forcing evictions
         before = {k: hwm.for_shard(k).copy() for k in range(hwm.n_shards)}
@@ -242,12 +257,15 @@ class TestHwmPaging:
         finally:
             store.storage.read_state_pandas = orig
 
-    def test_paged_register_view_backfill_stays_in_budget(self, spark, path):
-        """T7 on a paged store (r6): registering a view AFTER events exist
+    def test_paged_register_view_backfill_stays_in_budget(
+        self, spark, path, monkeypatch
+    ):
+        """T7 on a paged store: registering a view AFTER events exist
         backfills every partition shard-at-a-time — residency stays at
         the budget throughout, and the backfill semantics (start_at in
         the past ⇒ stream everything) are unchanged."""
-        store = EventStore(spark, path, max_resident_shards=2)
+        _page(monkeypatch, 2)
+        store = EventStore(spark, path)
         store.register_decider_event("dec", "evt", "late view")
         store.append_batch(
             [
@@ -272,11 +290,14 @@ class TestHwmPaging:
         store.register_view("caught_up", start_at="2999-01-01T00:00:00")
         assert store.stream_events("caught_up", limit=10).count() == 0
 
-    def test_locks_view_and_returning_rows_match_unpaged(self, spark, path):
+    def test_locks_view_and_returning_rows_match_unpaged(
+        self, spark, path, monkeypatch
+    ):
         """The full-table surface (locks()) and the RETURNING path
-        (targeted shard lookup, r6) agree between a paged and an unpaged
+        (targeted shard lookup) agree between a paged and an unpaged
         store over identical state."""
-        paged = _seed(spark, path, 40, 1, max_resident=1)
+        _page(monkeypatch, 1)
+        paged = _seed(spark, path, 40, 1)
         row = paged.stream_events("v", limit=1).collect()[0]
         returned = paged.ack_event("v", row["decider_id"], row["offset"]).collect()
         assert len(returned) == 1
@@ -315,7 +336,7 @@ def _corrupt_hwm_deltas(path) -> int:
 
 
 class TestHwmTornState:
-    """Review r6 durability finding: a torn watermark delta must repair by
+    """Durability: a torn watermark delta must repair by
     rebuild from the log (the watermark is DERIVED — the log is always
     the authority), never crash the claim path or silently under-deliver."""
 
@@ -352,11 +373,14 @@ class TestHwmTornState:
             assert offs == sorted(offs)
             assert len(offs) == (1 if d == acked else 2)
 
-    def test_merge_path_repairs_torn_delta_at_compaction(self, spark, path):
+    def test_merge_path_repairs_torn_delta_at_compaction(
+        self, spark, path, monkeypatch
+    ):
         """The committer's compact fold hits the torn chain while holding
         the hwm lock (non-reentrant) — repair must rebuild in place and
         the fold must keep delivering the batch being committed."""
-        store = _seed(spark, path, 4, 1, max_resident=1)
+        _page(monkeypatch, 1)
+        store = _seed(spark, path, 4, 1)
         got = store.stream_events("v", limit=1).collect()  # materialize
         assert len(got) == 1 and store._hwm_shards.rebuild_count == 1
         store.ack_event("v", got[0]["decider_id"], got[0]["offset"])
@@ -379,7 +403,7 @@ class TestHwmTornState:
             ]
         )
         assert _corrupt_hwm_deltas(path) > 0
-        # paging (max_resident=1) evicted most frames, so the compact
+        # paging (a budget of 1) evicted most frames, so the compact
         # branch must LOAD the shard — hitting the torn chain
         store.append_batch(
             [
@@ -410,7 +434,7 @@ class TestHwmTornState:
 
 class TestHwmResizeInterplay:
     def test_shard_resize_rebuilds_watermark_routing(self, spark, path):
-        """r6 review find: a shard-count resize re-routes the LOCKS
+        """A shard-count resize re-routes the LOCKS
         ledger, and the watermark shares that routing — the persisted hwm
         layout must be cleared by the resize, else lookups against the
         old shard layout miss partitions and delivery stalls forever."""
@@ -433,13 +457,16 @@ class TestHwmResizeInterplay:
 
 @pytest.mark.slow
 class TestHwmPagingScale:
-    def test_million_partition_hwm_under_memory_budget(self, spark, path):
-        """The r6 done-criterion (VERDICT r5 #1): 1M partitions, residency
-        budget of 2 shards, claims/acks unchanged, hwm resident bytes
-        measured and bounded — the BASELINE.md ceiling table's hwm term
-        drops from O(#partitions) to O(active shards)."""
+    def test_million_partition_hwm_under_memory_budget(
+        self, spark, path, monkeypatch
+    ):
+        """1M partitions, residency budget of 2 shards, claims/acks
+        unchanged, hwm resident bytes measured and bounded — the
+        BASELINE.md ceiling table's hwm term drops from O(#partitions)
+        to O(active shards)."""
         n = 1_000_000
-        store = EventStore(spark, path, max_resident_shards=2)
+        _page(monkeypatch, 2)
+        store = EventStore(spark, path)
         store.register_decider_event("dec", "evt", "1M hwm")
         store.register_view("v", start_at="2000-01-01T00:00:00")
         df = (
@@ -483,30 +510,30 @@ class TestHwmPagingScale:
 
 
 class TestAutoPagingPosture:
-    """r7 (VERDICT r6 #4): ``expected_partitions`` enables the recommended
-    production posture — LRU paging with a plateaued residency budget —
-    by default, with an explicit "all" opt-out."""
+    """Paging is a property of the pinned layout: a store of more than
+    ``MAX_RESIDENT_SHARDS`` shards pages within that budget, a smaller
+    one keeps every shard resident.  ``expected_partitions`` only sizes
+    a fresh store; paging follows from the count it lays out."""
 
     def test_expected_partitions_enables_budget(self, spark, path):
         store = EventStore(spark, path, expected_partitions=2_000_000)
         assert store.ledger.n_shards == 64
-        assert store.ledger.max_resident == EventStore.AUTO_MAX_RESIDENT_SHARDS
-        assert (
-            store._hwm_shards.max_resident == EventStore.AUTO_MAX_RESIDENT_SHARDS
-        )
+        budget = ShardedLocksLedger.MAX_RESIDENT_SHARDS
+        assert store.ledger.max_resident == budget
+        assert store._hwm_shards.max_resident == budget
 
     def test_small_store_budget_covers_all_shards(self, spark, path):
-        # paging machinery ON, but the budget >= shard count: nothing
-        # ever evicts, so small stores pay zero tax under the posture
+        # 8 shards are within the budget: no paging, and no lazy loads
         store = EventStore(spark, path, expected_partitions=1_000)
         assert store.ledger.n_shards == 8
-        assert store.ledger.max_resident == 8
+        assert store.ledger.max_resident is None
+        assert store._hwm_shards.max_resident is None
 
     def test_expected_consumers_lifts_shard_count(self, spark, path):
-        # r13 (VERDICT r12 #3): the consumer-provisioning rule at the API —
-        # 2M partitions alone lay out 64 shards; declaring 100 concurrent
-        # consumers lifts the fresh layout to next_pow2(100) = 128 so
-        # workers never outnumber shards (the r11 scaling knee)
+        # the consumer-provisioning rule at the API: 2M partitions alone
+        # lay out 64 shards; declaring 100 concurrent consumers lifts the
+        # fresh layout to next_pow2(100) = 128 so workers never
+        # outnumber shards (the measured scaling knee)
         store = EventStore(
             spark,
             path,
@@ -517,27 +544,38 @@ class TestAutoPagingPosture:
         # hwm sharding follows the ledger layout
         assert store._hwm_shards.n_shards == 128
 
-    def test_opt_out_all_keeps_everything_resident(self, spark, path):
-        store = EventStore(
-            spark, path, expected_partitions=2_000_000, max_resident_shards="all"
-        )
+    def test_resized_layout_pages_on_reopen(self, spark, path):
+        """A default 8-shard store resized to 32 shards reopens paged
+        with the budget of 16, and delivers every event exactly once, in
+        per-partition order, while most shards are evicted."""
+        from fstore_sql_spark.ledger import resize_shards
+        from fstore_sql_spark.storage import ParquetStore
+
+        n, per = 300, 2
+        store = _seed(spark, path, n, per)
         assert store.ledger.max_resident is None
-        assert store._hwm_shards.max_resident is None
-
-    def test_explicit_budget_wins_over_auto(self, spark, path):
-        store = EventStore(
-            spark, path, expected_partitions=2_000_000, max_resident_shards=3
-        )
-        assert store.ledger.max_resident == 3
-
-    def test_invalid_string_rejected(self, spark, path):
-        with pytest.raises(ValueError, match="'all'"):
-            EventStore(spark, path, max_resident_shards="everything")
+        assert resize_shards(ParquetStore(None, path), "locks", 32) == 32
+        reopened = EventStore(spark, path)
+        budget = ShardedLocksLedger.MAX_RESIDENT_SHARDS
+        assert reopened.ledger.n_shards == 32
+        assert reopened.ledger.max_resident == budget == 16
+        assert reopened._hwm_shards.max_resident == budget
+        delivered = _drain(reopened)
+        assert len(delivered) == len(set(delivered)) == n * per
+        per_stream: dict[str, list[int]] = {}
+        for d, o in delivered:
+            per_stream.setdefault(d, []).append(o)
+        assert len(per_stream) == n
+        for offs in per_stream.values():
+            assert offs == sorted(offs) and len(offs) == per
+        st = reopened.stats()
+        assert st["ledger_resident_shards"] <= budget
+        assert st["hwm_resident_shards"] <= budget
 
     def test_posture_store_delivers_and_acks(self, spark, path):
         """Functional smoke under the auto posture: append, stream, ack —
         same results as any store (deep paging behavior is pinned by the
-        budget=2 suites above)."""
+        budget-2 tests above)."""
         store = EventStore(spark, path, expected_partitions=500)
         store.register_decider_event("dec", "evt", "posture smoke")
         store.register_view("v", start_at="2000-01-01T00:00:00")
@@ -560,13 +598,14 @@ class TestAutoPagingPosture:
 
 
 class TestLocksIter:
-    """r7 (VERDICT r6 wrong #3): the shard-batched operational variant of
-    the reference-shaped ``locks()`` view."""
+    """The shard-batched operational variant of the reference-shaped
+    ``locks()`` view: peak residency one shard, not the whole table."""
 
-    def test_locks_iter_matches_locks(self, spark, path):
+    def test_locks_iter_matches_locks(self, spark, path, monkeypatch):
         import pandas as pd
 
-        store = _seed(spark, path, n_parts=60, events_per=2, max_resident=2)
+        _page(monkeypatch, 2)
+        store = _seed(spark, path, n_parts=60, events_per=2)
         # take a few claims so some rows carry live leases
         got = store.stream_events("v", limit=10).collect()
         assert got

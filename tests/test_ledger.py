@@ -234,24 +234,6 @@ class TestShardedLedger:
         assert ledger.count() == 32
 
 
-class TestLegacyMigration:
-    def test_unsharded_state_migrates_into_shards(self, root):
-        """A pre-r3 store keeps consumer state in the single 'locks'
-        table; the sharded ledger must pick it up on open (else delivery
-        for pre-upgrade views silently stops)."""
-        legacy = LocksLedger(ParquetStore(None, root))
-        with legacy.guard():
-            legacy.insert_missing(seed_rows("v", 10))
-            legacy.ack("v", [("p0003", 4)], now_utc())
-        sharded = ShardedLocksLedger(ParquetStore(None, root))
-        pdf = sharded.to_pandas().set_index("decider_id")
-        assert len(pdf) == 10
-        assert pdf.loc["p0003", "last_offset"] == 4
-        # second open: marker short-circuits, state intact
-        again = ShardedLocksLedger(ParquetStore(None, root))
-        assert len(again.to_pandas()) == 10
-
-
 class TestDurabilityAndStaleness:
     def test_snapshot_survives_restart(self, root):
         ledger = LocksLedger(ParquetStore(None, root))
@@ -281,7 +263,7 @@ class TestDurabilityAndStaleness:
 
 
 class TestDeltaFlush:
-    """The r3 flush-scaling design: claim/ack ticks write append-deltas
+    """The flush-scaling design: claim/ack ticks write append-deltas
     (O(#touched rows)), full snapshots only at the COMPACT_EVERY cadence
     or for bulk mutations — and every reader (incremental sibling,
     cold-open) reconstructs the identical state."""
@@ -353,7 +335,7 @@ class TestDeltaFlush:
         assert len(cold.to_pandas()) == 30
 
     def test_million_row_state_ack_flush_under_50ms(self, root):
-        """VERDICT r3 done-criterion: a 1M-row locks state must keep the
+        """The flush-scaling bound: a 1M-row locks state must keep the
         per-ack flush < 50 ms (the old full-snapshot rewrite paid
         O(#lock rows) here)."""
         import time as _t
@@ -425,7 +407,7 @@ class TestCrossProcess:
         outs = [os.path.join(root, f"claims_{i}.json") for i in range(2)]
         # rounds is a CAP; each worker drains until 3 consecutive empty
         # rounds (a round may return short while the sibling holds a
-        # shard lock — SKIP LOCKED — so a fixed count was load-flaky, r7)
+        # shard lock — SKIP LOCKED — so a fixed count was load-flaky)
         procs = [
             ctx.Process(target=claim_worker, args=(root, outs[i], 60, 10))
             for i in range(2)
@@ -449,8 +431,8 @@ class TestProcessLockCrashRecovery:
         """A crashed holder must never wedge the lock.  With flock the
         kernel releases on fd close (process death included), so a stale
         lock FILE left behind — even an aged one — is acquirable
-        immediately; no TTL-steal protocol (and none of its TOCTOU race,
-        ADVICE r2) is involved."""
+        immediately; no TTL-steal protocol (and none of its TOCTOU race)
+        is involved."""
         lock_path = os.path.join(root, "_PROCLOCK")
         with open(lock_path, "w", encoding="utf-8") as f:
             f.write(json.dumps({"pid": 999999, "ts": 0}))
@@ -474,7 +456,7 @@ class TestProcessLockCrashRecovery:
 class TestR4Hardening:
     def test_process_lock_nested_acquire_fails_fast(self, root):
         """ProcessLock is non-reentrant by design; a nested acquire on
-        the same thread must raise immediately (ADVICE r3) instead of
+        the same thread must raise immediately instead of
         leaking the held fd and deadlocking on the second flock."""
         from fstore_sql_spark.ledger import ProcessLock
 
@@ -491,7 +473,7 @@ class TestR4Hardening:
     def test_shard_count_pinned_in_layout(self, root):
         """crc32 % n_shards routing is part of the persistent layout: a
         marker pins the count at first creation; an explicit mismatching
-        n_shards on reopen fails loudly (ADVICE r3, medium) instead of
+        n_shards on reopen fails loudly instead of
         silently mis-routing acks into shards where the key doesn't
         exist (which drops them and redelivers forever)."""
         first = ShardedLocksLedger(ParquetStore(None, root), n_shards=4)
@@ -528,7 +510,7 @@ class TestR4Hardening:
 
 class TestFairness:
     def test_no_shard_starves_under_continuous_load(self, root):
-        """Starvation guard (review r4 finding #1): with limit=1 and a
+        """Starvation guard: with limit=1 and a
         sticky shard that ALWAYS has claimable work (hwm far ahead,
         instant acks), the fairness rotation must still deliver every
         partition on every shard within FAIRNESS_EVERY * n_shards *
@@ -554,7 +536,7 @@ class TestFairness:
 
 
     def test_no_starvation_under_producer_version_churn(self, root):
-        """Review r4 follow-up: a PRODUCER continuously birthing new
+        """Starvation guard under churn: a PRODUCER continuously birthing new
         partitions bumps every shard's state version, which the probe's
         live-sibling detector used to read as consumer activity — and
         skip the shard forever.  The consumer claim stamp separates the
@@ -643,7 +625,7 @@ class TestFairness:
 
 class TestUnpublishedOrphans:
     def test_orphan_full_snapshot_does_not_shadow_reallocated_delta(self, root):
-        """Review r4 (storage): a flush that crashed AFTER writing its
+        """Crash orphan: a flush that crashed AFTER writing its
         v{N} snapshot dir but BEFORE flipping _LATEST leaves an orphan
         that _state_entry would prefer over the delta a later flush
         publishes at the same version — readers would resolve version N
@@ -740,7 +722,7 @@ class TestCrashRecovery:
 # reconstructing the same state from disk after every operation
 # sequence.  Spark-free and fast, so it lives in the DEFAULT tier —
 # it pins exactly the code a positional-indexing regression would
-# break (review r4 finding #6).
+# break.
 # --------------------------------------------------------------------- #
 
 from hypothesis import HealthCheck, given, settings
@@ -849,14 +831,24 @@ def test_ledger_state_machine_matches_model_and_cold_reader(tmp_path_factory, op
         shutil.rmtree(root, ignore_errors=True)
 
 
-class TestShardPaging:
-    """LRU shard paging (VERDICT r4 #2): with ``max_resident`` set,
-    driver-resident ledger memory is O(active shards), evicted shards
-    reload on demand, and claim/ack semantics are unchanged."""
+def _page(monkeypatch, budget: int) -> None:
+    """Make ledgers opened from here on page their 8 default shards with
+    ``budget`` frames resident."""
+    monkeypatch.setattr(ShardedLocksLedger, "MAX_RESIDENT_SHARDS", budget)
 
-    def test_budget_enforced_and_claims_still_disjoint(self, root):
+
+class TestShardPaging:
+    """LRU shard paging: a layout of more shards than
+    ``MAX_RESIDENT_SHARDS`` keeps driver-resident ledger memory
+    O(active shards), evicted shards reload on demand, and claim/ack
+    semantics are unchanged.  The tests lower the budget below the
+    default 8 shards."""
+
+    def test_budget_enforced_and_claims_still_disjoint(self, root, monkeypatch):
         n = 1_000
-        ledger = ShardedLocksLedger(ParquetStore(None, root), max_resident=2)
+        _page(monkeypatch, 2)
+        ledger = ShardedLocksLedger(ParquetStore(None, root))
+        assert ledger.max_resident == 2
         ledger.insert_missing(seed_rows("v", n))
         assert ledger.resident_shards() <= 2
         hwm = hwm_frame(n, offset=1)  # one undelivered event per partition
@@ -879,17 +871,21 @@ class TestShardPaging:
         assert ledger.resident_shards() == ledger.n_shards
         assert ledger.max_resident is None
 
-    def test_to_pandas_sees_evicted_shards(self, root):
-        ledger = ShardedLocksLedger(ParquetStore(None, root), max_resident=1)
+    def test_to_pandas_sees_evicted_shards(self, root, monkeypatch):
+        _page(monkeypatch, 1)
+        ledger = ShardedLocksLedger(ParquetStore(None, root))
         ledger.insert_missing(seed_rows("v", 200))
         assert ledger.resident_shards() <= 1
         full = ledger.to_pandas()
         assert len(full) == 200  # evicted shards paged back in for the read
 
-    def test_evicted_shard_reload_preserves_sibling_progress(self, root):
+    def test_evicted_shard_reload_preserves_sibling_progress(self, root, monkeypatch):
         """A sibling's flushed acks must survive our eviction/reload."""
-        a = ShardedLocksLedger(ParquetStore(None, root), max_resident=1)
+        _page(monkeypatch, 1)
+        a = ShardedLocksLedger(ParquetStore(None, root))
+        monkeypatch.undo()  # the sibling keeps every shard resident
         b = ShardedLocksLedger(ParquetStore(None, root))
+        assert (a.max_resident, b.max_resident) == (1, None)
         a.insert_missing(seed_rows("v", 50))
         hwm = hwm_frame(50)
         now = now_utc()
@@ -910,13 +906,14 @@ class TestShardPaging:
                 assert lo >= 1, f"lost sibling ack for {d}"
 
     @pytest.mark.slow
-    def test_million_partition_ledger_under_memory_budget(self, root):
+    def test_million_partition_ledger_under_memory_budget(self, root, monkeypatch):
         """The quantified scale ceiling (BASELINE.md table): 1M partitions,
         residency budget of 2 shards, claims working against a mostly
         evicted ledger, resident bytes bounded and measured."""
         n = 1_000_000
         past = now_utc() - timedelta(hours=1)
-        ledger = ShardedLocksLedger(ParquetStore(None, root), max_resident=2)
+        _page(monkeypatch, 2)
+        ledger = ShardedLocksLedger(ParquetStore(None, root))
         step = 250_000
         for lo in range(0, n, step):
             ledger.insert_missing(
@@ -962,7 +959,7 @@ class TestShardPaging:
 
 
 class TestShardResize:
-    """Offline shard-count resize (r5): crc32 % N routing is pinned into
+    """Offline shard-count resize: crc32 % N routing is pinned into
     the layout, so growing the count is a re-shard — must preserve every
     row, re-route exactly, survive a crash at any point (staging file is
     the recovery authority), and leave a working claim path."""
@@ -1039,7 +1036,7 @@ class TestShardResize:
         pd.testing.assert_frame_equal(before, after)
 
     def test_live_ledger_racing_completed_resize_errors(self, root):
-        """r8 (VERDICT r7 missing #3): resize requires a QUIESCED store.
+        """Resize requires a QUIESCED store.
         A ledger still open across a completed resize routes by the old
         count — its next mutator tick and its next full read must raise
         a clean error naming the quiesce requirement, never write to
@@ -1057,7 +1054,7 @@ class TestShardResize:
         with pytest.raises(errors.ShardLayoutChangedError, match="resized to 16"):
             live.to_pandas()
         with pytest.raises(errors.ShardLayoutChangedError, match="resized to 16"):
-            live.shard_frame(0)  # ADVICE r8: guarded like every read surface
+            live.shard_frame(0)  # guarded like every read surface
         with pytest.raises(errors.ShardLayoutChangedError, match="resized to 16"):
             next(iter(live.shard_frames()))
         with pytest.raises(errors.ShardLayoutChangedError, match="quiesced"):
@@ -1094,7 +1091,7 @@ class TestShardResize:
 
 
 class TestShardSizing:
-    """Operational shard sizing (r6, VERDICT r5 #3): the count comes from
+    """Operational shard sizing: the count comes from
     a partition-count hint at creation, and a p95 tick-latency warning
     tells the operator when the store outgrew it."""
 
@@ -1108,7 +1105,7 @@ class TestShardSizing:
         assert f(10**12) == 4096  # clamped
 
     def test_shards_for_consumers_rule(self):
-        # the r11 knee rule (VERDICT r12 #3): shards >= next_pow2(workers),
+        # the scaling-knee rule: shards >= next_pow2(workers),
         # clamped to [DEFAULT_SHARDS, MAX_SHARDS]
         f = ShardedLocksLedger.shards_for_consumers
         assert f(1) == 8
@@ -1189,7 +1186,7 @@ class TestShardSizing:
         assert "rows/shard" in msg, "measured rows/shard missing from message"
 
     def test_small_but_slow_store_does_not_warn(self, root, caplog):
-        """The r6 false positive (VERDICT r6 wrong #1): a noisy box pushes
+        """A latency-only false positive: a noisy box pushes
         tick p95 over the latency threshold while shards sit far UNDER
         the sizing rule — a resize would do nothing, so the warning must
         stay silent.  Same loop as the positive test, default
@@ -1211,7 +1208,7 @@ class TestShardSizing:
         )
 
     def test_recommendation_clamped_to_max_shards(self, root, caplog):
-        """ADVICE r6: the recommended count must never exceed MAX_SHARDS,
+        """The recommended count must never exceed MAX_SHARDS,
         and at MAX_SHARDS the warning is suppressed (no resize exists)."""
         import logging
 
