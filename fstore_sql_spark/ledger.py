@@ -13,17 +13,13 @@ This module is the embedded-KV analogue of that central table:
   set.  Consumer state is tiny relative to the log (#views × #partitions
   rows; the reference holds the very same table on one Postgres box), so a
   driver-resident frame IS the 100 TB-scale design, not a shortcut.
-- **Durable snapshots in the ParquetStore state layout**
-  (``locks_s{k:02d}_state/v{N}`` full snapshots + ``v{N}.delta.arrow`` deltas +
-  ``_LATEST`` pointer): every mutating API call flushes before returning,
-  so at-least-once delivery survives a crash (an unflushed lease/ack
-  redelivers — permitted; a lost ack is the at-least-once contract, a
-  phantom ack would not be and cannot happen because the flush precedes
-  the API return).  Hot-path flushes are APPEND-DELTAS — only the rows
-  the call touched, O(#acks) not O(#lock rows) — with a full snapshot
-  every ``COMPACT_EVERY`` commits to bound the chain a cold reader
-  replays.  Writes go through pyarrow
-  (no Spark job on the hot path).
+- **Durable shard state**: each shard is a ``storage.ShardFrame``
+  (``locks_s{k:02d}_state``; its docstring holds the snapshot + delta +
+  evict-cache protocol).  Every mutating API call flushes before
+  returning, so at-least-once delivery survives a crash (an unflushed
+  lease/ack redelivers — permitted; a phantom ack cannot happen because
+  the flush precedes the API return).  A claim/ack tick flushes a delta
+  of the rows it touched, through pyarrow, with no Spark job.
 - **Cross-process claim safety** — the SKIP LOCKED analogue
   (/root/reference/schema.sql:411): an ``fcntl.flock`` mutex on a
   persistent lock file guards every read-modify-write, and a version
@@ -33,15 +29,14 @@ This module is the embedded-KV analogue of that central table:
   crashed holder's lock is released by the KERNEL when its fd closes —
   no TTL-steal protocol, hence no steal race.
 
-Scale ceiling, stated honestly: one frame on one driver, exactly like the
-reference's one table on one Postgres primary.  Per-tick flush cost no
-longer grows with the table (deltas); the remaining growth axes are the
-in-memory frame itself and the periodic full compaction — both
-O(#views × #partitions), the same central ceiling as the reference's
-``locks`` table.  (A Delta MERGE backend was considered as an escape
-hatch and struck — see SURVEY.md §7.1 step 2: the sharded append-delta
-layout already provides the MERGE-shaped semantics, and delta-spark is
-not a dependency.)
+Scale ceiling, stated honestly: one frame per shard on one driver, like
+the reference's one table on one Postgres primary.  Per-tick flush cost
+does not grow with the table (deltas); the remaining growth axes are the
+resident frames and the periodic full snapshot, both O(rows per shard).
+(A Delta MERGE backend was considered as an escape hatch and struck —
+see SURVEY.md §7.1 step 2: the sharded append-delta layout already
+provides the MERGE-shaped semantics, and delta-spark is not a
+dependency.)
 """
 
 from __future__ import annotations
@@ -56,6 +51,7 @@ import zlib
 from collections import deque
 
 from fstore_sql_spark import errors
+from fstore_sql_spark.storage import ShardFrame, ShardFrames
 from contextlib import contextmanager
 from datetime import datetime
 
@@ -191,18 +187,16 @@ class ProcessLock:
             self.release()
 
 
-class LocksLedger:
-    """The consumer-state authority for one store path (see module doc).
+class LocksLedger(ShardFrame):
+    """The consumer-state authority for one store path (see module doc):
+    a ``ShardFrame`` keyed by (view, decider_id), with the claim/ack
+    mutators, the cross-process guard and the consumer claim stamp.
 
     All mutators assume the caller holds BOTH the store's in-process
     commit lock and this ledger's :meth:`guard` (process lock), which also
     refreshes from disk if another process advanced the snapshot —
     together they are the ``FOR UPDATE SKIP LOCKED`` transaction."""
 
-    # Full-snapshot compaction cadence: a delta chain longer than this is
-    # folded into a full snapshot at the next flush, bounding the chain a
-    # cold reader must replay.
-    COMPACT_EVERY = 64
     # consumer flushes between _CLAIMSTAMP publishes (see flush)
     STAMP_EVERY = 16
     # publish at least this often while consumer mutations occur, so a
@@ -210,21 +204,10 @@ class LocksLedger:
     STAMP_MAX_AGE_S = 1.0
 
     def __init__(self, storage, table: str = "locks", lazy: bool = False):
-        self.storage = storage  # ParquetStore (state-snapshot layout owner)
-        self.table = table
         state_dir = os.path.join(storage.root, f"{table}_state")
         os.makedirs(state_dir, exist_ok=True)
+        super().__init__(storage, table, ["view", "decider_id"], _normalize, _empty_frame)
         self._plock = ProcessLock(os.path.join(state_dir, "_PROCLOCK"))
-        self._df = _empty_frame()
-        self._version = -2  # below the "no snapshot yet" sentinel (-1)
-        self._dirty = False
-        # keys touched since the last flush — what a delta flush writes
-        self._pending_upserts: set[tuple[str, str]] = set()
-        self._pending_deletes: set[tuple[str, str]] = set()
-        # cached delta-chain length: the directory walk behind
-        # storage.state_delta_chain grows with the chain and was ~1/3 of
-        # the per-flush cost when paid on every tick
-        self._chain_len = 0
         # CONSUMER-progress stamp (see ShardedLocksLedger._fairness_probe):
         # claim/ack/set_locked_until record their views here; flush then
         # publishes {"version", "views"} to _CLAIMSTAMP.  Producer writes
@@ -238,17 +221,11 @@ class LocksLedger:
         self._stamp_written_at = 0.0  # monotonic clock of last publish
         # (index object, materialized decider_id level) — see _view_slice
         self._ids_cache: tuple | None = None
-        # version of the last evict-cache spill (skip unchanged rewrites)
-        self._evict_cache_version: int | None = None
         # lazy=True (LRU shard paging): skip the eager load; the frame
-        # stays empty at version -2 until first guarded use or a
-        # negative-probe refresh in the claim walk loads it on demand.
+        # stays unloaded until first guarded use or a negative-probe
+        # refresh in the claim walk loads it on demand.
         if not lazy:
-            self._reload_if_stale()
-
-    # ------------------------------------------------------------------ #
-    # persistence
-    # ------------------------------------------------------------------ #
+            self.refresh()
 
     @contextmanager
     def guard(self):
@@ -262,15 +239,8 @@ class LocksLedger:
         The except arm therefore invalidates the cached
         frame; the next access reloads wholesale from disk, discarding
         the partial mutation (safe: the call never returned)."""
-        with self._plock.held():
-            self._reload_if_stale()
-            try:
-                yield
-            except BaseException:
-                self._invalidate()
-                raise
-            if self._dirty:
-                self.flush()
+        with self._plock.held(), self._mutation():
+            yield
 
     @contextmanager
     def try_guard(self):
@@ -282,83 +252,21 @@ class LocksLedger:
             yield False
             return
         try:
-            self._reload_if_stale()
-            try:
+            with self._mutation():
                 yield True
-            except BaseException:
-                self._invalidate()
-                raise
-            if self._dirty:
-                self.flush()
         finally:
             self._plock.release()
 
-    def _reload_if_stale(self) -> None:
-        disk = self.storage.state_version(self.table)
-        if disk == self._version:
-            return
-        # Incremental catch-up: if every version a sibling added since ours
-        # is a delta, replay just those onto the in-memory frame (K tiny
-        # file reads) instead of reconstructing the whole state.  Valid
-        # because outside a mutation the frame exactly equals our version
-        # (mutators flush before releasing the guard).
-        deltas = None
-        if 0 <= self._version < disk:
-            deltas = self.storage.read_state_deltas(self.table, self._version, disk)
-        if deltas is not None:
-            for dpdf in deltas:
-                self._apply_delta(dpdf)
-            self._chain_len += len(deltas)  # siblings appended deltas
-        elif disk < 0:  # no snapshot on disk yet (Spark-free bootstrap)
-            self._df = _empty_frame()
-            self._chain_len = 0
-        else:
-            self._full_reload(disk)
-        self._version = disk
-        self._dirty = False
-        self._pending_upserts.clear()
-        self._pending_deletes.clear()
-
-    def _full_reload(self, disk: int) -> None:
-        """Reconstruct the frame at version ``disk``: latest full snapshot
-        + INDEXED replay of the tail deltas (the positional
-        :meth:`_apply_delta`, ~50x the unindexed ``apply_state_delta``
-        the generic ``read_state_pandas`` path pays per delta — this is
-        the first-visit-to-a-busy-shard cost for concurrent consumers).
-        An evict-cache spill (see :meth:`evict`) short-circuits all of it
-        when this process recently held the frame."""
-        if self._try_evict_cache(disk):
-            return
+    @contextmanager
+    def _mutation(self):
+        self.refresh()
         try:
-            base_v = self.storage.latest_full_state_version(self.table)
-            if base_v < 0:
-                raise FileNotFoundError(self.table)
-            import pyarrow.parquet as pq
-
-            entry = self.storage._state_entry(self.table, base_v)
-            if entry is None:
-                # a sibling's GC unlinked the snapshot between the
-                # version scan and this read — take the retrying fallback
-                raise FileNotFoundError(self.table)
-            pdf = pq.read_table(entry[1]).to_pandas()
-            frame = _normalize(pdf) if len(pdf) else _empty_frame()
-            tail = []
-            if base_v < disk:
-                tail = self.storage.read_state_deltas(self.table, base_v, disk)
-                if tail is None:
-                    raise FileNotFoundError(self.table)
-            self._df = frame
-            for dpdf in tail:
-                self._apply_delta(dpdf)
-            self._chain_len = len(tail)
-        except FileNotFoundError:
-            # sibling GC raced the reads — the generic path retries and
-            # re-resolves _LATEST until it converges
-            pdf = self.storage.read_state_pandas(
-                self.table, key_cols=["view", "decider_id"]
-            )
-            self._df = _normalize(pdf) if len(pdf) else _empty_frame()
-            self._chain_len = self.storage.state_delta_chain(self.table)
+            yield
+        except BaseException:
+            self.invalidate()
+            raise
+        if self.dirty:
+            self.flush()
 
     def _eligible_scan(self, view: str, hwm: pd.DataFrame, now):
         """Positional eligibility scan shared by :meth:`claim` and
@@ -370,15 +278,15 @@ class LocksLedger:
         the view has no rows."""
         import numpy as np
 
-        if self._df.empty or hwm.empty:
+        if self.df.empty or hwm.empty:
             return None
         sl = self._view_slice(view)
         if sl is None:
             return None
         start, ids = sl
         stop = start + len(ids)
-        lo_vals = self._df["last_offset"].to_numpy()[start:stop]
-        lu_vals = self._df["locked_until"].to_numpy()[start:stop]
+        lo_vals = self.df["last_offset"].to_numpy()[start:stop]
+        lu_vals = self.df["locked_until"].to_numpy()[start:stop]
         hpos = hwm.index.get_indexer(ids)
         hoff = hwm["offset"].to_numpy()
         now64 = np.datetime64(pd.Timestamp(now), "us")
@@ -416,82 +324,10 @@ class LocksLedger:
         start, ids, lo_vals, hoff_at, cand = scan
         return start, ids, lo_vals, cand[np.lexsort((lo_vals[cand], hoff_at[cand]))]
 
-    def _apply_delta(self, dpdf: pd.DataFrame) -> None:
-        # Indexed-frame twin of storage.apply_state_delta (which serves
-        # the cold-reader reconstruction on unindexed frames) — the two
-        # MUST stay semantically identical: drop every key named by the
-        # delta, re-insert its non-tombstoned rows.
-        #
-        # Hot fast path (the sibling-replay cost a concurrent consumer
-        # pays per round): a claim/ack delta only UPDATES
-        # keys that already exist — write the value columns in place by
-        # POSITION instead of drop+concat+sort (which re-factorizes the
-        # whole MultiIndex per delta, ~10ms against ~0.1ms here).
-        import numpy as np
-
-        keys = pd.MultiIndex.from_arrays(
-            [dpdf["view"], dpdf["decider_id"]], names=["view", "decider_id"]
-        )
-        deleted = dpdf["_deleted"].to_numpy()
-        if not self._df.empty and not deleted.any():
-            pos = self._df.index.get_indexer(keys)
-            if (pos >= 0).all():
-                for c in ("last_offset", "locked_until", "created_at", "updated_at"):
-                    self._df.iloc[pos, self._df.columns.get_loc(c)] = (
-                        dpdf[c].to_numpy()
-                    )
-                return
-        self._df = self._df.drop(index=keys, errors="ignore")
-        up = dpdf[~dpdf["_deleted"]]
-        if len(up):
-            self._df = pd.concat([self._df, _normalize(up)]).sort_index()
-
     def flush(self) -> None:
-        """Persist the pending mutation.  Hot path (claim/ack ticks): an
-        APPEND-DELTA snapshot containing only the touched rows — O(#acks)
-        per tick, not O(#lock rows).  A
-        full snapshot is written instead when the delta chain reaches
-        ``COMPACT_EVERY`` (bounds cold-reader replay), when the pending
-        set rivals the frame itself (bulk backfills), or when nothing
-        finer is known."""
-        n_pend = len(self._pending_upserts) + len(self._pending_deletes)
-        use_delta = (
-            0 < n_pend < max(1024, len(self._df) // 2)
-            and self._chain_len + 1 < self.COMPACT_EVERY
-            and self._version >= 0
-        )
-        if use_delta:
-            parts = []
-            if self._pending_upserts:
-                pos = self._positions_of(sorted(self._pending_upserts))
-                if pos:
-                    up = self._df.take(pos).reset_index()[_COLS]
-                    up["_deleted"] = False
-                    parts.append(up)
-            if self._pending_deletes:
-                dels = sorted(self._pending_deletes)
-                dd = pd.DataFrame(
-                    {
-                        "view": [k[0] for k in dels],
-                        "decider_id": [k[1] for k in dels],
-                        "last_offset": 0,
-                        "locked_until": pd.Timestamp(0),
-                        "created_at": pd.Timestamp(0),
-                        "updated_at": pd.Timestamp(0),
-                        "_deleted": True,
-                    }
-                )
-                parts.append(dd)
-            delta = pd.concat(parts, ignore_index=True)
-            self._version = self.storage.write_state_delta(self.table, delta)
-            self._chain_len += 1
-        else:
-            out = self._df.reset_index()[_COLS]
-            self._version = self.storage.write_state_pandas(self.table, out)
-            self._chain_len = 0
-        self._dirty = False
-        self._pending_upserts.clear()
-        self._pending_deletes.clear()
+        """Persist the pending mutation (``ShardFrame.flush``), then
+        publish the consumer claim stamp when due."""
+        super().flush()
         if self._consumer_views:
             # Throttled publish: probes sample the stamp only every
             # FAIRNESS_EVERY x n_shards ticks, so per-flush freshness
@@ -504,16 +340,16 @@ class LocksLedger:
             # are cleared only when a publish lands.
             views = sorted(self._consumer_views)
             due = (
-                self._version - self._stamp_written_version >= self.STAMP_EVERY
+                self.version - self._stamp_written_version >= self.STAMP_EVERY
                 or views != self._stamp_written_views
                 or time.monotonic() - self._stamp_written_at >= self.STAMP_MAX_AGE_S
             )
             if due:
                 tmp = f"{self._claim_stamp_path}.tmp.{os.getpid()}"
                 with open(tmp, "w", encoding="utf-8") as f:
-                    json.dump({"version": self._version, "views": views}, f)
+                    json.dump({"version": self.version, "views": views}, f)
                 os.replace(tmp, self._claim_stamp_path)
-                self._stamp_written_version = self._version
+                self._stamp_written_version = self.version
                 self._stamp_written_views = views
                 self._stamp_written_at = time.monotonic()
                 self._consumer_views.clear()
@@ -532,100 +368,17 @@ class LocksLedger:
     # reads
     # ------------------------------------------------------------------ #
 
-    def _invalidate(self) -> None:
-        """Discard the cached frame and all pending bookkeeping; the next
-        access reloads from the (untouched) disk state."""
-        self._df = _empty_frame()
-        self._version = -2
-        self._dirty = False
-        self._pending_upserts.clear()
-        self._pending_deletes.clear()
+    def invalidate(self) -> None:
+        super().invalidate()
         self._consumer_views.clear()
-        self._chain_len = 0
         self._ids_cache = None
-
-    @property
-    def resident(self) -> bool:
-        """True when the shard's frame is loaded (version sentinel -2 =
-        never loaded / evicted)."""
-        return self._version > -2
-
-    def frame_bytes(self) -> int:
-        """Resident bytes of the shard frame, index included (deep scan —
-        strings counted; call on demand, not per tick)."""
-        if not self.resident or self._df.empty:
-            return 0
-        return int(self._df.memory_usage(deep=True).sum())
-
-    def evict(self) -> None:
-        """LRU shard paging: release the resident frame;
-        the next use reloads from the (flushed) disk snapshot.  Callable
-        only OUTSIDE the guard — mutators flush before releasing, so a
-        dirty frame here means a caller bug and the evict is refused
-        rather than dropping unflushed consumer progress.
-
-        Before dropping, the PARSED frame is spilled to a version-tagged
-        Arrow IPC evict-cache: a re-visit then pays
-        one mmap read + the delta tail SINCE the tag, instead of the full
-        parquet snapshot + up-to-COMPACT_EVERY delta replay — the cost
-        that made a paged drain 0.59x of unpaged (BASELINE.md).  Best
-        effort: any failure just falls back to the snapshot path."""
-        if self._dirty:
-            return
-        if self.resident and self._version >= 0 and len(self._df):
-            try:
-                self._write_evict_cache()
-            except Exception:  # noqa: BLE001 — cache only, never blocks evict
-                pass
-        self._invalidate()
-
-    def _write_evict_cache(self) -> None:
-        if getattr(self, "_evict_cache_version", None) == self._version:
-            return  # frame unchanged since the last spill
-        self.storage.write_evict_cache(
-            self.table, self._df.reset_index(), self._version,
-            tag=b"ledger_version",
-        )
-        self._evict_cache_version = self._version
-
-    def _try_evict_cache(self, disk: int) -> bool:
-        """Reload from the evict-cache if its tag is close enough to the
-        disk version for a delta-tail replay; False → caller takes the
-        full snapshot path."""
-        hit = self.storage.read_evict_cache(self.table, tag=b"ledger_version")
-        if hit is None:
-            return False
-        pdf, v = hit
-        if v > disk or disk - v > self.COMPACT_EVERY:
-            return False
-        tail = []
-        if v < disk:
-            tail = self.storage.read_state_deltas(self.table, v, disk)
-            if tail is None:
-                return False
-        self._df = _normalize(pdf) if len(pdf) else _empty_frame()
-        for dpdf in tail:
-            self._apply_delta(dpdf)
-        self._chain_len = self.storage.state_delta_chain(self.table)
-        return True
-
-    def refresh(self) -> None:
-        """Lock-free read freshness: reload the frame if a sibling process
-        advanced the snapshot (version-pointer check, one tiny file read).
-        Safe without the process lock — snapshots are immutable and the
-        ``_LATEST`` flip is atomic, so a racing writer can never expose a
-        torn state; callers outside :meth:`guard` have no unflushed
-        mutations (mutators flush before returning).  Read-only callers
-        (``locks()`` views) use this so they never serve arbitrarily stale
-        consumer state."""
-        self._reload_if_stale()
 
     def to_pandas(self) -> pd.DataFrame:
         """Reference-shaped state columns (no hwm join), index reset."""
-        return self._df.reset_index()[_COLS].copy()
+        return self.df.reset_index()[_COLS].copy()
 
     def count(self) -> int:
-        return len(self._df)
+        return len(self.df)
 
     # ------------------------------------------------------------------ #
     # mutators (call under guard())
@@ -637,14 +390,14 @@ class LocksLedger:
         by every mutator, so a partial-key get_loc is a slice; if an
         unexpected code path left it unsorted, re-sort once (self-heal)
         rather than silently taking a slow path forever."""
-        idx = self._df.index
+        idx = self.df.index
         try:
             loc = idx.get_loc(view)
         except KeyError:
             return None
         if not isinstance(loc, slice):
-            self._df = self._df.sort_index()
-            idx = self._df.index
+            self.df = self.df.sort_index()
+            idx = self.df.index
             loc = idx.get_loc(view)
         # get_level_values materializes the full decider_id level (a
         # take over every row — ~13ms at 1M rows) on EVERY call; cache it
@@ -656,14 +409,15 @@ class LocksLedger:
             self._ids_cache = cache = (idx, idx.get_level_values(1)._values)
         return loc.start, cache[1][loc]
 
-    def _positions_of(self, keys) -> "list[int]":
+    def _positions(self, keys) -> "list[int]":
         """Sorted-index positions of the EXISTING keys among ``keys``
-        ((view, decider_id) tuples) — binary search per view against the
-        lexsorted index, avoiding MultiIndex factorization (the pandas
-        ``.loc``/``isin`` alignment cost that dominated the claim tick)."""
+        ((view, decider_id) tuples) — ``ShardFrame._positions`` by binary
+        search per view against the lexsorted index, avoiding MultiIndex
+        factorization (the pandas ``.loc``/``isin`` alignment cost that
+        dominated the claim tick)."""
         import numpy as np
 
-        if self._df.empty:
+        if self.df.empty:
             return []
         by_view: dict[str, list[str]] = {}
         for v, d in keys:
@@ -679,17 +433,6 @@ class LocksLedger:
             ok = (p < len(ids)) & (ids[np.minimum(p, len(ids) - 1)] == t)
             out.extend((start + p[ok]).tolist())
         return out
-
-    def _touch(self, keys) -> None:
-        """Record upserted keys for the next delta flush."""
-        keys = list(keys)
-        self._pending_upserts.update(keys)
-        self._pending_deletes.difference_update(keys)
-
-    def _touch_del(self, keys) -> None:
-        keys = list(keys)
-        self._pending_deletes.update(keys)
-        self._pending_upserts.difference_update(keys)
 
     def claim(
         self,
@@ -721,12 +464,11 @@ class LocksLedger:
             return []
         gpos = start + take
         now64 = np.datetime64(pd.Timestamp(now), "us")
-        self._df.iloc[gpos, self._df.columns.get_loc("locked_until")] = (
+        self.df.iloc[gpos, self.df.columns.get_loc("locked_until")] = (
             np.datetime64(pd.Timestamp(lease_until), "us")
         )
-        self._df.iloc[gpos, self._df.columns.get_loc("updated_at")] = now64
-        self._dirty = True
-        self._touch((view, d) for d in ids[take])
+        self.df.iloc[gpos, self.df.columns.get_loc("updated_at")] = now64
+        self.touch((view, d) for d in ids[take])
         self._consumer_views.add(view)
         return [(str(d), int(o)) for d, o in zip(ids[take], lo_vals[take])]
 
@@ -737,7 +479,7 @@ class LocksLedger:
         UPDATE matches zero rows in the reference too."""
         import numpy as np
 
-        if not acks or self._df.empty:
+        if not acks or self.df.empty:
             return
         # Positional batch update (binary search on the lexsorted index,
         # no MultiIndex factorization).  Duplicate keys keep the LAST
@@ -759,8 +501,8 @@ class LocksLedger:
         gpos = start + p[ok]
         vals = np.fromiter(dedup.values(), dtype="int64", count=len(dedup))[ok]
         now64 = np.datetime64(pd.Timestamp(now), "us")
-        cols = self._df.columns
-        self._df.iloc[gpos, cols.get_loc("last_offset")] = vals
+        cols = self.df.columns
+        self.df.iloc[gpos, cols.get_loc("last_offset")] = vals
         # Release to now - 1us, not now: eligibility is STRICTLY
         # locked_until < now, so an exact-now release would exclude a
         # just-acked hot partition from a claim evaluated at the same
@@ -768,10 +510,9 @@ class LocksLedger:
         # <= limit.
         # The reference relies on NOW() advancing between
         # statements for the same effect (schema.sql:436-446).
-        self._df.iloc[gpos, cols.get_loc("locked_until")] = now64 - np.timedelta64(1, "us")
-        self._df.iloc[gpos, cols.get_loc("updated_at")] = now64
-        self._dirty = True
-        self._touch((view, d) for d in t[ok])
+        self.df.iloc[gpos, cols.get_loc("locked_until")] = now64 - np.timedelta64(1, "us")
+        self.df.iloc[gpos, cols.get_loc("updated_at")] = now64
+        self.touch((view, d) for d in t[ok])
         self._consumer_views.add(view)
 
     def set_locked_until(
@@ -779,11 +520,10 @@ class LocksLedger:
     ) -> None:
         """A8/A9 nack / schedule_nack (/root/reference/schema.sql:449-468)."""
         key = (view, decider_id)
-        if key in self._df.index:
-            self._df.at[key, "locked_until"] = pd.Timestamp(until)
-            self._df.at[key, "updated_at"] = pd.Timestamp(now)
-            self._dirty = True
-            self._touch([key])
+        if key in self.df.index:
+            self.df.at[key, "locked_until"] = pd.Timestamp(until)
+            self.df.at[key, "updated_at"] = pd.Timestamp(now)
+            self.touch([key])
             self._consumer_views.add(view)
 
     def insert_missing(self, rows: pd.DataFrame) -> None:
@@ -793,12 +533,11 @@ class LocksLedger:
         if rows.empty:
             return
         add = _normalize(rows)
-        fresh = add.loc[~add.index.isin(self._df.index)]
+        fresh = add.loc[~add.index.isin(self.df.index)]
         if fresh.empty:
             return
-        self._df = pd.concat([self._df, fresh]).sort_index()
-        self._dirty = True
-        self._touch(fresh.index)
+        self.df = pd.concat([self.df, fresh]).sort_index()
+        self.touch(fresh.index)
 
     def upsert(self, rows: pd.DataFrame) -> None:
         """T7 backfill merge: overwrite last_offset/locked_until/updated_at
@@ -807,26 +546,24 @@ class LocksLedger:
         if rows.empty:
             return
         up = _normalize(rows)
-        existing = up.index.intersection(self._df.index)
+        existing = up.index.intersection(self.df.index)
         if len(existing):
             for c in ("last_offset", "locked_until", "updated_at"):
-                self._df.loc[existing, c] = up.loc[existing, c]
-        fresh = up.loc[~up.index.isin(self._df.index)]
+                self.df.loc[existing, c] = up.loc[existing, c]
+        fresh = up.loc[~up.index.isin(self.df.index)]
         if len(fresh):
-            self._df = pd.concat([self._df, fresh]).sort_index()
-        self._dirty = True
-        self._touch(up.index)
+            self.df = pd.concat([self.df, fresh]).sort_index()
+        self.touch(up.index)
 
     def delete_view(self, view: str) -> None:
         """FK ON DELETE CASCADE analogue (/root/reference/schema.sql:199)."""
-        if view in self._df.index.get_level_values(0):
+        if view in self.df.index.get_level_values(0):
             gone = [
                 (view, d)
-                for d in self._df.xs(view, level=0, drop_level=True).index
+                for d in self.df.xs(view, level=0, drop_level=True).index
             ]
-            self._df = self._df.drop(view, level=0)
-            self._dirty = True
-            self._touch_del(gone)
+            self.df = self.df.drop(view, level=0)
+            self.touch_deleted(gone)
 
 
 def shard_of(decider_id: str, n_shards: int) -> int:
@@ -848,16 +585,16 @@ def _shard_hwm(hwm, k: int) -> pd.DataFrame:
     return fs(k) if fs is not None else hwm
 
 
-class ShardedLocksLedger:
+class ShardedLocksLedger(ShardFrames):
     """N independently-locked :class:`LocksLedger` shards, routed by
     ``crc32(decider_id) % N`` — the row-lock-granularity analogue of the
     reference's ``FOR UPDATE SKIP LOCKED`` (/root/reference/schema.sql:411).
 
     A single store-wide mutex serializes EVERY claim/ack across consumer
-    processes; measured on the b3c bench that collapses 4 workers to ~0.4×
-    one worker's throughput.  Postgres doesn't have that problem because
-    claims take row locks: consumers touching different partitions never
-    contend.  Sharding restores exactly that property — two consumers
+    processes: with 4 consumer processes draining one store, that cut
+    aggregate claim/ack throughput to ~0.4× of one worker's (measured).
+    Postgres doesn't have that problem because claims take row locks:
+    consumers touching different partitions never contend.  Sharding restores exactly that property — two consumers
     contend only when their claimed partitions hash to the same shard
     (probability 1/N per pair), and every shard keeps the single-shard
     ledger's crash/durability story unchanged.
@@ -1002,13 +739,6 @@ class ShardedLocksLedger:
                 else self.DEFAULT_SHARDS,
             )
         self.n_shards = self._pin_shard_count(storage, table, n_shards, hint)
-        # LRU shard paging follows the pinned layout (see class doc):
-        # None keeps every shard resident
-        self.max_resident = (
-            self.MAX_RESIDENT_SHARDS
-            if self.n_shards > self.MAX_RESIDENT_SHARDS
-            else None
-        )
         # Layout pins for the live-resize guard: _verify_layout re-reads these on every read surface and
         # after every shard-lock acquisition.
         self._marker_path = os.path.join(storage.root, f"{table}_SHARDS")
@@ -1016,12 +746,16 @@ class ShardedLocksLedger:
         # A resize that crashed mid-rewrite left its staging export behind;
         # finish it BEFORE any shard frame is loaded (see resize_shards).
         _recover_resize(storage, table, self.n_shards)
-        self.shards = [
-            LocksLedger(storage, f"{table}_s{i:02d}", lazy=self.max_resident is not None)
-            for i in range(self.n_shards)
-        ]
-        self._use_clock = 0
-        self._last_use: dict[int, int] = {}
+        # LRU shard paging follows the pinned layout (see class doc):
+        # None keeps every shard resident
+        paged = self.n_shards > self.MAX_RESIDENT_SHARDS
+        super().__init__(
+            [
+                LocksLedger(storage, f"{table}_s{i:02d}", lazy=paged)
+                for i in range(self.n_shards)
+            ],
+            self.MAX_RESIDENT_SHARDS if paged else None,
+        )
         # sticky claim shard; pid-seeded start so concurrent consumers
         # begin their first walk on different shards
         self._sticky = os.getpid() % self.n_shards
@@ -1086,30 +820,6 @@ class ShardedLocksLedger:
             )
         return pinned
 
-    # ---- LRU shard paging -------------------------------------------- #
-
-    def _note_use(self, k: int) -> None:
-        self._use_clock += 1
-        self._last_use[k] = self._use_clock
-
-    def _evict_over_budget(self) -> None:
-        """Drop least-recently-used shard frames beyond ``max_resident``.
-        Called at the end of each self-guarding mutator (never inside a
-        shard guard); the sticky shard is by construction the most
-        recently used, so steady-state consumers never thrash."""
-        if self.max_resident is None:
-            return
-        resident = [k for k, s in enumerate(self.shards) if s.resident]
-        over = len(resident) - self.max_resident
-        if over <= 0:
-            return
-        resident.sort(key=lambda k: self._last_use.get(k, -1))
-        for k in resident[:over]:
-            self.shards[k].evict()
-
-    def resident_shards(self) -> int:
-        return sum(1 for s in self.shards if s.resident)
-
     def _verify_layout(self) -> None:
         """The live-resize guard: cheap
         re-read of the on-disk layout pins, called at the top of every
@@ -1138,12 +848,6 @@ class ShardedLocksLedger:
                 self.table, self.n_shards, f"was resized to {cur} shards"
             )
 
-    def resident_bytes(self) -> int:
-        """Driver-resident ledger bytes across all loaded shard frames
-        (deep measurement — the number BASELINE.md's scale-ceiling table
-        pins)."""
-        return sum(s.frame_bytes() for s in self.shards)
-
     # ---- reads ------------------------------------------------------- #
 
     def refresh(self) -> None:
@@ -1154,33 +858,31 @@ class ShardedLocksLedger:
         so without the trailing evict its full-table reads would keep
         the entire ledger resident indefinitely on a paged store."""
         self._verify_layout()
-        for k, s in enumerate(self.shards):
-            s.refresh()
-            self._note_use(k)
-        self._evict_over_budget()
+        for k in range(self.n_shards):
+            self.use(k).refresh()
+        self.evict_over_budget()
 
     def _ensure_resident(self, k: int) -> "LocksLedger":
         """Load (evicted/lazy) or freshen (resident-but-stale) one shard.
         Always a version-pointer check — one tiny file read — so
         ``to_pandas``/``count`` serve sibling-flushed state without the
         caller issuing a separate full refresh first."""
-        s = self.shards[k]
+        s = self.use(k)
         s.refresh()
-        self._note_use(k)
         return s
 
     def shard_frame(self, k: int) -> pd.DataFrame:
         """One shard's state rows (freshened), with the paging budget
         re-enforced before returning — the public unit of shard-at-a-time
         operational scans (callers previously
-        reached into ``_ensure_resident``/``_evict_over_budget``,
+        reached into ``_ensure_resident``/``evict_over_budget``,
         scattering the eviction invariant outside the ledger).  Guarded
         like every other read surface: a racing resize must
         raise ``ShardLayoutChangedError``, not serve a half-staged or
         stale-count layout."""
         self._verify_layout()
         df = self._ensure_resident(k).to_pandas()
-        self._evict_over_budget()
+        self.evict_over_budget()
         return df
 
     def shard_frames(self):
@@ -1199,7 +901,7 @@ class ShardedLocksLedger:
         frames = []
         for k in range(self.n_shards):
             frames.append(self._ensure_resident(k).to_pandas())
-            self._evict_over_budget()
+            self.evict_over_budget()
         return pd.concat(frames, ignore_index=True)
 
     def count(self) -> int:
@@ -1207,7 +909,7 @@ class ShardedLocksLedger:
         n = 0
         for k in range(self.n_shards):
             n += self._ensure_resident(k).count()
-            self._evict_over_budget()
+            self.evict_over_budget()
         return n
 
     def rows_for(self, view: str, decider_ids: "list[str]") -> pd.DataFrame:
@@ -1222,10 +924,10 @@ class ShardedLocksLedger:
         parts = []
         for k, ids in by_shard.items():
             s = self._ensure_resident(k)
-            pos = s._positions_of([(view, d) for d in ids])
+            pos = s._positions([(view, d) for d in ids])
             if pos:
-                parts.append(s._df.take(sorted(pos)).reset_index()[_COLS])
-        self._evict_over_budget()
+                parts.append(s.df.take(sorted(pos)).reset_index()[_COLS])
+        self.evict_over_budget()
         if not parts:
             return _empty_frame().reset_index()[_COLS]
         return pd.concat(parts, ignore_index=True)
@@ -1287,8 +989,9 @@ class ShardedLocksLedger:
 
         - a shard a LIVE consumer works cannot starve, and stealing
           from it forces both sides to replay each other's deltas
-          (measured on b3c: full-walk fairness cost 2.8x -> 1.5-1.8x
-          scaling; this probe form restores ~2.7x);
+          (measured with 4 consumer processes: fairness by a full
+          walk cut their scaling from 2.8x to 1.5-1.8x of one worker;
+          this probe form restores ~2.7x);
         - liveness only needs SOMETHING delivered from every shard
           periodically — one partition per FAIRNESS_EVERY x n_shards
           claims bounds every partition's delivery delay without
@@ -1312,19 +1015,18 @@ class ShardedLocksLedger:
           claim.  This is what keeps continuous producer churn — new
           partitions every tick — from deferring the probe forever,
           without ever paying a foreign-shard delta replay while a
-          sibling is genuinely consuming our view there (measured on
-          b3c: a blind every-Nth forced claim cost ~20% aggregate
-          throughput in the all-shards-live drain regime; the stamp
-          makes that regime zero-cost again)."""
+          sibling is genuinely consuming our view there (measured with
+          concurrent consumer processes on every shard: a blind
+          every-Nth forced claim cost ~20% aggregate drain throughput;
+          the stamp makes that regime zero-cost again)."""
         n = self.n_shards
         k = self._rotor
         self._rotor = (self._rotor + 1) % n
         if k == self._sticky:
             return []
-        s = self.shards[k]
-        self._note_use(k)
+        s = self.use(k)
         v = s.storage.state_version(s.table)
-        if v != s._version:
+        if v != s.version:
             stamp = s.read_claim_stamp()
             key = (stamp["version"], tuple(stamp.get("views", []))) if stamp else None
             prev = self._fairness_stamp.get(k)
@@ -1343,7 +1045,7 @@ class ShardedLocksLedger:
             # our own claim just bumped the stamp (flush on guard exit);
             # record the post-flush value so the next probe of this shard
             # doesn't mistake our own write for a live sibling
-            self._fairness_stamp[k] = (s._version, (view,))
+            self._fairness_stamp[k] = (s.version, (view,))
         return got
 
     def claim(
@@ -1360,7 +1062,7 @@ class ShardedLocksLedger:
         skipped a busy candidate shard."""
         self._verify_layout()
         tick_t0 = time.perf_counter()
-        use_clock0 = self._use_clock  # shards touched this tick advance it
+        use_clock0 = self.clock  # shards touched this tick advance it
         limit = int(limit)
         got: list[tuple[str, int]] = []
         # Fairness probe (starvation guard): the walk always starts at
@@ -1390,7 +1092,7 @@ class ShardedLocksLedger:
             hwm_k = _shard_hwm(hwm, k)
             if not s.has_eligible(view, hwm_k, now):
                 s.refresh()
-                self._note_use(k)
+                self.use(k)
                 if not s.has_eligible(view, hwm_k, now):
                     continue
             with s.try_guard() as held:
@@ -1398,7 +1100,7 @@ class ShardedLocksLedger:
                     busy_claimable.append(k)
                     continue
                 self._verify_layout()
-                self._note_use(k)
+                self.use(k)
                 res = s.claim(view, hwm_k, want, now, lease_until)
                 if res and not got:
                     self._sticky = k  # first yielding shard = next tick's start
@@ -1408,8 +1110,7 @@ class ShardedLocksLedger:
             # elsewhere — wait once rather than report a falsely empty
             # store to the consumer loop
             for k in busy_claimable:
-                s = self.shards[k]
-                self._note_use(k)
+                s = self.use(k)
                 with s.guard():
                     self._verify_layout()
                     res = s.claim(
@@ -1420,15 +1121,15 @@ class ShardedLocksLedger:
                     got.extend(res)
                 if len(got) >= limit:
                     break
-        self._evict_over_budget()
+        self.evict_over_budget()
         # rows of the largest shard this tick scanned (touched = advanced
         # the LRU use clock; only still-resident frames are sampled —
         # zero IO either way)
         touched_rows = max(
             (
                 self.shards[k].count()
-                for k, u in self._last_use.items()
-                if u > use_clock0 and self.shards[k].resident
+                for k in self.used_since(use_clock0)
+                if self.shards[k].resident
             ),
             default=0,
         )
@@ -1500,21 +1201,19 @@ class ShardedLocksLedger:
         for d, o in acks:
             by_shard.setdefault(shard_of(d, self.n_shards), []).append((d, o))
         for i, shard_acks in by_shard.items():
-            s = self.shards[i]
-            self._note_use(i)
+            s = self.use(i)
             with s.guard():
                 self._verify_layout()
                 s.ack(view, shard_acks, now)
-        self._evict_over_budget()
+        self.evict_over_budget()
 
     def set_locked_until(self, view: str, decider_id: str, until, now) -> None:
         k = shard_of(decider_id, self.n_shards)
-        s = self.shards[k]
-        self._note_use(k)
+        s = self.use(k)
         with s.guard():
             self._verify_layout()
             s.set_locked_until(view, decider_id, until, now)
-        self._evict_over_budget()
+        self.evict_over_budget()
 
     def _split(self, rows: pd.DataFrame) -> list[tuple[int, pd.DataFrame]]:
         shard = rows["decider_id"].map(lambda d: shard_of(d, self.n_shards))
@@ -1525,31 +1224,29 @@ class ShardedLocksLedger:
         if rows.empty:
             return
         for i, part in self._split(rows):
-            s = self.shards[i]
-            self._note_use(i)
+            s = self.use(i)
             with s.guard():
                 self._verify_layout()
                 s.insert_missing(part)
-        self._evict_over_budget()
+        self.evict_over_budget()
 
     def upsert(self, rows: pd.DataFrame) -> None:
         if rows.empty:
             return
         for i, part in self._split(rows):
-            s = self.shards[i]
-            self._note_use(i)
+            s = self.use(i)
             with s.guard():
                 self._verify_layout()
                 s.upsert(part)
-        self._evict_over_budget()
+        self.evict_over_budget()
 
     def delete_view(self, view: str) -> None:
-        for k, s in enumerate(self.shards):
-            self._note_use(k)
+        for k in range(self.n_shards):
+            s = self.use(k)
             with s.guard():
                 self._verify_layout()
                 s.delete_view(view)
-        self._evict_over_budget()
+        self.evict_over_budget()
 
 
 # --------------------------------------------------------------------- #

@@ -18,12 +18,15 @@ files per committed batch), mirroring the reference's append-only ``events``
 heap table with UPDATE/DELETE-ignoring rules (/root/reference/schema.sql:66-72)
 — the engine simply exposes no mutating verbs on it (SURVEY.md §2.3 R3/R4).
 
-Scale notes (100 TB): append batches are repartitioned by ``decider_id``
-before write so row groups are clustered by the partition key; parquet
-min/max stats then prune ``get_events``-style point lookups the way the
-reference's ``decider_index`` B-tree does (/root/reference/schema.sql:56).
-State tables (views, consumer locks) are orders of magnitude smaller than
-the log and always broadcastable.
+Scale notes (100 TB): point reads of the log prune files by their
+footer ranges (``LogFile``).  That prunes the index path's files, which
+each hold one small commit.  The set path's bulk files do not prune:
+``append_log`` hash-partitions them by ``decider_id`` without sorting, so
+each file's ``decider_id`` range spans nearly every stream and a
+one-stream read scans them all (range-partitioned, sorted bulk files are
+ROADMAP.md item 9).  State tables (views, consumer locks, the watermark)
+are orders of magnitude smaller than the log; the sharded ones are paged
+``ShardFrame``s (below).
 """
 
 from __future__ import annotations
@@ -36,6 +39,8 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -93,29 +98,6 @@ def _fsync_dir(path: str) -> None:
             os.close(fd)
     except OSError:
         pass  # e.g. filesystems that refuse O_RDONLY dir fsync
-
-
-def apply_state_delta(pdf, dpdf, key_cols: list[str]):
-    """Apply one state delta to an unindexed frame: rows whose key appears
-    in the delta are replaced (or, under the ``_deleted`` tombstone,
-    dropped), everything else is untouched.  Deltas are small — the cost
-    is one pass over ``pdf`` per delta."""
-    import pandas as pd
-
-    keyed = pdf.set_index(key_cols)
-    # A single key column indexes as a FLAT Index (set_index semantics);
-    # dropping MultiIndex keys from it silently matches nothing and turns
-    # the upsert into a duplicate append (the hwm tables' one-column key
-    # hit this) — build the matching index kind.
-    if len(key_cols) == 1:
-        keys = pd.Index(dpdf[key_cols[0]])
-    else:
-        keys = pd.MultiIndex.from_frame(dpdf[key_cols])
-    keyed = keyed.drop(index=keys, errors="ignore")
-    up = dpdf[~dpdf["_deleted"]].drop(columns=["_deleted"]).set_index(key_cols)
-    if len(up):
-        keyed = pd.concat([keyed, up])
-    return keyed.reset_index()
 
 
 @dataclass
@@ -288,9 +270,10 @@ class ParquetStore:
             self.write_published(table, self.read_manifest(table).commit_id)
 
     def append_log(self, table: str, df: DataFrame, cluster_by: str | None = None) -> None:
-        """Append a committed batch.  ``cluster_by`` repartitions so row
-        groups are clustered on the partition key (data-skipping analogue of
-        the reference's B-tree indexes)."""
+        """Append a committed batch.  ``cluster_by`` hash-partitions the
+        batch on that column, one output file per non-empty partition.
+        The files are not sorted, so their footer ranges do not prune
+        point reads (module doc)."""
         if cluster_by is not None:
             df = df.repartition(cluster_by)
         df.write.mode("append").parquet(self._log_dir(table))
@@ -525,56 +508,26 @@ class ParquetStore:
         return self.spark.read.schema(schema).parquet(target)
 
     # ------------------------------------------------------------------ #
-    # pyarrow fast path (no Spark job) — the LocksLedger hot path.
-    # Same snapshot layout, so Spark reads and pyarrow reads/writes are
-    # interchangeable per version; pyarrow ignores _SUCCESS/_metadata
-    # (default ignore_prefixes) so Spark-written snapshots load cleanly.
+    # pyarrow path (no Spark job).  Same snapshot layout, so Spark reads
+    # and pyarrow reads/writes are interchangeable per version; pyarrow
+    # ignores _SUCCESS/_metadata (default ignore_prefixes) so
+    # Spark-written snapshots load cleanly.  A version is either a FULL
+    # snapshot directory ``v{N}`` or a DELTA file ``v{N}.delta.arrow``;
+    # only ``ShardFrame`` writes and reads deltas, and Spark's
+    # ``read_state`` is only pointed at all-full-snapshot tables.
     # ------------------------------------------------------------------ #
-
-    # State-snapshot layout, extended: a version is either a FULL
-    # snapshot directory ``v{N}`` or a DELTA file ``v{N}.delta.arrow``
-    # holding only the rows changed by one commit (plus a ``_deleted``
-    # tombstone column).  ``_LATEST`` still names the current version.
-    # Rationale: the locks ledger flushes on EVERY claim/ack tick; a full
-    # snapshot rewrite is O(#lock rows) per ack, which a 10M-partition
-    # deployment cannot pay.  Deltas make
-    # the per-tick flush O(#touched rows); periodic full snapshots
-    # (ledger.COMPACT_EVERY) bound the read-side chain replay.  Spark
-    # ``read_state`` is only ever pointed at all-full-snapshot tables
-    # (views/deciders/projections); the delta-aware readers below are the
-    # ledger's pyarrow path.
 
     def _state_entry(self, table: str, version: int) -> tuple[str, str] | None:
         """('full'|'delta', path) for one version, None if absent.  Deltas
         are Arrow IPC files (``.delta.arrow``): ~5-10x cheaper to write
-        and read than parquet at per-commit sizes, and only the ledger's
-        pyarrow path ever touches them (Spark reads full snapshots only)."""
+        and read than parquet at per-commit sizes, and only ``ShardFrame``
+        touches them (Spark reads full snapshots only)."""
         full = os.path.join(self._state_dir(table), f"v{version:08d}")
         if os.path.isdir(full):
             return ("full", full)
         if os.path.exists(f"{full}.delta.arrow"):
             return ("delta", f"{full}.delta.arrow")
         return None
-
-    @staticmethod
-    def _read_delta_pandas(path: str):
-        import pyarrow as pa
-
-        with pa.memory_map(path) as m:
-            return pa.ipc.open_file(m).read_all().to_pandas()
-
-    def latest_full_state_version(self, table: str) -> int:
-        v = self.state_version(table)
-        while v >= 0:
-            e = self._state_entry(table, v)
-            if e is not None and e[0] == "full":
-                return v
-            v -= 1
-        return -1
-
-    def state_delta_chain(self, table: str) -> int:
-        """Number of delta versions since the last full snapshot."""
-        return self.state_version(table) - self.latest_full_state_version(table)
 
     @staticmethod
     def _coerce_us(pdf):
@@ -607,8 +560,9 @@ class ParquetStore:
         un-synced tail of claim/ack progress is lost, which the
         at-least-once contract absorbs as redelivery — unlike the EVENT
         log, whose manifests/markers stay fsync'd (losing events is not
-        recoverable by redelivery).  Measured cost of per-tick fsync on
-        the b3 path: ~1.3 ms of a ~6 ms tick, -20% delivery throughput.
+        recoverable by redelivery).  Measured cost of a per-tick fsync in a
+        claim/ack delivery loop: ~1.3 ms of a ~6 ms tick, -20% delivery
+        throughput.
 
         ``durable=True`` (the watermark maintenance path):
         fsync the delta file AND its directory entry before flipping a
@@ -654,114 +608,21 @@ class ParquetStore:
                 _fsync_dir(self._state_dir(table))
             return version
 
-    def read_state_deltas(self, table: str, after_version: int, to_version: int):
-        """The delta pdfs for versions (after_version, to_version], in
-        order — or None if any of them is missing or a full snapshot
-        (caller falls back to a full reload).  This is the incremental
-        cross-process reload path: a sibling that advanced the state by K
-        small commits costs K tiny file reads, not a snapshot scan."""
-        import pyarrow as pa
-
-        out = []
-        for v in range(after_version + 1, to_version + 1):
-            e = self._state_entry(table, v)
-            if e is None or e[0] != "delta":
-                return None
-            try:
-                out.append(self._read_delta_pandas(e[1]))
-            except FileNotFoundError:
-                # a sibling's full-snapshot GC unlinked the delta between
-                # the existence check and the open (lock-free readers are
-                # allowed here) — fall back to a full reload
-                return None
-            except (OSError, pa.lib.ArrowInvalid):
-                # unreadable/corrupt delta (power loss can tear a
-                # non-durable delta even though writers stage+rename —
-                # the rename survives the crash, the data pages may not):
-                # report the chain broken instead of crashing the claim
-                # path; callers fall back to a snapshot read or, for
-                # DERIVED tables (hwm), a rebuild from the log
-                return None
-        return out
-
-    # ---- evict-cache: version-tagged Arrow IPC spill of a PARSED
-    # state frame, shared by the paged locks ledger and watermark (one
-    # copy of the protocol, so the two sides cannot drift apart).  The
-    # cache is best-effort
-    # only — atomic rename, no fsync, torn/absent/foreign caches are
-    # simply misses; the snapshot+delta chain stays the durable truth.
-    # Each owner passes its own ``tag`` key so a foreign writer's cache
-    # (or a pre-rename layout) can never be mistaken for ours, and keeps
-    # its own delta-tail replay semantics on top of the returned frame.
-
-    def write_evict_cache(self, table: str, pdf, version: int, tag: bytes) -> None:
-        """Spill ``pdf`` (index already reset) tagged with the state
-        ``version`` it reflects.  Raises on failure — callers treat the
-        spill as optional and catch."""
-        import pyarrow as pa
-
-        t = pa.Table.from_pandas(pdf, preserve_index=False)
-        t = t.replace_schema_metadata({tag: str(int(version)).encode()})
-        path = os.path.join(self._state_dir(table), "_EVICT.arrow")
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as f, pa.ipc.new_file(f, t.schema) as w:
-            w.write_table(t)
-        os.replace(tmp, path)  # atomic; no fsync — cache only
-
-    def read_evict_cache(self, table: str, tag: bytes):
-        """-> ``(pdf, tagged_version)`` or ``None`` (absent / torn /
-        foreign tag).  The caller validates the tag window against the
-        current disk version and replays the delta tail above it."""
-        import pyarrow as pa
-
-        path = os.path.join(self._state_dir(table), "_EVICT.arrow")
-        try:
-            with pa.memory_map(path) as m:
-                t = pa.ipc.open_file(m).read_all()
-            v = int((t.schema.metadata or {}).get(tag, b"?"))
-        except Exception:  # noqa: BLE001 — any unreadable cache is a miss
-            return None
-        return t.to_pandas(), v
-
-    def read_state_pandas(self, table: str, key_cols: list[str] | None = None):
-        """Reconstruct the current state: latest full snapshot + replay of
-        the delta chain above it.  ``key_cols`` is required to apply
-        deltas (upsert-by-key semantics); tables written only as full
-        snapshots never need it."""
+    def read_state_pandas(self, table: str):
+        """The current snapshot of a table written only as full snapshots
+        (the registries), read with pyarrow.  Retries when a sibling's GC
+        unlinks the snapshot between the pointer read and the data read."""
         import pyarrow.parquet as pq
 
-        last_err: Exception | None = None
-        for _attempt in range(3):  # GC by a sibling can unlink mid-read;
-            try:                   # re-resolving _LATEST always converges
-                version = self.state_version(table)
-                entry = self._state_entry(table, version)
-                if entry is not None and entry[0] == "full":
-                    return pq.read_table(entry[1]).to_pandas()
-                base_v = self.latest_full_state_version(table)
-                if base_v < 0:
-                    raise FileNotFoundError(f"no full state snapshot for {table}")
-                if key_cols is None:
-                    raise ValueError(
-                        f"{table} has a delta chain; key_cols required"
-                    )
-                base_entry = self._state_entry(table, base_v)
-                if base_entry is None:
-                    # sibling GC unlinked the anchor between the version
-                    # scan and this read — retry re-resolves _LATEST
-                    raise FileNotFoundError(f"{table} anchor v{base_v} GC'd")
-                pdf = pq.read_table(base_entry[1]).to_pandas()
-                deltas = self.read_state_deltas(table, base_v, version)
-                if deltas is None:
-                    raise FileNotFoundError(
-                        f"broken delta chain for {table} @v{version}"
-                    )
-                for dpdf in deltas:
-                    pdf = apply_state_delta(pdf, dpdf, key_cols)
-                return pdf.reset_index(drop=True)
-            except FileNotFoundError as e:
-                last_err = e
-        raise last_err
+        for attempt in range(3):
+            path = os.path.join(
+                self._state_dir(table), f"v{self.state_version(table):08d}"
+            )
+            try:
+                return pq.read_table(path).to_pandas()
+            except FileNotFoundError:
+                if attempt == 2:
+                    raise
 
     def write_state_pandas(self, table: str, pdf) -> int:
         """Snapshot write via pyarrow: ~ms instead of a Spark job — sized
@@ -855,3 +716,393 @@ class ParquetStore:
                         os.unlink(path)
                     except FileNotFoundError:
                         pass
+
+
+class ShardFrame:
+    """One state table's versioned pandas frame: the shard-state protocol
+    shared by the locks ledger shards and the watermark shards.
+
+    - **Layout.** The table lives in ``<table>_state``: full parquet
+      snapshots ``v{N}/`` and delta files ``v{N}.delta.arrow`` (the rows
+      one commit changed, plus a ``_deleted`` tombstone column), with
+      ``_LATEST`` naming the current version.  A version's content never
+      changes, and the pointer flip is atomic, so a reader never needs a
+      lock.
+    - **Load.** ``df`` is the frame indexed by ``key_cols``, and
+      ``version`` the disk version it equals (-2: not loaded).  A load
+      reads the disk version before the data and replays up to that
+      version only, so a sibling's write in between is picked up by the
+      next refresh, never recorded as loaded.  It takes the
+      evict-cache plus the delta tail above its tag when the cache is
+      within ``COMPACT_EVERY`` versions.  Otherwise it takes the newest
+      full snapshot plus the delta tail.  A sibling's GC can unlink a
+      file mid-load; the load then re-resolves ``_LATEST`` and retries.
+    - **Refresh.** A loaded frame whose disk version moved replays only
+      the new deltas (one small file each).  A full snapshot among them
+      means a full load.
+    - **Apply.** A delta replaces the rows of every key it names and
+      drops the tombstoned ones.  When every key exists and none is
+      tombstoned, the values are written in place by position, with no
+      re-sort of the index.
+    - **Write.** Callers mutate ``df`` and record the keys with
+      ``touch``/``touch_deleted``; ``flush`` persists them as one delta,
+      or as a full snapshot when the pending keys rival the frame
+      (bulk writes) or the chain since the last snapshot would reach
+      ``COMPACT_EVERY``.  The chain length is counted, not walked, while
+      the frame is loaded.  ``merge`` upserts rows into a frame that need
+      not be loaded: it writes the delta as is and loads only to fold a
+      snapshot.  ``durable`` fsyncs each delta (see
+      ``ParquetStore.write_state_delta``).
+    - **Evict.** ``evict`` spills the parsed frame to a version-tagged
+      Arrow IPC evict-cache and unloads it; it refuses while keys are
+      pending.  The cache is best effort: no fsync, and a torn, absent or
+      foreign-tagged cache is a miss.
+
+    The frame is not thread-safe.  Cross-process writers must serialize
+    outside it (the ledger's per-shard flock, the watermark's state
+    lock), and call ``refresh`` under that lock before writing.
+    """
+
+    # Full-snapshot cadence: a flush that would make the delta chain this
+    # long writes a full snapshot instead, bounding what a cold load
+    # replays.
+    COMPACT_EVERY = 64
+
+    def __init__(self, storage, table: str, key_cols, normalize, empty,
+                 durable: bool = False):
+        self.storage = storage
+        self.table = table
+        self.key_cols = list(key_cols)
+        self._normalize = normalize  # raw rows -> indexed, sorted frame
+        self._empty = empty  # () -> the empty indexed frame
+        self.durable = durable
+        self.df = empty()
+        self.version = -2
+        self._chain = 0  # deltas since the last full snapshot
+        self._spilled: int | None = None  # version of the last cache spill
+        self._upserts: set = set()
+        self._deletes: set = set()
+
+    @property
+    def resident(self) -> bool:
+        return self.version > -2
+
+    @property
+    def dirty(self) -> bool:
+        return bool(self._upserts or self._deletes)
+
+    def frame_bytes(self) -> int:
+        """Resident bytes of the frame, index included (deep: strings
+        counted; call on demand, not per tick)."""
+        if not self.resident or self.df.empty:
+            return 0
+        return int(self.df.memory_usage(deep=True).sum())
+
+    def invalidate(self) -> None:
+        """Drop the frame and anything pending; the next ``refresh``
+        loads from disk."""
+        self.df = self._empty()
+        self.version = -2
+        self._chain = 0
+        self._upserts.clear()
+        self._deletes.clear()
+
+    # ---- reads ---------------------------------------------------------- #
+
+    def refresh(self) -> None:
+        """Bring the frame to the disk version (load, or replay the new
+        deltas).  A failure leaves the frame unloaded."""
+        disk = self.storage.state_version(self.table)
+        if disk == self.version:
+            return
+        try:
+            deltas = None
+            if 0 <= self.version < disk:
+                deltas = self._read_deltas(self.version, disk)
+            if deltas is None:
+                self._load()
+            else:
+                for dpdf in deltas:
+                    self.apply(dpdf)
+                self._chain += len(deltas)
+                self.version = disk
+        except BaseException:
+            self.invalidate()
+            raise
+        self._upserts.clear()
+        self._deletes.clear()
+
+    def _load(self) -> None:
+        self.version = -2  # a half-built frame is never taken as a version
+        for attempt in range(3):
+            disk = self.storage.state_version(self.table)
+            try:
+                if disk < 0:  # no snapshot yet
+                    self.df, self._chain = self._empty(), 0
+                elif not self._load_cached(disk):
+                    self._load_snapshot(disk)
+            except FileNotFoundError:
+                if attempt == 2:
+                    raise
+                continue
+            self.version = disk
+            return
+
+    def _load_cached(self, disk: int) -> bool:
+        hit = self._read_cache()
+        if hit is None:
+            return False
+        pdf, v = hit
+        if v > disk or disk - v > self.COMPACT_EVERY:
+            return False
+        tail = self._read_deltas(v, disk)
+        if tail is None:
+            return False
+        self._set(pdf, tail)
+        self._chain = disk - self._anchor(disk)
+        return True
+
+    def _load_snapshot(self, disk: int) -> None:
+        base = self._anchor(disk)
+        entry = self.storage._state_entry(self.table, base) if base >= 0 else None
+        if entry is None:  # no anchor, or a sibling's GC unlinked it
+            raise FileNotFoundError(f"{self.table}: no snapshot at v{base}")
+        pdf = self._read_snapshot(entry[1])
+        tail = self._read_deltas(base, disk)
+        if tail is None:
+            raise FileNotFoundError(f"{self.table}: broken delta chain @v{disk}")
+        self._set(pdf, tail)
+        self._chain = len(tail)
+
+    def _set(self, pdf, tail) -> None:
+        self.df = self._normalize(pdf) if len(pdf) else self._empty()
+        for dpdf in tail:
+            self.apply(dpdf)
+
+    @staticmethod
+    def _read_snapshot(path: str):
+        import pyarrow.parquet as pq
+
+        return pq.read_table(path).to_pandas()
+
+    def _anchor(self, disk: int) -> int:
+        """The newest full-snapshot version at or below ``disk`` (-1:
+        none)."""
+        v = disk
+        while v >= 0:
+            e = self.storage._state_entry(self.table, v)
+            if e is not None and e[0] == "full":
+                return v
+            v -= 1
+        return -1
+
+    def _read_deltas(self, after: int, to: int):
+        """The delta frames of versions (after, to], in order, or None
+        when one of them is missing, unreadable or a full snapshot (the
+        caller loads in full instead)."""
+        import pyarrow as pa
+
+        out = []
+        for v in range(after + 1, to + 1):
+            e = self.storage._state_entry(self.table, v)
+            if e is None or e[0] != "delta":
+                return None
+            try:
+                with pa.memory_map(e[1]) as m:
+                    out.append(pa.ipc.open_file(m).read_all().to_pandas())
+            except (OSError, pa.lib.ArrowInvalid):
+                # unlinked by a sibling's GC since the check, or torn by a
+                # power loss (the rename survives, the data pages may not)
+                return None
+        return out
+
+    # ---- apply and write ------------------------------------------------ #
+
+    def _key_index(self, pdf):
+        if len(self.key_cols) == 1:
+            # one key column indexes flat: MultiIndex keys would match
+            # nothing and turn every upsert into a duplicate row
+            return pd.Index(pdf[self.key_cols[0]], name=self.key_cols[0])
+        return pd.MultiIndex.from_frame(pdf[self.key_cols])
+
+    def apply(self, dpdf) -> None:
+        """Apply one delta to ``df`` in memory (see class doc)."""
+        keys = self._key_index(dpdf)
+        deleted = dpdf["_deleted"].to_numpy()
+        if len(self.df) and not deleted.any():
+            pos = self.df.index.get_indexer(keys)
+            if (pos >= 0).all():
+                for j, c in enumerate(self.df.columns):
+                    self.df.iloc[pos, j] = dpdf[c].to_numpy()
+                return
+        self.df = self.df.drop(index=keys, errors="ignore")
+        up = dpdf[~deleted]
+        if len(up):
+            self.df = pd.concat([self.df, self._normalize(up)]).sort_index()
+
+    def touch(self, keys) -> None:
+        """Record upserted keys (tuples for a compound key) for ``flush``."""
+        keys = list(keys)
+        self._upserts.update(keys)
+        self._deletes.difference_update(keys)
+
+    def touch_deleted(self, keys) -> None:
+        keys = list(keys)
+        self._deletes.update(keys)
+        self._upserts.difference_update(keys)
+
+    def _positions(self, keys) -> "list[int]":
+        """Positions in ``df`` of those of ``keys`` it holds."""
+        pdf = pd.DataFrame(list(keys), columns=self.key_cols)
+        pos = self.df.index.get_indexer(self._key_index(pdf))
+        return pos[pos >= 0].tolist()
+
+    def _delta_due(self, n: int) -> bool:
+        """The write rule: may a commit of ``n`` keys go out as a delta?
+        It needs a snapshot to anchor the chain, fewer keys than half the
+        frame (at least 1024), and a chain below ``COMPACT_EVERY``."""
+        if self.resident:
+            anchored, chain = self.version >= 0, self._chain
+        else:  # not loaded: walk the chain on disk
+            disk = self.storage.state_version(self.table)
+            base = self._anchor(disk)
+            anchored, chain = base >= 0, disk - base
+        return (
+            anchored
+            and 0 < n < max(1024, len(self.df) // 2)
+            and chain + 1 < self.COMPACT_EVERY
+        )
+
+    def _write_delta(self, delta) -> None:
+        v = self.storage.write_state_delta(self.table, delta, durable=self.durable)
+        if self.resident:
+            self.version = v
+            self._chain += 1
+
+    def _write_snapshot(self) -> None:
+        self.version = self.storage.write_state_pandas(
+            self.table, self.df.reset_index()
+        )
+        self._chain = 0
+
+    def flush(self) -> None:
+        """Persist the touched keys of the loaded frame (see class doc)."""
+        if self._delta_due(len(self._upserts) + len(self._deletes)):
+            parts = []
+            if self._upserts:
+                up = self.df.take(self._positions(sorted(self._upserts))).reset_index()
+                up["_deleted"] = False  # in place: assign() would copy
+                parts.append(up)
+            if self._deletes:
+                dead = pd.DataFrame(sorted(self._deletes), columns=self.key_cols)
+                for c, dt in self.df.dtypes.items():  # filler values
+                    dead[c] = None if dt == object else np.zeros(len(dead), dt)
+                dead["_deleted"] = True
+                parts.append(dead)
+            self._write_delta(pd.concat(parts, ignore_index=True))
+        else:
+            self._write_snapshot()
+        self._upserts.clear()
+        self._deletes.clear()
+
+    def merge(self, rows) -> None:
+        """Upsert ``rows`` (key columns as columns) as one commit, loaded
+        or not: the rows are the delta as they are, and an unloaded frame
+        loads only to fold a snapshot, then unloads again."""
+        delta = self._normalize(rows).reset_index()
+        delta["_deleted"] = False
+        loaded = self.resident
+        if loaded:
+            self.refresh()
+        if self._delta_due(len(delta)):
+            self._write_delta(delta)
+            if loaded:
+                self.apply(delta)
+            return
+        self.refresh()
+        self.apply(delta)
+        self._write_snapshot()
+        if not loaded:
+            self.invalidate()
+
+    # ---- evict-cache ---------------------------------------------------- #
+
+    def _cache_path(self) -> str:
+        return os.path.join(self.storage._state_dir(self.table), "_EVICT.arrow")
+
+    def _read_cache(self):
+        """``(pdf, tagged_version)``, or None for an absent, torn or
+        foreign cache."""
+        import pyarrow as pa
+
+        try:
+            with pa.memory_map(self._cache_path()) as m:
+                t = pa.ipc.open_file(m).read_all()
+            v = int((t.schema.metadata or {}).get(b"state_version", b"?"))
+        except Exception:  # noqa: BLE001 — any unreadable cache is a miss
+            return None
+        return t.to_pandas(), v
+
+    def evict(self) -> None:
+        """Unload the frame, spilling it to the evict-cache first (see
+        class doc).  A frame with pending keys is kept: evicting it would
+        drop unflushed writes."""
+        if self.dirty:
+            return
+        if self.version >= 0 and len(self.df) and self._spilled != self.version:
+            import pyarrow as pa
+
+            try:
+                t = pa.Table.from_pandas(self.df.reset_index(), preserve_index=False)
+                t = t.replace_schema_metadata(
+                    {b"state_version": str(self.version).encode()}
+                )
+                path = self._cache_path()
+                tmp = f"{path}.tmp.{os.getpid()}"
+                with open(tmp, "wb") as f, pa.ipc.new_file(f, t.schema) as w:
+                    w.write_table(t)
+                os.replace(tmp, path)  # atomic; no fsync: cache only
+                self._spilled = self.version
+            except Exception:  # noqa: BLE001 — cache only, never blocks evict
+                pass
+        self.invalidate()
+
+
+class ShardFrames:
+    """A list of ``ShardFrame``s under one LRU residency budget:
+    ``max_resident`` loaded frames (None: no limit).  ``use`` marks a
+    shard used; ``evict_over_budget`` unloads the least recently used
+    frames beyond the budget and is called outside any shard's write."""
+
+    def __init__(self, shards, max_resident: int | None = None):
+        self.shards = shards
+        self.max_resident = max_resident
+        self.clock = 0
+        self._last_use: dict[int, int] = {}
+
+    def use(self, k: int):
+        self.clock += 1
+        self._last_use[k] = self.clock
+        return self.shards[k]
+
+    def used_since(self, clock: int) -> "list[int]":
+        return [k for k, u in self._last_use.items() if u > clock]
+
+    def evict_over_budget(self) -> None:
+        if self.max_resident is None:
+            return
+        resident = [k for k, s in enumerate(self.shards) if s.resident]
+        over = len(resident) - self.max_resident
+        if over <= 0:
+            return
+        resident.sort(key=lambda k: self._last_use.get(k, -1))
+        for k in resident[:over]:
+            self.shards[k].evict()
+
+    def resident_shards(self) -> int:
+        return sum(1 for s in self.shards if s.resident)
+
+    def resident_bytes(self) -> int:
+        """Driver-resident bytes across the loaded frames (deep; the
+        figure BASELINE.md's scale-ceiling table pins)."""
+        return sum(s.frame_bytes() for s in self.shards)

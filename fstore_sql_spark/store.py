@@ -561,21 +561,23 @@ class EventStore:
         event_version: int = 1,
     ) -> DataFrame:
         """INSERT into deciders RETURNING; duplicate PK ⇒ error (C4),
-        decided from C3's registry memo without a Spark job.
+        decided from C3's registry memo.  No Spark job: the registry
+        snapshot, a few rows, is read and rewritten with pyarrow.
 
-        Under the committer flock: write_state is a read-modify-write of
+        Under the committer flock: the write is a read-modify-write of
         the whole snapshot, so two registering PROCESSES would otherwise
         lose one row (last-writer-wins)."""
         with self._commit_lock, self._committer_guard():
             if (decider, event, int(event_version)) in self._registered_events():
                 raise errors.DuplicateRegistrationError(decider, event, event_version)
-            existing = self.deciders()
-            row = self.spark.createDataFrame(
-                [(decider, event, int(event_version), description)], DECIDERS_SCHEMA
+            values = (decider, event, int(event_version), description)
+            new = pd.DataFrame([values], columns=DECIDERS_SCHEMA.fieldNames())
+            existing = self.storage.read_state_pandas(_DECIDERS)
+            self.storage.write_state_pandas(
+                _DECIDERS, pd.concat([existing, new], ignore_index=True)
             )
-            self.storage.write_state(_DECIDERS, existing.unionByName(row))
             self.deciders()  # take up the new snapshot now (re-binds views)
-            return row
+            return self.spark.createDataFrame([values], DECIDERS_SCHEMA)
 
     # ------------------------------------------------------------------ #
     # Versioned payload schemas + typed view (engine extension,

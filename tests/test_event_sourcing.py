@@ -54,6 +54,22 @@ def test_register_duplicate_runs_no_spark_job(spark, store):
     assert _jobs(spark, dup) == 0
 
 
+def test_register_new_runs_no_spark_job(spark, store):
+    """A new registration rewrites the registry snapshot with pyarrow,
+    without a Spark job; it returns the new row, and Spark's
+    ``deciders()`` reads the snapshot."""
+    got = []
+    assert _jobs(spark, lambda: got.append(store.register_decider_event("d", "e", "x"))) == 0
+    assert _jobs(
+        spark, lambda: store.register_decider_event("d", "f", "y", event_version=3)
+    ) == 0
+    assert [tuple(r) for r in got[0].collect()] == [("d", "e", 1, "x")]
+    assert sorted(tuple(r) for r in store.deciders().collect()) == [
+        ("d", "e", 1, "x"),
+        ("d", "f", 3, "y"),
+    ]
+
+
 def test_readme_flow(store):
     """README.md:96-124 flow: register → append 2 chained events →
     get_events returns both, ordered, linked."""

@@ -13,14 +13,17 @@ budget with ``_page`` before the store opens."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from fstore_sql_spark import EventStore
 from fstore_sql_spark.ledger import ShardedLocksLedger
+from fstore_sql_spark.storage import ShardFrame
 
 
 @pytest.fixture()
@@ -34,6 +37,23 @@ def _page(monkeypatch, budget: int) -> None:
     """Make stores opened from here on page with ``budget`` shard frames
     resident (every layout of more shards than that pages)."""
     monkeypatch.setattr(ShardedLocksLedger, "MAX_RESIDENT_SHARDS", budget)
+
+
+def _count_snapshot_reads(monkeypatch) -> "dict[str, int]":
+    """Count the shard frames' parquet snapshot reads, by table prefix
+    (``hwm_`` / ``locks_``): a load served by the evict-cache reads
+    none."""
+    calls = {"hwm_": 0, "locks_": 0}
+    orig = ShardFrame._read_snapshot
+
+    def counting(path):
+        for prefix in calls:
+            if os.path.basename(os.path.dirname(path)).startswith(prefix):
+                calls[prefix] += 1
+        return orig(path)
+
+    monkeypatch.setattr(ShardFrame, "_read_snapshot", staticmethod(counting))
+    return calls
 
 
 def _seed(spark, path, n_parts=120, events_per=2):
@@ -229,33 +249,24 @@ class TestHwmPaging:
             ]
         )
         hwm = store._hwm_view()
-        calls = {"n": 0}
-        orig = store.storage.read_state_pandas
-
-        def counting(table, key_cols=None):
-            if table.startswith("hwm_"):
-                calls["n"] += 1
-            return orig(table, key_cols=key_cols)
-
-        store.storage.read_state_pandas = counting
-        try:
-            import pandas as pd
-
-            full = pd.concat(
-                [hwm.for_shard(k) for k in range(hwm.n_shards)]
-            )
-            # identical content for all pre-existing keys + the new one
-            for k, f in before.items():
-                cur = hwm.for_shard(k)
-                got = cur.loc[cur.index.intersection(f.index)]
-                pd.testing.assert_frame_equal(got.sort_index(), f.sort_index())
-            assert "spill-new" in full.index
-            # spilled shards reloaded via the cache, not the snapshot path
-            assert calls["n"] == 0, (
-                f"{calls['n']} snapshot reloads despite warm evict-caches"
-            )
-        finally:
-            store.storage.read_state_pandas = orig
+        calls = _count_snapshot_reads(monkeypatch)
+        full = pd.concat([hwm.for_shard(k) for k in range(hwm.n_shards)])
+        # identical content for all pre-existing keys + the new one
+        for k, f in before.items():
+            cur = hwm.for_shard(k)
+            got = cur.loc[cur.index.intersection(f.index)]
+            pd.testing.assert_frame_equal(got.sort_index(), f.sort_index())
+        assert "spill-new" in full.index
+        # spilled shards reloaded via the cache, not the snapshot path
+        assert calls["hwm_"] == 0, (
+            f"{calls['hwm_']} snapshot reloads despite warm evict-caches"
+        )
+        # the counter does count: without its cache a shard reloads
+        # from the snapshot
+        os.unlink(os.path.join(path, "hwm_s00_state", "_EVICT.arrow"))
+        hwm.invalidate()
+        hwm.for_shard(0)
+        assert calls["hwm_"] == 1
 
     def test_paged_register_view_backfill_stays_in_budget(
         self, spark, path, monkeypatch
@@ -388,7 +399,7 @@ class TestHwmTornState:
         # (the seed batch — the T7 backfill already materialized the
         # watermark, so every append folds).  COMPACT_EVERY=3 puts the
         # compact fold on the SECOND append below — after the corruption.
-        store._hwm_shards.COMPACT_EVERY = 3
+        monkeypatch.setattr(ShardFrame, "COMPACT_EVERY", 3)
         store.append_batch(
             [
                 {

@@ -24,7 +24,7 @@ import pandas as pd
 import pytest
 
 from fstore_sql_spark.ledger import LocksLedger, ProcessLock, ShardedLocksLedger
-from fstore_sql_spark.storage import ParquetStore
+from fstore_sql_spark.storage import ParquetStore, ShardFrame
 from tests._ledger_worker import claim_worker, lock_counter_worker
 
 
@@ -174,7 +174,7 @@ class TestShardedLedger:
         assert pdf.loc["p0042", "last_offset"] == 4
         # the ack landed in the routed shard's own frame
         s = ledger.shards[shard_of("p0005", ledger.n_shards)]
-        assert s._df.loc[("v", "p0005"), "last_offset"] == 3
+        assert s.df.loc[("v", "p0005"), "last_offset"] == 3
 
     def test_rotation_claims_reach_every_shard(self, root):
         """Fairness: repeated claims must not starve any shard — a full
@@ -278,7 +278,9 @@ class TestDeltaFlush:
         v = storage.state_version("locks")
         kind, path = storage._state_entry("locks", v)
         assert kind == "delta"
-        dpdf = storage._read_delta_pandas(path)
+        import pyarrow as pa
+
+        dpdf = pa.ipc.open_file(path).read_all().to_pandas()
         assert len(dpdf) == 1 and dpdf["decider_id"].iloc[0] == "p0007"
 
     def test_cold_reader_replays_chain(self, root):
@@ -321,16 +323,18 @@ class TestDeltaFlush:
         cold = LocksLedger(ParquetStore(None, root))
         assert set(cold.to_pandas()["view"]) == {"b"}
 
-    def test_chain_compacts_at_cadence(self, root):
+    def test_chain_compacts_at_cadence(self, root, monkeypatch):
         storage = ParquetStore(None, root)
+        monkeypatch.setattr(ShardFrame, "COMPACT_EVERY", 5)
         ledger = LocksLedger(storage)
-        ledger.COMPACT_EVERY = 5
         with ledger.guard():
             ledger.insert_missing(seed_rows("v", 30))
         for i in range(12):
             with ledger.guard():
                 ledger.ack("v", [(f"p{i:04d}", 2)], now_utc())
-        assert storage.state_delta_chain("locks") < 5
+        assert ledger._chain < 5  # counted deltas since the last snapshot
+        v = storage.state_version("locks")
+        assert v - ledger._anchor(v) < 5  # the same chain, walked on disk
         cold = LocksLedger(ParquetStore(None, root))
         assert len(cold.to_pandas()) == 30
 
@@ -904,6 +908,39 @@ class TestShardPaging:
         for d, lo in redelivered:
             if d in acked:
                 assert lo >= 1, f"lost sibling ack for {d}"
+
+    def test_evicted_shard_reloads_from_evict_cache(self, root, monkeypatch):
+        """An evicted shard reloads from its evict-cache plus the delta
+        tail above the cache's tag: the same rows, and no parquet
+        snapshot read."""
+        _page(monkeypatch, 2)
+        ledger = ShardedLocksLedger(ParquetStore(None, root))
+        ledger.insert_missing(seed_rows("v", 400))
+        before = ledger.to_pandas()  # every shard loaded, most evicted
+        now = now_utc()
+        got = ledger.claim("v", hwm_frame(400), 25, now, now + timedelta(seconds=300))
+        ledger.ack("v", [(d, lo + 1) for d, lo in got], now)  # deltas past tags
+        reads = {"n": 0}
+        orig = ShardFrame._read_snapshot
+
+        def counting(path):
+            reads["n"] += 1
+            return orig(path)
+
+        monkeypatch.setattr(ShardFrame, "_read_snapshot", staticmethod(counting))
+        after = ledger.to_pandas().set_index("decider_id")
+        assert reads["n"] == 0, f"{reads['n']} snapshot reads despite evict-caches"
+        acked = {d for d, _ in got}
+        assert len(after) == len(before) == 400
+        assert (after.loc[sorted(acked), "last_offset"] == 1).all()
+        assert (after.drop(index=sorted(acked))["last_offset"] == 0).all()
+        # the counter does count: without its cache a shard reloads from
+        # the snapshot
+        s0 = ledger.shards[0]
+        os.unlink(os.path.join(root, f"{s0.table}_state", "_EVICT.arrow"))
+        s0.evict()
+        s0.refresh()
+        assert reads["n"] == 1
 
     @pytest.mark.slow
     def test_million_partition_ledger_under_memory_budget(self, root, monkeypatch):
