@@ -17,6 +17,11 @@ The event log itself is append-only parquet (one directory, one or more
 files per committed batch), mirroring the reference's append-only ``events``
 heap table with UPDATE/DELETE-ignoring rules (/root/reference/schema.sql:66-72)
 — the engine simply exposes no mutating verbs on it (SURVEY.md §2.3 R3/R4).
+A batch reaches the log one of two ways: ``write_log_table`` writes a
+small batch's one file on the driver with pyarrow (no Spark job), staged
+and renamed in so it lands whole; ``append_log`` writes a large batch's
+files with a Spark job through Spark's ``_temporary`` staging.  Both
+produce the same physical schema, and every reader reads both alike.
 
 Scale notes (100 TB): point reads of the log prune files by their
 footer ranges (``LogFile``).  That prunes the index path's files, which
@@ -46,6 +51,10 @@ from pyspark.sql.types import StructType
 
 _LATEST = "_LATEST"
 _MANIFEST = "_MANIFEST.json"
+# A generation's staging directory for driver-written log files
+# (``ParquetStore.write_log_table``): underscore-prefixed, so Spark's
+# listing skips it, as it skips its own ``_temporary``.
+_STAGING = "_staging"
 
 
 def read_log_gen(root: str, table: str) -> int:
@@ -278,6 +287,37 @@ class ParquetStore:
             df = df.repartition(cluster_by)
         df.write.mode("append").parquet(self._log_dir(table))
 
+    def write_log_table(self, table: str, t) -> None:
+        """Append a committed batch written on the driver, with no Spark
+        job: the pyarrow Table ``t`` as one parquet file in Spark's
+        physical layout (``created_at`` as INT96).  The file is written
+        and fsync'd under ``_staging/`` in the current generation, renamed
+        into the generation, and the directory fsync'd, so it lands whole
+        or not at all; a crash before the rename leaves only a staged file,
+        which no reader lists and ``clear_append_staging`` removes."""
+        d = self._log_dir(table)
+        staged = self._stage_log_file(d, t)
+        os.replace(staged, os.path.join(d, os.path.basename(staged)))
+        _fsync_dir(d)
+
+    @staticmethod
+    def _stage_log_file(log_dir: str, t) -> str:
+        """Write ``t`` durably under ``log_dir/_staging``; returns the path."""
+        import pyarrow.parquet as pq
+
+        staging = os.path.join(log_dir, _STAGING)
+        os.makedirs(staging, exist_ok=True)
+        path = os.path.join(staging, f"part-{uuid.uuid4()}.parquet")
+        with open(path, "wb") as f:
+            # no Arrow schema in the footer (a third of a one-row file):
+            # readers impose the log's schema, as on Spark's files
+            pq.write_table(
+                t, f, use_deprecated_int96_timestamps=True, store_schema=False
+            )
+            f.flush()
+            os.fsync(f.fileno())
+        return path
+
     def read_log(self, table: str, schema: StructType) -> DataFrame:
         """Build a fresh DataFrame over the current log generation.
 
@@ -315,8 +355,8 @@ class ParquetStore:
         """``(files, torn)``: the footer figures (``LogFile``) of every
         non-empty ``*.parquet`` directly under the log generation ``gen``
         (default: the current one), and the paths whose footer is
-        unreadable.  ``_temporary/`` and ``_quarantine/`` are
-        subdirectories, so they are never listed.
+        unreadable.  ``_temporary/``, ``_staging/`` and ``_quarantine/``
+        are subdirectories, so they are never listed.
 
         Footers come from a memo keyed by path.  A log file is never
         rewritten in place: an append writes new names, compaction a new
@@ -407,14 +447,18 @@ class ParquetStore:
         return qdir
 
     def clear_append_staging(self, table: str) -> None:
-        """Remove a dead Spark job's ``_temporary`` staging under the
-        current log generation.  Required during quarantine recovery: the
-        FileOutputCommitter's next job commit would otherwise sweep the
-        dead job's already-task-committed directories into the log,
-        resurrecting part of a quarantined batch."""
-        tmp = os.path.join(self._log_dir(table), "_temporary")
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
+        """Remove a dead writer's staging under the current log
+        generation: a Spark job's ``_temporary`` and the driver writer's
+        ``_staging``.  Required during quarantine recovery for the first:
+        the FileOutputCommitter's next job commit would otherwise sweep
+        the dead job's already-task-committed directories into the log,
+        resurrecting part of a quarantined batch.  A staged driver file
+        is never renamed in by anyone else; clearing it reclaims the
+        space."""
+        for name in ("_temporary", _STAGING):
+            tmp = os.path.join(self._log_dir(table), name)
+            if os.path.isdir(tmp):
+                shutil.rmtree(tmp, ignore_errors=True)
 
     def log_file_count(self, table: str) -> int:
         return sum(
@@ -536,9 +580,8 @@ class ParquetStore:
         delta-flush path."""
         off = [
             c
-            for c in pdf.columns
-            if str(pdf[c].dtype).startswith("datetime64")
-            and str(pdf[c].dtype) != "datetime64[us]"
+            for c, dt in pdf.dtypes.items()
+            if str(dt).startswith("datetime64") and str(dt) != "datetime64[us]"
         ]
         if not off:
             return pdf
@@ -570,9 +613,8 @@ class ParquetStore:
         reflects C") makes a power loss that keeps the meta but drops a
         delta SILENT and permanent — unlike lost claim progress it is
         not redelivery-recoverable — so the per-commit watermark deltas
-        must be durable BEFORE the meta advances.  Cost: ~1 fsync per
-        touched shard per commit, invisible next to the batch's parquet
-        write."""
+        must be durable BEFORE the meta advances.  Cost: the delta's and
+        the pointer's fsyncs per touched shard per commit."""
         import pyarrow as pa
 
         with self._lock:
@@ -718,6 +760,14 @@ class ParquetStore:
                         pass
 
 
+def _index_bytes(idx) -> int:
+    """Deep bytes of an index's values (a MultiIndex's levels and codes),
+    without its lookup hash table."""
+    if isinstance(idx, pd.MultiIndex):
+        return sum(map(_index_bytes, idx.levels)) + sum(c.nbytes for c in idx.codes)
+    return int(pd.Series(idx, copy=False).memory_usage(deep=True, index=False))
+
+
 class ShardFrame:
     """One state table's versioned pandas frame: the shard-state protocol
     shared by the locks ledger shards and the watermark shards.
@@ -792,11 +842,14 @@ class ShardFrame:
         return bool(self._upserts or self._deletes)
 
     def frame_bytes(self) -> int:
-        """Resident bytes of the frame, index included (deep: strings
-        counted; call on demand, not per tick)."""
+        """Resident bytes of the frame's values, the index's included
+        (deep: strings counted; call on demand, not per tick).  The hash
+        table pandas builds on an index's first lookup is left out, so
+        the figure depends on the rows held, not on the lookups run."""
         if not self.resident or self.df.empty:
             return 0
-        return int(self.df.memory_usage(deep=True).sum())
+        values = self.df.memory_usage(deep=True, index=False).sum()
+        return int(values) + _index_bytes(self.df.index)
 
     def invalidate(self) -> None:
         """Drop the frame and anything pending; the next ``refresh``

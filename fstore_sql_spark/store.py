@@ -56,6 +56,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 import os
 
@@ -97,11 +98,16 @@ _CANDIDATE_FIELDS = [
 ]
 _CANDIDATE_COLS = [c for c, _ in _CANDIDATE_FIELDS]
 _CANDIDATE_DDL = ", ".join(f"{c} {t}" for c, t in _CANDIDATE_FIELDS)
-# the index path's numbered rows, before the per-commit literal columns
-_NUMBERED_DDL = _CANDIDATE_DDL.replace("seq long", "offset long")
+# The index path's batch as Arrow, in the physical schema Spark writes the
+# log with: every column nullable but the two per-commit literals.
+_LOG_ARROW = pa.schema([
+    f.with_nullable(f.name not in ("created_at", "transaction_id"))
+    for f in to_arrow_schema(EVENTS_SCHEMA, timestamp_utc=False)
+])
 _EVENT, _EID, _VER, _DEC, _DID, _DATA, _CMD, _PID, _FINAL, _SEQ = range(10)
-# columns whose nulls the index path leaves to the set path
-_REQUIRED_IDX = (_EVENT, _EID, _VER, _DEC, _DID, _FINAL, _SEQ)
+# columns whose nulls the index path leaves to the set path (every one
+# EVENTS_SCHEMA declares non-nullable, so its RETURNING rows conform)
+_REQUIRED_IDX = (_EVENT, _EID, _VER, _DEC, _DID, _DATA, _CMD, _FINAL, _SEQ)
 
 
 def _utcnow() -> datetime:
@@ -855,8 +861,10 @@ class EventStore:
           probe of the log's ``event_id`` column (``_logged_event_ids``,
           a driver-side read within the point-read budget).  Offsets, the
           watermark fold and the commit columns are computed on the
-          driver; the batch is written with one job, its only one.  The
-          index decides a row only when its
+          driver, which also writes the batch as one parquet file
+          (``ParquetStore.write_log_table``): the append and its
+          RETURNING frame run no Spark job.  The index decides a row only
+          when its
           ``decider_id`` is absent from the index (a new stream), its
           ``previous_id`` is the indexed tail of the same decider, or its
           ``previous_id`` is an earlier-``seq`` row of the same stream in
@@ -938,8 +946,9 @@ class EventStore:
 
     # Batches of at most this many rows go through the index path
     # (append_batch).  Its cost is a Python loop over the rows, one C1
-    # probe and one write job, against the set path's ~two dozen jobs;
-    # larger batches keep the set path's distributed program.
+    # probe and one driver-side parquet write, with no Spark job, against
+    # the set path's ~two dozen jobs; larger batches keep the set path's
+    # distributed program.
     INDEX_PATH_MAX_ROWS = 1000
 
     def _small_batch(self, rows_or_df) -> "tuple[list | None, DataFrame | None]":
@@ -1031,14 +1040,12 @@ class EventStore:
             .rename(columns={"final": "offset_final"})[_HWM_COLS]
             .set_index("decider_id")
         )
-        finished = (
-            self.spark.createDataFrame(
-                pdf.sort_values(["decider_id", "offset"]), _NUMBERED_DDL
-            )
-            .withColumn("created_at", F.lit(now))
-            .withColumn("transaction_id", F.lit(manifest.commit_id + 1).cast("long"))
-            .select([f.name for f in EVENTS_SCHEMA.fields])
-            .coalesce(1)
+        pdf["created_at"] = now
+        pdf["transaction_id"] = manifest.commit_id + 1
+        finished = pa.Table.from_pandas(
+            pdf.sort_values(["decider_id", "offset"]),
+            schema=_LOG_ARROW,
+            preserve_index=False,
         )
         prof["offset_number_s"] = round(time.monotonic() - _t, 3)
         return self._publish(finished, manifest, n, batch_hwm)
@@ -1174,17 +1181,22 @@ class EventStore:
           publishing makes it visible, and a producer replay with
           ``on_conflict='ignore'`` dedups against it (the at-least-once
           recovery contract);
-        - log append INTERRUPTED MID-JOB-COMMIT → a strict subset of the
-          batch's files is in the log dir.  Publishing that would break
-          batch atomicity and intra-batch previous_id chains for readers,
-          so the partial files are QUARANTINED (moved into the log dir's
-          ``_quarantine/txn_<id>/`` — MOVED, never
+        - a set-path append INTERRUPTED MID-JOB-COMMIT → a strict subset
+          of the batch's files is in the log dir.  Publishing that would
+          break batch atomicity and intra-batch previous_id chains for
+          readers, so the partial files are QUARANTINED (moved into the
+          log dir's ``_quarantine/txn_<id>/`` — MOVED, never
           unlinked, so even a misconfigured flock-less mount cannot make
           this path destroy bytes unrecoverably — together with the dead
           job's ``_temporary`` staging cleared so the next job commit
           cannot resurrect them) and the allocation is burned like the
           never-ran window; the producer's replay re-appends the whole
           batch under a fresh commit.
+
+        An index-path append has no partial window: its one file is
+        written and fsync'd under ``_staging/`` and renamed in, so it is
+        either absent (the never-ran window; the staged file is cleared
+        with the Spark staging) or whole (the completed window).
 
         Power-loss-TORN parquet files (rename persisted, data pages lost
         — unreadable footers) are quarantined in every window: left in
@@ -1596,7 +1608,7 @@ class EventStore:
 
     def _publish(
         self,
-        finished: DataFrame,
+        finished: "DataFrame | pa.Table",
         manifest: Manifest,
         n: int,
         batch_hwm: pd.DataFrame,
@@ -1604,7 +1616,9 @@ class EventStore:
     ) -> DataFrame:
         """Commit ``n`` numbered rows read from manifest ``manifest``:
         allocate, append, publish, fold the watermark.  Shared by both
-        append paths; ``batch_hwm`` is the batch's per-partition tail
+        append paths: the index path's rows come as an Arrow table,
+        written on the driver, the set path's as a DataFrame, written by
+        a Spark job.  ``batch_hwm`` is the batch's per-partition tail
         (index decider_id, the other ``_HWM_COLS`` as columns)."""
         prof = self.last_append_profile
         txn = manifest.commit_id + 1
@@ -1620,9 +1634,10 @@ class EventStore:
         # A crash between the two then yields only an offset gap (which
         # BIGSERIAL permits — rollback gaps, SURVEY.md §7.4), never
         # duplicate offsets: rows are visible in the log only after a
-        # completed append (Spark's parquet committer stages task files
-        # in _temporary until job commit), and the next committer reads
-        # the already-advanced max_offset.  The reference gets this
+        # completed append (the driver writer renames its one fsync'd
+        # file in from _staging; Spark's parquet committer stages task
+        # files in _temporary until job commit), and the next committer
+        # reads the already-advanced max_offset.  The reference gets this
         # from the Postgres transaction; manifest-first is the
         # log-shipping equivalent.
         # pending_rows rides the allocation: if we
@@ -1636,8 +1651,12 @@ class EventStore:
                 pending_rows=n,
             ),
         )
+        driver = isinstance(finished, pa.Table)
         _t = time.monotonic()
-        self.storage.append_log(_EVENTS, finished, cluster_by=cluster_by)
+        if driver:
+            self.storage.write_log_table(_EVENTS, finished)
+        else:
+            self.storage.append_log(_EVENTS, finished, cluster_by=cluster_by)
         prof["parquet_write_s"] = round(time.monotonic() - _t, 3)
         _t = time.monotonic()
         # VISIBILITY marker: written only after the append completed,
@@ -1651,8 +1670,11 @@ class EventStore:
             batch_hwm, prev_commit=manifest.commit_id, new_commit=txn
         )
         prof["hwm_merge_s"] = round(time.monotonic() - _t, 3)
-        # RETURNING * analogue — a lazy offset-range view of the committed
+        # RETURNING * analogue: the written rows as a LocalRelation, or
+        # for a set-path batch a lazy offset-range view of the committed
         # log (never collects the batch to the driver; 100 TB-clean).
+        if driver:
+            return self._local_events(finished)
         lo, hi = manifest.max_offset + 1, manifest.max_offset + n
         return self.events().filter(
             (F.col("offset") >= lo) & (F.col("offset") <= hi)
@@ -1845,7 +1867,10 @@ class EventStore:
         filter-the-persisted-DF-per-shard loop ran one Spark job over the
         WHOLE aggregate per shard, quadratic at the 4096-shard layouts
         ``shards_for``/resize enable), and the transient driver frame is
-        one shard, not the whole table."""
+        one shard, not the whole table.  An empty log has no partition
+        to backfill: no aggregate runs."""
+        if self.storage.read_manifest(_EVENTS).max_offset == 0:
+            return
         first_after_df = (
             self.events()
             .filter(F.col("created_at") >= F.lit(start_at))

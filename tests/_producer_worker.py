@@ -77,80 +77,104 @@ def append_worker(
     spark.stop()
 
 
-def crash_committer_worker(root: str, out_path: str, kill_point: str) -> None:
-    """A committer that SIGKILLs itself (``os._exit``) at a chosen point
-    inside ``_commit`` — the crash windows of the manifest-first protocol:
+def arm_kill(store, kill_point: str) -> None:
+    """Make this process SIGKILL itself (``os._exit(42)``: no cleanup, no
+    finally blocks) at ``kill_point`` in ``store``'s next commit to the
+    ``events`` log — the crash windows of the manifest-first protocol:
 
-    - ``before_manifest``: after offset numbering, before the manifest
-      advances (nothing durable happened — full batch must be absent).
-    - ``after_manifest``: manifest advanced, log append never ran — the
+    - ``before_manifest``: before the manifest advances (nothing durable
+      happened — the full batch must be absent).
+    - ``after_manifest``: manifest advanced, log write never ran — the
       documented rollback-gap window (SURVEY.md §7.4): offsets are
       burned, no rows may be visible.
-    - ``after_append``: log rows landed, ``_PUBLISHED`` marker never
-      written — the batch is complete on disk, so it may be visible; a
-      replay with on_conflict='ignore' must be a no-op.
-    - ``mid_append``: the append job's commit is
-      interrupted after a SUBSET of the batch's files landed — recovery
-      must QUARANTINE the partial files (publishing them would break
-      batch atomicity), burn the allocation, and let the replay
-      re-append the whole batch.
+    - ``after_stage``: the driver writer's file is written and fsync'd
+      under ``_staging/`` but never renamed into the log — no rows may
+      be visible, and recovery clears the staging.
+    - ``after_replace``: the file is renamed into the log, the directory
+      fsync and the ``_PUBLISHED`` marker never ran — the batch is whole
+      on disk, and recovery publishes it.
+    - ``after_append``: the log write returned, the marker never written
+      — as ``after_replace``; a replay with on_conflict='ignore' must be
+      a no-op.
+    - ``mid_append``: the batch goes down the set path (the store's
+      ``INDEX_PATH_MAX_ROWS`` at 0) and its Spark write is interrupted
+      after a SUBSET of the batch's rows landed — recovery must
+      QUARANTINE the partial files (publishing them would break batch
+      atomicity), burn the allocation, and let the replay re-append the
+      whole batch.
+    - ``after_publish``: the marker written, the watermark not folded.
 
-    The kill is ``os._exit`` (no cleanup, no finally blocks) while the
-    committer flock is HELD — the kernel must release it so the next
-    producer is not wedged."""
-    from fstore_sql_spark import EventStore
+    Every window but ``mid_append`` hits a small batch on the index
+    path, whose one file the driver writes (``write_log_table``)."""
+    from fstore_sql_spark import storage
     from fstore_sql_spark.storage import ParquetStore
-
-    spark = _small_spark("crash-committer")
-    store = EventStore(spark, root)
-
-    orig_write_manifest = ParquetStore.write_manifest
-    orig_append_log = ParquetStore.append_log
-    orig_write_published = ParquetStore.write_published
 
     def die():
         os._exit(42)
 
+    def die_after(name):
+        orig = getattr(ParquetStore, name)
+
+        def wrapped(self, table, *a, **k):
+            orig(self, table, *a, **k)
+            if table == "events":
+                die()
+
+        setattr(ParquetStore, name, wrapped)
+
     if kill_point == "before_manifest":
         ParquetStore.write_manifest = lambda *a, **k: die()
     elif kill_point == "after_manifest":
+        die_after("write_manifest")
+    elif kill_point == "after_stage":
+        stage = ParquetStore._stage_log_file
 
-        def _wm(self, table, manifest):
-            orig_write_manifest(self, table, manifest)
-            if table == "events":
+        def _stage(log_dir, t):
+            stage(log_dir, t)
+            die()
+
+        ParquetStore._stage_log_file = staticmethod(_stage)
+    elif kill_point == "after_replace":
+        log_dir = store.storage._log_dir("events")
+        fsync_dir = storage._fsync_dir
+
+        def _fsync(path):
+            if path == log_dir:  # only write_log_table syncs the log dir
                 die()
+            fsync_dir(path)
 
-        ParquetStore.write_manifest = _wm
+        storage._fsync_dir = _fsync
     elif kill_point == "after_append":
-
-        def _al(self, table, df, cluster_by=None):
-            orig_append_log(self, table, df, cluster_by=cluster_by)
-            if table == "events":
-                die()
-
-        ParquetStore.append_log = _al
+        die_after("write_log_table")
     elif kill_point == "mid_append":
+        store.INDEX_PATH_MAX_ROWS = 0
+        append_log = ParquetStore.append_log
 
         def _al_partial(self, table, df, cluster_by=None):
             if table == "events":
-                # land a strict subset of the batch's files, then die —
-                # exactly what an interrupted FileOutputCommitter job
-                # commit leaves behind
-                orig_append_log(self, table, df.limit(2), cluster_by=cluster_by)
+                # land a strict subset of the batch's rows, then die —
+                # what an interrupted FileOutputCommitter job commit
+                # leaves behind
+                append_log(self, table, df.limit(2), cluster_by=cluster_by)
                 die()
-            orig_append_log(self, table, df, cluster_by=cluster_by)
+            append_log(self, table, df, cluster_by=cluster_by)
 
         ParquetStore.append_log = _al_partial
     elif kill_point == "after_publish":
-
-        def _wp(self, table, commit_id):
-            orig_write_published(self, table, commit_id)
-            if table == "events":
-                die()
-
-        ParquetStore.write_published = _wp
+        die_after("write_published")
     else:
         raise ValueError(kill_point)
+
+
+def crash_committer_worker(root: str, out_path: str, kill_point: str) -> None:
+    """A committer that appends one 5-row batch and SIGKILLs itself at
+    ``kill_point`` (``arm_kill``) while the committer flock is HELD —
+    the kernel must release it so the next producer is not wedged."""
+    from fstore_sql_spark import EventStore
+
+    spark = _small_spark("crash-committer")
+    store = EventStore(spark, root)
+    arm_kill(store, kill_point)
 
     with open(out_path, "w", encoding="utf-8") as f:
         f.write("started")
@@ -212,70 +236,23 @@ def soak_producer_worker(
     prefix: str = "s",
 ) -> None:
     """Live-soak committer: appends batches continuously while the parent
-    consumes; at ``kill_batch`` arms the same mid-_commit SIGKILL
-    injection as crash_committer_worker, so the death happens during
+    consumes; at ``kill_batch`` arms the same SIGKILL injection as
+    crash_committer_worker (``arm_kill``), so the death happens during
     real interleaved ingest→stream→ack traffic."""
     import json as _json
 
     from fstore_sql_spark import EventStore
-    from fstore_sql_spark.storage import ParquetStore
 
     spark = _small_spark("soak-producer")
     store = EventStore(spark, root)
     batches = soak_batches(n_batches, batch_size, prefix=prefix)
-
-    orig_write_manifest = ParquetStore.write_manifest
-    orig_append_log = ParquetStore.append_log
-    orig_write_published = ParquetStore.write_published
-
-    def die():
-        os._exit(42)
-
-    def arm():
-        if kill_point == "before_manifest":
-            ParquetStore.write_manifest = lambda *a, **k: die()
-        elif kill_point == "after_manifest":
-
-            def _wm(self, table, manifest):
-                orig_write_manifest(self, table, manifest)
-                if table == "events":
-                    die()
-
-            ParquetStore.write_manifest = _wm
-        elif kill_point == "after_append":
-
-            def _al(self, table, df, cluster_by=None):
-                orig_append_log(self, table, df, cluster_by=cluster_by)
-                if table == "events":
-                    die()
-
-            ParquetStore.append_log = _al
-        elif kill_point == "mid_append":
-
-            def _alp(self, table, df, cluster_by=None):
-                if table == "events":
-                    orig_append_log(self, table, df.limit(2), cluster_by=cluster_by)
-                    die()
-                orig_append_log(self, table, df, cluster_by=cluster_by)
-
-            ParquetStore.append_log = _alp
-        elif kill_point == "after_publish":
-
-            def _wp(self, table, commit_id):
-                orig_write_published(self, table, commit_id)
-                if table == "events":
-                    die()
-
-            ParquetStore.write_published = _wp
-        else:
-            raise ValueError(kill_point)
 
     done = []
     for b, rows in enumerate(batches):
         if b == kill_batch:
             with open(out_path, "w", encoding="utf-8") as f:
                 _json.dump({"completed_batches": done, "armed": True}, f)
-            arm()
+            arm_kill(store, kill_point)
         store.append_batch(rows)
         done.append(b)
         with open(out_path, "w", encoding="utf-8") as f:

@@ -9,6 +9,7 @@ processes, each with its own SparkSession, over one shared store path."""
 
 from __future__ import annotations
 
+import glob
 import json
 import multiprocessing as mp
 import os
@@ -16,11 +17,12 @@ import shutil
 import tempfile
 import time
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from fstore_sql_spark import EventStore, errors
-from fstore_sql_spark.storage import Manifest
+from fstore_sql_spark.storage import Manifest, ParquetStore
 from fstore_sql_spark.store import _CANDIDATE_DDL
 from tests._producer_worker import append_worker, crash_committer_worker
 
@@ -144,9 +146,40 @@ class TestConcurrentProducers:
 
 
 class TestCommitterCrashRecovery:
-    """SIGKILL the committer inside ``_commit``: every
+    """SIGKILL the committer inside ``_publish``: every
     crash window must recover to all-or-nothing visibility, an idempotent
     replay, and a free committer lock."""
+
+    # Who wrote the crashed commit's files in the log, by kill point (the
+    # footer's ``created_by``): the driver writer for an index-path
+    # batch, Spark for the set path's; no file where none landed.
+    # ``before_manifest`` allocates no commit to look up.
+    WRITTEN_BY = {
+        "after_manifest": set(),
+        "after_stage": set(),
+        "mid_append": {"parquet-mr"},
+        "after_replace": {"parquet-cpp-arrow"},
+        "after_append": {"parquet-cpp-arrow"},
+        "after_publish": {"parquet-cpp-arrow"},
+    }
+
+    @staticmethod
+    def _staged(shared_path):
+        st = ParquetStore(None, shared_path)
+        return glob.glob(os.path.join(st._log_dir("events"), "_staging", "*"))
+
+    def _check_crash_state(self, shared_path, kill_point) -> int:
+        """The on-disk state the kill left, before any recovery: which
+        writer's files hold the crashed commit, and whether a staged file
+        was left behind.  Returns the manifest's commit id."""
+        assert len(self._staged(shared_path)) == (kill_point == "after_stage")
+        st = ParquetStore(None, shared_path)
+        crashed = st.read_manifest("events").commit_id
+        if kill_point in self.WRITTEN_BY:
+            files, _, _ = st.txn_log_files("events", crashed)
+            writers = {pq.read_metadata(f).created_by.split(" ")[0] for f in files}
+            assert writers == self.WRITTEN_BY[kill_point]
+        return crashed
 
     def _run_crash(self, shared_path, kill_point):
         ctx = mp.get_context("spawn")
@@ -165,7 +198,9 @@ class TestCommitterCrashRecovery:
         [
             ("before_manifest", 0),
             ("after_manifest", 0),
+            ("after_stage", 0),
             ("mid_append", 0),
+            ("after_replace", 5),
             ("after_append", 5),
             ("after_publish", 5),
         ],
@@ -176,6 +211,7 @@ class TestCommitterCrashRecovery:
         parent.append_event("evt", "seed-1", "dec", "seed", "{}")
 
         self._run_crash(shared_path, kill_point)
+        crashed = self._check_crash_state(shared_path, kill_point)
 
         crash_rows = [
             {
@@ -197,11 +233,19 @@ class TestCommitterCrashRecovery:
         assert time.time() - t0 < 60, "committer lock wedged by dead holder"
 
         ev = parent.events()
-        crash_ids = [r["event_id"] for r in ev.filter(
+        crashed_rows = ev.filter(
             F.col("decider_id") == f"crash-{kill_point}"
-        ).collect()]
+        ).collect()
+        crash_ids = [r["event_id"] for r in crashed_rows]
         # all-or-nothing + idempotent replay: exactly one copy of each
         assert sorted(crash_ids) == sorted(r["event_id"] for r in crash_rows)
+        # recovery published a batch that landed whole, and the replay
+        # appended nothing; otherwise the replay appended the whole batch
+        # under the next commit.  A staged file is cleared.
+        assert {r["transaction_id"] for r in crashed_rows} == {
+            crashed if visible_after else crashed + 1
+        }
+        assert self._staged(shared_path) == []
         offsets = [r["offset"] for r in ev.select("offset").collect()]
         assert len(offsets) == len(set(offsets)), "colliding offsets after crash"
         # per-stream replay order intact

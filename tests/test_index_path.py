@@ -9,10 +9,11 @@ program over the log.
 - The index itself: rebuilt from the log it equals the incrementally
   merged one, after own appends, a sibling store's appends and
   ``compact()``; an old-layout index on disk rebuilds once.
-- Cost: a 1-event append on a stream tail runs at most 1 Spark job (the
-  write; C1's probe is a driver-side read); a stale ``previous_id``
-  takes the set path and still raises the reference's optimistic-lock
-  error.
+- Cost: a 1-event append on a stream tail runs no Spark job (C1's probe
+  is a driver-side read and the driver writes the batch's file); a
+  stale ``previous_id`` takes the set path and still raises the
+  reference's optimistic-lock error.  T7's backfill on an empty log runs
+  no Spark job.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import random
 import shutil
 import tempfile
 import uuid
+from datetime import datetime, timezone
 
 import pandas as pd
 import pytest
@@ -448,10 +450,11 @@ def _jobs(spark, fn):
 
 
 def test_tail_append_spark_jobs(spark, paths):
-    """A 1-event append on a stream tail runs at most 1 Spark job (the
-    write; the C1 probe reads the log on the driver); a stale
-    previous_id goes down the set path and raises the reference's
-    optimistic-lock error."""
+    """A 1-event append on a stream tail, or one opening a new stream,
+    runs no Spark job: the C1 probe reads the log and the batch's file is
+    written on the driver, and collecting its RETURNING frame runs none
+    either.  A stale previous_id goes down the set path and raises the
+    reference's optimistic-lock error."""
     store = open_store(spark, paths())
     gen = BatchGen(seed=11)
     store.append_batch(gen.chain(gen.new_key(), 3) + gen.chain(gen.new_key(), 2))
@@ -460,13 +463,23 @@ def test_tail_append_spark_jobs(spark, paths):
     tail = gen.tail_of(key)
     store.append_event("credited", "warm", "acct", key[0], previous_id=tail)
 
-    n = _jobs(spark, lambda: store.append_event(
+    returned = []
+    n = _jobs(spark, lambda: returned.append(store.append_event(
         "credited", "hot", "acct", key[0], previous_id="warm"
-    ))
-    assert n <= 1, n
+    )))
+    assert n == 0, n
     assert store.append_paths == {"index": 3, "set": 0}
-    n = _jobs(spark, lambda: store.append_event("opened", "born", "acct", "fresh"))
-    assert n <= 1, n
+    n = _jobs(spark, lambda: returned.append(
+        store.append_event("opened", "born", "acct", "fresh")
+    ))
+    assert n == 0, n
+    rows = []
+    n = _jobs(spark, lambda: rows.extend(r for df in returned for r in df.collect()))
+    assert n == 0, n
+    assert [(r["event_id"], r["decider_id"]) for r in rows] == [
+        ("hot", key[0]), ("born", "fresh")
+    ]
+    assert rows[1]["offset"] == rows[0]["offset"] + 1
 
     with pytest.raises(errors.OptimisticLockError) as e:
         store.append_event("credited", "late", "acct", key[0], previous_id="warm")
@@ -481,3 +494,23 @@ def test_tail_append_spark_jobs(spark, paths):
         "candidates_s", "validate_s", "t6_locks_s", "offset_number_s",
         "parquet_write_s", "marker_publish_s", "hwm_merge_s",
     }
+    # a null in a column the log declares non-nullable is the set path's
+    # to commit, so the index path's RETURNING rows always conform
+    rows = store.append_event("credited", "null", "acct", key[0],
+                              data=None, previous_id="next").collect()
+    assert [(r["event_id"], r["data"]) for r in rows] == [("null", None)]
+    assert store.append_paths == {"index": 5, "set": 2}
+
+
+def test_t7_backfill_skips_an_empty_log(spark, paths):
+    """``register_view`` on a log with no events has no partition to
+    backfill, so T7's aggregate runs no Spark job; once a partition
+    exists, the backfill seeds its lock row."""
+    store = open_store(spark, paths())
+    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    past = datetime.fromisoformat(PAST)
+    assert _jobs(spark, lambda: store._t7_backfill("v", past, now)) == 0
+    store.append_event("opened", "first", "acct", "s1")
+    store.register_view("w", start_at=PAST)
+    rows = store.stream_events("w").collect()
+    assert [r["event_id"] for r in rows] == ["first"]

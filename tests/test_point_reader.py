@@ -11,16 +11,23 @@ instead of Spark jobs while the files they pick hold at most
   several commits, a ``compact()``, a sibling store's commits, an
   in-flight batch whose files sit above the published marker, and a
   crashed batch that recovery quarantines or publishes.  Rows, their
-  ``created_at`` values and the column types must be identical.
+  ``created_at`` values and the column types must be identical.  The log
+  mixes files the driver wrote (index-path batches) with files Spark
+  wrote (set-path batches, ``compact()``); ``events()``, the point
+  reader and ``streaming_events`` read the whole of it alike, before and
+  after a ``compact()``.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
+import uuid
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -30,6 +37,7 @@ from fstore_sql_spark import EventStore, errors
 from fstore_sql_spark.ledger import ProcessLock
 from fstore_sql_spark.schemas import EVENTS_SCHEMA
 from fstore_sql_spark.storage import Manifest, current_log_dir
+from fstore_sql_spark.streaming.windows import streaming_events
 from test_index_path import _jobs
 
 PAST = "2000-01-01T00:00:00"
@@ -236,6 +244,41 @@ def compare(store, history, data, hidden=()):
         assert st_reader[k] == st_spark[k], k
 
 
+def writers(path):
+    """The programs that wrote the log's non-empty files (the footer's
+    ``created_by``): ``parquet-mr`` is Spark, ``parquet-cpp-arrow`` the
+    driver writer."""
+    out = set()
+    for f in glob.glob(os.path.join(current_log_dir(path, "events"), "*.parquet")):
+        md = pq.read_metadata(f)
+        if md.num_rows:
+            out.add(md.created_by.split(" ")[0])
+    return out
+
+
+def whole_log(store, path):
+    """The whole log, in offset order, read three ways that must agree:
+    ``events()`` (a Spark scan), the point reader, and a
+    ``streaming_events`` query run to the end of the log."""
+    by_spark = store.events().orderBy("offset").collect()
+    table = store._read_files(store._point_read_files(), None).sort_by("offset")
+    assert store._local_events(table).collect() == by_spark
+    name = f"log_{uuid.uuid4().hex[:8]}"
+    q = (
+        streaming_events(store.spark, path)
+        .writeStream.format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert store.spark.table(name).orderBy("offset").collect() == by_spark
+    return by_spark
+
+
 @settings(
     max_examples=3,
     deadline=None,
@@ -259,6 +302,10 @@ def test_reader_matches_spark_plan(spark, data):
             else:
                 rows = history.rows(data, f"b{i + 1}")
                 append(sibling if step == "sibling" else store, history, rows, step == "set")
+        # whatever the order, one more index-path batch leaves the log
+        # mixing driver-written and Spark-written files
+        append(store, history, history.rows(data, "mixed"), set_path=False)
+        assert writers(path) == {"parquet-mr", "parquet-cpp-arrow"}
 
         # Two batches caught in flight: another committer holds the flock,
         # so no read recovers them, and their files must stay invisible.
@@ -287,5 +334,11 @@ def test_reader_matches_spark_plan(spark, data):
             else:
                 hidden += [r["event_id"] for r in crashed]
             compare(store, history, data, hidden)
+
+        logged = whole_log(store, path)
+        assert len(logged) == sum(map(len, history.streams.values()))
+        store.compact()
+        assert writers(path) == {"parquet-mr"}
+        assert whole_log(store, path) == logged
     finally:
         shutil.rmtree(path, ignore_errors=True)

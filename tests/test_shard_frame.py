@@ -190,3 +190,31 @@ def test_shard_frame_matches_dict_model(key_cols, monkeypatch):
         _machine(key_cols),
         settings=settings(max_examples=50, stateful_step_count=30, deadline=None),
     )
+
+
+@pytest.mark.parametrize(
+    "key_cols", [["view", "decider_id"], ["decider_id"]], ids=["compound", "single"]
+)
+def test_frame_bytes_ignores_lookups(key_cols, tmp_path):
+    """``frame_bytes`` counts the rows held, not the hash table an index
+    builds on its first lookup: equal before and after a ``get_indexer``
+    on the same rows."""
+    n = 1000
+    rows = pd.DataFrame({
+        "view": [f"v{i % 3}" for i in range(n)],
+        "decider_id": [f"p{i:05d}" for i in range(n)],
+        "n": range(n),
+    })
+
+    def normalize(pdf):
+        return pdf[key_cols + ["n"]].set_index(key_cols).sort_index()
+
+    frame = ShardFrame(ParquetStore(None, str(tmp_path)), "t", key_cols,
+                       normalize, lambda: normalize(rows.iloc[:0]))
+    frame.merge(rows)
+    frame.refresh()
+    before = frame.frame_bytes()
+    assert before > 0
+    idx = frame.df.index
+    assert (idx.get_indexer(idx[::7]) >= 0).all()
+    assert frame.frame_bytes() == before
